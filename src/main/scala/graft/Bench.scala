@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every SparkEntry query against
@@ -12,19 +11,11 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bench")
     // Checkpoint-mode override (SPARK_GRAFT_CHECKPOINT=reliable) for the
     // Stage.snap storage A/B: reliable mode snapshots stages to a
     // checkpoint DIR (the multi-executor posture) instead of
-    // executor-local blocks; the bench delta is recorded in SCALE.md.
+    // executor-local blocks.
     sys.env.get("SPARK_GRAFT_CHECKPOINT").foreach { mode =>
       spark.conf.set("spark.graft.checkpoint", mode)
       if (mode == "reliable") spark.sparkContext.setCheckpointDir(

@@ -41,19 +41,6 @@ object GraftConf {
     "spark.graft.checkpoint", "local", "mode",
     "stage snapshot storage (Stage.snap/snapLazy)")
 
-  /** Every-Nth-commit GC sweep of unreferenced generation dirs, per
-    * index family; 0 disables the periodic sweep (GC still runs on
-    * generation-dropping commits). */
-  val AnnGcSweepEvery: Knob = Knob(
-    "spark.graft.ann.gcSweepEvery", "8", "commits",
-    "periodic generation GC for AnnIndex/AnnIndexPq roots")
-  val DedupGcSweepEvery: Knob = Knob(
-    "spark.graft.dedup.gcSweepEvery", "8", "commits",
-    "periodic generation GC for DedupIndex roots")
-  val LexGcSweepEvery: Knob = Knob(
-    "spark.graft.lex.gcSweepEvery", "8", "commits",
-    "periodic generation GC for LexIndex roots")
-
   /** Loud abort bound on FuzzyJoin.resolve's estimated candidate/output
     * pair count — the r12 disclosed DNF fixed as a GUARD: a
     * duplicate-heavy corpus can make the full pair multiset
@@ -86,8 +73,7 @@ object GraftConf {
     "driver-local gate for Bpe merge training (Bpe.bpeMerges)")
 
   val All: Seq[Knob] = Seq(ComponentsLocalEdges, QuantizerBroadcastCells,
-    Checkpoint, AnnGcSweepEvery, DedupGcSweepEvery, LexGcSweepEvery,
-    FuzzyMaxPairs, SemDedupRebuildAt, BpeLocalVocab)
+    Checkpoint, FuzzyMaxPairs, SemDedupRebuildAt, BpeLocalVocab)
 
   private val known: Set[String] = All.map(_.key).toSet
 

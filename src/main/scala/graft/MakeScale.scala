@@ -60,26 +60,18 @@ object MakeScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // getOrCreate may return a pre-existing session (a test harness's):
     // only a session THIS main created is its to stop
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-make-scale")
     if (preExisting) {
       // a pre-existing session keeps its own master/parallelism — the
-      // builder configs above were silently ignored (round-12 review).
+      // LocalSession configs were silently ignored (round-12 review).
       // Apply the runtime-settable ones so generation is still
       // deterministic (UTC + fixed shuffle width), and SAY what's in
       // effect instead of printing as if the builder had configured it.
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      spark.conf.set("spark.sql.shuffle.partitions", LocalSession.cpus.toString)
       println(s"MakeScale: reusing ambient session " +
         s"(master=${spark.sparkContext.master}) — builder master/config " +
         "ignored; timezone + shuffle partitions re-applied at runtime")

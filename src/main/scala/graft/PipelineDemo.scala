@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -50,12 +50,7 @@ object PipelineDemo {
     val dir = args.headOption.getOrElse("/tmp/sf10")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(8)
     val drill = !args.lift(2).contains("nodrill")
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline-demo").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-pipeline-demo")
 
     val work = java.nio.file.Files.createTempDirectory("graft_pipe_")
     def p(sub: String) = s"$work/$sub"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-curve spot check: times a representative query subset at two
   * scale factors and prints per-query scaling ratios — the measured
   * complement to SCALE.md's plan-shape arguments. A query scaling
@@ -58,15 +56,7 @@ object ScaleCurve {
     val dirA = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dirB = args.lift(1).getOrElse("/tmp/sf1")
     val dataRatio = args.lift(2).map(_.toDouble).getOrElse(10.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-scale-curve")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
 
     def time(name: String, dir: String): Double = {

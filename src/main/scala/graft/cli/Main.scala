@@ -80,21 +80,7 @@ object Main {
   private def flag(args: Array[String], name: String): Boolean =
     args.contains(s"--$name")
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // session-build-time (not per-read mutation): the events parquet is
-      // TIMESTAMP(NANOS), which Spark only reads via this legacy conf
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession = graft.LocalSession("graft-cli")
 
   /** The second-adapter wiring shared by sync/delete/purge: the vs store
     * under `$work/store_vs` plus a target="vs" engine logging to the

@@ -90,9 +90,6 @@ object AnnIndex {
     "build_mean_cos" -> "double", "n" -> "long",
     "seq" -> "long", "mean_cos" -> "double")
 
-  private def toMetaRows(t: String, df: DataFrame): DataFrame =
-    StateCommit.foldMetaRows(t, df, MetaCols)
-
   /** This family's logical-table column lists (select order is the
     * reader contract). */
   private[graft] def metaCols(table: String): Seq[String] = table match {
@@ -108,27 +105,19 @@ object AnnIndex {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
-  /** Write the folded metadata snapshot and commit; GC deferral — see
-    * [[AnnIndexPq]]: reclaim on generation-dropping commits plus a
-    * periodic sweep ([[graft.GraftConf.AnnGcSweepEvery]]); policy
-    * above. `droppedGens` = this commit removed generations from the
-    * manifest. */
+  /** Write the folded metadata snapshot and commit
+    * ([[StateCommit.commitMeta]]). `droppedGens` = this commit removed
+    * generations from the manifest. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
       centroids: DataFrame, entries: Seq[(String, Long)],
       stats: DataFrame, drift: Seq[(Long, Long, Double)],
       droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    val meta = Seq(
-      toMetaRows(Centroids, centroids),
-      toMetaRows(Manifest, entries.toDF("cell", "gen")),
-      toMetaRows(Stats, stats),
-      toMetaRows(Drift, drift.toDF("seq", "n", "mean_cos"))
-    ).reduce(_.unionByName(_))
-    StateCommit.writeMetaParquet(meta, root, v)
-    StateCommit.commit(spark, root, v)
-    val sweepEvery = graft.GraftConf.long(spark, graft.GraftConf.AnnGcSweepEvery)
-    if (droppedGens || (sweepEvery > 0 && v % sweepEvery == 0))
-      StateCommit.gcGenerations(spark, root)
+    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+      Centroids -> centroids,
+      Manifest -> entries.toDF("cell", "gen"),
+      Stats -> stats,
+      Drift -> drift.toDF("seq", "n", "mean_cos")), droppedGens)
   }
 
   /** Stats rows of snapshot `v` (0 or 1 rows; tolerates pre-monitor

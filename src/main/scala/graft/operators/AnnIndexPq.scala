@@ -88,9 +88,6 @@ object AnnIndexPq {
     "build_mean_err_nano" -> "double", "n" -> "long",
     "seq" -> "long", "mean_err_nano" -> "double")
 
-  private def toMetaRows(t: String, df: DataFrame): DataFrame =
-    StateCommit.foldMetaRows(t, df, MetaCols)
-
   /** This family's logical-table column lists (select order is the
     * reader contract — positional getters depend on it). */
   private[graft] def metaCols(table: String): Seq[String] = table match {
@@ -108,36 +105,21 @@ object AnnIndexPq {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
-  /** Generation GC runs on commits that DROPPED generations from the
-    * manifest and otherwise every `spark.graft.ann.gcSweepEvery`-th
-    * version — the [[LexIndex]] deferral: with the default retain=2 the
-    * dropping commit's predecessor still references the superseded
-    * generations, so GC at that commit reclaims nothing anyway, and
-    * paying the manifest-read pass per append commit was pure constant.
-    * The sweep bounds the transient leak at `gcSweepEvery` commits'
-    * worth of superseded dirs. */
-
-  /** Write the folded metadata snapshot and commit; GC per the policy
-    * above. `droppedGens` = this commit removed generations from the
-    * manifest. */
+  /** Write the folded metadata snapshot and commit
+    * ([[StateCommit.commitMeta]]). `droppedGens` = this commit removed
+    * generations from the manifest. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
       coarse: DataFrame, codebook: DataFrame, params: DataFrame,
       entries: Seq[(String, Long)], stats: DataFrame,
       drift: Seq[(Long, Long, Double)], droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    val meta = Seq(
-      toMetaRows(Coarse, coarse),
-      toMetaRows(Codebook, codebook),
-      toMetaRows(Params, params),
-      toMetaRows(Manifest, entries.toDF("cell", "gen")),
-      toMetaRows(Stats, stats),
-      toMetaRows(Drift, drift.toDF("seq", "n", "mean_err_nano"))
-    ).reduce(_.unionByName(_))
-    StateCommit.writeMetaParquet(meta, root, v)
-    StateCommit.commit(spark, root, v)
-    val sweepEvery = graft.GraftConf.long(spark, graft.GraftConf.AnnGcSweepEvery)
-    if (droppedGens || (sweepEvery > 0 && v % sweepEvery == 0))
-      StateCommit.gcGenerations(spark, root)
+    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+      Coarse -> coarse,
+      Codebook -> codebook,
+      Params -> params,
+      Manifest -> entries.toDF("cell", "gen"),
+      Stats -> stats,
+      Drift -> drift.toDF("seq", "n", "mean_err_nano")), droppedGens)
   }
 
   /** Stats rows of snapshot `v` (0 or 1 rows; tolerates pre-monitor

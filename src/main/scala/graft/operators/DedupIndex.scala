@@ -90,9 +90,6 @@ object DedupIndex {
     "gen" -> "long", "n_docs" -> "long",
     "doc_id" -> "long", "before_gen" -> "long")
 
-  private def toMetaRows(t: String, df: DataFrame): DataFrame =
-    StateCommit.foldMetaRows(t, df, MetaCols)
-
   /** This family's logical-table column lists (select order is the
     * reader contract). */
   private[graft] def metaCols(table: String): Seq[String] = table match {
@@ -109,29 +106,18 @@ object DedupIndex {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
-  /** GC deferral — see [[AnnIndexPq]]: reclaim on generation-dropping
-    * commits plus a periodic sweep (`spark.graft.dedup.gcSweepEvery`).
-    * Append commits (upsert/delete keep every prior generation) reclaim
-    * nothing under retain=2 anyway — the per-commit pass was pure
-    * constant. */
-
-  /** Write the folded metadata snapshot and commit; GC per the policy
-    * above. */
+  /** Write the folded metadata snapshot and commit
+    * ([[StateCommit.commitMeta]]). */
   private def writeMetaTables(spark: SparkSession, root: String, v: Long,
       k: Int, r: Int, entries: Seq[(Long, Long)], tombstones: DataFrame,
       droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    val meta = Seq(
-      toMetaRows(Meta, Seq((k, r)).toDF("k", "r")),
-      toMetaRows(Manifest, entries.toDF("gen", "n_docs")),
-      toMetaRows(Tombstones, tombstones
-        .select(col("doc_id").cast("long"), col("before_gen").cast("long")))
-    ).reduce(_.unionByName(_))
-    StateCommit.writeMetaParquet(meta, root, v)
-    StateCommit.commit(spark, root, v)
-    val sweepEvery = graft.GraftConf.long(spark, graft.GraftConf.DedupGcSweepEvery)
-    if (droppedGens || (sweepEvery > 0 && v % sweepEvery == 0))
-      StateCommit.gcGenerations(spark, root)
+    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+      Meta -> Seq((k, r)).toDF("k", "r"),
+      Manifest -> entries.toDF("gen", "n_docs"),
+      Tombstones -> tombstones
+        .select(col("doc_id").cast("long"), col("before_gen").cast("long"))),
+      droppedGens)
   }
 
   private def manifestOf(spark: SparkSession, root: String,

@@ -56,9 +56,6 @@ object DsirModel {
     "bucket" -> "long", "micro" -> "long",
     "buckets" -> "int", "nt" -> "long", "nr" -> "long")
 
-  private def toMetaRows(t: String, df: DataFrame): DataFrame =
-    StateCommit.foldMetaRows(t, df, MetaCols)
-
   /** This family's logical-table column lists. NOTE: the Meta fallback
     * must read the per-table dir RAW (a round-11 pre-totals meta
     * carries only `buckets` — selecting nt/nr there would throw), so
@@ -98,9 +95,10 @@ object DsirModel {
     val (nt, nr) = (tot.getLong(0), tot.getLong(1))
     val s = spark; import s.implicits._
     StateCommit.writeMetaParquet(
-      toMetaRows(Model, TextAnalysis.dsirMicroFromAggs(rB, tB, buckets))
-        .unionByName(toMetaRows(Meta,
-          Seq((buckets, nt, nr)).toDF("buckets", "nt", "nr"))),
+      StateCommit.foldMetaRows(Model,
+        TextAnalysis.dsirMicroFromAggs(rB, tB, buckets), MetaCols)
+        .unionByName(StateCommit.foldMetaRows(Meta,
+          Seq((buckets, nt, nr)).toDF("buckets", "nt", "nr"), MetaCols)),
       root, v)
     StateCommit.commit(spark, root, v, retain)
     v

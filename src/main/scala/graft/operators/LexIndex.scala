@@ -266,9 +266,6 @@ object LexIndex {
     "doc_id" -> "long", "before_gen" -> "long",
     "last_batch_id" -> "long", "build_era" -> "long")
 
-  private def toMetaRows(t: String, df: DataFrame): DataFrame =
-    StateCommit.foldMetaRows(t, df, MetaCols)
-
   /** This family's logical-table column lists (select order is the
     * reader contract). */
   private[graft] def metaCols(table: String): Seq[String] = table match {
@@ -288,44 +285,25 @@ object LexIndex {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
-  /** Generation GC runs on every commit that DROPPED generations from
-    * the manifest (compaction, rebuild — the only commits that orphan
-    * gen dirs directly) and otherwise only every `gcSweepEvery`-th
-    * version (conf `spark.graft.lex.gcSweepEvery`) as a sweeper for the
-    * retention-lag case: the snapshot preceding a compaction keeps the
-    * superseded generations referenced until IT falls out of retention,
-    * one append-only commit later, where no manifest shrinks. Append
-    * commits (ingest/upsert/delete keep every prior gen) reclaim
-    * nothing, and paying the GC pass's manifest reads + root listing on
-    * each micro-batch was the dominant constant left in lx_search_inc
-    * (round-12 #8); the sweep bounds the transient leak at
-    * `gcSweepEvery` commits' worth of superseded dirs, only ever
-    * following a compaction/rebuild. */
-
-  /** Write the metadata-sized snapshot tables and commit — shared by
-    * every mutation (postings generations are written by the caller,
-    * when the mutation adds any). `droppedGens` = this commit removed
-    * generations from the manifest (see the GC policy above). */
+  /** Write the metadata-sized snapshot tables and commit
+    * ([[StateCommit.commitMeta]]) — shared by every mutation (postings
+    * generations are written by the caller, when the mutation adds
+    * any). `droppedGens` = this commit removed generations from the
+    * manifest (compaction, rebuild). */
   private def writeMetaTables(spark: SparkSession, root: String, v: Long,
       dfs: DataFrame, stats: DataFrame, gens: Seq[Long],
       tombstones: DataFrame, streamBatch: Option[Long] = None,
       era: Long = 0L, droppedGens: Boolean = false): Long = {
     val s = spark
     import s.implicits._
-    val meta = Seq(
-      toMetaRows(Dfs, dfs),
-      toMetaRows(Stats, stats),
-      toMetaRows(Manifest, gens.toDF("gen")),
-      toMetaRows(Tombstones, tombstones
-        .select(col("doc_id").cast("long"), col("before_gen").cast("long"))),
-      toMetaRows(StreamBatch, streamBatch.toSeq.toDF("last_batch_id")),
-      toMetaRows(EraTable, Seq(era).toDF("build_era"))
-    ).reduce(_.unionByName(_))
-    StateCommit.writeMetaParquet(meta, root, v)
-    StateCommit.commit(spark, root, v)
-    val sweepEvery = graft.GraftConf.long(spark, graft.GraftConf.LexGcSweepEvery)
-    if (droppedGens || (sweepEvery > 0 && v % sweepEvery == 0))
-      StateCommit.gcGenerations(spark, root)
+    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+      Dfs -> dfs,
+      Stats -> stats,
+      Manifest -> gens.toDF("gen"),
+      Tombstones -> tombstones
+        .select(col("doc_id").cast("long"), col("before_gen").cast("long")),
+      StreamBatch -> streamBatch.toSeq.toDF("last_batch_id"),
+      EraTable -> Seq(era).toDF("build_era")), droppedGens)
     v
   }
 

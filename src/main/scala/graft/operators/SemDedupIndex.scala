@@ -154,9 +154,6 @@ object SemDedupIndex {
     "gen" -> "long", "n_vecs" -> "long",
     "vec_id" -> "long", "before_gen" -> "long")
 
-  private def toMetaRows(t: String, df: DataFrame): DataFrame =
-    StateCommit.foldMetaRows(t, df, MetaCols)
-
   private[graft] def metaCols(table: String): Seq[String] = table match {
     case Scheme => Seq("cell_target", "probes", "n_cells", "n_buckets",
       "quant_gen")
@@ -232,28 +229,19 @@ object SemDedupIndex {
       StateCommit.readParquet(spark, cellsDir(root, ms.quantGen)), ms.nCells),
       ms.probes, ms.nBuckets)
 
-  /** Write the folded metadata snapshot and commit; GC per the shared
-    * deferral policy (generation-dropping commits + periodic sweep,
-    * `spark.graft.dedup.gcSweepEvery` — this family shares the dedup
-    * knob: both are dedup-state roots with the same churn shape). */
+  /** Write the folded metadata snapshot and commit
+    * ([[StateCommit.commitMeta]]). */
   private def writeMetaTables(spark: SparkSession, root: String, v: Long,
       scheme: (Int, Int, Int, Int, Long), entries: Seq[(Long, Long)],
       tombstones: DataFrame, droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    val (cellTarget, probes, c, nBuckets, qg) = scheme
-    val meta = Seq(
-      toMetaRows(Scheme, Seq((cellTarget, probes, c, nBuckets, qg))
-        .toDF("cell_target", "probes", "n_cells", "n_buckets", "quant_gen")),
-      toMetaRows(Manifest, entries.toDF("gen", "n_vecs")),
-      toMetaRows(Tombstones, tombstones
-        .select(col("vec_id").cast("long"), col("before_gen").cast("long")))
-    ).reduce(_.unionByName(_))
-    StateCommit.writeMetaParquet(meta, root, v)
-    StateCommit.commit(spark, root, v)
-    val sweepEvery = graft.GraftConf.long(spark,
-      graft.GraftConf.DedupGcSweepEvery)
-    if (droppedGens || (sweepEvery > 0 && v % sweepEvery == 0))
-      StateCommit.gcGenerations(spark, root)
+    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+      Scheme -> Seq(scheme)
+        .toDF("cell_target", "probes", "n_cells", "n_buckets", "quant_gen"),
+      Manifest -> entries.toDF("gen", "n_vecs"),
+      Tombstones -> tombstones
+        .select(col("vec_id").cast("long"), col("before_gen").cast("long"))),
+      droppedGens)
   }
 
   private def manifestOf(spark: SparkSession, root: String,

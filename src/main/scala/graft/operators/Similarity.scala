@@ -204,37 +204,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Dev diagnostic (SCALE.md §Round-14's candidates-vs-corpus table —
-    * not a gated query): per-incoming-vector candidate counts of the
-    * cells and banded incremental schemes on the same (incoming, corpus)
-    * split, measured so the corpus-size-independence claim is a number,
-    * not an argument. */
-  private[graft] def incrementalCandidateStats(incoming: DataFrame,
-      corpus: DataFrame, cellTarget: Int = 32, probes: Int = 2,
-      bands: Int = 8, bandBits: Int = 8): Map[String, Long] = {
-    val (q, corVsup) = trainCellQuantizer(corpus, cellTarget,
-      materialize = true)
-    val corAssign = Stage.snap(
-      assignWithQuantizer(corpus, corVsup, q, probes)
-        .select(col("vec_id").as("cid"), col("cell")),
-      materialize = true)
-    val incAssign = assignWithQuantizer(incoming,
-      topSupers(incoming, q.supers, materialize = true), q, probes)
-    val cellCands = incAssign.join(corAssign, Seq("cell"))
-      .where(col("vec_id") =!= col("cid"))
-      .select("vec_id", "cid").distinct().count()
-    val incSig = incoming.select(col("vec_id"),
-      explode(bandSigs(col("embedding"), bands, bandBits)).as("sig"))
-    val corSig = corpus.select(col("vec_id").as("cid"),
-      explode(bandSigs(col("embedding"), bands, bandBits)).as("sig"))
-    val bandCands = incSig.join(corSig,
-        incSig("sig") === corSig("sig") && col("vec_id") =!= col("cid"))
-      .select("vec_id", "cid").distinct().count()
-    val nInc = incoming.count()
-    Map("n_incoming" -> nInc, "n_corpus" -> corpus.count(),
-      "cells_candidates" -> cellCands, "banded_candidates" -> bandCands)
-  }
-
   /** kNN label-agreement audit over [[knnGraph]] — the confident-
     * learning-style label-noise check (complementary to
     * [[centroidOutliers]]' parametric prototype test): each vector's
@@ -1115,36 +1084,6 @@ object Similarity {
     // cell of this same assignment snapshot
     Propagation.contractThenClose(cellGroupedPairs(assigned, pairs),
       "vec_id", materialize, maxRounds)
-
-  /** Dev diagnostic (SCALE.md's rounds/size table — not a gated query):
-    * the cell-contraction path's stage sizes and the condensed loop's
-    * round count, computed with the union-find gate DISABLED so the
-    * distributed loop's behavior is what's measured. */
-  private[graft] def cellContractionStats(embeddings: DataFrame,
-      cellTarget: Int = 32, probes: Int = 2,
-      threshold: Double = 0.35): Map[String, Long] = {
-    val (assigned, pairs) = cosineNearDupCellsParts(embeddings, cellTarget,
-      probes, threshold, materialize = true)
-    val p = Stage.snap(pairs.select("d1", "d2"), materialize = true)
-    val local = Propagation.groupLocalLabels(
-      cellGroupedPairs(assigned, p), materialize = true)
-    val condensed = Propagation.bridgeEdges(local, materialize = true)
-    val spark = embeddings.sparkSession
-    val prev = spark.conf.getOption("spark.graft.components.localEdges")
-    spark.conf.set("spark.graft.components.localEdges", "0")
-    val labeled =
-      try Propagation.minLabelCounted(condensed, "label_local")
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.graft.components.localEdges", v)
-        case None => spark.conf.unset("spark.graft.components.localEdges")
-      }
-    Map(
-      "pairs" -> p.count(),
-      "local_rows" -> local.count(),
-      "local_components" -> local.select("label_local").distinct().count(),
-      "condensed_edges" -> condensed.count(),
-      "condensed_rounds" -> labeled.rounds.toLong)
-  }
 
   /** Shared clustering tail: component labels over the paired vertex
     * set, isolated vectors unioned back self-labeled, survivor =

@@ -228,11 +228,38 @@ object StateCommit {
           .sorted
     }
 
+  /** Versions between periodic generation sweeps in [[commitMeta]]. */
+  val GcSweepEvery = 8L
+
+  /** The one commit tail of every generational index (AnnIndex,
+    * AnnIndexPq, DedupIndex, LexIndex, SemDedupIndex): fold the
+    * logical `(table, rows)` pairs onto the family's `metaCols`
+    * superset, write them as snapshot `v`'s one `meta` parquet, publish
+    * `v`, then reclaim generations.
+    *
+    * GC is deferred: it runs on a commit that dropped generations from
+    * the manifest (`droppedGens`: compaction, rebuild) and otherwise
+    * every [[GcSweepEvery]]-th version. An append commit keeps every
+    * prior generation, so a pass there reclaims nothing; and with
+    * retain=2 the snapshot before a compaction keeps the superseded
+    * generations referenced until it falls out of retention one commit
+    * later, where no manifest shrinks — the periodic sweep bounds that
+    * leak at [[GcSweepEvery]] commits' worth of superseded dirs. */
+  def commitMeta(spark: SparkSession, statePath: String, v: Long,
+      metaCols: Seq[(String, String)], tables: Seq[(String, DataFrame)],
+      droppedGens: Boolean): Unit = {
+    // a mistyped or retired spark.graft.* key fails before the commit
+    graft.GraftConf.validate(spark)
+    val meta = tables.map { case (t, df) => foldMetaRows(t, df, metaCols) }
+      .reduce(_.unionByName(_))
+    writeMetaParquet(meta, statePath, v)
+    commit(spark, statePath, v)
+    if (droppedGens || v % GcSweepEvery == 0) gcGenerations(spark, statePath)
+  }
+
   /** Garbage-collect generation directories (`gen-<v>` under
     * `statePath`) that no COMMITTED snapshot's manifest references —
-    * the shared reclaim pass of every generational index
-    * ([[graft.operators.AnnIndex]]/AnnIndexPq/DedupIndex/LexIndex; all
-    * four previously carried a private copy). The manifest table must
+    * the reclaim pass of [[commitMeta]]. The manifest table must
     * expose a BIGINT `gen` column.
     *
     * Fail-safe by construction: if ANY committed snapshot's manifest
@@ -243,8 +270,9 @@ object StateCommit {
     * builds and are skipped (their generations are `>= cur` and never
     * GC candidates anyway). Generations at or above the committed
     * version are never touched. */
-  def gcGenerations(spark: SparkSession, statePath: String,
-      manifestTable: String = "manifest"): Unit = {
+  private[graft] def gcGenerations(spark: SparkSession,
+      statePath: String): Unit = {
+    val manifestTable = "manifest"
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed = Try(fs.listStatus(root).toSeq).getOrElse(return)

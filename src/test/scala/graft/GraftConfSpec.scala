@@ -29,6 +29,18 @@ class GraftConfSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.compnents.localEdges")
   }
 
+  test("the retired per-family gcSweepEvery keys fail loudly, naming the known knobs") {
+    for (fam <- Seq("ann", "dedup", "lex")) {
+      val key = s"spark.graft.$fam.gcSweepEvery"
+      spark.conf.set(key, "1")
+      try {
+        val e = intercept[IllegalArgumentException](GraftConf.validate(spark))
+        assert(e.getMessage.contains(key))
+        GraftConf.All.foreach(k => assert(e.getMessage.contains(k.key), k.key))
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("the typo guard fires from a real operator's knob read") {
     // wrong CASE in the last segment — the classic silent-no-op typo;
     // the union-find gate's read must abort the job, not fall back

@@ -275,17 +275,20 @@ class LexIndexSpec extends SparkSpec {
     assert(gens().contains("gen-1"), "retained snapshot's generations must survive")
 
     // the next mutation pushes snap-3 past the retention horizon — the
-    // superseded generations become unreachable. Round 13: append
-    // commits defer the reclaim pass to the periodic sweep
-    // (spark.graft.lex.gcSweepEvery — GC ran on every micro-batch where
-    // append-only manifests can never orphan a generation); sweep-every-1
-    // restores the per-commit behavior this test pins.
-    spark.conf.set("spark.graft.lex.gcSweepEvery", "1")
-    try {
-      LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000), root)
-      assert(gens() == Seq("gen-4", "gen-5"), gens().toString)
-    } finally spark.conf.unset("spark.graft.lex.gcSweepEvery")
+    // superseded generations become unreachable. Append commits defer
+    // the reclaim pass to the periodic sweep at every
+    // StateCommit.GcSweepEvery-th version, so append up to it: every
+    // append before the sweep leaves gen-1..3 on disk, the sweep
+    // version reclaims them.
+    val sweepAt = graft.streaming.StateCommit.GcSweepEvery
+    var v = 4L
+    while (v < sweepAt) {
+      v = LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 0)
+        .withColumn("doc_id", col("doc_id") + v * 1000000), root)
+      if (v < sweepAt)
+        assert(gens().contains("gen-1"), s"v$v swept before the sweep version")
+    }
+    assert(gens() == (4L to sweepAt).map(g => s"gen-$g"), gens().toString)
 
     // and the index still answers from what remains
     assert(LexIndex.search(spark, root, Seq("vector"), k = 5).count() == 5)
@@ -308,7 +311,7 @@ class LexIndexSpec extends SparkSpec {
       .withColumn("doc_id", col("doc_id") + 500000), root)
     assert(gens().contains("gen-1"),
       "append commit should have deferred the GC pass")
-    // ...and the next drop-commit (or the v%sweepEvery==0 sweep) reclaims
+    // ...and the next drop-commit (or the GcSweepEvery-th version) reclaims
     LexIndex.compactGenerations(spark, root)                           // v5
     val after = gens()
     assert(!after.contains("gen-1") && !after.contains("gen-2"),

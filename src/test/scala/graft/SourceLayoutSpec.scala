@@ -1,0 +1,56 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-tree invariants the engine's structure relies on, checked by
+  * scanning `src/main/scala`: the kept entry points are the only
+  * `main`s, every one of them builds its session through
+  * [[LocalSession]], and generation GC is reached only through the
+  * shared commit tail ([[graft.streaming.StateCommit.commitMeta]]).
+  */
+class SourceLayoutSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private lazy val sources: Map[String, String] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+      .toMap
+    finally walk.close()
+  }
+
+  private def filesContaining(s: String): Set[String] =
+    sources.collect { case (f, text) if text.contains(s) => f }.toSet
+
+  test("exactly the eight kept entry points define def main(") {
+    val Package = """(?m)^package\s+([\w.]+)""".r
+    val Object = """(?m)^object\s+(\w+)""".r
+    val mains = sources.toSeq.flatMap { case (_, text) =>
+      val pkg = Package.findFirstMatchIn(text).map(_.group(1)).getOrElse("")
+      """def main\(""".r.findAllMatchIn(text).map { m =>
+        val obj = Object.findAllMatchIn(text.substring(0, m.start))
+          .toSeq.lastOption.map(_.group(1)).getOrElse("?")
+        s"$pkg.$obj"
+      }
+    }
+    assert(mains.sorted == Seq("graft.Bench", "graft.Explain",
+      "graft.MakeScale", "graft.PipelineDemo", "graft.Profile",
+      "graft.ScaleCurve", "graft.Verify", "graft.cli.Main"))
+  }
+
+  test("SparkSession.builder() appears only in LocalSession") {
+    assert(filesContaining("SparkSession.builder()") ==
+      Set("graft/LocalSession.scala"))
+  }
+
+  test("StateCommit.gcGenerations is called only from inside StateCommit") {
+    assert(filesContaining("gcGenerations(") ==
+      Set("graft/streaming/StateCommit.scala"))
+  }
+}
