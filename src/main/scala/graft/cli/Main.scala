@@ -217,7 +217,8 @@ object Main {
         System.err.println(
           s"note: clamped limit=$rawScanLimit quota=$rawScanQuota -> limit=$limit quota=$quota")
       val spark = session()
-      val wm = new graft.scan.Watermark(s"$work/last_scan_gmt")
+      val wm = new graft.scan.Watermark(s"$work/last_scan_gmt",
+        spark.sparkContext.hadoopConfiguration)
       val now = java.time.Instant.now()
       val planned = graft.scan.Scheduler.planScan(
         graft.catalog.Catalog.products(spark, data),
@@ -250,7 +251,8 @@ object Main {
       val engine = new SyncEngine(spark, new LocalHashEmbedder(), store,
         s"$work/sync_state", Selection(chunkSize = 100, chunkOverlap = 20).sanitized,
         events = Some(new graft.events.EventLog(spark, s"$work/events")))
-      val wm = new graft.scan.Watermark(s"$work/last_scan_gmt")
+      val wm = new graft.scan.Watermark(s"$work/last_scan_gmt",
+        spark.sparkContext.hadoopConfiguration)
       for (t <- 1 to ticks) {
         val now = java.time.Instant.now()
         val state = engine.readSyncState()

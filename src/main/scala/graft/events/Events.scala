@@ -1,7 +1,10 @@
 package graft.events
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.StateCommit
 
 /** K8 — append-only event log (reference `includes/class-events.php`):
   * JSONL append → date-partitioned JSON sink; retention = partition drop;
@@ -13,6 +16,9 @@ import org.apache.spark.sql.functions._
   * partition-pruned scan.
   */
 final class EventLog(spark: SparkSession, root: String) {
+
+  private def fs =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Append rows (must carry a `ts` timestamp column); partitioned by day. */
   def append(rows: DataFrame): Unit =
@@ -31,7 +37,7 @@ final class EventLog(spark: SparkSession, root: String) {
     // returns empty; only `ts` is pinned — the filter columns below are
     // normalized in either branch).
     val df =
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root)))
+      if (!fs.exists(new Path(root)))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
@@ -49,33 +55,17 @@ final class EventLog(spark: SparkSession, root: String) {
     * (reference daily prune, `class-events.php:97-133`). */
   def prune(today: java.time.LocalDate,
       retainDays: Int = graft.model.Tuning.Default.eventRetentionDays): Seq[String] = {
-    val dir = java.nio.file.Paths.get(root)
-    if (!java.nio.file.Files.exists(dir)) return Nil
     val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd")
     val cutoff = today.minusDays(retainDays.toLong)
-    // directory streams are closed (Using) — a leaked handle per prune call
-    // adds up in a long-lived scheduler loop
-    val dropped = scala.util.Using.resource(java.nio.file.Files.list(dir)) { s =>
-      s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-        .filter { p =>
-          val n = p.getFileName.toString
-          // Try: a malformed partition name (e.g. a NULL-ts row lands in
-          // log_date=__HIVE_DEFAULT_PARTITION__) must not abort retention
-          // forever — unparseable dirs are skipped, parseable ones still
-          // prune.
-          n.startsWith("log_date=") &&
-            scala.util.Try(
-              java.time.LocalDate.parse(n.stripPrefix("log_date="), fmt))
-              .toOption.exists(_.isBefore(cutoff))
-        }
-    }
-    dropped.foreach { p =>
-      scala.util.Using.resource(java.nio.file.Files.walk(p)) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.delete(f))
-      }
-    }
-    dropped.map(_.getFileName.toString)
+    // Try: a malformed partition name (e.g. a NULL-ts row lands in
+    // log_date=__HIVE_DEFAULT_PARTITION__) must not abort retention
+    // forever — unparseable dirs are skipped, parseable ones still prune.
+    val dropped = StateCommit.listPartitionDirs(spark, root, "log_date")
+      .filter(d => scala.util.Try(java.time.LocalDate.parse(d, fmt))
+        .toOption.exists(_.isBefore(cutoff)))
+      .map(d => s"log_date=$d")
+    dropped.foreach(d => fs.delete(new Path(root, d), true))
+    dropped
   }
 
   /** Streamed CSV export, filtered + capped (reference `stream_csv`

@@ -1,8 +1,8 @@
 package graft.lifecycle
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import scala.util.Try
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.store.{EnsureStoreVectorStore, ParquetVectorStore}
@@ -19,8 +19,8 @@ import graft.store.{EnsureStoreVectorStore, ParquetVectorStore}
   *      teardown;
   *   3. drop the sync table (`:117-125`, `wcvec_objects`) → `sync_state`;
   *   4. delete all options (`:127-139`) → the store dirs, which hold the
-  *      engine's equivalent durable config+data state (`_MANIFEST`,
-  *      `_STORE_ID`);
+  *      engine's equivalent durable config+data state (the `CURRENT`
+  *      pointer and its snapshots, `_STORE_ID`);
   *   5. delete the log dir (`:141-158`, uploads/wcvec JSONL) → `events`,
   *      best-effort, then remove the now-empty work dir itself (the
   *      reference's trailing `@rmdir`).
@@ -40,42 +40,32 @@ object Uninstall {
     * skipped, as `DROP TABLE IF EXISTS` / `delete_option` are no-ops). */
   def uninstall(spark: SparkSession, work: String,
       purgeRemote: Boolean = false, siteId: Int = 1): Seq[String] = {
-    val root = Paths.get(work)
-    if (!Files.exists(root)) return Nil
+    val root = new Path(work)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return Nil
 
     // 2 — before any local state is dropped, while adapter config exists
     if (purgeRemote) {
-      if (Files.exists(root.resolve("store")))
+      if (fs.exists(new Path(root, "store")))
         try new ParquetVectorStore(spark, s"$work/store").purgeSite(siteId)
         catch { case _: Exception => () } // best-effort (`:190-203`)
-      if (Files.exists(root.resolve("store_vs")))
+      if (fs.exists(new Path(root, "store_vs")))
         try new EnsureStoreVectorStore(spark, s"$work/store_vs").purgeSite(siteId)
         catch { case _: Exception => () }
     }
 
+    // a Hadoop delete also removes a file's checksum sibling (the
+    // `.last_scan_gmt.crc` a local cursor write leaves next to it)
     val removed = Surfaces.flatMap { name =>
-      val p = root.resolve(name)
-      if (deleteRecursively(p)) Some(if (name == "last_scan_gmt") "watermark" else name)
+      val p = new Path(root, name)
+      if (fs.exists(p) && fs.delete(p, true))
+        Some(if (name == "last_scan_gmt") "watermark" else name)
       else None
     }
 
-    // the reference's trailing best-effort `@rmdir`: only an empty dir goes
-    try Files.deleteIfExists(root)
-    catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+    // the reference's trailing best-effort `@rmdir`: a non-recursive
+    // delete removes only an empty dir
+    Try(fs.delete(root, false))
     removed
-  }
-
-  /** Delete a file or directory tree; true iff something was removed.
-    * Scoped to the named work-dir surfaces above — never called on an
-    * arbitrary path. */
-  private def deleteRecursively(p: Path): Boolean = {
-    if (!Files.exists(p)) return false
-    if (Files.isDirectory(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    } else Files.deleteIfExists(p)
-    true
   }
 }

@@ -167,17 +167,6 @@ object AnnIndex {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Cell values (partition-directory suffixes) present in a written
-    * generation — a mutation's touched cells that produced output. */
-  private def listCellDirs(spark: SparkSession, path: String): Seq[String] = {
-    val (fs, p) = fsOf(spark, path)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath.getName.stripPrefix("cell="))
-      .sorted
-  }
-
   private def emptyVectors(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
       StructField("vec_id", LongType),
@@ -247,7 +236,8 @@ object AnnIndex {
     val s = spark; import s.implicits._
     writeMeta(spark, root, v,
       centroids = cents,
-      entries = listCellDirs(spark, genPath(root, v)).map(_ -> v),
+      entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+        .map(_ -> v),
       stats = Seq((buildMean, n)).toDF("build_mean_cos", "n"),
       drift = Seq.empty, // a rebuild resets the log
       // a rebuild over a live index replaces the whole manifest —
@@ -343,7 +333,8 @@ object AnnIndex {
       }
     newGen.write.mode("overwrite").partitionBy("cell")
       .parquet(genPath(root, v))
-    val entries = listCellDirs(spark, genPath(root, v)).map(_ -> v) ++
+    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .map(_ -> v) ++
       live.filterNot(e => touched(e._1))
     writeMeta(spark, root, v,
       centroids = cents,
@@ -414,7 +405,8 @@ object AnnIndex {
       .join(victims, Seq("vec_id"), "left_anti")
     kept.write.mode("overwrite").partitionBy("cell")
       .parquet(genPath(root, v))
-    val entries = listCellDirs(spark, genPath(root, v)).map(_ -> v) ++
+    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .map(_ -> v) ++
       live.filterNot(e => touched(e._1))
     writeMeta(spark, root, v,
       centroids = metaTable(spark, root, v0, Centroids),
@@ -451,7 +443,8 @@ object AnnIndex {
       .repartition(col("cell")) // one task -> one file per cell
       .write.mode("overwrite").partitionBy("cell")
       .parquet(genPath(root, v))
-    val entries = listCellDirs(spark, genPath(root, v)).map(_ -> v) ++
+    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .map(_ -> v) ++
       live.filterNot(e => crowded.exists(_._1 == e._1))
     writeMeta(spark, root, v,
       centroids = metaTable(spark, root, v0, Centroids),

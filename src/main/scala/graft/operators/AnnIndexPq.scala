@@ -198,16 +198,6 @@ object AnnIndexPq {
         .toSeq.sortBy(_._1))
       .getOrElse(Seq.empty)
 
-  private def listCellDirs(spark: SparkSession, path: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath.getName.stripPrefix("cell="))
-      .sorted
-  }
-
   /** Read exactly `entries`' cell directories — path-level pruning,
     * with each generation read under its own basePath so the `cell`
     * partition column recovers. */
@@ -253,7 +243,8 @@ object AnnIndexPq {
       coarse = parts.coarse, codebook = parts.cents,
       params = Seq((nCoarse, m, subDim, nCentroids))
         .toDF("n_coarse", "m", "sub_dim", "n_centroids"),
-      entries = listCellDirs(spark, genPath(root, v)).map(_ -> v),
+      entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+        .map(_ -> v),
       stats = Seq((meanErr, n)).toDF("build_mean_err_nano", "n"),
       drift = Seq.empty,
       // a rebuild over a live index replaces the whole manifest —
@@ -428,7 +419,7 @@ object AnnIndexPq {
     // the immutable tables carry into the new snapshot (lazy reads of
     // v0's meta feeding v's single folded write) so the pointer swap
     // publishes quantizer + codes together
-    val written = listCellDirs(spark, genPath(root, v))
+    val written = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
     val entries = live.filterNot(e => touched(e._1)) ++ written.map(_ -> v)
     writeMeta(spark, root, v,
       // reuse the in-scope v0 reads (coarse/cents) — re-probing the
@@ -465,7 +456,8 @@ object AnnIndexPq {
         .write.mode("overwrite").partitionBy("cell")
         .parquet(genPath(root, v))
     }
-    val entries = listCellDirs(spark, genPath(root, v)).map(_ -> v) ++
+    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .map(_ -> v) ++
       live.filterNot(e => touched(e._1))
     writeMeta(spark, root, v,
       coarse = metaTable(spark, root, v0, Coarse),
@@ -493,7 +485,8 @@ object AnnIndexPq {
         coarse = metaTable(spark, root, v0, Coarse),
         codebook = metaTable(spark, root, v0, Codebook),
         params = metaTable(spark, root, v0, Params),
-        entries = listCellDirs(spark, genPath(root, v)).map(_ -> v),
+        entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+        .map(_ -> v),
         stats = statsRows(spark, root, v0),
         drift = readDrift(spark, root, v0),
         // a compaction rewrites every live cell — all prior

@@ -1,11 +1,13 @@
 package graft.scan
 
-import java.nio.file.{Files, Paths}
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.streaming.StateCommit
 
 /** Scheduler semantics (SURVEY §2.11 T3–T6): persisted scan watermark with
   * 48 h first-scan lookback, admission-control quota, and the two-level
@@ -39,23 +41,15 @@ object Scheduler {
 }
 
 /** File-backed high-watermark cursor (the `last_scan_gmt` option row,
-  * reference `includes/class-scheduler.php:134-141, 164-166`). */
-final class Watermark(path: String) {
-  private val p = Paths.get(path)
-  def get: Option[String] =
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim) else None
-  def set(ts: String): Unit = {
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    // temp + atomic move, same discipline as every other cursor file: a
-    // torn plain write would leave a garbage timestamp whose cast turns
-    // the modified-scan predicate NULL — zero candidates, no error, and
-    // the next tick's set() papers over the skipped window permanently.
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, ts.getBytes)
-    Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  * reference `includes/class-scheduler.php:134-141, 164-166`), read and
+  * written through the session's Hadoop `conf`. */
+final class Watermark(path: String, conf: Configuration) {
+  def get: Option[String] = StateCommit.readSmallFile(conf, path).map(_.trim)
+  // atomic, as every cursor write: a torn plain write would leave a
+  // garbage timestamp whose cast turns the modified-scan predicate NULL —
+  // zero candidates, no error, and the next tick's set() papers over the
+  // skipped window permanently.
+  def set(ts: String): Unit = StateCommit.writeSmallFile(conf, path, ts)
 }
 
 /** T6 — the reference's two retry levels, as a deterministic policy the

@@ -2,6 +2,10 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.operators.Stage
+import graft.streaming.StateCommit
 
 /** Second adapter (K2) mirroring the reference's OpenAI-Vector-Store
   * semantics, which differ from the Pinecone-shaped [[ParquetVectorStore]]
@@ -30,28 +34,25 @@ final class EnsureStoreVectorStore(spark: SparkSession, root: String,
 
   private val inner = new ParquetVectorStore(spark, s"$root/data")
   @transient private var cachedStoreId: Option[String] = None
+  // SparkSession's context is transient: a deserialized copy re-ensures
+  // through this serializable handle on the session's Hadoop conf
+  private val hadoopConf =
+    new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
 
-  private def storeIdFile = java.nio.file.Paths.get(root, "_STORE_ID")
+  private def storeIdFile = s"$root/_STORE_ID"
 
   /** GET-or-create the store id, cached in memory and on disk.
     * `Option(...)` guard: after Java deserialization (the class is
     * Serializable and may ride a task closure) a @transient Option field
     * is null, not None — the guard re-ensures lazily instead of NPE-ing. */
   def ensureStore(): String = Option(cachedStoreId).flatten.getOrElse {
-    val id =
-      if (java.nio.file.Files.exists(storeIdFile))
-        new String(java.nio.file.Files.readAllBytes(storeIdFile)).trim
-      else {
+    val id = StateCommit.readSmallFile(hadoopConf.value, storeIdFile)
+      .map(_.trim).getOrElse {
         // deterministic mint (sha of the root path) — idempotent re-create
         val sha = java.security.MessageDigest.getInstance("SHA-256")
           .digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString
         val minted = s"vs_${sha.take(16)}"
-        java.nio.file.Files.createDirectories(storeIdFile.getParent)
-        val tmp = storeIdFile.resolveSibling("_STORE_ID.tmp")
-        java.nio.file.Files.write(tmp, minted.getBytes)
-        java.nio.file.Files.move(tmp, storeIdFile,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        StateCommit.writeSmallFile(hadoopConf.value, storeIdFile, minted)
         minted
       }
     cachedStoreId = Some(id)
@@ -59,7 +60,8 @@ final class EnsureStoreVectorStore(spark: SparkSession, root: String,
   }
 
   /** True iff ensure-store has run (for specs / status). */
-  def storeExists: Boolean = java.nio.file.Files.exists(storeIdFile)
+  def storeExists: Boolean =
+    StateCommit.readSmallFile(hadoopConf.value, storeIdFile).isDefined
 
   def upsert(payloads: DataFrame): Int = { ensureStore(); inner.upsert(payloads) }
   def deleteByIds(ids: DataFrame): Int = { ensureStore(); inner.deleteByIds(ids) }
@@ -76,16 +78,17 @@ final class EnsureStoreVectorStore(spark: SparkSession, root: String,
     * `toLocalIterator` pulls one partition at a time, so driver memory is
     * O(partition + pending batch), never O(store) (at 100 TB the listing
     * is billions of ids; a `collect()` here was round 2's scale bug).
-    * Deletes committed mid-sweep can't invalidate the walk: store commits
-    * are append-only snapshots, so the open iterator keeps reading the
-    * files of the commit it started from. Returns the version after the
+    * Deletes committed mid-sweep can't invalidate the walk: the listing
+    * is pinned on the executors ([[Stage.snap]]) before the first flush,
+    * because each flush is a store commit whose generation GC may delete
+    * the files the sweep started from. Returns the version after the
     * final flush. */
   def purgeSite(siteId: Int): Int = {
     ensureStore()
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val listing = inner.read().select(col("id"), col("site_id"))
-      .orderBy("id").toLocalIterator().asScala
+    val listing = Stage.snap(inner.read().select(col("id"), col("site_id"))
+      .orderBy("id"), materialize = true).toLocalIterator().asScala
     val pending = scala.collection.mutable.ArrayBuffer.empty[String]
     var batches = 0
     def flush(): Unit = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.streaming.StateCommit
+
 /** The adapter contract (reference
   * `includes/adapters/class-adapter-interface.php:24-34`, injected per
   * sync via the `wcvec_adapters_for_sync` filter — here plain constructor
@@ -30,30 +32,36 @@ trait VectorStoreWriter {
   * reference `includes/class-indexer.php:101-116`.
   *
   * Snapshots are BUCKETED by `product_id % nBuckets` (round 1 rewrote the
-  * whole store every commit — a full copy per sync pass at 100 TB). A
-  * `_MANIFEST` cursor maps bucket → the commit whose files currently hold
-  * it; a commit writes ONLY the touched buckets under `c{N}/bucket=K/` and
-  * re-points just those manifest entries, so untouched buckets' files are
-  * never rewritten (asserted byte-identical by BucketedStoreSpec). All of
-  * a product's chunk vectors share a bucket, so the per-product delete and
-  * the sync delta's upserts each touch exactly the buckets they name.
+  * whole store every commit — a full copy per sync pass at 100 TB) and
+  * committed through [[StateCommit]], the cell-entries generational
+  * layout of [[graft.operators.AnnIndexPq]]:
+  * {{{
+  *   root/CURRENT             — StateCommit pointer (the store version)
+  *   root/snap-v/meta/        — ONE parquet folding the (bucket, gen)
+  *                              manifest and the (n_buckets,
+  *                              site_buckets) params row, discriminated
+  *                              by column `t`
+  *   root/gen-v/bucket=K/     — IMMUTABLE store rows of bucket K
+  * }}}
+  * A commit writes ONLY the touched buckets under `gen-v/` and re-points
+  * just those manifest entries, so untouched buckets' files are never
+  * rewritten (asserted byte-identical by BucketedStoreSpec); a
+  * generation no manifest references any more is reclaimed by the
+  * shared commit tail. All of a product's chunk vectors share a bucket,
+  * so the per-product delete and the sync delta's upserts each touch
+  * exactly the buckets they name.
   *
   * `siteBuckets = true` extends the bucket key to
   * `site_id * nBuckets + product_id % nBuckets` — every bucket then holds
   * ONE site's rows, so `purgeSite` prunes to that site's buckets instead
   * of sweeping the store (the multi-tenant deployment shape at 100 TB;
-  * requires `site_id >= 0`). The manifest header records the mode, so
-  * opening a store in the wrong mode fails loudly instead of mis-routing
-  * rows.
+  * requires `site_id >= 0`). The params row records the bucket count and
+  * the mode, so opening a store with either one wrong fails loudly
+  * instead of mis-routing rows.
   */
 final class ParquetVectorStore(spark: SparkSession, root: String,
     nBuckets: Int = 16, siteBuckets: Boolean = false)
     extends VectorStoreWriter with Serializable {
-
-  // def, not val: java.nio.file.Path is NOT Serializable, and a Path
-  // field would break this class's Serializable contract the moment a
-  // closure or a decorating adapter captures it
-  private def fs = java.nio.file.Paths.get(root)
 
   val schema: StructType = StructType(Seq(
     StructField("id", StringType, nullable = false),
@@ -66,67 +74,61 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     StructField("fingerprint", StringType),
     StructField("fields", ArrayType(StringType))))
 
-  private def manifestFile = fs.resolve("_MANIFEST")
+  private val Manifest = "manifest"
+  private val Params = "params"
 
-  /** (commit counter, bucket → commit holding its current files). The
-    * manifest header pins the store's bucket count — opening with a
-    * different `nBuckets` would route rows to the wrong buckets and
-    * silently lose them, so it fails loudly instead. A legacy
-    * `_VERSION`-layout store (pre-bucketing) likewise fails loudly
-    * rather than reading as empty. */
-  private def readManifest(): (Int, Map[Int, Int]) =
-    if (!java.nio.file.Files.exists(manifestFile)) {
-      if (java.nio.file.Files.exists(fs.resolve("_VERSION")))
-        throw new IllegalStateException(
-          s"$root uses the legacy _VERSION store layout; re-sync into a " +
-            "fresh store dir (bucketed _MANIFEST layout)")
-      (0, Map.empty)
-    } else {
-      val lines = new String(java.nio.file.Files.readAllBytes(manifestFile))
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toList
-      val header = lines.head.split(" ")
-      if (header.length > 1 && header(1).toInt != nBuckets)
-        throw new IllegalStateException(
-          s"$root was written with nBuckets=${header(1)}, opened with $nBuckets")
-      val wroteSite = header.length > 2 && header(2) == "site"
-      if (header.length > 1 && wroteSite != siteBuckets)
-        throw new IllegalStateException(
-          s"$root was written with siteBuckets=$wroteSite, opened with $siteBuckets")
-      val entries = lines.tail.map { l =>
-        val Array(b, c) = l.split(" "); b.toInt -> c.toInt
-      }.toMap
-      (header(0).toInt, entries)
+  /** Column superset of the two logical meta tables (the folded-meta
+    * layout of [[StateCommit.commitMeta]]). */
+  private val MetaCols: Seq[(String, String)] = Seq(
+    "bucket" -> "int", "gen" -> "long",
+    "n_buckets" -> "int", "site_buckets" -> "boolean")
+
+  /** The committed version (0 before the first commit) and its
+    * bucket → generation manifest. */
+  private final class Committed(val version: Long,
+      val manifest: Map[Int, Long])
+
+  /** The committed state, read in ONE job (the whole folded meta is
+    * metadata-sized). The params row pins the store's bucket count and
+    * mode — opening with a different `nBuckets` or `siteBuckets` would
+    * route rows to the wrong buckets and silently lose them, so it fails
+    * loudly instead, as does a store root of the old cursor layouts. */
+  private def committed(): Committed =
+    committedVersion.fold(new Committed(0L, Map.empty)) { v =>
+      val rows = StateCommit.readParquet(spark,
+        StateCommit.tableDir(root, v, "meta")).collect()
+      rows.filter(_.getAs[String]("t") == Params).foreach { p =>
+        val (n, site) = (p.getAs[Int]("n_buckets"),
+          p.getAs[Boolean]("site_buckets"))
+        if (n != nBuckets) throw new IllegalStateException(
+          s"$root was written with nBuckets=$n, opened with $nBuckets")
+        if (site != siteBuckets) throw new IllegalStateException(
+          s"$root was written with siteBuckets=$site, opened with $siteBuckets")
+      }
+      new Committed(v, rows.filter(_.getAs[String]("t") == Manifest).map(r =>
+        r.getAs[Int]("bucket") -> r.getAs[Long]("gen")).toMap)
     }
 
-  private def writeManifest(commit: Int, m: Map[Int, Int]): Unit = {
-    java.nio.file.Files.createDirectories(fs)
-    val mode = if (siteBuckets) " site" else ""
-    val body = (s"$commit $nBuckets$mode" +: m.toSeq.sorted.map { case (b, c) => s"$b $c" })
-      .mkString("", "\n", "\n")
-    // temp + atomic move: a partial write must never leave a corrupt cursor
-    val tmp = fs.resolve("_MANIFEST.tmp")
-    java.nio.file.Files.write(tmp, body.getBytes)
-    java.nio.file.Files.move(tmp, manifestFile,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def committedVersion: Option[Long] =
+    StateCommit.currentVersionOrLegacy(spark, root, "_MANIFEST", "_VERSION")
 
-  def currentVersion: Int = readManifest()._1
+  def currentVersion: Int = committedVersion.getOrElse(0L).toInt
 
   private def emptyDf: DataFrame = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private def bucketPath(b: Int, c: Int) = fs.resolve(s"c$c/bucket=$b").toString
+  private def genPath(gen: Long) = s"$root/gen-$gen"
 
-  /** Rows of the given buckets at their manifest commits (no bucket col —
-    * it's derivable from product_id). */
-  private def readBuckets(m: Map[Int, Int], buckets: Seq[Int]): DataFrame = {
-    val paths = buckets.distinct.flatMap(b => m.get(b).map(c => bucketPath(b, c)))
+  /** Rows of the given buckets at their manifest generations (no bucket
+    * col — it's derivable from product_id). */
+  private def readBuckets(m: Map[Int, Long], buckets: Seq[Int]): DataFrame = {
+    val paths = buckets.distinct.flatMap(b =>
+      m.get(b).map(g => s"${genPath(g)}/bucket=$b"))
     if (paths.isEmpty) emptyDf else spark.read.schema(schema).parquet(paths: _*)
   }
 
   def read(): DataFrame = {
-    val (_, m) = readManifest()
+    val m = committed().manifest
     readBuckets(m, m.keys.toSeq)
   }
 
@@ -170,18 +172,22 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
   }
 
   /** Write `df` (restricted to `touched` buckets, carrying a `bucket`
-    * column) as commit N, re-pointing only the touched manifest entries.
-    * A bucket whose rows all vanished drops out of the manifest. */
-  private def commitBuckets(touched: Seq[Int], df: DataFrame): Int = {
-    val (commit, m) = readManifest()
-    val next = commit + 1
-    val dir = fs.resolve(s"c$next")
-    df.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir.toString)
-    val present = touched.distinct
-      .filter(b => java.nio.file.Files.exists(dir.resolve(s"bucket=$b"))).toSet
-    val m2 = (m -- touched.filterNot(present)) ++ present.map(_ -> next)
-    writeManifest(next, m2)
-    next
+    * column) as generation `v` = the committed version + 1 and publish
+    * `v`, re-pointing only the touched manifest entries. A bucket whose
+    * rows all vanished drops out of the manifest. */
+  private def commitBuckets(c: Committed, touched: Seq[Int],
+      df: DataFrame): Int = {
+    val s = spark; import s.implicits._
+    val v = c.version + 1
+    df.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(genPath(v))
+    val written = StateCommit.listPartitionDirs(spark, genPath(v), "bucket")
+      .map(_.toInt)
+    val manifest = (c.manifest -- touched) ++ written.map(_ -> v)
+    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+      Manifest -> manifest.toSeq.toDF("bucket", "gen"),
+      Params -> Seq((nBuckets, siteBuckets)).toDF("n_buckets", "site_buckets")),
+      droppedGens = c.manifest.values.toSet.diff(manifest.values.toSet).nonEmpty)
+    v.toInt
   }
 
   /** K1/K2 — id-keyed upsert: incoming rows replace same-id rows; only
@@ -200,10 +206,10 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     try {
       val touched = incoming.select("bucket").distinct()
         .collect().map(_.getInt(0)).toIndexedSeq
-      val (_, m) = readManifest()
-      val kept = readBuckets(m, touched).withColumn("bucket", bucketCol)
+      val c = committed()
+      val kept = readBuckets(c.manifest, touched).withColumn("bucket", bucketCol)
         .join(incoming.select("id"), Seq("id"), "left_anti")
-      commitBuckets(touched, kept.unionByName(incoming))
+      commitBuckets(c, touched, kept.unionByName(incoming))
     } finally incoming.unpersist()
   }
 
@@ -213,10 +219,10 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     try {
       val touched = keyed.select("bucket").distinct()
         .collect().map(_.getInt(0)).filter(_ >= 0).toIndexedSeq
-      val (_, m) = readManifest()
-      val kept = readBuckets(m, touched).withColumn("bucket", bucketCol)
+      val c = committed()
+      val kept = readBuckets(c.manifest, touched).withColumn("bucket", bucketCol)
         .join(keyed.select("id"), Seq("id"), "left_anti")
-      commitBuckets(touched, kept)
+      commitBuckets(c, touched, kept)
     } finally keyed.unpersist()
   }
 
@@ -225,23 +231,23 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
   def deleteByProduct(productId: Long, siteId: Int): Int = {
     val pidPart = ((productId % nBuckets + nBuckets) % nBuckets).toInt
     val b = if (siteBuckets) siteId * nBuckets + pidPart else pidPart
-    val (_, m) = readManifest()
-    val kept = readBuckets(m, Seq(b)).withColumn("bucket", bucketCol)
+    val c = committed()
+    val kept = readBuckets(c.manifest, Seq(b)).withColumn("bucket", bucketCol)
       .where(!(col("product_id") === productId && col("site_id") === siteId))
-    commitBuckets(Seq(b), kept)
+    commitBuckets(c, Seq(b), kept)
   }
 
   /** K5 — purge site. Default layout sweeps every bucket (sites span
     * products); `siteBuckets` prunes the rewrite to the target site's own
     * bucket range — the whole point of the site-partitioned layout. */
   def purgeSite(siteId: Int): Int = {
-    val (_, m) = readManifest()
+    val c = committed()
     val touched =
-      if (siteBuckets) m.keys.filter(_ / nBuckets == siteId).toIndexedSeq
-      else m.keys.toIndexedSeq
-    val kept = readBuckets(m, touched).withColumn("bucket", bucketCol)
+      if (siteBuckets) c.manifest.keys.filter(_ / nBuckets == siteId).toIndexedSeq
+      else c.manifest.keys.toIndexedSeq
+    val kept = readBuckets(c.manifest, touched).withColumn("bucket", bucketCol)
       .where(col("site_id") =!= siteId)
-    commitBuckets(touched, kept)
+    commitBuckets(c, touched, kept)
   }
 
   def count(): Long = read().count()

@@ -5,6 +5,7 @@ import java.util.EnumSet
 
 import scala.util.Try
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Path}
 import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -146,6 +147,56 @@ object StateCommit {
     FileContext.getFileContext(root.toUri,
       spark.sparkContext.hadoopConfiguration)
 
+  /** Atomically replace the small file at `path` with `body`: write
+    * `<path>.tmp`, then `FileContext.rename(…, Rename.OVERWRITE)` onto
+    * `path`, so a reader sees the old content or the new, never a torn
+    * write. The one cursor write of every state root: the `CURRENT`
+    * pointer, the ensure-store id and the scan watermark. */
+  private[graft] def writeSmallFile(conf: Configuration, path: String,
+      body: String): Unit = {
+    val p = new Path(path)
+    val ctx = FileContext.getFileContext(p.toUri, conf)
+    val tmp = new Path(p.getParent, s"${p.getName}.tmp")
+    val out = ctx.create(tmp,
+      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      CreateOpts.createParent())
+    try out.write(body.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    ctx.rename(tmp, p, Rename.OVERWRITE)
+  }
+
+  /** The content of the small file at `path`, None when it does not
+    * exist; any other read failure (a directory in its place, a storage
+    * error) throws. */
+  private[graft] def readSmallFile(conf: Configuration,
+      path: String): Option[String] = {
+    val p = new Path(path)
+    val ctx = FileContext.getFileContext(p.toUri, conf)
+    if (!ctx.util.exists(p)) None
+    else {
+      val in = ctx.open(p)
+      // to EOF: a single read() may legally return a short count, which
+      // would mis-parse the content (round-8 advisory)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
+    }
+  }
+
+  /** Partition values (the `column=` directory suffixes) under `path`,
+    * sorted; empty when `path` does not exist. Over a written generation
+    * these are the touched partitions a mutation produced output for. */
+  private[graft] def listPartitionDirs(spark: SparkSession, path: String,
+      column: String): Seq[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = s"$column="
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(_.getPath.getName.stripPrefix(prefix))
+      .sorted
+  }
+
   /** Directory for `table` of the snapshot committed (or being built)
     * for batch `v`. */
   def tableDir(statePath: String, v: Long, table: String): String =
@@ -153,22 +204,27 @@ object StateCommit {
 
   /** The committed version (last applied batch id), if any commit has
     * completed. */
-  def currentVersion(spark: SparkSession, statePath: String): Option[Long] = {
-    val root = new Path(statePath)
-    Try {
-      val in = fc(spark, root).open(new Path(root, Pointer))
-      try {
-        // read to EOF — a single read() may legally return a short count,
-        // which would mis-parse the version and silently treat prior
-        // state as absent (round-8 advisory)
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        new String(out.toByteArray, StandardCharsets.UTF_8).trim.toLong
-      } finally in.close()
-    }.toOption
-  }
+  def currentVersion(spark: SparkSession, statePath: String): Option[Long] =
+    Try(readSmallFile(spark.sparkContext.hadoopConfiguration,
+      s"$statePath/$Pointer").map(_.trim.toLong)).toOption.flatten
+
+  /** [[currentVersion]] for a root that older code committed through a
+    * hand-rolled cursor file: with no `CURRENT` but one of
+    * `legacyCursors` present, fail loudly instead of reading the old
+    * state as empty (a sync would then re-embed everything and orphan
+    * the old vectors). */
+  private[graft] def currentVersionOrLegacy(spark: SparkSession,
+      statePath: String, legacyCursors: String*): Option[Long] =
+    currentVersion(spark, statePath).orElse {
+      val root = new Path(statePath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      legacyCursors.find(c => fs.exists(new Path(root, c))).foreach { c =>
+        throw new IllegalStateException(
+          s"$statePath uses the legacy $c layout, which this version no " +
+            "longer reads; re-sync into a fresh dir")
+      }
+      None
+    }
 
   /** Read `table` from the committed snapshot; None before the first
     * commit. */
@@ -195,14 +251,9 @@ object StateCommit {
       retain: Int): Unit = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
     val root = new Path(statePath)
+    writeSmallFile(spark.sparkContext.hadoopConfiguration,
+      s"$statePath/$Pointer", v.toString)
     val ctx = fc(spark, root)
-    val tmp = new Path(root, s"$Pointer.tmp")
-    val out = ctx.create(tmp,
-      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      CreateOpts.createParent())
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    ctx.rename(tmp, new Path(root, Pointer), Rename.OVERWRITE)
     // GC: keep the `retain` newest committed (≤ v) snapshots. Anything
     // newer than v is some other writer's in-flight build — not ours to
     // judge, never deleted here.
@@ -272,59 +323,24 @@ object StateCommit {
     * version are never touched. */
   private[graft] def gcGenerations(spark: SparkSession,
       statePath: String): Unit = {
-    val manifestTable = "manifest"
+    import org.apache.spark.sql.functions.col
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listed = Try(fs.listStatus(root).toSeq).getOrElse(return)
     val cur = currentVersion(spark, statePath).getOrElse(return)
-    val committedSnaps = listed
-      .filter(_.getPath.getName.startsWith(SnapPrefix))
-      .filter(s => Try(s.getPath.getName.stripPrefix(SnapPrefix).toLong)
-        .toOption.exists(_ <= cur))
-    val referenced = scala.collection.mutable.Set.empty[Long]
-    committedSnaps.foreach { s =>
-      // layout probe by existence, not by catching AnalysisException —
-      // a folded-meta snapshot (round 12: one `meta` parquet holds every
-      // metadata-sized table, discriminated by column `t`) has no
-      // per-table manifest dir, and exception-driven fallback spammed
-      // a full PATH_NOT_FOUND stack into every commit's log.
-      // FOLDED FIRST — the same precedence readers (LexIndex.metaTable)
-      // use: a snapshot dir can legally carry BOTH layouts (a pre-fold
-      // build attempt crashed before commit, then the same version was
-      // rewritten post-fold — overwrite replaces meta/ but nothing
-      // removes the stale per-table dir). GC consulting the STALE
-      // manifest while readers follow the folded one would delete
-      // generations the committed snapshot still references
-      // (round-12 advice).
-      // "folded" is decided by SCHEMA, not existence alone: PRE-fold
-      // DedupIndex snapshots keep an unrelated params table also named
-      // `meta` (no `t` discriminator column) — existence alone would
-      // mis-read it and abort (fail-safe, but silently disabling that
-      // family's GC). Post-fold (round 13) every family's meta carries
-      // `t`.
-      val perTable = new Path(s.getPath, manifestTable)
-      val folded = new Path(s.getPath, "meta")
-      val read = Try {
-        val fm = if (fs.exists(folded))
-          Some(readParquet(spark, folded.toString)).filter(
-            _.columns.contains("t"))
-        else None
-        fm match {
-          case Some(m) =>
-            m.where(org.apache.spark.sql.functions.col("t") === manifestTable)
-              .select(org.apache.spark.sql.functions.col("gen").cast("long"))
-              .collect().map(_.getLong(0))
-          case None =>
-            readParquet(spark, perTable.toString)
-              .select(org.apache.spark.sql.functions.col("gen").cast("long"))
-              .collect().map(_.getLong(0))
-        }
-      }
-      read match {
-        case scala.util.Success(gs) => referenced ++= gs
-        case scala.util.Failure(_) => return // abort: never guess
-      }
-    }
+    val snaps = versions(spark, statePath)
+    // a listing that misses CURRENT's own snapshot is not to be trusted
+    if (!snaps.contains(cur)) return
+    // each committed manifest is read through the readers' own
+    // folded-first probe ([[metaTable]]): GC consulting a stale per-table
+    // manifest that the readers no longer follow would delete generations
+    // the committed snapshot still references (round-12 advice). One
+    // union, one job for all of them.
+    val referenced = Try(snaps
+      .map(v => metaTable(spark, statePath, v, "manifest", Seq("gen"))
+        .select(col("gen").cast("long")))
+      .reduce(_.unionByName(_)).collect().map(_.getLong(0))
+      .toSet).getOrElse(return) // abort: never guess
     listed.filter(_.getPath.getName.startsWith("gen-")).foreach { g =>
       Try(g.getPath.getName.stripPrefix("gen-").toLong).toOption.foreach {
         gv => if (gv < cur && !referenced(gv)) fs.delete(g.getPath, true)

@@ -10,6 +10,7 @@ import graft.fingerprint.Fingerprint
 import graft.events.EventLog
 import graft.model.Selection
 import graft.store.VectorStoreWriter
+import graft.streaming.StateCommit
 
 /** The sync/delta engine — the reference's core "query"
   * (`includes/class-indexer.php:284-479`, SURVEY §2.10) re-expressed as one
@@ -47,10 +48,6 @@ final class SyncEngine(
 
   import spark.implicits._
 
-  // def, not val: Path is not Serializable and the engine is (so its
-  // UDF-free helpers can ride task closures without a kryo surprise)
-  private def fsRoot = java.nio.file.Paths.get(syncStateRoot)
-
   val syncSchema: StructType = StructType(Seq(
     StructField("site_id", IntegerType, nullable = false),
     StructField("product_id", LongType, nullable = false),
@@ -66,37 +63,36 @@ final class SyncEngine(
     StructField("error_msg", StringType),
     StructField("last_synced_at", StringType)))
 
-  private def versionFile = fsRoot.resolve("_VERSION")
-
+  /** The committed sync_state version (0 before the first commit). A
+    * root of the old `_VERSION` cursor layout fails loudly. */
   def syncVersion: Int =
-    if (java.nio.file.Files.exists(versionFile))
-      new String(java.nio.file.Files.readAllBytes(versionFile)).trim.toInt
-    else 0
+    StateCommit.currentVersionOrLegacy(spark, syncStateRoot, "_VERSION")
+      .getOrElse(0L).toInt
 
-  def readSyncState(): DataFrame = {
-    val v = syncVersion
-    if (v == 0) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], syncSchema)
-    else spark.read.parquet(fsRoot.resolve(s"v$v").toString)
-  }
+  def readSyncState(): DataFrame =
+    StateCommit.readTable(spark, syncStateRoot, "sync_state").getOrElse {
+      syncVersion // no commit yet: a legacy root throws here
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], syncSchema)
+    }
 
+  /** Write `df` as snapshot v+1's `sync_state` table, then publish it
+    * ([[StateCommit.commit]], which also reclaims snapshots older than
+    * the one it replaces). The written schema seeds the reader's cache,
+    * so the next pass's reads skip the schema-inference job. */
   private def commitSyncState(df: DataFrame): Unit = {
     val next = syncVersion + 1
-    df.write.mode(SaveMode.Overwrite).parquet(fsRoot.resolve(s"v$next").toString)
-    java.nio.file.Files.createDirectories(fsRoot)
-    // temp + atomic move: a partial write must never leave a corrupt cursor
-    val tmp = fsRoot.resolve("_VERSION.tmp")
-    java.nio.file.Files.write(tmp, next.toString.getBytes)
-    java.nio.file.Files.move(tmp, versionFile,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val dir = StateCommit.tableDir(syncStateRoot, next, "sync_state")
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    StateCommit.noteWrittenSchema(spark, dir, df.schema)
+    StateCommit.commit(spark, syncStateRoot, next)
   }
 
   /** Normalized text + product_sha per candidate. `products` needs columns
     * (product_id, site_id, sku, text). */
   def fingerprinted(normalized: DataFrame): DataFrame = {
-    // hoist to locals: a UDF capturing `this` would drag the engine (and
-    // its non-serializable Path fields) into the task closure
+    // hoist to locals: a UDF capturing `this` would drag the whole engine
+    // into the task closure
     val (selL, dimL) = (sel, embedder.dimension)
     val shaUdf = udf((text: String) =>
       Fingerprint.shaProduct(Option(text).getOrElse(""), selL, dimL))

@@ -49,7 +49,7 @@ object Validators {
     }
 
   /** validate_pinecone analog over the Pinecone-shaped local store:
-    * "controller reachable" = the root exists and its manifest parses;
+    * "controller reachable" = the root exists and its committed meta parses;
     * "index detail" = the stored vectors' dimension, asserted against the
     * configured one (`class-validators.php:109-135`). An empty store is
     * OK — the reference reports success with "no index specified yet"
@@ -65,7 +65,9 @@ object Validators {
         s"store root $root does not exist — nothing has been synced there.")
     try {
       val store = new ParquetVectorStore(spark, root)
-      val version = store.currentVersion // parses the manifest (or throws)
+      // a legacy layout throws at currentVersion, a bucket-count or mode
+      // mismatch at read(), which parses the committed meta
+      val version = store.currentVersion
       val sample = store.read().select("values").head(1)
       if (sample.isEmpty)
         ValidationResult(ok = true, "ok",
@@ -87,7 +89,7 @@ object Validators {
         }
       }
     } catch {
-      // manifest mode/bucket-count mismatch, legacy layout, torn header
+      // bucket-count/mode mismatch, legacy layout, unreadable meta
       case e: Exception =>
         ValidationResult(ok = false, "store_invalid",
           s"store at $root is not readable: ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.store.{EnsureStoreVectorStore, ParquetVectorStore}
@@ -36,7 +36,7 @@ class BucketedStoreSpec extends SparkSpec {
     val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4)
     // products 0 and 1 land in buckets 0 and 1
     store.upsert(Seq(payload(0, 0), payload(1, 0)).toDF(cols: _*))
-    val bucket0 = root.resolve("c1/bucket=0")
+    val bucket0 = root.resolve("gen-1/bucket=0")
     assert(Files.exists(bucket0))
     val before = fileHashes(bucket0)
     assert(before.nonEmpty)
@@ -55,7 +55,7 @@ class BucketedStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("bstore2")
     val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4)
     store.upsert(Seq(payload(2, 0), payload(3, 0), payload(3, 1)).toDF(cols: _*))
-    val b2 = root.resolve("c1/bucket=2")
+    val b2 = root.resolve("gen-1/bucket=2")
     val before = fileHashes(b2)
 
     // replace product 3 chunk 0 (bucket 3): count stays, bucket 2 untouched
@@ -107,6 +107,27 @@ class BucketedStoreSpec extends SparkSpec {
     assert(left.length == 4 && left.forall(_ == 2))
   }
 
+  test("ensure-store purge: one delete per id over every bucket, GC mid-sweep") {
+    val root = Files.createTempDirectory("vspurge1").resolve("s").toString
+    val store = new EnsureStoreVectorStore(spark, root, pageSize = 3, deleteBatch = 1)
+    // site 1's products 0..15 fill all 16 buckets of the nested store,
+    // four generations of four buckets each; site 2's products 16..19
+    // then move buckets 0..3 to gen-5
+    for (g <- 0L to 3L)
+      store.upsert((4 * g to 4 * g + 3).map(p => payload(p, 0, site = 1)).toDF(cols: _*))
+    store.upsert((16L to 19L).map(p => payload(p, 0, site = 2)).toDF(cols: _*))
+    assert(store.currentVersion == 5)
+    // 16 flushes = 16 commits. In id order (products 0, 10..15, 1..9)
+    // the flush of product 15 drops gen-4 from the manifest and the flush
+    // of product 3 runs the GC that deletes it, while the sorted listing
+    // is still open
+    assert(store.purgeSite(1) == 21)
+    assert(store.lastPurgeBatches == 16)
+    assert(store.read().select("id").as[String].collect().sorted.toSeq ==
+      (16 to 19).map(p => s"site-2:product-$p:chunk-0"))
+    assert(!Files.exists(Paths.get(root, "data", "gen-4")))
+  }
+
   test("siteBuckets: purge rewrites ONLY the target site's buckets") {
     val root = Files.createTempDirectory("sitebstore")
     val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4,
@@ -114,7 +135,7 @@ class BucketedStoreSpec extends SparkSpec {
     store.upsert((Seq(payload(1, 0, site = 1), payload(2, 0, site = 1),
       payload(1, 0, site = 2), payload(6, 0, site = 2))).toDF(cols: _*))
     // site 2's buckets live in range [8, 12); snapshot them
-    val site2dirs = Files.list(root.resolve("c1")).iterator().asScala.toSeq
+    val site2dirs = Files.list(root.resolve("gen-1")).iterator().asScala.toSeq
       .filter(_.getFileName.toString.matches("bucket=(9|10)"))
     assert(site2dirs.nonEmpty)
     val before = site2dirs.map(fileHashes)

@@ -37,8 +37,8 @@ class LifecycleSpec extends SparkSpec {
       .withColumn("site_id", lit(1))
       .withColumn("sku", concat(lit("SKU-"), col("product_id")))
     engine.sync(cand)
-    new graft.scan.Watermark(dir.resolve("last_scan_gmt").toString)
-      .set("2026-01-01 00:00:00")
+    new graft.scan.Watermark(dir.resolve("last_scan_gmt").toString,
+      spark.sparkContext.hadoopConfiguration).set("2026-01-01 00:00:00")
     dir
   }
 
@@ -82,11 +82,15 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("validate: unreadable store layout → store_invalid") {
-    val dir = Files.createTempDirectory("graftCorrupt")
-    // the pre-bucketing legacy layout the manifest reader rejects loudly
-    Files.write(dir.resolve("_VERSION"), "7".getBytes)
-    val r = Validators.validateStore(spark, dir.toString, Some(Dim))
-    assert(!r.ok && r.code == "store_invalid", r.message)
+    // the two legacy cursor layouts (pre-bucketing `_VERSION`, bucketed
+    // `_MANIFEST`) the store rejects loudly, naming the fix
+    for (cursor <- Seq("_VERSION", "_MANIFEST")) {
+      val dir = Files.createTempDirectory("graftCorrupt")
+      Files.write(dir.resolve(cursor), "7".getBytes)
+      val r = Validators.validateStore(spark, dir.toString, Some(Dim))
+      assert(!r.ok && r.code == "store_invalid", r.message)
+      assert(r.message.contains("fresh dir"), r.message)
+    }
   }
 
   test("validate: empty store is reachable-ok; un-ensured adapter is not") {

@@ -35,7 +35,8 @@ class SchedulerSpec extends SparkSpec {
     assert(Scheduler.since(Some("2024-01-02 11:22:33"), now) == "2024-01-02 11:22:33")
     assert(Scheduler.since(None, now) == "2024-01-01 00:00:00")
     val wm = new Watermark(
-      Files.createTempDirectory("graft-wm").resolve("last_scan").toString)
+      Files.createTempDirectory("graft-wm").resolve("last_scan").toString,
+      spark.sparkContext.hadoopConfiguration)
     assert(wm.get.isEmpty)
     wm.set("2024-01-02 00:00:00")
     assert(wm.get.contains("2024-01-02 00:00:00"))

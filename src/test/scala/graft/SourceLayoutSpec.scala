@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-tree invariants the engine's structure relies on, checked by
   * scanning `src/main/scala`: the kept entry points are the only
   * `main`s, every one of them builds its session through
-  * [[LocalSession]], and generation GC is reached only through the
-  * shared commit tail ([[graft.streaming.StateCommit.commitMeta]]).
+  * [[LocalSession]], generation GC is reached only through the shared
+  * commit tail ([[graft.streaming.StateCommit.commitMeta]]), and the
+  * sync path's state goes through Hadoop via [[graft.streaming
+  * .StateCommit]] (one atomic small-file write, one partition lister).
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -51,6 +53,21 @@ class SourceLayoutSpec extends AnyFunSuite {
 
   test("StateCommit.gcGenerations is called only from inside StateCommit") {
     assert(filesContaining("gcGenerations(") ==
+      Set("graft/streaming/StateCommit.scala"))
+  }
+
+  test("no file under graft/sync or graft/store names java.nio.file") {
+    assert(filesContaining("java.nio.file").filter(f =>
+      f.startsWith("graft/sync/") || f.startsWith("graft/store/")).isEmpty)
+  }
+
+  test("ATOMIC_MOVE appears nowhere: cursor files go through StateCommit") {
+    assert(filesContaining("ATOMIC_MOVE").isEmpty)
+  }
+
+  test("the partition-dir lister has one copy, in StateCommit") {
+    assert(filesContaining("def listCellDirs").isEmpty)
+    assert(filesContaining("def listPartitionDirs") ==
       Set("graft/streaming/StateCommit.scala"))
   }
 }

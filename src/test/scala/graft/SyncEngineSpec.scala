@@ -195,6 +195,19 @@ class SyncEngineSpec extends SparkSpec {
     assert(s3.getOrElse("skip_unchanged", 0L) == 1L)
   }
 
+  test("a sync_state root of the old _VERSION layout fails loudly, naming the fix") {
+    val dir = Files.createTempDirectory("graftLegacy")
+    Files.createDirectories(dir.resolve("sync"))
+    Files.write(dir.resolve("sync/_VERSION"), "3".getBytes)
+    val (engine, store) = mkEngine(dir)
+    val e = intercept[IllegalStateException](
+      engine.sync(docs(Seq(1L -> "tiny doc."))))
+    assert(e.getMessage.contains("_VERSION") &&
+      e.getMessage.contains("re-sync into a fresh dir"), e.getMessage)
+    intercept[IllegalStateException](engine.syncVersion)
+    assert(store.currentVersion == 0, "the failed pass wrote nothing")
+  }
+
   test("embeddings are deterministic and dimension-locked") {
     val e = new LocalHashEmbedder("text-embedding-3-small")
     val v1 = e.embedOne("hello")
