@@ -1061,21 +1061,7 @@ object Main {
         System.err.println(s"error: no committed index at $root"); sys.exit(2); 0L
       }
       val retained = StateCommit.versions(spark, root)
-      val metaPath = new org.apache.hadoop.fs.Path(
-        StateCommit.tableDir(root, cur, "meta"))
-      val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val snapListing = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$root/snap-$cur"))
-        .map(_.getPath.getName).toSet
-      val ts: Set[String] =
-        if (fs.exists(metaPath)) {
-          val m = spark.read.parquet(metaPath.toString)
-          if (m.columns.contains("t"))
-            m.select("t").distinct().collect().map(_.getString(0)).toSet
-          // a t-less meta is a PRE-fold DedupIndex/DsirModel scheme
-          // table — the per-table DIR listing identifies the family
-          else snapListing
-        } else snapListing
+      val ts = StateCommit.metaTableNames(spark, root, cur)
       val family =
         if (ts.contains("dfs")) "lexical"
         else if (ts.contains("coarse")) "ivf-pq"
@@ -1090,10 +1076,7 @@ object Main {
         // the stable signature once the richer families are ruled out
         else if (ts.contains("meta") && ts.contains("manifest")) "dedup"
         else "unknown"
-      val gensOnDisk = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-        .map(_.getPath.getName).filter(_.startsWith("gen-"))
-        .flatMap(n => scala.util.Try(n.stripPrefix("gen-").toLong).toOption)
-        .sorted.toSeq
+      val gensOnDisk = StateCommit.generationsOnDisk(spark, root)
       println(s"family: $family")
       println(s"committed version: $cur")
       println(s"retained versions (time-travel horizon): ${retained.mkString(", ")}")

@@ -72,9 +72,8 @@ object AnnIndex {
   private val Stats = "stats"
   private val Drift = "drift"
 
-  private def genPath(root: String, gen: Long) = s"$root/gen-$gen"
   private def cellDir(root: String, gen: Long, cell: String) =
-    s"${genPath(root, gen)}/cell=$cell"
+    s"${StateCommit.genDir(root, gen)}/cell=$cell"
 
   /** Column superset of the four logical metadata tables — every commit
     * folds them into ONE `meta` parquet (discriminated by column `t`),
@@ -131,9 +130,7 @@ object AnnIndex {
 
   /** The committed snapshot version; mutations bump it by one. */
   def version(spark: SparkSession, root: String): Long =
-    StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed ANN index at $root (run AnnIndex.build first)"))
+    StateCommit.committedVersion(spark, root, "ANN index")
 
   /** The committed coarse quantizer (broadcast-sized). */
   def centroids(spark: SparkSession, root: String): DataFrame =
@@ -182,7 +179,7 @@ object AnnIndex {
       entries: Seq[(String, Long)]): DataFrame = {
     if (entries.isEmpty) return emptyVectors(spark)
     val parts = entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, es) =>
-      StateCommit.readParquetBased(spark, genPath(root, g),
+      StateCommit.readParquetBased(spark, StateCommit.genDir(root, g),
         es.map(e => cellDir(root, g, e._1)).sorted)
     }
     val cellT = parts.head.schema("cell").dataType
@@ -229,14 +226,15 @@ object AnnIndex {
     val scored = Similarity.assignCellsScored(embeddings, cents)
     scored.drop("ccos")
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(genPath(root, v))
+      .parquet(StateCommit.genDir(root, v))
     // build-time assignment quality: the drift monitor's reference point
     // (one extra broadcast-assignment pass — metadata-cheap vs the write)
     val (buildMean, n) = meanCosOf(scored)
     val s = spark; import s.implicits._
     writeMeta(spark, root, v,
       centroids = cents,
-      entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      entries = StateCommit.listPartitionDirs(spark,
+        StateCommit.genDir(root, v), "cell")
         .map(_ -> v),
       stats = Seq((buildMean, n)).toDF("build_mean_cos", "n"),
       drift = Seq.empty, // a rebuild resets the log
@@ -332,8 +330,9 @@ object AnnIndex {
           col("cell").cast(kept.schema("cell").dataType)))
       }
     newGen.write.mode("overwrite").partitionBy("cell")
-      .parquet(genPath(root, v))
-    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .parquet(StateCommit.genDir(root, v))
+    val entries = StateCommit.listPartitionDirs(spark,
+      StateCommit.genDir(root, v), "cell")
       .map(_ -> v) ++
       live.filterNot(e => touched(e._1))
     writeMeta(spark, root, v,
@@ -404,8 +403,9 @@ object AnnIndex {
     val kept = readCells(spark, root, live.filter(e => touched(e._1)))
       .join(victims, Seq("vec_id"), "left_anti")
     kept.write.mode("overwrite").partitionBy("cell")
-      .parquet(genPath(root, v))
-    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .parquet(StateCommit.genDir(root, v))
+    val entries = StateCommit.listPartitionDirs(spark,
+      StateCommit.genDir(root, v), "cell")
       .map(_ -> v) ++
       live.filterNot(e => touched(e._1))
     writeMeta(spark, root, v,
@@ -442,8 +442,9 @@ object AnnIndex {
     readCells(spark, root, crowded)
       .repartition(col("cell")) // one task -> one file per cell
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(genPath(root, v))
-    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      .parquet(StateCommit.genDir(root, v))
+    val entries = StateCommit.listPartitionDirs(spark,
+      StateCommit.genDir(root, v), "cell")
       .map(_ -> v) ++
       live.filterNot(e => crowded.exists(_._1 == e._1))
     writeMeta(spark, root, v,

@@ -2,7 +2,6 @@ package graft.operators
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,9 +64,8 @@ object AnnIndexPq {
     * only the distinct probed cells collect. */
   private val ProbeCollectBound = 8192
 
-  private def genPath(root: String, gen: Long) = s"$root/gen-$gen"
   private def cellDir(root: String, gen: Long, cell: String) =
-    s"${genPath(root, gen)}/cell=$cell"
+    s"${StateCommit.genDir(root, gen)}/cell=$cell"
 
   /** Column superset of the six logical metadata tables — every commit
     * folds them into ONE `meta` parquet (discriminated by column `t`),
@@ -132,9 +130,7 @@ object AnnIndexPq {
   }
 
   def version(spark: SparkSession, root: String): Long =
-    StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed IVF-PQ index at $root (run AnnIndexPq.build first)"))
+    StateCommit.committedVersion(spark, root, "IVF-PQ index")
 
   /** (nCoarse, m, subDim, nCentroids) locked at build time. */
   def params(spark: SparkSession, root: String): (Int, Int, Int, Int) =
@@ -157,26 +153,11 @@ object AnnIndexPq {
     * snapshots fall back to the per-table reads. */
   private def paramsAndManifest(spark: SparkSession, root: String,
       v: Long): ((Int, Int, Int, Int), Seq[(String, Long)]) = {
-    val metaPath = new Path(StateCommit.tableDir(root, v, "meta"))
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val folded =
-      if (fs.exists(metaPath))
-        Some(StateCommit.readParquet(spark, metaPath.toString))
-          .filter(_.columns.contains("t"))
-      else None
-    folded match {
-      case Some(m) =>
-        val rows = m.where(col("t").isin(Params, Manifest))
-          .select(col("t"), col("n_coarse"), col("m"), col("sub_dim"),
-            col("n_centroids"), col("cell"), col("gen"))
-          .collect()
-        val p = rows.filter(_.getString(0) == Params).head
-        val entries = rows.filter(_.getString(0) == Manifest)
-          .map(r => (r.getString(5), r.getLong(6))).toSeq.sortBy(_._1)
-        ((p.getInt(1), p.getInt(2), p.getInt(3), p.getInt(4)), entries)
-      case None =>
-        (paramsAt(spark, root, v), manifestOf(spark, root, v))
-    }
+    val m = StateCommit.metaRows(spark, root, v, Seq(Params, Manifest),
+      metaCols)
+    val p = m(Params).head
+    ((p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)),
+      m(Manifest).map(r => (r.getString(0), r.getLong(1))).sortBy(_._1))
   }
 
   /** Mean per-vector quantization error (Σ over blocks of the chosen
@@ -206,7 +187,7 @@ object AnnIndexPq {
     if (entries.isEmpty) None
     else {
       val parts = entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, es) =>
-        StateCommit.readParquetBased(spark, genPath(root, g),
+        StateCommit.readParquetBased(spark, StateCommit.genDir(root, g),
           es.map(e => cellDir(root, g, e._1)).sorted)
       }
       val cellT = parts.head.schema("cell").dataType
@@ -235,7 +216,7 @@ object AnnIndexPq {
       .join(parts.residuals.select(col("vec_id"), col("ccell").as("cell")),
         Seq("vec_id"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(genPath(root, v))
+      .parquet(StateCommit.genDir(root, v))
     // build-time quantization quality: the drift monitor's reference
     // point (and the drift log resets — a fresh build is un-drifted)
     val (meanErr, n) = meanErrOf(assign)
@@ -243,7 +224,8 @@ object AnnIndexPq {
       coarse = parts.coarse, codebook = parts.cents,
       params = Seq((nCoarse, m, subDim, nCentroids))
         .toDF("n_coarse", "m", "sub_dim", "n_centroids"),
-      entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+      entries = StateCommit.listPartitionDirs(spark,
+        StateCommit.genDir(root, v), "cell")
         .map(_ -> v),
       stats = Seq((meanErr, n)).toDF("build_mean_err_nano", "n"),
       drift = Seq.empty,
@@ -415,11 +397,12 @@ object AnnIndexPq {
           .unionByName(incoming)
     }
     newGen.write.mode("overwrite").partitionBy("cell")
-      .parquet(genPath(root, v))
+      .parquet(StateCommit.genDir(root, v))
     // the immutable tables carry into the new snapshot (lazy reads of
     // v0's meta feeding v's single folded write) so the pointer swap
     // publishes quantizer + codes together
-    val written = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+    val written = StateCommit.listPartitionDirs(spark,
+      StateCommit.genDir(root, v), "cell")
     val entries = live.filterNot(e => touched(e._1)) ++ written.map(_ -> v)
     writeMeta(spark, root, v,
       // reuse the in-scope v0 reads (coarse/cents) — re-probing the
@@ -454,9 +437,10 @@ object AnnIndexPq {
     readCells(spark, root, live.filter(e => touched(e._1))).foreach { t =>
       t.join(victims, Seq("vec_id"), "left_anti")
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(genPath(root, v))
+        .parquet(StateCommit.genDir(root, v))
     }
-    val entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+    val entries = StateCommit.listPartitionDirs(spark,
+      StateCommit.genDir(root, v), "cell")
       .map(_ -> v) ++
       live.filterNot(e => touched(e._1))
     writeMeta(spark, root, v,
@@ -480,12 +464,13 @@ object AnnIndexPq {
       val v = v0 + 1
       raw.repartition(col("cell")).sortWithinPartitions("cell", "vec_id", "blk")
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(genPath(root, v))
+        .parquet(StateCommit.genDir(root, v))
       writeMeta(spark, root, v,
         coarse = metaTable(spark, root, v0, Coarse),
         codebook = metaTable(spark, root, v0, Codebook),
         params = metaTable(spark, root, v0, Params),
-        entries = StateCommit.listPartitionDirs(spark, genPath(root, v), "cell")
+        entries = StateCommit.listPartitionDirs(spark,
+          StateCommit.genDir(root, v), "cell")
         .map(_ -> v),
         stats = statsRows(spark, root, v0),
         drift = readDrift(spark, root, v0),

@@ -1,12 +1,10 @@
 package graft.operators
 
-import scala.util.Try
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StateCommit
+import graft.streaming.{GenerationalTable, StateCommit}
+import graft.streaming.StateCommit.genDir
 
 /** Persisted MinHash-LSH dedup index — the build-once / probe-many
   * form of [[Dedup.incrementalDedup]]: a real curation pipeline dedups
@@ -30,13 +28,11 @@ import graft.streaming.StateCommit
   * k/r scheme, manifest/, tombstones/ — and stay readable via the
   * schema-probed folded-first fallback in `metaTable`)
   *
-  * Generations are append-only and immutable; replacement and deletion
-  * are TOMBSTONES (the Iceberg/Delta delete-file move): an upsert of an
-  * existing id writes the new rows into its own generation and marks
-  * the old ones dead with `before_gen = v`; a delete marks
-  * `before_gen = Long.MaxValue`; a later upsert of a deleted id
-  * replaces the tombstone, resurrecting the doc. Every mutation
-  * publishes manifest + tombstones (+ carried meta) with ONE atomic
+  * Generations are append-only and immutable, with the tombstone
+  * liveness rule of [[graft.streaming.GenerationalTable]]. Every
+  * mutation tombstones each id it touches (an upsert at its own
+  * generation, a delete at `DeleteAll`), signature-bearing or not, and
+  * publishes manifest + tombstones (+ carried scheme) with ONE atomic
   * [[StateCommit.commit]] pointer swap, so readers see a mutation in
   * full or not at all, and a crash leaves only unreferenced directories
   * the deterministic replay overwrites. [[compact]] folds the live rows
@@ -59,21 +55,20 @@ object DedupIndex {
   private val Meta = "meta"
   private val Manifest = "manifest"
   private val Tombstones = "tombstones"
-  private val DeleteAll = Long.MaxValue
+  private val Key = "doc_id"
 
-  private def genPath(root: String, gen: Long) = s"$root/gen-$gen"
-  private def bandsDir(root: String, gen: Long) = s"${genPath(root, gen)}/bands"
-  private def sigsDir(root: String, gen: Long) = s"${genPath(root, gen)}/sigs"
+  private def bandsDir(root: String, gen: Long) = s"${genDir(root, gen)}/bands"
+  private def sigsDir(root: String, gen: Long) = s"${genDir(root, gen)}/sigs"
 
   /** The committed snapshot version; mutations bump it by one. */
   def version(spark: SparkSession, root: String): Long =
-    StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed dedup index at $root (run DedupIndex.build first)"))
+    StateCommit.committedVersion(spark, root, "dedup index")
 
   /** The signature scheme locked at build time. */
-  def scheme(spark: SparkSession, root: String): (Int, Int) =
-    schemeAt(spark, root, version(spark, root))
+  def scheme(spark: SparkSession, root: String): (Int, Int) = {
+    val st = stateAt(spark, root, version(spark, root))
+    (st.k, st.r)
+  }
 
   /** Column superset of the three logical metadata tables — every
     * commit folds them into ONE `meta` parquet (discriminated by
@@ -87,15 +82,15 @@ object DedupIndex {
     * this family. */
   private val MetaCols: Seq[(String, String)] = Seq(
     "k" -> "int", "r" -> "int",
-    "gen" -> "long", "n_docs" -> "long",
-    "doc_id" -> "long", "before_gen" -> "long")
+    "gen" -> "long", "n_docs" -> "long") ++
+    GenerationalTable.tombstoneCols(Key)
 
   /** This family's logical-table column lists (select order is the
     * reader contract). */
   private[graft] def metaCols(table: String): Seq[String] = table match {
     case Meta => Seq("k", "r")
     case Manifest => Seq("gen", "n_docs")
-    case Tombstones => Seq("doc_id", "before_gen")
+    case Tombstones => GenerationalTable.tombstoneCols(Key).map(_._1)
   }
 
   /** Read one logical meta table of snapshot `v` — the shared
@@ -106,6 +101,17 @@ object DedupIndex {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
+  /** Scheme + manifest of snapshot `v`, read in ONE driver action
+    * ([[StateCommit.metaRows]]). Tombstones stay a lazy DataFrame. */
+  private final case class State(k: Int, r: Int, gens: Seq[(Long, Long)])
+
+  private def stateAt(spark: SparkSession, root: String, v: Long): State = {
+    val m = StateCommit.metaRows(spark, root, v, Seq(Meta, Manifest), metaCols)
+    val sc = m(Meta).head
+    State(sc.getInt(0), sc.getInt(1),
+      m(Manifest).map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1))
+  }
+
   /** Write the folded metadata snapshot and commit
     * ([[StateCommit.commitMeta]]). */
   private def writeMetaTables(spark: SparkSession, root: String, v: Long,
@@ -115,34 +121,16 @@ object DedupIndex {
     StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
       Meta -> Seq((k, r)).toDF("k", "r"),
       Manifest -> entries.toDF("gen", "n_docs"),
-      Tombstones -> tombstones
-        .select(col("doc_id").cast("long"), col("before_gen").cast("long"))),
-      droppedGens)
+      Tombstones -> tombstones), droppedGens)
   }
 
-  private def manifestOf(spark: SparkSession, root: String,
-      v: Long): Seq[(Long, Long)] =
-    metaTable(spark, root, v, Manifest)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
-
-  private def tombstonesOf(spark: SparkSession, root: String,
-      v: Long): DataFrame =
-    metaTable(spark, root, v, Tombstones)
-
-  private def emptyTombstones(spark: SparkSession): DataFrame = {
-    val s = spark; import s.implicits._
-    Seq.empty[(Long, Long)].toDF("doc_id", "before_gen")
-  }
-
-  /** Tombstones for snapshot v: prior entries for ids NOT touched by
-    * this mutation, plus one fresh entry per touched id. Replacing (not
-    * max-merging) makes the LAST mutation win — delete-then-upsert
-    * resurrects, upsert-then-delete stays dead. */
-  private def mergedTombstones(prior: DataFrame, touchedIds: DataFrame,
-      beforeGen: Long): DataFrame =
-    prior.join(touchedIds, Seq("doc_id"), "left_anti")
-      .unionByName(touchedIds.select(col("doc_id"),
-        lit(beforeGen).as("before_gen")))
+  /** Live rows of one per-generation table (`dir`) as of snapshot `v`,
+    * with a `gen` column. */
+  private def liveAt(spark: SparkSession, root: String, v: Long,
+      st: State, dir: (String, Long) => String): DataFrame =
+    GenerationalTable.live(st.gens.map(_._1),
+      g => StateCommit.readParquet(spark, dir(root, g)),
+      metaTable(spark, root, v, Tombstones), Key)
 
   /** One signature pass over `documents`: (bands, sigs). The wide
     * minhash table snapshots ONCE and both tables derive from it
@@ -167,35 +155,16 @@ object DedupIndex {
     sigs.count()
   }
 
-  /** Union of the live generations' `sub` tables with a `gen` column,
-    * tombstone filter applied. The tombstone table broadcasts —
-    * bounded by churn since the last compaction, never corpus-sized. */
-  private def liveRows(spark: SparkSession, root: String, v: Long,
-      sub: String => String): DataFrame = {
-    val gens = manifestOf(spark, root, v)
-    require(gens.nonEmpty, s"empty manifest for $root snap-$v")
-    val unioned = gens.map { case (g, _) =>
-      StateCommit.readParquet(spark, sub(s"${genPath(root, g)}"))
-        .withColumn("gen", lit(g))
-    }.reduce(_.unionByName(_))
-    val dead = tombstonesOf(spark, root, v)
-    unioned.join(broadcast(dead), Seq("doc_id"), "left_outer")
-      .where(col("before_gen").isNull || col("gen") >= col("before_gen"))
-      .drop("before_gen")
+  /** All live band rows: (doc_id, band, sig, gen). */
+  def bands(spark: SparkSession, root: String): DataFrame = {
+    val v = version(spark, root)
+    liveAt(spark, root, v, stateAt(spark, root, v), bandsDir)
   }
 
-  /** All live band rows: (doc_id, band, sig, gen). */
-  def bands(spark: SparkSession, root: String): DataFrame =
-    liveRows(spark, root, version(spark, root), p => s"$p/bands")
-
   /** All live wide signatures: (doc_id, mh0..mh{k-1}, gen). */
-  def sigs(spark: SparkSession, root: String): DataFrame =
-    liveRows(spark, root, version(spark, root), p => s"$p/sigs")
-
-  private def schemeAt(spark: SparkSession, root: String,
-      v: Long): (Int, Int) = {
-    val r = metaTable(spark, root, v, Meta).head()
-    (r.getInt(0), r.getInt(1))
+  def sigs(spark: SparkSession, root: String): DataFrame = {
+    val v = version(spark, root)
+    liveAt(spark, root, v, stateAt(spark, root, v), sigsDir)
   }
 
   /** Index the corpus from scratch: one signature pass, one generation,
@@ -208,7 +177,7 @@ object DedupIndex {
     val v = prior.getOrElse(0L) + 1
     val n = writeGen(spark, root, v, documents, k, r)
     writeMetaTables(spark, root, v, k, r, Seq(v -> n),
-      emptyTombstones(spark),
+      GenerationalTable.emptyTombstones(spark, Key),
       // a rebuild replaces the whole manifest — every prior generation
       // loses its reference
       droppedGens = prior.isDefined)
@@ -221,22 +190,22 @@ object DedupIndex {
       seqCol: String = ""): Unit = {
     val v0 = version(spark, root)
     val v = v0 + 1
-    val (k, r) = scheme(spark, root)
+    val st = stateAt(spark, root, v0)
     // last-wins collapse: two versions of one doc in a CDC batch would
     // otherwise minhash a CHIMERA of both texts (the per-doc signature
     // groupBy unions their shingles). Snapped: writeGen's signature
     // derivation and the tombstone id scan below both read it, and the
     // collapse shuffle plus the caller's source plan must run once
-    val batch = Stage.snap(CdcBatch.collapse(rawBatch, "doc_id", seqCol),
+    val batch = Stage.snap(CdcBatch.collapse(rawBatch, Key, seqCol),
       materialize = true)
-    val n = writeGen(spark, root, v, batch, k, r)
+    val n = writeGen(spark, root, v, batch, st.k, st.r)
     // tombstone EVERY incoming id, not just signature-bearing ones: a
     // doc shrunk below the 3-token shingle floor must still shed its
     // old signatures
-    val ids = batch.select(col("doc_id").cast("long")).distinct()
-    writeMetaTables(spark, root, v, k, r,
-      manifestOf(spark, root, v0) :+ (v -> n),
-      mergedTombstones(tombstonesOf(spark, root, v0), ids, beforeGen = v),
+    val ids = batch.select(col(Key).cast("long")).distinct()
+    writeMetaTables(spark, root, v, st.k, st.r, st.gens :+ (v -> n),
+      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+        ids, Key, beforeGen = v),
       droppedGens = false) // append-only: every prior generation survives
   }
 
@@ -245,10 +214,11 @@ object DedupIndex {
   def delete(spark: SparkSession, root: String, ids: DataFrame): Unit = {
     val v0 = version(spark, root)
     val v = v0 + 1
-    val idRows = ids.select(col("doc_id").cast("long")).distinct()
-    val (k, r) = scheme(spark, root)
-    writeMetaTables(spark, root, v, k, r, manifestOf(spark, root, v0),
-      mergedTombstones(tombstonesOf(spark, root, v0), idRows, DeleteAll),
+    val idRows = ids.select(col(Key).cast("long")).distinct()
+    val st = stateAt(spark, root, v0)
+    writeMetaTables(spark, root, v, st.k, st.r, st.gens,
+      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+        idRows, Key, GenerationalTable.DeleteAll),
       droppedGens = false) // metadata-only: the manifest is unchanged
   }
 
@@ -261,14 +231,14 @@ object DedupIndex {
   def compact(spark: SparkSession, root: String): Unit = {
     val v0 = version(spark, root)
     val v = v0 + 1
-    liveRows(spark, root, v0, p => s"$p/bands").drop("gen")
+    val st = stateAt(spark, root, v0)
+    liveAt(spark, root, v0, st, bandsDir).drop("gen")
       .write.mode("overwrite").parquet(bandsDir(root, v))
-    liveRows(spark, root, v0, p => s"$p/sigs").drop("gen")
+    liveAt(spark, root, v0, st, sigsDir).drop("gen")
       .write.mode("overwrite").parquet(sigsDir(root, v))
-    val (k, r) = scheme(spark, root)
-    writeMetaTables(spark, root, v, k, r,
+    writeMetaTables(spark, root, v, st.k, st.r,
       Seq(v -> StateCommit.readParquet(spark, sigsDir(root, v)).count()),
-      emptyTombstones(spark),
+      GenerationalTable.emptyTombstones(spark, Key),
       // the fold replaces every prior generation's reference
       droppedGens = true)
   }
@@ -295,9 +265,14 @@ object DedupIndex {
   def queryNearDupsAt(spark: SparkSession, root: String,
       incoming: DataFrame, v: Long): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
-    val (k, r) = schemeAt(spark, root, v)
-    val (qBands, qSigs) = signatures(incoming, k, r)
-    val cand = liveRows(spark, root, v, p => s"$p/bands")
+    nearDups(spark, root, incoming, v, stateAt(spark, root, v))
+  }
+
+  private def nearDups(spark: SparkSession, root: String,
+      incoming: DataFrame, v: Long, st: State): DataFrame = {
+    val k = st.k
+    val (qBands, qSigs) = signatures(incoming, k, st.r)
+    val cand = liveAt(spark, root, v, st, bandsDir)
       .select(col("doc_id").as("dup_id"), col("band"), col("sig"))
       .join(broadcast(qBands), Seq("band", "sig"))
       .where(col("doc_id") =!= col("dup_id"))
@@ -309,7 +284,7 @@ object DedupIndex {
       (0 until k).map(j => col(s"mh$j").as(s"q$j")): _*)
     cand
       .join(broadcast(qWide), Seq("doc_id"))
-      .join(liveRows(spark, root, v, p => s"$p/sigs")
+      .join(liveAt(spark, root, v, st, sigsDir)
         .withColumnRenamed("doc_id", "dup_id")
         .drop("gen"), Seq("dup_id"))
       .select(col("doc_id"), col("dup_id"),
@@ -339,7 +314,8 @@ object DedupIndex {
   def classifyBatchAt(spark: SparkSession, root: String,
       incoming: DataFrame, v: Long): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
-    val (k, _) = schemeAt(spark, root, v)
+    val st = stateAt(spark, root, v)
+    val k = st.k
     // "seen BEFORE this batch": exclude the batch's own ids from the
     // candidate side — without this, an at-least-once replay (whose
     // first delivery already upserted the batch) would suddenly see
@@ -347,7 +323,7 @@ object DedupIndex {
     // replay convergence (StreamingDedupSpec pins the twin case)
     val ownIds = incoming.select(col("doc_id").cast("long").as("dup_id"))
       .distinct()
-    val cand = queryNearDupsAt(spark, root, incoming, v)
+    val cand = nearDups(spark, root, incoming, v, st)
       .join(broadcast(ownIds), Seq("dup_id"), "left_anti")
     val best = cand.groupBy("doc_id")
       .agg(countDistinct("dup_id").as("n_candidates"),

@@ -45,9 +45,7 @@ object DsirModel {
 
   /** The committed model version; refits bump it by one. */
   def version(spark: SparkSession, root: String): Long =
-    StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed DSIR model at $root (run DsirModel.fit first)"))
+    StateCommit.committedVersion(spark, root, "DSIR model")
 
   /** Column superset of the two logical tables — one folded `meta`
     * parquet per commit (see the layout note above; the same fold every

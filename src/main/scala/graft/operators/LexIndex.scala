@@ -1,12 +1,9 @@
 package graft.operators
 
-import scala.util.Try
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StateCommit
+import graft.streaming.{GenerationalTable, StateCommit}
 
 /** Persisted inverted (lexical) index with BM25 ranking — the
   * build-once / query-many LEXICAL complement to the ANN family
@@ -39,6 +36,12 @@ import graft.streaming.StateCommit
   * Tokenization is `[a-z]+` over lowercased text — byte-for-byte the
   * [[TextAnalysis]] tokenizer, so index statistics agree with every
   * corpus-level text operator.
+  *
+  * Posting and doc generations follow the tombstone liveness rule of
+  * [[graft.streaming.GenerationalTable]], with one difference from
+  * [[DedupIndex]]: a mutation tombstones only ids that have something
+  * to kill (live rows, or an earlier tombstone that must advance), so
+  * repeated takedown sweeps and brand-new ids never grow the table.
   */
 object LexIndex {
 
@@ -48,14 +51,15 @@ object LexIndex {
   private val Tombstones = "tombstones"
   private val StreamBatch = "stream_batch"
   private val EraTable = "era"
-  private val DeleteAll = Long.MaxValue
+  private val Key = "doc_id"
 
   private def tokens(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"),
       explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
         .as("token"))
 
-  private def genDir(root: String, v: Long): String = s"$root/gen-$v/postings"
+  private def genDir(root: String, v: Long): String =
+    s"${StateCommit.genDir(root, v)}/postings"
 
   /** The generation's (doc_id, dl) doc table — ONE row per ingested doc
     * INCLUDING dl=0: a zero-token document is invisible to postings, and
@@ -63,7 +67,8 @@ object LexIndex {
     * documented blind spot this table closes — delete/upsert subtract
     * every victim exactly). Lives beside the postings so [[StateCommit
     * .gcGenerations]] reclaims both together. */
-  private def docsDir(root: String, v: Long): String = s"$root/gen-$v/docs"
+  private def docsDir(root: String, v: Long): String =
+    s"${StateCommit.genDir(root, v)}/docs"
 
   /** The batch's (postings, docs, dfs, stats, nPostings) derivation —
     * shared by build, ingest and upsert, so the incremental paths
@@ -101,85 +106,48 @@ object LexIndex {
     (postings, docs, dfs, stats, tf.count())
   }
 
-  private def emptyTombstones(spark: SparkSession): DataFrame = {
-    val s = spark; import s.implicits._
-    Seq.empty[(Long, Long)].toDF("doc_id", "before_gen")
-  }
+  /** The committed snapshot version; mutations bump it by one. */
+  private def version(spark: SparkSession, root: String): Long =
+    StateCommit.committedVersion(spark, root, "lexical index")
 
-  /** Snapshot v's tombstones: (doc_id, before_gen) — the doc's posting
-    * rows in generations < before_gen are dead (the [[DedupIndex]]
-    * table verbatim; a delete writes Long.MaxValue, a re-ingest of a
-    * deleted id replaces it with the new generation). Bounded by churn
-    * since the last [[compactGenerations]], never corpus-sized — it
-    * broadcasts into every read. Absent table (pre-tombstone snapshot)
-    * reads as empty. */
-  private def tombstonesOf(spark: SparkSession, root: String,
-      v: Long): DataFrame =
-    scala.util.Try(
-        metaTable(spark, root, v, Tombstones))
-      .getOrElse(emptyTombstones(spark))
-
-  /** The maintaining stream's last applied batch id, recorded IN the
-    * snapshot (so it commits atomically with the generation it guards).
-    * None before any stream batch, and reset by [[build]] — a rebuild
-    * starts a new stream era (resume a stream across a rebuild with a
-    * FRESH checkpoint; [[buildEra]] + the [[graft.streaming
-    * .StreamingLex]] checkpoint marker ENFORCE that rule instead of
-    * leaving it to operator discipline — round-10 advice). */
-  private def streamBatchOf(spark: SparkSession, root: String,
-      v: Long): Option[Long] =
-    scala.util.Try(
-        metaTable(spark, root, v, StreamBatch)
-          .head().getLong(0))
-      .toOption
-
-  private def eraOf(spark: SparkSession, root: String, v: Long): Long =
-    scala.util.Try(
-        metaTable(spark, root, v, EraTable)
-          .head().getLong(0))
-      .getOrElse(0L)
+  /** The at-least-once replay guard of [[ingestAs]], [[delete]] and
+    * [[upsert]]: the version a mutation commits as, or None when
+    * `expectedVersion` is already committed (a replay — the mutation is a
+    * no-op). `expectedVersion = -1` means "next". */
+  private def nextVersion(prev: Long, expectedVersion: Long,
+      op: String): Option[Long] =
+    if (expectedVersion >= 0 && expectedVersion <= prev) None
+    else {
+      val v = if (expectedVersion >= 0) expectedVersion else prev + 1
+      require(v == prev + 1, s"$op version $v must follow committed $prev")
+      Some(v)
+    }
 
   /** The scalar-sized snapshot metadata of version `v` in ONE driver
     * action (round 17): manifest generation list, corpus stats, stream
     * watermark and era previously each paid their own collect/head job
     * per mutation — four ~50 ms single-task jobs over the SAME folded
-    * meta file. One filtered collect reads them together; dfs and
-    * tombstones are NOT here (vocabulary-/churn-sized — they stay lazy
-    * DataFrames). Pre-fold snapshots fall back to the per-table reads. */
+    * meta file. dfs and tombstones are NOT here (vocabulary-/churn-sized
+    * — they stay lazy DataFrames). `streamBatch` is the maintaining
+    * stream's last applied batch id, recorded IN the snapshot (so it
+    * commits atomically with the generation it guards): None before any
+    * stream batch, and reset by [[build]] — a rebuild starts a new
+    * stream era (resume a stream across a rebuild with a FRESH
+    * checkpoint; [[buildEra]] + the [[graft.streaming.StreamingLex]]
+    * checkpoint marker ENFORCE that rule — round-10 advice). */
   private final case class MetaScalars(gens: Seq[Long], nDocs: Long,
       sumDl: Long, nDl: Long, streamBatch: Option[Long], era: Long)
 
   private def metaScalarsOf(spark: SparkSession, root: String,
       v: Long): MetaScalars = {
-    val metaPath = new Path(StateCommit.tableDir(root, v, "meta"))
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val folded =
-      if (fs.exists(metaPath))
-        Some(StateCommit.readParquet(spark, metaPath.toString))
-          .filter(_.columns.contains("t"))
-      else None
-    folded match {
-      case Some(m) =>
-        val rows = m.where(col("t").isin(Manifest, Stats, StreamBatch,
-            EraTable))
-          .select(col("t"), col("gen"), col("n_docs"), col("sum_dl"),
-            col("n_dl"), col("last_batch_id"), col("build_era"))
-          .collect()
-        def of(t: String) = rows.filter(_.getString(0) == t)
-        // manifest order: ascending gen — every writer appends, so this
-        // equals the written order the per-table read returned
-        val gens = of(Manifest).map(_.getLong(1)).sorted.toSeq
-        val st = of(Stats).head
-        MetaScalars(gens, st.getLong(2), st.getLong(3), st.getLong(4),
-          of(StreamBatch).headOption.map(_.getLong(5)),
-          of(EraTable).headOption.map(_.getLong(6)).getOrElse(0L))
-      case None =>
-        val gens = metaTable(spark, root, v, Manifest)
-          .collect().map(_.getLong(0)).toSeq
-        val st = metaTable(spark, root, v, Stats).head()
-        MetaScalars(gens, st.getLong(0), st.getLong(1), st.getLong(2),
-          streamBatchOf(spark, root, v), eraOf(spark, root, v))
-    }
+    val m = StateCommit.metaRows(spark, root, v,
+      Seq(Manifest, Stats, StreamBatch, EraTable), metaCols)
+    // manifest order: ascending gen — every writer appends
+    val gens = m(Manifest).map(_.getLong(0)).sorted
+    val st = m(Stats).head
+    MetaScalars(gens, st.getLong(0), st.getLong(1), st.getLong(2),
+      m(StreamBatch).headOption.map(_.getLong(0)),
+      m(EraTable).headOption.map(_.getLong(0)).getOrElse(0L))
   }
 
   /** The index's BUILD ERA: the snapshot version of the last [[build]]
@@ -189,27 +157,17 @@ object LexIndex {
     * index has been rebuilt under it — resuming an OLD checkpoint after
     * a rebuild could otherwise re-apply a crashed in-flight batch whose
     * docs the rebuild corpus already contains. */
-  def buildEra(spark: SparkSession, root: String): Long = {
-    val v = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root"))
-    eraOf(spark, root, v)
-  }
+  def buildEra(spark: SparkSession, root: String): Long =
+    metaScalarsOf(spark, root, version(spark, root)).era
 
-  /** The LIVE posting rows of snapshot v: every live generation's rows,
-    * tombstone-filtered (broadcast join — the tombstone table is
-    * churn-bounded). Shape (token, doc_id, tf, dl). `prefixes` applies
-    * directory-level pruning: only the named `tpfx=` partitions of each
-    * generation are listed/opened (a query passes its terms' first
-    * letters; maintenance passes read everything). */
+  /** The LIVE posting rows of snapshot v (the generations `gens`):
+    * shape (token, doc_id, tf, dl). `prefixes` applies directory-level
+    * pruning: only the named `tpfx=` partitions of each generation are
+    * listed/opened (a query passes its terms' first letters;
+    * maintenance passes read everything). */
   private def livePostings(spark: SparkSession, root: String, v: Long,
-      prefixes: Option[Seq[String]] = None,
-      knownGens: Option[Seq[Long]] = None): DataFrame = {
-    // a caller that already holds the MetaScalars passes the manifest in
-    // (round 17: livePostings + liveDocs in one mutation were two more
-    // single-task collect jobs over the same meta file)
-    val gens = knownGens.getOrElse(metaTable(spark, root, v, Manifest)
-      .collect().map(_.getLong(0)).toSeq)
-    val unioned = gens.map { g =>
+      gens: Seq[Long], prefixes: Option[Seq[String]] = None): DataFrame =
+    GenerationalTable.live(gens, { g =>
       val full = StateCommit.readParquet(spark, genDir(root, g))
       val pruned = prefixes match {
         case Some(ps) if full.columns.contains("tpfx") =>
@@ -220,37 +178,23 @@ object LexIndex {
       // tpfx-partitioned generations with pre-tpfx ones (an index built
       // by older code, upgraded by one ingest), and unionByName over
       // heterogeneous schemas would throw on every read
-      pruned.select(col("token"), col("doc_id"), col("tf"), col("dl"),
-        lit(g).as("gen"))
-    }.reduce(_.unionByName(_))
-    unioned.join(broadcast(tombstonesOf(spark, root, v)),
-        Seq("doc_id"), "left_outer")
-      .where(col("before_gen").isNull || col("gen") >= col("before_gen"))
-      .drop("before_gen", "gen")
-  }
+      pruned.select(col("token"), col("doc_id"), col("tf"), col("dl"))
+    }, metaTable(spark, root, v, Tombstones), Key).drop("gen")
 
   /** The LIVE (doc_id, dl) rows of snapshot v — one row per live doc
     * INCLUDING zero-token docs (the doc table, not the postings, is the
-    * membership authority). Tombstone-filtered exactly like
-    * [[livePostings]]. A generation written before the doc table
+    * membership authority). A generation written before the doc table
     * existed falls back to the postings-derived (doc_id, dl) set —
     * where zero-token docs are invisible, the pre-docs-table behavior. */
-  private def liveDocs(spark: SparkSession, root: String,
-      v: Long, knownGens: Option[Seq[Long]] = None): DataFrame = {
-    val gens = knownGens.getOrElse(metaTable(spark, root, v, Manifest)
-      .collect().map(_.getLong(0)).toSeq)
-    val unioned = gens.map { g =>
+  private def liveDocs(spark: SparkSession, root: String, v: Long,
+      gens: Seq[Long]): DataFrame =
+    GenerationalTable.live(gens, { g =>
       scala.util.Try(StateCommit.readParquet(spark, docsDir(root, g)))
         .getOrElse(StateCommit.readParquet(spark, genDir(root, g))
           .select("doc_id", "dl").distinct())
         .select(col("doc_id").cast("long").as("doc_id"),
-          col("dl").cast("long").as("dl"), lit(g).as("gen"))
-    }.reduce(_.unionByName(_))
-    unioned.join(broadcast(tombstonesOf(spark, root, v)),
-        Seq("doc_id"), "left_outer")
-      .where(col("before_gen").isNull || col("gen") >= col("before_gen"))
-      .drop("before_gen", "gen")
-  }
+          col("dl").cast("long").as("dl"))
+    }, metaTable(spark, root, v, Tombstones), Key).drop("gen")
 
   /** The folded snapshot-metadata columns: every metadata-sized table
     * (dfs/stats/manifest/tombstones/stream_batch/era) lands in ONE
@@ -263,8 +207,8 @@ object LexIndex {
     "token" -> "string", "df" -> "long",
     "n_docs" -> "long", "sum_dl" -> "long", "n_dl" -> "long",
     "gen" -> "long",
-    "doc_id" -> "long", "before_gen" -> "long",
-    "last_batch_id" -> "long", "build_era" -> "long")
+    "last_batch_id" -> "long", "build_era" -> "long") ++
+    GenerationalTable.tombstoneCols(Key)
 
   /** This family's logical-table column lists (select order is the
     * reader contract). */
@@ -272,7 +216,7 @@ object LexIndex {
     case Dfs => Seq("token", "df")
     case Stats => Seq("n_docs", "sum_dl", "n_dl")
     case Manifest => Seq("gen")
-    case Tombstones => Seq("doc_id", "before_gen")
+    case Tombstones => GenerationalTable.tombstoneCols(Key).map(_._1)
     case StreamBatch => Seq("last_batch_id")
     case EraTable => Seq("build_era")
   }
@@ -300,8 +244,7 @@ object LexIndex {
       Dfs -> dfs,
       Stats -> stats,
       Manifest -> gens.toDF("gen"),
-      Tombstones -> tombstones
-        .select(col("doc_id").cast("long"), col("before_gen").cast("long")),
+      Tombstones -> tombstones,
       StreamBatch -> streamBatch.toSeq.toDF("last_batch_id"),
       EraTable -> Seq(era).toDF("build_era")), droppedGens)
     v
@@ -365,8 +308,8 @@ object LexIndex {
     // a REBUILD over an existing root drops every prior generation from
     // the manifest — GC immediately; a fresh build has nothing to drop
     writeSnapshot(spark, root, v, postings, docs, dfs, stats, Seq(v),
-      nBuckets, emptyTombstones(spark), era = v, rowHint = nPost,
-      droppedGens = prior.nonEmpty)
+      nBuckets, GenerationalTable.emptyTombstones(spark, Key), era = v,
+      rowHint = nPost, droppedGens = prior.nonEmpty)
   }
 
   /** Fold a batch of NEW documents into the index WITHOUT rescanning
@@ -399,14 +342,12 @@ object LexIndex {
   def ingestAs(spark: SparkSession, documents: DataFrame, root: String,
       expectedVersion: Long, nBuckets: Int = 32,
       seqCol: String = ""): Long = {
-    val prev = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root — build first"))
-    if (expectedVersion >= 0 && expectedVersion <= prev) return prev // replay
-    val v = if (expectedVersion >= 0) expectedVersion else prev + 1
-    require(v == prev + 1, s"ingest version $v must follow committed $prev")
-    val ms = metaScalarsOf(spark, root, prev)
-    ingestCore(spark, documents, root, prev, v, nBuckets, ms,
-      ms.streamBatch, seqCol)
+    val prev = version(spark, root)
+    nextVersion(prev, expectedVersion, "ingest").fold(prev) { v =>
+      val ms = metaScalarsOf(spark, root, prev)
+      ingestCore(spark, documents, root, prev, v, nBuckets, ms,
+        ms.streamBatch, seqCol)
+    }
   }
 
   /** Stream-maintenance ingest keyed by the STREAM'S OWN batch id, the
@@ -423,8 +364,7 @@ object LexIndex {
     * checkpoint. */
   def ingestBatch(spark: SparkSession, documents: DataFrame, root: String,
       batchId: Long, nBuckets: Int = 32, seqCol: String = ""): Long = {
-    val prev = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root — build first"))
+    val prev = version(spark, root)
     val ms = metaScalarsOf(spark, root, prev)
     if (ms.streamBatch.exists(batchId <= _))
       return prev // replay of an applied batch — converged no-op
@@ -466,11 +406,10 @@ object LexIndex {
     // generation (resurrecting the doc with its new content); other
     // rows carry forward — the table stays churn-bounded because only
     // deleted-and-not-yet-reingested ids live in it
-    val prior = tombstonesOf(spark, root, prev)
-    val batchIds = documents.select(col("doc_id").cast("long")).distinct()
-    val tombs = prior.join(batchIds, Seq("doc_id"), "left_anti")
-      .unionByName(prior.join(batchIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), lit(v).as("before_gen")))
+    val prior = metaTable(spark, root, prev, Tombstones)
+    val batchIds = documents.select(col(Key).cast("long")).distinct()
+    val tombs = GenerationalTable.mergeTombstones(prior,
+      prior.join(batchIds, Seq(Key), "left_semi").select(Key), Key, v)
     writeSnapshot(spark, root, v, postings, bDocs, mergedDfs, mergedStats,
       gens, nBuckets, tombs, streamBatch, ms.era, nPost)
   }
@@ -503,21 +442,23 @@ object LexIndex {
     * metadata writes — the corpus is never rewritten. */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
       expectedVersion: Long = -1L): Long = {
-    val prev = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root"))
-    if (expectedVersion >= 0 && expectedVersion <= prev) return prev // replay
-    val v = if (expectedVersion >= 0) expectedVersion else prev + 1
-    require(v == prev + 1, s"delete version $v must follow committed $prev")
+    val prev = version(spark, root)
+    nextVersion(prev, expectedVersion, "delete")
+      .fold(prev)(deleteCore(spark, root, ids, prev, _))
+  }
+
+  private def deleteCore(spark: SparkSession, root: String, ids: DataFrame,
+      prev: Long, v: Long): Long = {
     val victims = ids.select(col("doc_id").cast("long")).distinct()
     val ms = metaScalarsOf(spark, root, prev)
     // the victims' LIVE rows only: already-dead rows must not subtract
     // twice (which is also what makes a replayed or repeated delete a
     // no-op on the statistics). deadPost has ONE consumer (the df
     // decrement) — no snap (round-13 review)
-    val deadPost = livePostings(spark, root, prev, knownGens = Some(ms.gens))
+    val deadPost = livePostings(spark, root, prev, ms.gens)
       .join(broadcast(victims), Seq("doc_id"), "left_semi")
     val deadDocs = Stage.snap(
-      liveDocs(spark, root, prev, knownGens = Some(ms.gens))
+      liveDocs(spark, root, prev, ms.gens)
         .join(broadcast(victims), Seq("doc_id"), "left_semi"),
       materialize = true)
     val oldDfs = metaTable(spark, root, prev, Dfs)
@@ -542,14 +483,12 @@ object LexIndex {
     import s.implicits._
     val mergedStats = Seq((ms.nDocs - g("dn"), ms.sumDl - g("ds"),
       ms.nDl - g("dndl"))).toDF("n_docs", "sum_dl", "n_dl")
-    val prior = tombstonesOf(spark, root, prev)
-    // tombstone only ids that actually had live rows; anti-join against
-    // the SAME set so an already-dead victim keeps its existing
-    // tombstone (dropping it would resurrect its pre-delete rows)
-    val victimsLive = deadDocs.select("doc_id").distinct()
-    val tombs = prior.join(victimsLive, Seq("doc_id"), "left_anti")
-      .unionByName(victimsLive.select(col("doc_id"),
-        lit(DeleteAll).as("before_gen")))
+    // tombstone only ids that actually had live rows: repeated or
+    // bogus takedown lists add no rows, and an already-dead victim
+    // keeps its existing tombstone
+    val tombs = GenerationalTable.mergeTombstones(
+      metaTable(spark, root, prev, Tombstones),
+      deadDocs.select(Key).distinct(), Key, GenerationalTable.DeleteAll)
     writeMetaTables(spark, root, v, mergedDfs, mergedStats, ms.gens, tombs,
       ms.streamBatch, ms.era)
   }
@@ -574,14 +513,12 @@ object LexIndex {
   def upsert(spark: SparkSession, documents: DataFrame, root: String,
       nBuckets: Int = 32, expectedVersion: Long = -1L,
       seqCol: String = ""): Long = {
-    val prev = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root — build first"))
-    if (expectedVersion >= 0 && expectedVersion <= prev) return prev // replay
-    val v = if (expectedVersion >= 0) expectedVersion else prev + 1
-    require(v == prev + 1, s"upsert version $v must follow committed $prev")
-    val ms = metaScalarsOf(spark, root, prev)
-    upsertCore(spark, documents, root, prev, v, nBuckets, ms,
-      ms.streamBatch, seqCol)
+    val prev = version(spark, root)
+    nextVersion(prev, expectedVersion, "upsert").fold(prev) { v =>
+      val ms = metaScalarsOf(spark, root, prev)
+      upsertCore(spark, documents, root, prev, v, nBuckets, ms,
+        ms.streamBatch, seqCol)
+    }
   }
 
   /** Stream-maintenance UPSERT keyed by the stream's own batch id — the
@@ -592,8 +529,7 @@ object LexIndex {
     * generation it guards). */
   def upsertBatch(spark: SparkSession, documents: DataFrame, root: String,
       batchId: Long, nBuckets: Int = 32, seqCol: String = ""): Long = {
-    val prev = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root — build first"))
+    val prev = version(spark, root)
     val ms = metaScalarsOf(spark, root, prev)
     if (ms.streamBatch.exists(batchId <= _))
       return prev // replay of an applied batch — converged no-op
@@ -619,10 +555,10 @@ object LexIndex {
     // deadPost has ONE consumer (the df decrement below) — no snap: a
     // materialization pass over the pruned postings scan bought nothing
     // (round-13 review)
-    val deadPost = livePostings(spark, root, prev, knownGens = Some(ms.gens))
+    val deadPost = livePostings(spark, root, prev, ms.gens)
       .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
     val deadDocs = Stage.snap(
-      liveDocs(spark, root, prev, knownGens = Some(ms.gens))
+      liveDocs(spark, root, prev, ms.gens)
         .join(broadcast(batchIds), Seq("doc_id"), "left_semi"),
       materialize = true)
     val (postings, bDocs, bDfs, bStats, nPost) = batchParts(documents)
@@ -656,15 +592,13 @@ object LexIndex {
     // tombstones advance to v for every batch id that needs one: ids
     // with live rows being replaced, and previously-deleted ids whose
     // tombstone must move (not vanish — dropping it would resurrect
-    // their dead rows; before_gen=v keeps gens < v dead and only the
-    // new generation live). Brand-new ids add no tombstone.
-    val prior = tombstonesOf(spark, root, prev)
-    val needTomb = deadDocs.select("doc_id")
-      .unionByName(prior.join(batchIds, Seq("doc_id"), "left_semi")
-        .select("doc_id"))
+    // their dead rows; a tombstone at v keeps gens < v dead and only
+    // the new generation live). Brand-new ids add no tombstone.
+    val prior = metaTable(spark, root, prev, Tombstones)
+    val needTomb = deadDocs.select(Key)
+      .unionByName(prior.join(batchIds, Seq(Key), "left_semi").select(Key))
       .distinct()
-    val tombs = prior.join(batchIds, Seq("doc_id"), "left_anti")
-      .unionByName(needTomb.select(col("doc_id"), lit(v).as("before_gen")))
+    val tombs = GenerationalTable.mergeTombstones(prior, needTomb, Key, v)
     writeSnapshot(spark, root, v, postings, bDocs, mergedDfs, mergedStats,
       ms.gens :+ v, nBuckets, tombs, streamBatch, ms.era, nPost)
   }
@@ -680,21 +614,20 @@ object LexIndex {
     * disk for in-flight readers of the previous version. */
   def compactGenerations(spark: SparkSession, root: String,
       nBuckets: Int = 32): Long = {
-    val prev = StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed lexical index at $root"))
+    val prev = version(spark, root)
     val v = prev + 1
+    val ms = metaScalarsOf(spark, root, prev)
     // the LIVE multiset only: tombstoned rows die physically here, and
     // the tombstone table resets to empty — df/stats carry unchanged
     // (deletes corrected them algebraically at delete time)
-    val postings = livePostings(spark, root, prev)
-    val docs = liveDocs(spark, root, prev)
+    val postings = livePostings(spark, root, prev, ms.gens)
+    val docs = liveDocs(spark, root, prev, ms.gens)
     val dfs = metaTable(spark, root, prev, Dfs)
     val stats = metaTable(spark, root, prev, Stats)
     // bucket hint: the committed sum_dl upper-bounds live posting rows
     // (tf >= 1 per row), from the folded MetaScalars read — no data pass
-    val ms = metaScalarsOf(spark, root, prev)
     writeSnapshot(spark, root, v, postings, docs, dfs, stats, Seq(v),
-      nBuckets, emptyTombstones(spark), ms.streamBatch,
+      nBuckets, GenerationalTable.emptyTombstones(spark, Key), ms.streamBatch,
       ms.era, rowHint = ms.sumDl, droppedGens = true)
   }
 
@@ -704,10 +637,7 @@ object LexIndex {
     * an empty term list returns no rows. */
   def search(spark: SparkSession, root: String, terms: Seq[String],
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    searchAt(spark, root, terms,
-      StateCommit.currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed lexical index at $root")),
-      k, k1, b)
+    searchAt(spark, root, terms, version(spark, root), k, k1, b)
 
   /** Time travel: [[search]] as of snapshot `v` — the reproducibility
     * surface ([[graft.streaming.StateCommit.readTableAt]]'s stance at
@@ -733,6 +663,7 @@ object LexIndex {
     // partitions are opened), then the token IN pushes through the
     // tombstone join to each opened file (both plan-gated).
     val postings = livePostings(spark, root, v,
+        metaScalarsOf(spark, root, v).gens,
         prefixes = Some(terms.map(_.take(1)).distinct))
       .where(col("token").isin(terms: _*))
     postings
@@ -776,10 +707,7 @@ object LexIndex {
   def searchMany(spark: SparkSession, root: String,
       termsByQid: Seq[(Long, Seq[String])], k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    searchManyAt(spark, root, termsByQid,
-      StateCommit.currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed lexical index at $root")),
-      k, k1, b)
+    searchManyAt(spark, root, termsByQid, version(spark, root), k, k1, b)
 
   /** Time travel: [[searchMany]] as of snapshot `v`. */
   def searchManyAt(spark: SparkSession, root: String,
@@ -797,6 +725,7 @@ object LexIndex {
     val dfs = metaTable(spark, root, v, Dfs)
       .where(col("token").isin(allTerms: _*))
     val postings = livePostings(spark, root, v,
+        metaScalarsOf(spark, root, v).gens,
         prefixes = Some(allTerms.map(_.take(1)).distinct))
       .where(col("token").isin(allTerms: _*))
     val w = org.apache.spark.sql.expressions.Window

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StateCommit
+import graft.streaming.{GenerationalTable, StateCommit}
+import graft.streaming.StateCommit.genDir
 
 /** Persisted SEMANTIC dedup index — the build-once / probe-many form of
   * [[Similarity.semanticDedupIncrementalCells]] (the embedding
@@ -47,10 +48,11 @@ import graft.streaming.StateCommit
   *                           orphans it
   * }}}
   *
-  * Generations are append-only and immutable; replacement and deletion
-  * are TOMBSTONES (`before_gen`, the Iceberg/Delta delete-file move),
-  * and every mutation publishes with ONE atomic [[StateCommit.commit]]
-  * pointer swap — readers see a mutation in full or not at all.
+  * Generations are append-only and immutable, with the tombstone
+  * liveness rule of [[graft.streaming.GenerationalTable]]: like
+  * [[DedupIndex]], every mutation tombstones each id it touches, and
+  * publishes with ONE atomic [[StateCommit.commit]] pointer swap —
+  * readers see a mutation in full or not at all.
   *
   * == Quantizer staleness, disclosed ==
   *
@@ -82,7 +84,7 @@ object SemDedupIndex {
   private val Scheme = "scheme"
   private val Manifest = "manifest"
   private val Tombstones = "tombstones"
-  private val DeleteAll = Long.MaxValue
+  private val Key = "vec_id"
 
   /** Member/vecs-table directory fan-out cap, with the per-index count
     * ADAPTIVE in the trained cell count ([[bucketsFor]]) and locked
@@ -133,17 +135,14 @@ object SemDedupIndex {
     * way). */
   private val PruneMaxCandidates = 32768L
 
-  private def genPath(root: String, gen: Long) = s"$root/gen-$gen"
-  private def membersDir(root: String, gen: Long) = s"${genPath(root, gen)}/members"
-  private def vecsDir(root: String, gen: Long) = s"${genPath(root, gen)}/vecs"
-  private def supersDir(root: String, gen: Long) = s"${genPath(root, gen)}/supers"
-  private def cellsDir(root: String, gen: Long) = s"${genPath(root, gen)}/cells"
+  private def membersDir(root: String, gen: Long) = s"${genDir(root, gen)}/members"
+  private def vecsDir(root: String, gen: Long) = s"${genDir(root, gen)}/vecs"
+  private def supersDir(root: String, gen: Long) = s"${genDir(root, gen)}/supers"
+  private def cellsDir(root: String, gen: Long) = s"${genDir(root, gen)}/cells"
 
   /** The committed snapshot version; mutations bump it by one. */
   def version(spark: SparkSession, root: String): Long =
-    StateCommit.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no committed semantic dedup index at $root (run SemDedupIndex.build first)"))
+    StateCommit.committedVersion(spark, root, "semantic dedup index")
 
   /** Column superset of the three logical metadata tables — one folded
     * `meta` parquet per commit (the shared [[StateCommit.foldMetaRows]]
@@ -151,34 +150,25 @@ object SemDedupIndex {
   private val MetaCols: Seq[(String, String)] = Seq(
     "cell_target" -> "int", "probes" -> "int", "n_cells" -> "int",
     "n_buckets" -> "int", "quant_gen" -> "long",
-    "gen" -> "long", "n_vecs" -> "long",
-    "vec_id" -> "long", "before_gen" -> "long")
+    "gen" -> "long", "n_vecs" -> "long") ++
+    GenerationalTable.tombstoneCols(Key)
 
   private[graft] def metaCols(table: String): Seq[String] = table match {
     case Scheme => Seq("cell_target", "probes", "n_cells", "n_buckets",
       "quant_gen")
     case Manifest => Seq("gen", "n_vecs")
-    case Tombstones => Seq("vec_id", "before_gen")
+    case Tombstones => GenerationalTable.tombstoneCols(Key).map(_._1)
   }
 
   private[graft] def metaTable(spark: SparkSession, root: String,
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
-  /** The quantizer scheme locked at build:
-    * (cellTarget, probes, nCells, nBuckets, quantGen). */
-  private def schemeAt(spark: SparkSession, root: String,
-      v: Long): (Int, Int, Int, Int, Long) = {
-    val r = metaTable(spark, root, v, Scheme).head()
-    (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4))
-  }
-
   /** Scheme + manifest of snapshot `v` in ONE driver action (round 17):
-    * the probe/search/upsert paths each paid a schemeAt head() plus one
-    * manifest collect PER liveRows call (members and vecs both) — four
+    * the probe/search/upsert paths each paid a scheme head() plus one
+    * manifest collect PER live read (members and vecs both) — four
     * single-task jobs over the same folded meta file. Tombstones stay a
-    * lazy DataFrame (churn-sized, broadcast into the read). Pre-fold
-    * snapshots fall back to the per-table reads. */
+    * lazy DataFrame (churn-sized, broadcast into the read). */
   private final case class MetaScalars(cellTarget: Int, probes: Int,
       nCells: Int, nBuckets: Int, quantGen: Long, gens: Seq[(Long, Long)]) {
     def scheme: (Int, Int, Int, Int, Long) =
@@ -187,41 +177,19 @@ object SemDedupIndex {
 
   private def metaScalarsOf(spark: SparkSession, root: String,
       v: Long): MetaScalars = {
-    val metaPath = new org.apache.hadoop.fs.Path(
-      StateCommit.tableDir(root, v, "meta"))
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val folded =
-      if (fs.exists(metaPath))
-        Some(StateCommit.readParquet(spark, metaPath.toString))
-          .filter(_.columns.contains("t"))
-      else None
-    folded match {
-      case Some(m) =>
-        val rows = m.where(col("t").isin(Scheme, Manifest))
-          .select(col("t"), col("cell_target"), col("probes"),
-            col("n_cells"), col("n_buckets"), col("quant_gen"),
-            col("gen"), col("n_vecs"))
-          .collect()
-        val sc = rows.filter(_.getString(0) == Scheme).head
-        val gens = rows.filter(_.getString(0) == Manifest)
-          .map(r => (r.getLong(6), r.getLong(7))).toSeq.sortBy(_._1)
-        MetaScalars(sc.getInt(1), sc.getInt(2), sc.getInt(3), sc.getInt(4),
-          sc.getLong(5), gens)
-      case None =>
-        val (ct, p, c, nb, qg) = schemeAt(spark, root, v)
-        MetaScalars(ct, p, c, nb, qg, manifestOf(spark, root, v))
-    }
+    val m = StateCommit.metaRows(spark, root, v, Seq(Scheme, Manifest),
+      metaCols)
+    val sc = m(Scheme).head
+    MetaScalars(sc.getInt(0), sc.getInt(1), sc.getInt(2), sc.getInt(3),
+      sc.getLong(4),
+      m(Manifest).map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1))
   }
 
-  /** Re-hydrate the trained quantizer of snapshot `v` — the two parquet
-    * tables round-trip the trained floats exactly, so assignment through
-    * a read-back quantizer is row-identical to assignment through the
-    * in-memory one (spec-pinned). */
-  private def quantizerAt(spark: SparkSession, root: String,
-      v: Long): (Similarity.CellQuantizer, Int, Int) =
-    quantizerFrom(spark, root, metaScalarsOf(spark, root, v))
-
-  /** Re-hydrate from an already-read [[MetaScalars]] — no extra job. */
+  /** Re-hydrate the trained quantizer from an already-read
+    * [[MetaScalars]] — the two parquet tables round-trip the trained
+    * floats exactly, so assignment through a read-back quantizer is
+    * row-identical to assignment through the in-memory one
+    * (spec-pinned). */
   private def quantizerFrom(spark: SparkSession, root: String,
       ms: MetaScalars): (Similarity.CellQuantizer, Int, Int) =
     (Similarity.CellQuantizer(
@@ -239,92 +207,58 @@ object SemDedupIndex {
       Scheme -> Seq(scheme)
         .toDF("cell_target", "probes", "n_cells", "n_buckets", "quant_gen"),
       Manifest -> entries.toDF("gen", "n_vecs"),
-      Tombstones -> tombstones
-        .select(col("vec_id").cast("long"), col("before_gen").cast("long"))),
-      droppedGens)
+      Tombstones -> tombstones), droppedGens)
   }
 
-  private def manifestOf(spark: SparkSession, root: String,
-      v: Long): Seq[(Long, Long)] =
-    metaTable(spark, root, v, Manifest)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
-
-  private def tombstonesOf(spark: SparkSession, root: String,
-      v: Long): DataFrame =
-    metaTable(spark, root, v, Tombstones)
-
-  private def emptyTombstones(spark: SparkSession): DataFrame = {
-    val s = spark; import s.implicits._
-    Seq.empty[(Long, Long)].toDF("vec_id", "before_gen")
-  }
-
-  /** Tombstones for snapshot v — last mutation wins per id (the
-    * [[DedupIndex]] rule: delete-then-upsert resurrects,
-    * upsert-then-delete stays dead). */
-  private def mergedTombstones(prior: DataFrame, touchedIds: DataFrame,
-      beforeGen: Long): DataFrame =
-    prior.join(touchedIds, Seq("vec_id"), "left_anti")
-      .unionByName(touchedIds.select(col("vec_id"),
-        lit(beforeGen).as("before_gen")))
-
-  /** Union of the live generations' `dir` tables with a `gen` column,
-    * tombstone filter applied (the tombstone table broadcasts — bounded
-    * by churn since the last compaction, never corpus-sized). `prune`
-    * restricts the READ of each generation: a (bucket-col, bucket
-    * values, key-col, key values) quadruple whose bucket IN list lands
-    * on the partition column (PartitionFilters — only those directories
-    * open) and whose key IN list pushes to the opened files
-    * (PushedFilters) — both applied BEFORE the tombstone join, both
-    * plan-gated. Bucket literals are INT: the partition reader infers
-    * `…=N` dirs as IntegerType, and a long literal would wrap the
-    * partition column in a cast that defeats directory pruning (the
-    * AnnIndex.searchAt lesson). */
+  /** Live rows of one per-generation table (`dir`) as of snapshot `v`,
+    * with a `gen` column. `prune` restricts the READ of each
+    * generation: a (bucket-col, bucket values, key-col, key values)
+    * quadruple whose bucket IN list lands on the partition column
+    * (PartitionFilters — only those directories open) and whose key IN
+    * list pushes to the opened files (PushedFilters) — both applied
+    * BEFORE the tombstone join, both plan-gated. Bucket literals are
+    * INT: the partition reader infers `…=N` dirs as IntegerType, and a
+    * long literal would wrap the partition column in a cast that
+    * defeats directory pruning (the AnnIndex.searchAt lesson). */
   private def liveRows(spark: SparkSession, root: String, v: Long,
-      dir: Long => String,
-      prune: Option[(String, Seq[Int], String, Seq[Long])],
-      knownGens: Option[Seq[(Long, Long)]] = None): DataFrame = {
-    val gens = knownGens.getOrElse(manifestOf(spark, root, v))
-    require(gens.nonEmpty, s"empty manifest for $root snap-$v")
-    val unioned = gens.map { case (g, _) =>
+      ms: MetaScalars, dir: Long => String,
+      prune: Option[(String, Seq[Int], String, Seq[Long])]): DataFrame =
+    GenerationalTable.live(ms.gens.map(_._1), { g =>
       val raw = StateCommit.readParquet(spark, dir(g))
       prune.fold(raw) { case (bCol, buckets, kCol, keys) =>
         raw.where(col(bCol).isin(buckets: _*) && col(kCol).isin(keys: _*))
-      }.withColumn("gen", lit(g))
-    }.reduce(_.unionByName(_))
-    val dead = tombstonesOf(spark, root, v)
-    unioned.join(broadcast(dead), Seq("vec_id"), "left_outer")
-      .where(col("before_gen").isNull || col("gen") >= col("before_gen"))
-      .drop("before_gen")
-  }
+      }
+    }, metaTable(spark, root, v, Tombstones), Key)
 
   /** The narrow live (vec_id, cell) assignment rows, optionally pruned
-    * to `cells` (their cbk buckets + the residual cell IN). `nBuckets`
-    * is the scheme's locked fan-out (needed only when pruning). */
+    * to `cells` (their cbk buckets + the residual cell IN). */
   private def liveMembers(spark: SparkSession, root: String, v: Long,
-      cells: Option[Seq[Long]] = None, nBuckets: Int = 1,
-      knownGens: Option[Seq[(Long, Long)]] = None): DataFrame =
-    liveRows(spark, root, v, membersDir(root, _),
-      cells.map(cs => ("cbk", cs.map(c => (c % nBuckets).toInt).distinct,
-        "cell", cs)), knownGens)
+      ms: MetaScalars, cells: Option[Seq[Long]] = None): DataFrame =
+    liveRows(spark, root, v, ms, membersDir(root, _),
+      cells.map(cs => ("cbk", cs.map(c => (c % ms.nBuckets).toInt).distinct,
+        "cell", cs)))
 
   /** The fat live (vec_id, embedding) rows — ONE per vector — optionally
     * pruned to `ids` (their vbk buckets + the residual vec_id IN). */
   private def liveVecs(spark: SparkSession, root: String, v: Long,
-      ids: Option[Seq[Long]] = None, nBuckets: Int = 1,
-      knownGens: Option[Seq[(Long, Long)]] = None): DataFrame =
-    liveRows(spark, root, v, vecsDir(root, _),
-      ids.map(vs => ("vbk", vs.map(i => (i % nBuckets).toInt).distinct,
-        "vec_id", vs)), knownGens)
+      ms: MetaScalars, ids: Option[Seq[Long]] = None): DataFrame =
+    liveRows(spark, root, v, ms, vecsDir(root, _),
+      ids.map(vs => ("vbk", vs.map(i => (i % ms.nBuckets).toInt).distinct,
+        Key, vs)))
 
   /** All live (vec_id, cell, gen) assignments. */
-  def assignments(spark: SparkSession, root: String): DataFrame =
-    liveMembers(spark, root, version(spark, root))
+  def assignments(spark: SparkSession, root: String): DataFrame = {
+    val v = version(spark, root)
+    liveMembers(spark, root, v, metaScalarsOf(spark, root, v))
       .select("vec_id", "cell", "gen")
+  }
 
   /** All live (vec_id, embedding) rows, one per vector. */
-  def vectors(spark: SparkSession, root: String): DataFrame =
-    liveVecs(spark, root, version(spark, root))
+  def vectors(spark: SparkSession, root: String): DataFrame = {
+    val v = version(spark, root)
+    liveVecs(spark, root, v, metaScalarsOf(spark, root, v))
       .select("vec_id", "embedding")
+  }
 
   /** Assign a batch through a (re-hydrated) quantizer. One super
     * ranking over the batch's own rows + the shared child-assignment
@@ -389,7 +323,7 @@ object SemDedupIndex {
     val nBuckets = bucketsFor(q.c)
     val n = writeGen(spark, root, v, corpus, assigned, nBuckets)
     writeMetaTables(spark, root, v, (cellTarget, probes, q.c, nBuckets, v),
-      Seq(v -> n), emptyTombstones(spark),
+      Seq(v -> n), GenerationalTable.emptyTombstones(spark, Key),
       droppedGens = prior.isDefined)
   }
 
@@ -417,10 +351,11 @@ object SemDedupIndex {
     val (q, probes, nBuckets) = quantizerFrom(spark, root, ms)
     val n = writeGen(spark, root, v, batch, assignBatch(batch, q, probes),
       nBuckets)
-    val ids = batch.select(col("vec_id").cast("long")).distinct()
+    val ids = batch.select(col(Key).cast("long")).distinct()
     writeMetaTables(spark, root, v, ms.scheme,
       ms.gens :+ (v -> n),
-      mergedTombstones(tombstonesOf(spark, root, v0), ids, beforeGen = v),
+      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+        ids, Key, beforeGen = v),
       droppedGens = false)
   }
 
@@ -430,9 +365,10 @@ object SemDedupIndex {
     val v0 = version(spark, root)
     val v = v0 + 1
     val ms = metaScalarsOf(spark, root, v0)
-    val idRows = ids.select(col("vec_id").cast("long")).distinct()
+    val idRows = ids.select(col(Key).cast("long")).distinct()
     writeMetaTables(spark, root, v, ms.scheme, ms.gens,
-      mergedTombstones(tombstonesOf(spark, root, v0), idRows, DeleteAll),
+      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+        idRows, Key, GenerationalTable.DeleteAll),
       droppedGens = false)
   }
 
@@ -443,12 +379,13 @@ object SemDedupIndex {
   def compact(spark: SparkSession, root: String): Unit = {
     val v0 = version(spark, root)
     val v = v0 + 1
-    val (cellTarget, probes, c, nBuckets, qg) = schemeAt(spark, root, v0)
-    liveMembers(spark, root, v0).drop("gen")
+    val ms = metaScalarsOf(spark, root, v0)
+    val (cellTarget, probes, c, nBuckets, qg) = ms.scheme
+    liveMembers(spark, root, v0, ms).drop("gen")
       .repartition(col("cbk"))
       .write.mode("overwrite").partitionBy("cbk")
       .parquet(membersDir(root, v))
-    liveVecs(spark, root, v0).drop("gen")
+    liveVecs(spark, root, v0, ms).drop("gen")
       .repartition(col("vbk"))
       .write.mode("overwrite").partitionBy("vbk")
       .parquet(vecsDir(root, v))
@@ -458,7 +395,7 @@ object SemDedupIndex {
       .write.mode("overwrite").parquet(cellsDir(root, v))
     writeMetaTables(spark, root, v, (cellTarget, probes, c, nBuckets, v),
       Seq(v -> StateCommit.readParquet(spark, vecsDir(root, v)).count()),
-      emptyTombstones(spark), droppedGens = true)
+      GenerationalTable.emptyTombstones(spark, Key), droppedGens = true)
   }
 
   /** The quantizer-drift card (round-16 ask #3): live cell-occupancy
@@ -481,14 +418,15 @@ object SemDedupIndex {
 
   def driftCard(spark: SparkSession, root: String): DriftCard = {
     val v = version(spark, root)
-    val (cellTarget, _, c, _, _) = schemeAt(spark, root, v)
+    val ms = metaScalarsOf(spark, root, v)
+    val (cellTarget, c) = (ms.cellTarget, ms.nCells)
     // one narrow groupBy over the live (vec_id, cell) member rows, then
     // one single-row fold over the ≤nCells per-cell counts.
     // percentile_approx, not exact percentile: cells ∝ n/32 means the
     // exact form buffers every cell count in one task (~3×10⁷ longs at
     // 10⁹ vectors); the approx sketch is merge-combinable and its
     // 1/accuracy=1e-4 rank error is noise against a 4× size threshold
-    val sizes = liveMembers(spark, root, v)
+    val sizes = liveMembers(spark, root, v, ms)
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
     val big = lit(4L * cellTarget)
     val r = sizes.agg(
@@ -520,9 +458,9 @@ object SemDedupIndex {
     * when the corpus has outgrown the build-time cells. */
   def rebuild(spark: SparkSession, root: String): Unit = {
     val v0 = version(spark, root)
-    val (cellTarget, probes, _, _, _) = schemeAt(spark, root, v0)
-    build(Stage.snap(vectors(spark, root), materialize = true),
-      root, cellTarget, probes)
+    val ms = metaScalarsOf(spark, root, v0)
+    build(Stage.snap(liveVecs(spark, root, v0, ms).select("vec_id", "embedding"),
+      materialize = true), root, ms.cellTarget, ms.probes)
   }
 
   /** The candidate pairs + the scoring side's (cid, ce) rows, with the
@@ -541,10 +479,10 @@ object SemDedupIndex {
     * Row-identical either way (pruning only removes rows the joins
     * would drop) — the broadcast-join-pattern stance. */
   private def candsAndVecs(spark: SparkSession, root: String, v: Long,
-      candsRaw: DataFrame, pruned: Boolean, nBuckets: Int,
-      knownGens: Option[Seq[(Long, Long)]] = None): (DataFrame, DataFrame) =
+      candsRaw: DataFrame, pruned: Boolean,
+      ms: MetaScalars): (DataFrame, DataFrame) =
     if (!pruned)
-      (candsRaw, liveVecs(spark, root, v, knownGens = knownGens)
+      (candsRaw, liveVecs(spark, root, v, ms)
         .select(col("vec_id").as("cid"), col("embedding").as("ce")))
     else {
       val cands = Stage.snap(candsRaw, materialize = true)
@@ -557,10 +495,10 @@ object SemDedupIndex {
         .limit(PruneMaxCandidates.toInt + 1)
         .collect().map(_.getLong(0)).toIndexedSeq
       if (ids.size > PruneMaxCandidates)
-        (cands, liveVecs(spark, root, v, knownGens = knownGens)
+        (cands, liveVecs(spark, root, v, ms)
           .select(col("vec_id").as("cid"), col("embedding").as("ce")))
       else
-        (cands, liveVecs(spark, root, v, Some(ids), nBuckets, knownGens)
+        (cands, liveVecs(spark, root, v, ms, Some(ids))
           .select(col("vec_id").as("cid"), col("embedding").as("ce")))
     }
 
@@ -585,7 +523,7 @@ object SemDedupIndex {
       v: Long, k: Int = 5): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
     val ms = metaScalarsOf(spark, root, v)
-    val (q, probes, nBuckets) = quantizerFrom(spark, root, ms)
+    val (q, probes, _) = quantizerFrom(spark, root, ms)
     val qe = queries.select(col("qid").cast("long").as("qid"), col("qe"))
     val qAssign = Stage.snap(assignBatch(
         qe.select(col("qid").as("vec_id"), col("qe").as("embedding")),
@@ -598,15 +536,14 @@ object SemDedupIndex {
     val cellVals = qAssign.select("cell").distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
     val pruned = pruneWorthIt(cellVals.size, q.c)
-    val members = liveMembers(spark, root, v,
-      if (pruned) Some(cellVals) else None, nBuckets, Some(ms.gens))
+    val members = liveMembers(spark, root, v, ms,
+      if (pruned) Some(cellVals) else None)
     val candsRaw = qAssign
       .join(members.select(col("vec_id").cast("long").as("cid"), col("cell")),
         Seq("cell"))
       .where(col("qid") =!= col("cid"))
       .select("qid", "cid").distinct()
-    val (cands, corVecs) = candsAndVecs(spark, root, v, candsRaw, pruned,
-      nBuckets, Some(ms.gens))
+    val (cands, corVecs) = candsAndVecs(spark, root, v, candsRaw, pruned, ms)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cos").desc, col("cid"))
     cands.join(qe, Seq("qid"))
@@ -644,7 +581,7 @@ object SemDedupIndex {
       v: Long, threshold: Double = 0.35): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
     val ms = metaScalarsOf(spark, root, v)
-    val (q, probes, nBuckets) = quantizerFrom(spark, root, ms)
+    val (q, probes, _) = quantizerFrom(spark, root, ms)
     val inc = incoming.select(col("vec_id"), col("embedding"))
     val incAssign = Stage.snap(assignBatch(inc, q, probes),
       materialize = true)
@@ -655,16 +592,15 @@ object SemDedupIndex {
     val cellVals = incAssign.select("cell").distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
     val pruned = pruneWorthIt(cellVals.size, q.c)
-    val members = liveMembers(spark, root, v,
-      if (pruned) Some(cellVals) else None, nBuckets, Some(ms.gens))
+    val members = liveMembers(spark, root, v, ms,
+      if (pruned) Some(cellVals) else None)
     val ownIds = inc.select(col("vec_id").cast("long").as("cid")).distinct()
     val candsRaw = incAssign
       .join(members.select(col("vec_id").cast("long").as("cid"), col("cell")),
         Seq("cell"))
       .join(broadcast(ownIds), Seq("cid"), "left_anti")
       .select("vec_id", "cid").distinct()
-    val (cands, corVecs) = candsAndVecs(spark, root, v, candsRaw, pruned,
-      nBuckets, Some(ms.gens))
+    val (cands, corVecs) = candsAndVecs(spark, root, v, candsRaw, pruned, ms)
     val scored = cands
       .join(inc.select(col("vec_id"), col("embedding").as("ie")),
         Seq("vec_id"))

@@ -117,13 +117,12 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
   private def emptyDf: DataFrame = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  private def genPath(gen: Long) = s"$root/gen-$gen"
 
   /** Rows of the given buckets at their manifest generations (no bucket
     * col — it's derivable from product_id). */
   private def readBuckets(m: Map[Int, Long], buckets: Seq[Int]): DataFrame = {
     val paths = buckets.distinct.flatMap(b =>
-      m.get(b).map(g => s"${genPath(g)}/bucket=$b"))
+      m.get(b).map(g => s"${StateCommit.genDir(root, g)}/bucket=$b"))
     if (paths.isEmpty) emptyDf else spark.read.schema(schema).parquet(paths: _*)
   }
 
@@ -179,8 +178,10 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
       df: DataFrame): Int = {
     val s = spark; import s.implicits._
     val v = c.version + 1
-    df.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(genPath(v))
-    val written = StateCommit.listPartitionDirs(spark, genPath(v), "bucket")
+    df.write.mode(SaveMode.Overwrite).partitionBy("bucket")
+      .parquet(StateCommit.genDir(root, v))
+    val written = StateCommit.listPartitionDirs(spark,
+      StateCommit.genDir(root, v), "bucket")
       .map(_.toInt)
     val manifest = (c.manifest -- touched) ++ written.map(_ -> v)
     StateCommit.commitMeta(spark, root, v, MetaCols, Seq(

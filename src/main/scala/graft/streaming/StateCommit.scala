@@ -8,7 +8,7 @@ import scala.util.Try
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Path}
 import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Atomic multi-table state commits for the foreachBatch operators
   * ([[StreamingMonitor]], [[StreamingCuration]]).
@@ -45,6 +45,7 @@ object StateCommit {
 
   private val Pointer = "CURRENT"
   private val SnapPrefix = "snap-"
+  private val GenName = """gen-(\d+)""".r
 
   /** Footer-inference cache for IMMUTABLE parquet paths (round 17).
     * Spark 4 resolves `spark.read.parquet(path)` by reading a footer in
@@ -202,11 +203,23 @@ object StateCommit {
   def tableDir(statePath: String, v: Long, table: String): String =
     s"$statePath/$SnapPrefix$v/$table"
 
+  /** Directory of generation `g` under a generational root: the
+    * immutable data a mutation writes before its snapshot references it,
+    * and what [[gcGenerations]] reclaims once no snapshot does. */
+  def genDir(statePath: String, g: Long): String = s"$statePath/gen-$g"
+
   /** The committed version (last applied batch id), if any commit has
     * completed. */
   def currentVersion(spark: SparkSession, statePath: String): Option[Long] =
     Try(readSmallFile(spark.sparkContext.hadoopConfiguration,
       s"$statePath/$Pointer").map(_.trim.toLong)).toOption.flatten
+
+  /** The committed version of a persisted `family` root; throws
+    * `IllegalStateException` before its first commit. */
+  def committedVersion(spark: SparkSession, statePath: String,
+      family: String): Long =
+    currentVersion(spark, statePath).getOrElse(throw new IllegalStateException(
+      s"no committed $family at $statePath (build it first)"))
 
   /** [[currentVersion]] for a root that older code committed through a
     * hand-rolled cursor file: with no `CURRENT` but one of
@@ -324,9 +337,9 @@ object StateCommit {
   private[graft] def gcGenerations(spark: SparkSession,
       statePath: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val root = new Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listed = Try(fs.listStatus(root).toSeq).getOrElse(return)
+    val fs = new Path(statePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk = generationsOnDisk(spark, statePath)
     val cur = currentVersion(spark, statePath).getOrElse(return)
     val snaps = versions(spark, statePath)
     // a listing that misses CURRENT's own snapshot is not to be trusted
@@ -341,11 +354,19 @@ object StateCommit {
         .select(col("gen").cast("long")))
       .reduce(_.unionByName(_)).collect().map(_.getLong(0))
       .toSet).getOrElse(return) // abort: never guess
-    listed.filter(_.getPath.getName.startsWith("gen-")).foreach { g =>
-      Try(g.getPath.getName.stripPrefix("gen-").toLong).toOption.foreach {
-        gv => if (gv < cur && !referenced(gv)) fs.delete(g.getPath, true)
-      }
-    }
+    onDisk.filter(g => g < cur && !referenced(g))
+      .foreach(g => fs.delete(new Path(genDir(statePath, g)), true))
+  }
+
+  /** The generations under `statePath` ([[genDir]] dirs), ascending;
+    * empty when the root cannot be listed. */
+  private[graft] def generationsOnDisk(spark: SparkSession,
+      statePath: String): Seq[Long] = {
+    val root = new Path(statePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Try(fs.listStatus(root).toSeq).getOrElse(Seq.empty)
+      .map(_.getPath.getName).collect { case GenName(g) => g.toLong }
+      .sorted
   }
 
   /** Shared folded-metadata machinery (round 13): every persisted index
@@ -369,24 +390,44 @@ object StateCommit {
     }: _*)
   }
 
+  /** Snapshot `v`'s folded `meta` parquet; None for a snapshot written
+    * by pre-fold code. "Folded" is decided by SCHEMA (`t` column
+    * present), not existence — two families' PRE-fold layouts also kept
+    * a table named `meta` (DedupIndex's k/r scheme, DsirModel's
+    * buckets/totals row), the same discrimination [[gcGenerations]]
+    * applies. */
+  private def foldedMeta(spark: SparkSession, statePath: String,
+      v: Long): Option[DataFrame] = {
+    val metaPath = new Path(tableDir(statePath, v, "meta"))
+    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(metaPath))
+      Some(readParquet(spark, metaPath.toString)).filter(_.columns.contains("t"))
+    else None
+  }
+
+  /** The logical meta tables snapshot `v` holds: the folded meta's `t`
+    * values, or the per-table dirs of a pre-fold snapshot. A folded
+    * table with zero rows (an empty tombstone table) is not listed. */
+  def metaTableNames(spark: SparkSession, statePath: String,
+      v: Long): Set[String] = {
+    import org.apache.spark.sql.functions.col
+    foldedMeta(spark, statePath, v) match {
+      case Some(m) =>
+        m.select(col("t")).distinct().collect().map(_.getString(0)).toSet
+      case None =>
+        val snap = new Path(s"$statePath/$SnapPrefix$v")
+        snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(snap).map(_.getPath.getName).toSet
+    }
+  }
+
   /** Read one logical meta table of snapshot `v`: folded layout first,
     * per-table directory as the fallback for snapshots written by
-    * pre-fold code (time travel across the upgrade keeps working).
-    * "Folded" is decided by SCHEMA (`t` column present), not existence —
-    * two families' PRE-fold layouts also kept a table named `meta`
-    * (DedupIndex's k/r scheme, DsirModel's buckets/totals row), the same
-    * discrimination [[gcGenerations]] applies. */
+    * pre-fold code (time travel across the upgrade keeps working). */
   def metaTable(spark: SparkSession, statePath: String, v: Long,
       table: String, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val metaPath = new Path(tableDir(statePath, v, "meta"))
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val folded =
-      if (fs.exists(metaPath))
-        Some(readParquet(spark, metaPath.toString))
-          .filter(_.columns.contains("t"))
-      else None
-    folded match {
+    foldedMeta(spark, statePath, v) match {
       case Some(m) => m.where(col("t") === table).select(cols.map(col): _*)
       case None =>
         // project `cols` whenever the pre-fold snapshot has them all, so
@@ -396,6 +437,39 @@ object StateCommit {
         val raw = readParquet(spark, tableDir(statePath, v, table))
         if (cols.forall(raw.columns.contains)) raw.select(cols.map(col): _*)
         else raw
+    }
+  }
+
+  /** The rows of several metadata-sized logical tables of snapshot `v`
+    * in ONE driver action: a mutation or query that needs its scheme,
+    * manifest and watermarks reads them with one filtered collect of
+    * the folded meta instead of one single-task job per table. Each
+    * table's rows come in its `metaCols` order, as [[metaTable]] returns
+    * them. A pre-fold snapshot falls back to per-table reads, where an
+    * absent table reads as zero rows — the folded layout cannot tell an
+    * absent table from an empty one either. */
+  def metaRows(spark: SparkSession, statePath: String, v: Long,
+      tables: Seq[String],
+      metaCols: String => Seq[String]): Map[String, Seq[Row]] = {
+    import org.apache.spark.sql.functions.col
+    foldedMeta(spark, statePath, v) match {
+      case Some(m) =>
+        val cols = tables.flatMap(metaCols).distinct
+        val rows = m.where(col("t").isin(tables: _*))
+          .select(col("t") +: cols.map(col): _*).collect()
+        tables.map { t =>
+          val at = metaCols(t).map(c => 1 + cols.indexOf(c))
+          t -> rows.toSeq.filter(_.getString(0) == t)
+            .map(r => Row.fromSeq(at.map(r.get)))
+        }.toMap
+      case None =>
+        val fs = new Path(statePath)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        tables.map { t =>
+          t -> (if (fs.exists(new Path(tableDir(statePath, v, t))))
+            metaTable(spark, statePath, v, t, metaCols(t)).collect().toSeq
+          else Seq.empty)
+        }.toMap
     }
   }
 

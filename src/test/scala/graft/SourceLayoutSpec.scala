@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * scanning `src/main/scala`: the kept entry points are the only
   * `main`s, every one of them builds its session through
   * [[LocalSession]], generation GC is reached only through the shared
-  * commit tail ([[graft.streaming.StateCommit.commitMeta]]), and the
+  * commit tail ([[graft.streaming.StateCommit.commitMeta]]), the
   * sync path's state goes through Hadoop via [[graft.streaming
-  * .StateCommit]] (one atomic small-file write, one partition lister).
+  * .StateCommit]] (one atomic small-file write, one partition lister),
+  * the tombstone format lives in [[graft.streaming.GenerationalTable]],
+  * and the folded-meta probe and generation paths live in StateCommit.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -69,5 +71,19 @@ class SourceLayoutSpec extends AnyFunSuite {
     assert(filesContaining("def listCellDirs").isEmpty)
     assert(filesContaining("def listPartitionDirs") ==
       Set("graft/streaming/StateCommit.scala"))
+  }
+
+  test("the tombstone column before_gen is spelled only in GenerationalTable") {
+    assert(filesContaining("before_gen") ==
+      Set("graft/streaming/GenerationalTable.scala"))
+  }
+
+  test("the folded-meta schema probe has one copy, in StateCommit") {
+    assert(filesContaining(""".filter(_.columns.contains("t"))""") ==
+      Set("graft/streaming/StateCommit.scala"))
+  }
+
+  test("generation paths are built only by StateCommit.genDir") {
+    assert(filesContaining("gen-$") == Set("graft/streaming/StateCommit.scala"))
   }
 }
