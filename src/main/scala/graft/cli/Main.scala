@@ -1085,7 +1085,7 @@ object Main {
       // PRE-fold snapshots too (round-13 review: a raw folded read here
       // threw PATH_NOT_FOUND on exactly the roots the probe detected
       // from their per-table dirs)
-      import graft.operators.{AnnIndex, AnnIndexPq, DedupIndex, DsirModel, LexIndex}
+      import graft.operators.{DedupIndex, DsirModel, LexIndex}
       def gensCard(referenced: Seq[Long]): Unit =
         println(s"generations: ${gensOnDisk.size} on disk " +
           s"(${gensOnDisk.mkString(", ")}), ${referenced.length} referenced " +
@@ -1105,11 +1105,10 @@ object Main {
             s"${st.getLong(1)} tokens").getOrElse("stats unavailable")
           println(s"corpus: $corpus; tombstoned ids: $tombs")
         case "ann" | "ivf-pq" =>
-          val mt: (SparkSession, String, Long, String) => org.apache.spark.sql.DataFrame =
-            if (family == "ann") AnnIndex.metaTable else AnnIndexPq.metaTable
-          val entries = mt(spark, root, cur, "manifest").collect()
-          gensCard(entries.map(_.getLong(1)).distinct.sorted.toSeq)
-          println(s"live cells: ${entries.length}")
+          val cells = graft.streaming.CellTable.entries(StateCommit.metaTable(
+            spark, root, cur, "manifest", Seq("cell", "gen")).collect().toSeq)
+          gensCard(cells.values.toSeq.distinct.sorted)
+          println(s"live cells: ${cells.size}")
         case "semdedup" =>
           import graft.operators.SemDedupIndex
           val entries = SemDedupIndex.metaTable(spark, root, cur, "manifest")

@@ -1,13 +1,10 @@
 package graft.operators
 
-import scala.util.Try
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.StateCommit
+import graft.streaming.{CellTable, StateCommit}
 
 /** Persisted IVF index — the build-once / query-many form of
   * [[Similarity.ivfKmeansTopK]], which trains and scans in the same
@@ -24,6 +21,8 @@ import graft.streaming.StateCommit
   *                               discriminated by column `t`
   *   root/gen-v/cell=C/        — IMMUTABLE data files written by mutation v
   * }}}
+  * [[graft.streaming.CellTable]] owns the manifest and generation format
+  * (it is shared with [[AnnIndexPq]] and the vector store).
   * (pre-fold snapshots carried per-table dirs — centroids/ manifest/
   * stats/ drift/ — and stay readable via the folded-first fallback in
   * `metaTable`)
@@ -72,8 +71,13 @@ object AnnIndex {
   private val Stats = "stats"
   private val Drift = "drift"
 
-  private def cellDir(root: String, gen: Long, cell: String) =
-    s"${StateCommit.genDir(root, gen)}/cell=$cell"
+  /** The cell-partitioned vector table: (vec_id, embedding, cell). The
+    * embedding keeps its input type; this is the schema of an empty
+    * index. */
+  private val Cells = CellTable("cell", StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("cell", IntegerType))))
 
   /** Column superset of the four logical metadata tables — every commit
     * folds them into ONE `meta` parquet (discriminated by column `t`),
@@ -84,8 +88,8 @@ object AnnIndex {
     * fallback; [[StateCommit.gcGenerations]] already consults the
     * folded manifest by the same precedence. */
   private val MetaCols: Seq[(String, String)] = Seq(
-    "centroid_id" -> "long", "ce" -> "array<double>",
-    "cell" -> "string", "gen" -> "long",
+    "centroid_id" -> "long", "ce" -> "array<double>") ++
+    CellTable.entryCols("cell", "string") ++ Seq(
     "build_mean_cos" -> "double", "n" -> "long",
     "seq" -> "long", "mean_cos" -> "double")
 
@@ -104,28 +108,52 @@ object AnnIndex {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
+  /** Snapshot v's metadata-sized tables, read in ONE collect: the
+    * live-cell manifest, the build stats (None on a pre-monitor
+    * snapshot) and the drift log — one row per upsert since the last
+    * build (seq, n, mean_cos), reset by [[build]] and carried forward by
+    * every other mutation. */
+  private final case class Meta(cells: Map[String, Long],
+      stats: Option[(Double, Long)], drift: Seq[(Long, Long, Double)])
+
+  private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
+    val m = StateCommit.metaRows(spark, root, v, Seq(Manifest, Stats, Drift),
+      metaCols)
+    Meta(CellTable.entries(m(Manifest)),
+      m(Stats).headOption.map(r => (r.getDouble(0), r.getLong(1))),
+      m(Drift).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1))
+  }
+
   /** Write the folded metadata snapshot and commit
     * ([[StateCommit.commitMeta]]). `droppedGens` = this commit removed
     * generations from the manifest. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
-      centroids: DataFrame, entries: Seq[(String, Long)],
-      stats: DataFrame, drift: Seq[(Long, Long, Double)],
+      centroids: DataFrame, cells: Map[String, Long],
+      stats: Option[(Double, Long)], drift: Seq[(Long, Long, Double)],
       droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
     StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
       Centroids -> centroids,
-      Manifest -> entries.toDF("cell", "gen"),
-      Stats -> stats,
+      Manifest -> Cells.entriesDf(spark, cells),
+      Stats -> stats.toSeq.toDF("build_mean_cos", "n"),
       Drift -> drift.toDF("seq", "n", "mean_cos")), droppedGens)
   }
 
-  /** Stats rows of snapshot `v` (0 or 1 rows; tolerates pre-monitor
-    * snapshots, where the per-table fallback directory is absent). */
-  private def statsRows(spark: SparkSession, root: String,
-      v: Long): DataFrame = {
-    val s = spark; import s.implicits._
-    Try(metaTable(spark, root, v, Stats)).getOrElse(
-      Seq.empty[(Double, Long)].toDF("build_mean_cos", "n"))
+  /** Publish snapshot v0 + 1: the `touched` cells of snapshot v0 (`m`)
+    * rewritten as `rows` of their current rows, in one fresh generation;
+    * v0's centroids (`cents`) and stats carry over and `drift` extends
+    * the log. */
+  private def rewrite(spark: SparkSession, root: String, v0: Long, m: Meta,
+      cents: DataFrame, touched: Set[String],
+      drift: Seq[(Long, Long, Double)] = Seq.empty)(
+      rows: DataFrame => DataFrame): Unit = {
+    val v = v0 + 1
+    val (cells, droppedGens) = Cells.write(root, v,
+      rows(Cells.read(spark, root, m.cells.filter(e => touched(e._1)))),
+      m.cells, touched)
+    writeMeta(spark, root, v, cents, cells, m.stats, m.drift ++ drift,
+      droppedGens)
   }
 
   /** The committed snapshot version; mutations bump it by one. */
@@ -136,62 +164,15 @@ object AnnIndex {
   def centroids(spark: SparkSession, root: String): DataFrame =
     metaTable(spark, root, version(spark, root), Centroids)
 
-  /** Snapshot v's live-cell map: cell (as the partition-directory
-    * string) -> generation holding its current rows. nCells rows. */
-  private def entriesOf(spark: SparkSession, root: String,
-      v: Long): Seq[(String, Long)] =
-    metaTable(spark, root, v, Manifest)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-
-  /** The drift log: one row per upsert since the last build
-    * (seq, n, mean_cos) — reset by [[build]], carried forward by every
-    * other mutation; metadata-sized always. */
-  private def readDrift(spark: SparkSession, root: String,
-      v: Long): Seq[(Long, Long, Double)] =
-    Try(metaTable(spark, root, v, Drift)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq.sortBy(_._1))
-      .getOrElse(Seq.empty)
-
   /** Mean assignment cosine + row count of a scored assignment. */
   private def meanCosOf(scored: DataFrame): (Double, Long) = {
     val r = scored.agg(avg(col("ccos")), count(lit(1))).head()
     (Option(r.get(0)).map(_.asInstanceOf[Double]).getOrElse(0.0), r.getLong(1))
   }
 
-  private def fsOf(spark: SparkSession, path: String) = {
-    val p = new Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def emptyVectors(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("cell", IntegerType))))
-
-  /** Read exactly `entries`' cell directories — path-level pruning:
-    * unreferenced cells are never listed, let alone scanned. Each
-    * generation is read with its own basePath so the `cell` partition
-    * column is recovered; cross-generation unions align the inferred
-    * partition type. */
-  private def readCells(spark: SparkSession, root: String,
-      entries: Seq[(String, Long)]): DataFrame = {
-    if (entries.isEmpty) return emptyVectors(spark)
-    val parts = entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, es) =>
-      StateCommit.readParquetBased(spark, StateCommit.genDir(root, g),
-        es.map(e => cellDir(root, g, e._1)).sorted)
-    }
-    val cellT = parts.head.schema("cell").dataType
-    parts.map(_.withColumn("cell", col("cell").cast(cellT)))
-      .reduce(_.unionByName(_))
-  }
-
   /** All live rows of the committed snapshot: (vec_id, embedding, cell). */
-  def vectors(spark: SparkSession, root: String): DataFrame = {
-    val v = version(spark, root)
-    readCells(spark, root, entriesOf(spark, root, v))
-  }
+  def vectors(spark: SparkSession, root: String): DataFrame =
+    Cells.read(spark, root, metaAt(spark, root, version(spark, root)).cells)
 
   /** The pruned candidate scan for a probe-cell set — exposed for the
     * plan gate (asserts `cell IN (…)` lands in PartitionFilters; the
@@ -200,9 +181,8 @@ object AnnIndex {
   def prunedVectors(spark: SparkSession, root: String,
       cells: Seq[Any]): DataFrame = {
     val want = cells.map(_.toString).toSet
-    val v = version(spark, root)
-    val live = entriesOf(spark, root, v)
-    readCells(spark, root, live.filter(e => want(e._1)))
+    val live = metaAt(spark, root, version(spark, root)).cells
+    Cells.read(spark, root, live.filter(e => want(e._1)))
       .where(col("cell").isin(cells: _*))
   }
 
@@ -224,19 +204,15 @@ object AnnIndex {
     val cents = Similarity.trainCentroids(embeddings, nCells)
       .localCheckpoint()
     val scored = Similarity.assignCellsScored(embeddings, cents)
-    scored.drop("ccos")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(StateCommit.genDir(root, v))
+    val (cells, _) = Cells.write(root, v, scored.drop("ccos"), Map.empty,
+      Set.empty)
     // build-time assignment quality: the drift monitor's reference point
     // (one extra broadcast-assignment pass — metadata-cheap vs the write)
     val (buildMean, n) = meanCosOf(scored)
-    val s = spark; import s.implicits._
     writeMeta(spark, root, v,
       centroids = cents,
-      entries = StateCommit.listPartitionDirs(spark,
-        StateCommit.genDir(root, v), "cell")
-        .map(_ -> v),
-      stats = Seq((buildMean, n)).toDF("build_mean_cos", "n"),
+      cells = cells,
+      stats = Some((buildMean, n)),
       drift = Seq.empty, // a rebuild resets the log
       // a rebuild over a live index replaces the whole manifest —
       // every prior generation loses its reference
@@ -266,24 +242,19 @@ object AnnIndex {
       v: Long, nProbes: Int = 1, k: Int = 5): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
     val cents = metaTable(spark, root, v, Centroids)
-    val live = entriesOf(spark, root, v)
-    val raw = readCells(spark, root, live)
-    // partition-column type is inferred from the directory names — cast
-    // the probe side to the READ type so the IN list prunes partitions
-    // instead of planning a cast-wrapped row filter
-    val cellType = raw.schema("cell").dataType
+    val live = metaAt(spark, root, v).cells
     val probes = Similarity.rankAgainst(
         queries.select(col("qid").as("vec_id"), col("qe").as("embedding")),
         cents)
       .where(col("arn") <= nProbes)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("centroid_id").cast(cellType).as("cell"))
+        col("centroid_id").as("cell"))
     val cellVals = probes.select("cell").distinct().collect().map(_.get(0))
     val want = cellVals.map(_.toString).toSet
-    val vecs = readCells(spark, root, live.filter(e => want(e._1)))
+    val vecs = Cells.read(spark, root, live.filter(e => want(e._1)))
       .where(col("cell").isin(cellVals.toIndexedSeq: _*))
       .select(col("vec_id").as("cid"), col("embedding").as("ce2"), col("cell"))
-    Similarity.cellTopK(probes, vecs, k, raw)
+    Similarity.cellTopK(probes, vecs, k, vecs)
   }
 
   /** Incremental maintenance between rebuilds: assign `batch` (vec_id,
@@ -304,11 +275,11 @@ object AnnIndex {
   def upsert(spark: SparkSession, root: String, rawBatch: DataFrame,
       seqCol: String = ""): Unit = {
     val v0 = version(spark, root)
-    val v = v0 + 1
+    val m = metaAt(spark, root, v0)
     val cents = metaTable(spark, root, v0, Centroids)
     // last-wins collapse: a CDC batch carrying two versions of one
     // vec_id would land the vector TWICE in the new generation (the
-    // anti-join only removes prior-generation copies)
+    // incoming-id drop only removes prior-generation copies)
     val batch = CdcBatch.collapse(rawBatch, "vec_id", seqCol)
     val scored = Similarity.assignCellsScored(batch, cents)
       .localCheckpoint() // the touched-cell collect, the drift stat and
@@ -319,29 +290,10 @@ object AnnIndex {
     val incoming = scored.drop("ccos")
     val touched = incoming.select("cell").distinct()
       .collect().map(_.get(0).toString).toSet
-    val live = entriesOf(spark, root, v0)
-    val existing = live.filter(e => touched(e._1))
-    val newGen =
-      if (existing.isEmpty) incoming
-      else {
-        val kept = readCells(spark, root, existing)
-          .join(incoming.select("vec_id"), Seq("vec_id"), "left_anti")
-        kept.unionByName(incoming.withColumn("cell",
-          col("cell").cast(kept.schema("cell").dataType)))
-      }
-    newGen.write.mode("overwrite").partitionBy("cell")
-      .parquet(StateCommit.genDir(root, v))
-    val entries = StateCommit.listPartitionDirs(spark,
-      StateCommit.genDir(root, v), "cell")
-      .map(_ -> v) ++
-      live.filterNot(e => touched(e._1))
-    writeMeta(spark, root, v,
-      centroids = cents,
-      entries = entries,
-      stats = statsRows(spark, root, v0),
-      drift = readDrift(spark, root, v0) :+ ((v, batchN, batchMean)),
-      droppedGens =
-        live.map(_._2).toSet.diff(entries.map(_._2).toSet).nonEmpty)
+    rewrite(spark, root, v0, m, cents, touched,
+        Seq((v0 + 1, batchN, batchMean))) {
+      CellTable.dropKeys(_, incoming, "vec_id").unionByName(incoming)
+    }
   }
 
   /** Drift advisory for the streaming/incremental ingest path — closes
@@ -369,11 +321,9 @@ object AnnIndex {
     * drops ~0.5). */
   def driftReport(spark: SparkSession, root: String,
       margin: Double = 0.15, lastK: Int = 5): Option[DriftReport] = {
-    val v = version(spark, root)
-    val stats = Try(metaTable(spark, root, v, Stats).head()).toOption
-    val drift = readDrift(spark, root, v).takeRight(lastK)
-    for (s <- stats if drift.nonEmpty) yield {
-      val buildMean = s.getDouble(0)
+    val m = metaAt(spark, root, version(spark, root))
+    val drift = m.drift.takeRight(lastK)
+    for ((buildMean, _) <- m.stats if drift.nonEmpty) yield {
       val n = drift.map(_._2).sum
       val recent =
         if (n == 0L) buildMean
@@ -393,28 +343,14 @@ object AnnIndex {
     * index are no-ops; replays converge. */
   def delete(spark: SparkSession, root: String, ids: DataFrame): Unit = {
     val v0 = version(spark, root)
-    val live = entriesOf(spark, root, v0)
-    val raw = readCells(spark, root, live)
+    val m = metaAt(spark, root, v0)
     val victims = ids.select(col("vec_id"))
-    val touched = raw.join(victims, Seq("vec_id"), "left_semi")
+    val touched = Cells.read(spark, root, m.cells)
+      .join(victims, Seq("vec_id"), "left_semi")
       .select("cell").distinct().collect().map(_.get(0).toString).toSet
-    if (touched.isEmpty) return
-    val v = v0 + 1
-    val kept = readCells(spark, root, live.filter(e => touched(e._1)))
-      .join(victims, Seq("vec_id"), "left_anti")
-    kept.write.mode("overwrite").partitionBy("cell")
-      .parquet(StateCommit.genDir(root, v))
-    val entries = StateCommit.listPartitionDirs(spark,
-      StateCommit.genDir(root, v), "cell")
-      .map(_ -> v) ++
-      live.filterNot(e => touched(e._1))
-    writeMeta(spark, root, v,
-      centroids = metaTable(spark, root, v0, Centroids),
-      entries = entries,
-      stats = statsRows(spark, root, v0),
-      drift = readDrift(spark, root, v0),
-      droppedGens =
-        live.map(_._2).toSet.diff(entries.map(_._2).toSet).nonEmpty)
+    if (touched.nonEmpty)
+      rewrite(spark, root, v0, m, metaTable(spark, root, v0, Centroids),
+        touched)(CellTable.dropKeys(_, victims, "vec_id"))
   }
 
   /** Small-file compaction: every [[upsert]]/[[delete]] generation
@@ -430,41 +366,18 @@ object AnnIndex {
   def compact(spark: SparkSession, root: String,
       maxFilesPerCell: Int = 1): Unit = {
     val v0 = version(spark, root)
-    val live = entriesOf(spark, root, v0)
-    val crowded = live.filter { case (cell, g) =>
-      val (fs, p) = fsOf(spark, cellDir(root, g, cell))
-      Try(fs.listStatus(p)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-        .getOrElse(0) > maxFilesPerCell
-    }
-    if (crowded.isEmpty) return
-    val v = v0 + 1
-    readCells(spark, root, crowded)
-      .repartition(col("cell")) // one task -> one file per cell
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(StateCommit.genDir(root, v))
-    val entries = StateCommit.listPartitionDirs(spark,
-      StateCommit.genDir(root, v), "cell")
-      .map(_ -> v) ++
-      live.filterNot(e => crowded.exists(_._1 == e._1))
-    writeMeta(spark, root, v,
-      centroids = metaTable(spark, root, v0, Centroids),
-      entries = entries,
-      stats = statsRows(spark, root, v0),
-      drift = readDrift(spark, root, v0),
-      droppedGens =
-        live.map(_._2).toSet.diff(entries.map(_._2).toSet).nonEmpty)
+    val m = metaAt(spark, root, v0)
+    val crowded = Cells.fileCounts(spark, root, m.cells)
+      .collect { case (cell, n) if n > maxFilesPerCell => cell }.toSet
+    if (crowded.nonEmpty)
+      rewrite(spark, root, v0, m, metaTable(spark, root, v0, Centroids),
+          crowded)(
+        _.repartition(col("cell"))) // one task -> one file per cell
   }
 
   /** Per-cell parquet file counts of the committed snapshot — the
     * [[compact]] trigger's input, exposed for ops/specs. */
-  def filesPerCell(spark: SparkSession, root: String): Map[String, Int] = {
-    val v = version(spark, root)
-    entriesOf(spark, root, v).map { case (cell, g) =>
-      val (fs, p) = fsOf(spark, cellDir(root, g, cell))
-      cell -> Try(fs.listStatus(p)
-        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-        .getOrElse(0)
-    }.toMap
-  }
+  def filesPerCell(spark: SparkSession, root: String): Map[String, Int] =
+    Cells.fileCounts(spark, root,
+      metaAt(spark, root, version(spark, root)).cells)
 }

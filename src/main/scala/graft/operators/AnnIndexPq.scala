@@ -1,11 +1,10 @@
 package graft.operators
 
-import scala.util.Try
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.streaming.StateCommit
+import graft.streaming.{CellTable, StateCommit}
 
 /** Persisted IVF-PQ index — [[AnnIndex]] with PQ codes instead of raw
   * vectors in the cells: the production billion-vector layout, where
@@ -30,7 +29,8 @@ import graft.streaming.StateCommit
   * }}}
   * (pre-fold snapshots carried per-table dirs — coarse/ codebook/
   * params/ manifest/ stats/ drift/ — and stay readable via the
-  * folded-first fallback in `metaTable`)
+  * folded-first fallback in `metaTable`).
+  * [[graft.streaming.CellTable]] owns the manifest and generation format.
   *
   * Scale posture: the probe set prunes at the FILE level (manifest →
   * probed cells' directories only), the per-query LUT broadcasts, and
@@ -64,8 +64,13 @@ object AnnIndexPq {
     * only the distinct probed cells collect. */
   private val ProbeCollectBound = 8192
 
-  private def cellDir(root: String, gen: Long, cell: String) =
-    s"${StateCommit.genDir(root, gen)}/cell=$cell"
+  /** The cell-partitioned code table: PQ code per (vector, block),
+    * partitioned by the vector's COARSE cell. */
+  private val Cells = CellTable("cell", StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("blk", IntegerType),
+    StructField("code", LongType),
+    StructField("cell", IntegerType))))
 
   /** Column superset of the six logical metadata tables — every commit
     * folds them into ONE `meta` parquet (discriminated by column `t`),
@@ -81,8 +86,8 @@ object AnnIndexPq {
     "ccell" -> "long", "cce" -> "array<double>",
     "blk" -> "int", "cid" -> "long", "ce" -> "array<double>",
     "n_coarse" -> "int", "m" -> "int", "sub_dim" -> "int",
-    "n_centroids" -> "int",
-    "cell" -> "string", "gen" -> "long",
+    "n_centroids" -> "int") ++
+    CellTable.entryCols("cell", "string") ++ Seq(
     "build_mean_err_nano" -> "double", "n" -> "long",
     "seq" -> "long", "mean_err_nano" -> "double")
 
@@ -103,30 +108,58 @@ object AnnIndexPq {
       v: Long, table: String): DataFrame =
     StateCommit.metaTable(spark, root, v, table, metaCols(table))
 
+  /** Snapshot v's metadata-sized tables, read in ONE collect: the
+    * build-time (nCoarse, m, subDim, nCentroids), the live-cell
+    * manifest, the build stats (None on a pre-monitor snapshot) and the
+    * drift log — one row per upsert since the last build
+    * (seq, n, mean_err_nano), reset by [[build]] and carried forward by
+    * every other mutation. */
+  private final case class Meta(params: (Int, Int, Int, Int),
+      cells: Map[String, Long], stats: Option[(Double, Long)],
+      drift: Seq[(Long, Long, Double)])
+
+  private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
+    val t = StateCommit.metaRows(spark, root, v,
+      Seq(Params, Manifest, Stats, Drift), metaCols)
+    val p = t(Params).head
+    Meta((p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)),
+      CellTable.entries(t(Manifest)),
+      t(Stats).headOption.map(r => (r.getDouble(0), r.getLong(1))),
+      t(Drift).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1))
+  }
+
   /** Write the folded metadata snapshot and commit
     * ([[StateCommit.commitMeta]]). `droppedGens` = this commit removed
     * generations from the manifest. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
-      coarse: DataFrame, codebook: DataFrame, params: DataFrame,
-      entries: Seq[(String, Long)], stats: DataFrame,
+      coarse: DataFrame, codebook: DataFrame, params: (Int, Int, Int, Int),
+      cells: Map[String, Long], stats: Option[(Double, Long)],
       drift: Seq[(Long, Long, Double)], droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
     StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
       Coarse -> coarse,
       Codebook -> codebook,
-      Params -> params,
-      Manifest -> entries.toDF("cell", "gen"),
-      Stats -> stats,
+      Params -> Seq(params).toDF("n_coarse", "m", "sub_dim", "n_centroids"),
+      Manifest -> Cells.entriesDf(spark, cells),
+      Stats -> stats.toSeq.toDF("build_mean_err_nano", "n"),
       Drift -> drift.toDF("seq", "n", "mean_err_nano")), droppedGens)
   }
 
-  /** Stats rows of snapshot `v` (0 or 1 rows; tolerates pre-monitor
-    * snapshots, where the per-table fallback directory is absent). */
-  private def statsRows(spark: SparkSession, root: String,
-      v: Long): DataFrame = {
-    val s = spark; import s.implicits._
-    Try(metaTable(spark, root, v, Stats)).getOrElse(
-      Seq.empty[(Double, Long)].toDF("build_mean_err_nano", "n"))
+  /** Publish snapshot v0 + 1: the `touched` cells of snapshot v0 (`m`)
+    * rewritten as `rows` of their current rows, in one fresh generation;
+    * v0's quantizer (`coarse`), codebooks (`cents`), params and stats
+    * carry over and `drift` extends the log. */
+  private def rewrite(spark: SparkSession, root: String, v0: Long, m: Meta,
+      coarse: DataFrame, cents: DataFrame, touched: Set[String],
+      drift: Seq[(Long, Long, Double)] = Seq.empty)(
+      rows: DataFrame => DataFrame): Unit = {
+    val v = v0 + 1
+    val (cells, droppedGens) = Cells.write(root, v,
+      rows(Cells.read(spark, root, m.cells.filter(e => touched(e._1)))),
+      m.cells, touched)
+    writeMeta(spark, root, v, coarse, cents, m.params, cells, m.stats,
+      m.drift ++ drift, droppedGens)
   }
 
   def version(spark: SparkSession, root: String): Long =
@@ -134,31 +167,7 @@ object AnnIndexPq {
 
   /** (nCoarse, m, subDim, nCentroids) locked at build time. */
   def params(spark: SparkSession, root: String): (Int, Int, Int, Int) =
-    paramsAt(spark, root, version(spark, root))
-
-  private def paramsAt(spark: SparkSession, root: String,
-      v: Long): (Int, Int, Int, Int) = {
-    val r = metaTable(spark, root, v, Params).head()
-    (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
-  }
-
-  private def manifestOf(spark: SparkSession, root: String,
-      v: Long): Seq[(String, Long)] =
-    metaTable(spark, root, v, Manifest)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-
-  /** Params + manifest of snapshot `v` in ONE driver action (round 17:
-    * the search path paid a params head() plus a manifest collect —
-    * two single-task jobs over the same folded meta file). Pre-fold
-    * snapshots fall back to the per-table reads. */
-  private def paramsAndManifest(spark: SparkSession, root: String,
-      v: Long): ((Int, Int, Int, Int), Seq[(String, Long)]) = {
-    val m = StateCommit.metaRows(spark, root, v, Seq(Params, Manifest),
-      metaCols)
-    val p = m(Params).head
-    ((p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)),
-      m(Manifest).map(r => (r.getString(0), r.getLong(1))).sortBy(_._1))
-  }
+    metaAt(spark, root, version(spark, root)).params
 
   /** Mean per-vector quantization error (Σ over blocks of the chosen
     * code's nano-L2) and vector count of an encoded assignment —
@@ -169,38 +178,11 @@ object AnnIndexPq {
     (Option(r.get(0)).map(_.asInstanceOf[Double]).getOrElse(0.0), r.getLong(1))
   }
 
-  /** The drift log: one row per upsert since the last build
-    * (seq, n, mean_err_nano) — reset by [[build]], carried forward by
-    * every other mutation; metadata-sized always. */
-  private def readDrift(spark: SparkSession, root: String,
-      v: Long): Seq[(Long, Long, Double)] =
-    Try(metaTable(spark, root, v, Drift)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSeq.sortBy(_._1))
-      .getOrElse(Seq.empty)
-
-  /** Read exactly `entries`' cell directories — path-level pruning,
-    * with each generation read under its own basePath so the `cell`
-    * partition column recovers. */
-  private def readCells(spark: SparkSession, root: String,
-      entries: Seq[(String, Long)]): Option[DataFrame] =
-    if (entries.isEmpty) None
-    else {
-      val parts = entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, es) =>
-        StateCommit.readParquetBased(spark, StateCommit.genDir(root, g),
-          es.map(e => cellDir(root, g, e._1)).sorted)
-      }
-      val cellT = parts.head.schema("cell").dataType
-      Some(parts.map(_.withColumn("cell", col("cell").cast(cellT)))
-        .reduce(_.unionByName(_)))
-    }
-
   /** Train coarse quantizer + residual codebooks and persist the
     * cell-partitioned code table as one atomic snapshot. */
   def build(embeddings: DataFrame, root: String, nCoarse: Int = 8,
       m: Int = 8, subDim: Int = 8, nCentroids: Int = 16): Unit = {
     val spark = embeddings.sparkSession
-    val s = spark; import s.implicits._
     val prior = StateCommit.currentVersion(spark, root)
     val v = prior.getOrElse(0L) + 1
     val parts = Similarity.ivfPqParts(embeddings, nCoarse, m, subDim,
@@ -212,22 +194,19 @@ object AnnIndexPq {
     // the code rows: PQ code per (vector, block), partitioned by the
     // vector's COARSE cell — `cell` is the partition (pruning) column,
     // `code` the payload
-    assign.select(col("vec_id"), col("blk"), col("cell").as("code"))
-      .join(parts.residuals.select(col("vec_id"), col("ccell").as("cell")),
-        Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(StateCommit.genDir(root, v))
+    val (cells, _) = Cells.write(root, v,
+      assign.select(col("vec_id"), col("blk"), col("cell").as("code"))
+        .join(parts.residuals.select(col("vec_id"), col("ccell").as("cell")),
+          Seq("vec_id")),
+      Map.empty, Set.empty)
     // build-time quantization quality: the drift monitor's reference
     // point (and the drift log resets — a fresh build is un-drifted)
     val (meanErr, n) = meanErrOf(assign)
     writeMeta(spark, root, v,
       coarse = parts.coarse, codebook = parts.cents,
-      params = Seq((nCoarse, m, subDim, nCentroids))
-        .toDF("n_coarse", "m", "sub_dim", "n_centroids"),
-      entries = StateCommit.listPartitionDirs(spark,
-        StateCommit.genDir(root, v), "cell")
-        .map(_ -> v),
-      stats = Seq((meanErr, n)).toDF("build_mean_err_nano", "n"),
+      params = (nCoarse, m, subDim, nCentroids),
+      cells = cells,
+      stats = Some((meanErr, n)),
       drift = Seq.empty,
       // a rebuild over a live index replaces the whole manifest —
       // every prior generation loses its reference
@@ -251,7 +230,8 @@ object AnnIndexPq {
   def searchAt(spark: SparkSession, root: String, queries: DataFrame,
       v: Long, nProbes: Int = 2, k: Int = 5): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
-    val ((_, m, subDim, _), manifest) = paramsAndManifest(spark, root, v)
+    val meta = metaAt(spark, root, v)
+    val (_, m, subDim, _) = meta.params
     val coarse = metaTable(spark, root, v, Coarse)
     val cents = metaTable(spark, root, v, Codebook)
     val wq = org.apache.spark.sql.expressions.Window
@@ -277,14 +257,9 @@ object AnnIndexPq {
       if (head.length <= ProbeCollectBound)
         (spark.createDataFrame(
           spark.sparkContext.parallelize(head.toIndexedSeq, 1),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("qid",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("pcell",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("rq",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType))))),
+          StructType(Seq(StructField("qid", LongType),
+            StructField("pcell", LongType),
+            StructField("rq", ArrayType(DoubleType))))),
           head.map(_.get(1).toString).toSet)
       else {
         val cp = qprobeLazy.localCheckpoint()
@@ -299,28 +274,22 @@ object AnnIndexPq {
       .select(col("qid"), col("pcell"), col("blk"), col("cid"),
         Similarity.nanoL2(col("sub"), col("ce")).as("dq"))
     // file-level pruning: only the probed cells' directories are read
-    val live = manifest.filter(e => probed(e._1))
-    readCells(spark, root, live) match {
-      case None =>
-        spark.range(0).select(col("id").as("qid"), col("id").as("cid"),
-          col("id").as("adist_nano"), col("id").cast("int").as("rn"))
-      case Some(codes) =>
-        val codeRows = codes.select(col("vec_id").as("cid2"),
-          col("blk").as("cblk"), col("code"), col("cell").as("vcell"))
-        val scored = codeRows
-          .join(broadcast(lut),
-            col("vcell") === col("pcell") && col("cblk") === col("blk") &&
-              col("code") === col("cid"))
-          .groupBy(col("qid"), col("cid2").as("cid"))
-          .agg(sum("dq").as("adist_nano"))
-          .where(col("qid") =!= col("cid"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("adist_nano"), col("cid"))
-        scored.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= k)
-          .select("qid", "cid", "adist_nano", "rn")
-          .orderBy("qid", "rn")
-    }
+    val codeRows = Cells.read(spark, root, meta.cells.filter(e => probed(e._1)))
+      .select(col("vec_id").as("cid2"), col("blk").as("cblk"), col("code"),
+        col("cell").as("vcell"))
+    val scored = codeRows
+      .join(broadcast(lut),
+        col("vcell") === col("pcell") && col("cblk") === col("blk") &&
+          col("code") === col("cid"))
+      .groupBy(col("qid"), col("cid2").as("cid"))
+      .agg(sum("dq").as("adist_nano"))
+      .where(col("qid") =!= col("cid"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col("adist_nano"), col("cid"))
+    scored.withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+      .select("qid", "cid", "adist_nano", "rn")
+      .orderBy("qid", "rn")
   }
 
   /** Two-stage search — the production IVF-PQ pattern: the codes-only
@@ -360,12 +329,12 @@ object AnnIndexPq {
   def upsert(spark: SparkSession, root: String, rawBatch: DataFrame,
       seqCol: String = ""): Unit = {
     val v0 = version(spark, root)
-    val v = v0 + 1
+    val meta = metaAt(spark, root, v0)
     // last-wins collapse: duplicate vec_ids within one CDC batch would
     // each encode and land in the new generation (the incoming-id
-    // anti-join removes only prior-generation rows)
+    // drop removes only prior-generation rows)
     val batch = CdcBatch.collapse(rawBatch, "vec_id", seqCol)
-    val (_, m, subDim, _) = params(spark, root)
+    val (_, m, subDim, _) = meta.params
     val coarse = metaTable(spark, root, v0, Coarse)
     val cents = metaTable(spark, root, v0, Codebook)
     val residuals = Similarity.assignCoarse(batch, coarse)
@@ -386,35 +355,10 @@ object AnnIndexPq {
         Seq("vec_id"))
     val touched = residuals.select(col("ccell").cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
-    val live = manifestOf(spark, root, v0)
-    val existing = live.filter(e => touched(e._1))
-    val newGen = readCells(spark, root, existing) match {
-      case None => incoming
-      case Some(kept) =>
-        val incomingIds = residuals.select(col("vec_id")).distinct()
-        kept.select(col("vec_id"), col("blk"), col("code"), col("cell"))
-          .join(incomingIds, Seq("vec_id"), "left_anti")
-          .unionByName(incoming)
+    rewrite(spark, root, v0, meta, coarse, cents, touched,
+        Seq((v0 + 1, batchN, batchMeanErr))) {
+      CellTable.dropKeys(_, residuals, "vec_id").unionByName(incoming)
     }
-    newGen.write.mode("overwrite").partitionBy("cell")
-      .parquet(StateCommit.genDir(root, v))
-    // the immutable tables carry into the new snapshot (lazy reads of
-    // v0's meta feeding v's single folded write) so the pointer swap
-    // publishes quantizer + codes together
-    val written = StateCommit.listPartitionDirs(spark,
-      StateCommit.genDir(root, v), "cell")
-    val entries = live.filterNot(e => touched(e._1)) ++ written.map(_ -> v)
-    writeMeta(spark, root, v,
-      // reuse the in-scope v0 reads (coarse/cents) — re-probing the
-      // same snap-v0 meta file per table was pure footer-read waste
-      coarse = coarse,
-      codebook = cents,
-      params = metaTable(spark, root, v0, Params),
-      entries = entries,
-      stats = statsRows(spark, root, v0),
-      drift = readDrift(spark, root, v0) :+ ((v, batchN, batchMeanErr)),
-      droppedGens =
-        live.map(_._2).toSet.diff(entries.map(_._2).toSet).nonEmpty)
   }
 
   /** Delete by id — locate the victims' cells with one id semi-join
@@ -425,33 +369,15 @@ object AnnIndexPq {
     * replays converge (the [[AnnIndex.delete]] shape over codes). */
   def delete(spark: SparkSession, root: String, ids: DataFrame): Unit = {
     val v0 = version(spark, root)
-    val live = manifestOf(spark, root, v0)
+    val meta = metaAt(spark, root, v0)
     val victims = ids.select(col("vec_id"))
-    val touched = readCells(spark, root, live) match {
-      case None => Set.empty[String]
-      case Some(raw) => raw.join(victims, Seq("vec_id"), "left_semi")
-        .select("cell").distinct().collect().map(_.get(0).toString).toSet
-    }
-    if (touched.isEmpty) return
-    val v = v0 + 1
-    readCells(spark, root, live.filter(e => touched(e._1))).foreach { t =>
-      t.join(victims, Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(StateCommit.genDir(root, v))
-    }
-    val entries = StateCommit.listPartitionDirs(spark,
-      StateCommit.genDir(root, v), "cell")
-      .map(_ -> v) ++
-      live.filterNot(e => touched(e._1))
-    writeMeta(spark, root, v,
-      coarse = metaTable(spark, root, v0, Coarse),
-      codebook = metaTable(spark, root, v0, Codebook),
-      params = metaTable(spark, root, v0, Params),
-      entries = entries,
-      stats = statsRows(spark, root, v0),
-      drift = readDrift(spark, root, v0),
-      droppedGens =
-        live.map(_._2).toSet.diff(entries.map(_._2).toSet).nonEmpty)
+    val touched = Cells.read(spark, root, meta.cells)
+      .join(victims, Seq("vec_id"), "left_semi")
+      .select("cell").distinct().collect().map(_.get(0).toString).toSet
+    if (touched.nonEmpty)
+      rewrite(spark, root, v0, meta, metaTable(spark, root, v0, Coarse),
+          metaTable(spark, root, v0, Codebook), touched)(
+        CellTable.dropKeys(_, victims, "vec_id"))
   }
 
   /** Small-file compaction: rewrite every live cell as one file in a
@@ -459,25 +385,11 @@ object AnnIndexPq {
     * unchanged). Run when upsert/delete churn has fragmented cells. */
   def compact(spark: SparkSession, root: String): Unit = {
     val v0 = version(spark, root)
-    val live = manifestOf(spark, root, v0)
-    readCells(spark, root, live).foreach { raw =>
-      val v = v0 + 1
-      raw.repartition(col("cell")).sortWithinPartitions("cell", "vec_id", "blk")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(StateCommit.genDir(root, v))
-      writeMeta(spark, root, v,
-        coarse = metaTable(spark, root, v0, Coarse),
-        codebook = metaTable(spark, root, v0, Codebook),
-        params = metaTable(spark, root, v0, Params),
-        entries = StateCommit.listPartitionDirs(spark,
-          StateCommit.genDir(root, v), "cell")
-        .map(_ -> v),
-        stats = statsRows(spark, root, v0),
-        drift = readDrift(spark, root, v0),
-        // a compaction rewrites every live cell — all prior
-        // generations lose their references
-        droppedGens = live.map(_._2).toSet.exists(_ != v))
-    }
+    val meta = metaAt(spark, root, v0)
+    if (meta.cells.nonEmpty)
+      rewrite(spark, root, v0, meta, metaTable(spark, root, v0, Coarse),
+          metaTable(spark, root, v0, Codebook), meta.cells.keySet)(
+        _.repartition(col("cell")).sortWithinPartitions("cell", "vec_id", "blk"))
   }
 
   /** Drift advisory for the incremental add path — the [[AnnIndex
@@ -505,11 +417,9 @@ object AnnIndexPq {
   def driftReport(spark: SparkSession, root: String,
       ratio: Double = 1.5, lastK: Int = 5,
       floorNano: Double = 1e6): Option[PqDriftReport] = {
-    val v = version(spark, root)
-    val stats = Try(metaTable(spark, root, v, Stats).head()).toOption
-    val drift = readDrift(spark, root, v).takeRight(lastK)
-    for (s <- stats if drift.nonEmpty) yield {
-      val buildMean = s.getDouble(0)
+    val meta = metaAt(spark, root, version(spark, root))
+    val drift = meta.drift.takeRight(lastK)
+    for ((buildMean, _) <- meta.stats if drift.nonEmpty) yield {
       val n = drift.map(_._2).sum
       val recent =
         if (n == 0L) buildMean

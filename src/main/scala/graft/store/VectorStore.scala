@@ -1,10 +1,10 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.StateCommit
+import graft.streaming.{CellTable, StateCommit}
 
 /** The adapter contract (reference
   * `includes/adapters/class-adapter-interface.php:24-34`, injected per
@@ -33,8 +33,9 @@ trait VectorStoreWriter {
   *
   * Snapshots are BUCKETED by `product_id % nBuckets` (round 1 rewrote the
   * whole store every commit — a full copy per sync pass at 100 TB) and
-  * committed through [[StateCommit]], the cell-entries generational
-  * layout of [[graft.operators.AnnIndexPq]]:
+  * committed through [[StateCommit]] in the cell-entries generational
+  * layout of [[graft.operators.AnnIndexPq]], whose manifest and
+  * generation format [[graft.streaming.CellTable]] owns:
   * {{{
   *   root/CURRENT             — StateCommit pointer (the store version)
   *   root/snap-v/meta/        — ONE parquet folding the (bucket, gen)
@@ -77,16 +78,24 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
   private val Manifest = "manifest"
   private val Params = "params"
 
+  /** The bucket-partitioned store table: the store schema plus `bucket`. */
+  private val Cells = CellTable("bucket", schema.add("bucket", IntegerType))
+
   /** Column superset of the two logical meta tables (the folded-meta
     * layout of [[StateCommit.commitMeta]]). */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "bucket" -> "int", "gen" -> "long",
-    "n_buckets" -> "int", "site_buckets" -> "boolean")
+  private val MetaCols: Seq[(String, String)] =
+    CellTable.entryCols("bucket", "int") ++ Seq(
+      "n_buckets" -> "int", "site_buckets" -> "boolean")
+
+  private def metaCols(table: String): Seq[String] = table match {
+    case Manifest => Seq("bucket", "gen")
+    case Params => Seq("n_buckets", "site_buckets")
+  }
 
   /** The committed version (0 before the first commit) and its
     * bucket → generation manifest. */
   private final class Committed(val version: Long,
-      val manifest: Map[Int, Long])
+      val manifest: Map[String, Long])
 
   /** The committed state, read in ONE job (the whole folded meta is
     * metadata-sized). The params row pins the store's bucket count and
@@ -95,18 +104,16 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     * loudly instead, as does a store root of the old cursor layouts. */
   private def committed(): Committed =
     committedVersion.fold(new Committed(0L, Map.empty)) { v =>
-      val rows = StateCommit.readParquet(spark,
-        StateCommit.tableDir(root, v, "meta")).collect()
-      rows.filter(_.getAs[String]("t") == Params).foreach { p =>
-        val (n, site) = (p.getAs[Int]("n_buckets"),
-          p.getAs[Boolean]("site_buckets"))
+      val m = StateCommit.metaRows(spark, root, v, Seq(Manifest, Params),
+        metaCols)
+      m(Params).foreach { p =>
+        val (n, site) = (p.getInt(0), p.getBoolean(1))
         if (n != nBuckets) throw new IllegalStateException(
           s"$root was written with nBuckets=$n, opened with $nBuckets")
         if (site != siteBuckets) throw new IllegalStateException(
           s"$root was written with siteBuckets=$site, opened with $siteBuckets")
       }
-      new Committed(v, rows.filter(_.getAs[String]("t") == Manifest).map(r =>
-        r.getAs[Int]("bucket") -> r.getAs[Long]("gen")).toMap)
+      new Committed(v, CellTable.entries(m(Manifest)))
     }
 
   private def committedVersion: Option[Long] =
@@ -114,22 +121,8 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
 
   def currentVersion: Int = committedVersion.getOrElse(0L).toInt
 
-  private def emptyDf: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-
-  /** Rows of the given buckets at their manifest generations (no bucket
-    * col — it's derivable from product_id). */
-  private def readBuckets(m: Map[Int, Long], buckets: Seq[Int]): DataFrame = {
-    val paths = buckets.distinct.flatMap(b =>
-      m.get(b).map(g => s"${StateCommit.genDir(root, g)}/bucket=$b"))
-    if (paths.isEmpty) emptyDf else spark.read.schema(schema).parquet(paths: _*)
-  }
-
-  def read(): DataFrame = {
-    val m = committed().manifest
-    readBuckets(m, m.keys.toSeq)
-  }
+  def read(): DataFrame =
+    Cells.read(spark, root, committed().manifest).drop("bucket")
 
   /** Bucket from the payload's (site_id,) product_id (modulo: synthetic
     * ids are uniform; an id-clustered deployment would swap in a stable
@@ -170,25 +163,32 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
       lit(-1))
   }
 
-  /** Write `df` (restricted to `touched` buckets, carrying a `bucket`
-    * column) as generation `v` = the committed version + 1 and publish
-    * `v`, re-pointing only the touched manifest entries. A bucket whose
+  /** Publish the next version with the `touched` buckets of `c`
+    * rewritten as `rows` of their current rows (which carry their
+    * `bucket`), re-pointing only those manifest entries. A bucket whose
     * rows all vanished drops out of the manifest. */
-  private def commitBuckets(c: Committed, touched: Seq[Int],
-      df: DataFrame): Int = {
+  private def rewrite(c: Committed, touched: Seq[Int])(
+      rows: DataFrame => DataFrame): Int = {
     val s = spark; import s.implicits._
+    val keys = touched.map(_.toString).toSet
     val v = c.version + 1
-    df.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(StateCommit.genDir(root, v))
-    val written = StateCommit.listPartitionDirs(spark,
-      StateCommit.genDir(root, v), "bucket")
-      .map(_.toInt)
-    val manifest = (c.manifest -- touched) ++ written.map(_ -> v)
+    val (manifest, droppedGens) = Cells.write(root, v,
+      rows(Cells.read(spark, root, c.manifest.filter(e => keys(e._1)))),
+      c.manifest, keys)
     StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
-      Manifest -> manifest.toSeq.toDF("bucket", "gen"),
+      Manifest -> Cells.entriesDf(spark, manifest),
       Params -> Seq((nBuckets, siteBuckets)).toDF("n_buckets", "site_buckets")),
-      droppedGens = c.manifest.values.toSet.diff(manifest.values.toSet).nonEmpty)
+      droppedGens)
     v.toInt
+  }
+
+  /** A delete over the `touched` buckets of `c`: [[rewrite]] the live
+    * ones through `keep`; when none is live, nothing can match, so it
+    * commits nothing and returns the current version. */
+  private def delete(c: Committed, touched: Seq[Int])(
+      keep: DataFrame => DataFrame): Int = {
+    val live = touched.filter(b => c.manifest.contains(b.toString))
+    if (live.isEmpty) c.version.toInt else rewrite(c, live)(keep)
   }
 
   /** K1/K2 — id-keyed upsert: incoming rows replace same-id rows; only
@@ -207,10 +207,8 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     try {
       val touched = incoming.select("bucket").distinct()
         .collect().map(_.getInt(0)).toIndexedSeq
-      val c = committed()
-      val kept = readBuckets(c.manifest, touched).withColumn("bucket", bucketCol)
-        .join(incoming.select("id"), Seq("id"), "left_anti")
-      commitBuckets(c, touched, kept.unionByName(incoming))
+      rewrite(committed(), touched)(
+        CellTable.dropKeys(_, incoming, "id").unionByName(incoming))
     } finally incoming.unpersist()
   }
 
@@ -220,10 +218,7 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     try {
       val touched = keyed.select("bucket").distinct()
         .collect().map(_.getInt(0)).filter(_ >= 0).toIndexedSeq
-      val c = committed()
-      val kept = readBuckets(c.manifest, touched).withColumn("bucket", bucketCol)
-        .join(keyed.select("id"), Seq("id"), "left_anti")
-      commitBuckets(c, touched, kept)
+      delete(committed(), touched)(CellTable.dropKeys(_, keyed, "id"))
     } finally keyed.unpersist()
   }
 
@@ -232,10 +227,8 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
   def deleteByProduct(productId: Long, siteId: Int): Int = {
     val pidPart = ((productId % nBuckets + nBuckets) % nBuckets).toInt
     val b = if (siteBuckets) siteId * nBuckets + pidPart else pidPart
-    val c = committed()
-    val kept = readBuckets(c.manifest, Seq(b)).withColumn("bucket", bucketCol)
-      .where(!(col("product_id") === productId && col("site_id") === siteId))
-    commitBuckets(c, Seq(b), kept)
+    delete(committed(), Seq(b))(
+      _.where(!(col("product_id") === productId && col("site_id") === siteId)))
   }
 
   /** K5 — purge site. Default layout sweeps every bucket (sites span
@@ -243,12 +236,9 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     * bucket range — the whole point of the site-partitioned layout. */
   def purgeSite(siteId: Int): Int = {
     val c = committed()
-    val touched =
-      if (siteBuckets) c.manifest.keys.filter(_ / nBuckets == siteId).toIndexedSeq
-      else c.manifest.keys.toIndexedSeq
-    val kept = readBuckets(c.manifest, touched).withColumn("bucket", bucketCol)
-      .where(col("site_id") =!= siteId)
-    commitBuckets(c, touched, kept)
+    val buckets = c.manifest.keys.map(_.toInt).toIndexedSeq
+    delete(c, if (siteBuckets) buckets.filter(_ / nBuckets == siteId) else buckets)(
+      _.where(col("site_id") =!= siteId))
   }
 
   def count(): Long = read().count()

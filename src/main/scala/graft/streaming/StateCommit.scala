@@ -9,6 +9,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Path}
 import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic multi-table state commits for the foreachBatch operators
   * ([[StreamingMonitor]], [[StreamingCuration]]).
@@ -63,7 +64,7 @@ object StateCommit {
     * entries (scratch roots are per-query, so entries are small and
     * never reused after their query). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
+    String, (Long, StructType)]()
 
   /** The cache-validity token for `path`: the directory's modification
     * time (a rewrite-in-place — the layout-upgrade case MetaFoldSpec
@@ -74,19 +75,8 @@ object StateCommit {
     Try(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(new Path(path)).getModificationTime).getOrElse(-1L)
 
-  private def cachedSchema(spark: SparkSession,
-      path: String): Option[org.apache.spark.sql.types.StructType] = {
-    val c = schemaCache.get(path)
-    if (c == null) None
-    else {
-      val mt = mtimeOf(spark, path)
-      if (mt >= 0 && mt == c._1) Some(c._2)
-      else { schemaCache.remove(path); None }
-    }
-  }
-
   private def cacheSchema(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
+      schema: StructType): Unit = {
     val mt = mtimeOf(spark, path)
     if (mt >= 0) {
       if (schemaCache.size >= 8192) schemaCache.clear()
@@ -94,46 +84,36 @@ object StateCommit {
     }
   }
 
+  /** The schema of the immutable `path`: cached (see [[schemaCache]]),
+    * else `resolve`d once per content version and cached. */
+  def schemaOf(spark: SparkSession, path: String)(
+      resolve: => StructType): StructType = {
+    val c = schemaCache.get(path)
+    if (c != null && c._1 == mtimeOf(spark, path)) c._2
+    else { val s = resolve; cacheSchema(spark, path, s); s }
+  }
+
   /** `spark.read.parquet(path)` with the schema-inference job paid at
-    * most once per `path` content version (see [[schemaCache]]). */
+    * most once per `path` content version. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    cachedSchema(spark, path) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        cacheSchema(spark, path, df.schema)
-        df
-    }
+    spark.read.schema(schemaOf(spark, path)(spark.read.parquet(path).schema))
+      .parquet(path)
 
   /** Pre-seed the schema cache from a WRITER (round 17): a mutation
     * that writes a table and then re-reads it (every commit re-reads
     * its own meta; a search reads the snapshot the build just wrote)
     * otherwise pays the first inference job anyway. ONLY sound for
-    * NON-PARTITIONED writes: a hive-partitioned dir's partition column
-    * type is re-inferred from the directory names on read (e.g. a LONG
-    * cell column written as `cell=3` reads back as INT), so the written
-    * schema is not the read schema there. */
+    * NON-PARTITIONED writes, or with the partition column's read type
+    * in place of its written one ([[CellTable]]): a hive-partitioned
+    * dir's partition column type comes from the reader, not the files
+    * (a LONG cell column written as `cell=3` infers back as INT). */
   def noteWrittenSchema(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit =
+      schema: StructType): Unit =
     // seed every field nullable: read-back parquet columns are nullable,
     // and nullable=true only pessimizes (a wrongly non-nullable cache
     // entry would let the optimizer drop IsNotNull guards)
-    cacheSchema(spark, path, org.apache.spark.sql.types.StructType(
-      schema.fields.map(_.copy(nullable = true))))
-
-  /** [[readParquet]] for multi-dir reads under a `basePath` (the
-    * cell-pruned generation readers): the schema caches under the
-    * basePath — every cell dir of one generation shares it. */
-  def readParquetBased(spark: SparkSession, basePath: String,
-      paths: Seq[String]): DataFrame =
-    cachedSchema(spark, basePath) match {
-      case Some(s) =>
-        spark.read.schema(s).option("basePath", basePath).parquet(paths: _*)
-      case None =>
-        val df = spark.read.option("basePath", basePath).parquet(paths: _*)
-        cacheSchema(spark, basePath, df.schema)
-        df
-    }
+    cacheSchema(spark, path,
+      StructType(schema.fields.map(_.copy(nullable = true))))
 
   /** The shared folded-meta write: one coalesce(1) parquet under
     * `snap-v/meta`, with the written schema pre-seeded into the cache

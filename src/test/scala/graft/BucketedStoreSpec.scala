@@ -78,8 +78,15 @@ class BucketedStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("bstore3")
     val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4)
     store.upsert(Seq(payload(5, 0)).toDF(cols: _*))
+    def gens = Files.list(root).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("gen-")).toSet
+    val gensBefore = gens
     store.deleteByIds(Seq("bogus-id", "also:not:ours").toDF("id"))
+    // product 6 routes to bucket 2, which holds no rows
+    store.deleteByProduct(6L, 1)
     assert(store.count() == 1)
+    assert(store.currentVersion == 1, "a delete matching no live bucket committed")
+    assert(gens == gensBefore, "a delete matching no live bucket wrote a generation")
   }
 
   test("ensure-store: lazy creation, cached id, deterministic re-mint") {

@@ -6,13 +6,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
-import graft.operators.{DedupIndex, LexIndex, SemDedupIndex}
+import graft.operators.{AnnIndex, AnnIndexPq, DedupIndex, LexIndex,
+  SemDedupIndex}
 import graft.streaming.StateCommit
 
-/** Kill points of the three tombstoned index roots (DedupIndex,
-  * SemDedupIndex, LexIndex), which all publish through
-  * [[graft.streaming.GenerationalTable]] and one [[StateCommit]] pointer
-  * swap. A crash after a mutation's generation and meta writes and
+/** Kill points of the persisted index roots: the three tombstoned ones
+  * (DedupIndex, SemDedupIndex, LexIndex), which publish through
+  * [[graft.streaming.GenerationalTable]], and the two cell-entries ones
+  * (AnnIndex, AnnIndexPq), which publish through
+  * [[graft.streaming.CellTable]]; each commits with one [[StateCommit]]
+  * pointer swap. A crash after a mutation's generation and meta writes and
   * before its swap is simulated by writing `CURRENT` back to the
   * previous version: the public read must answer as before the
   * mutation, and re-running the mutation must answer as an
@@ -66,7 +69,25 @@ class IndexKillPointSpec extends SparkSpec {
     root => rows(LexIndex.searchMany(spark, root,
       Seq(1L -> Seq("vector", "merge"), 2L -> Seq("spark", "draft")), k = 10)))
 
-  for (f <- Seq(dedup, semDedup, lex);
+  // the vectors outside the build slice, then a delete of 40% of it: both
+  // move the neighbours of the first eight vectors
+  private def annQueries = emb.where(col("vec_id") < 8)
+    .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+  private def annBuild = emb.where(col("vec_id") % 10 < 8)
+  private def annDelete = emb.where(col("vec_id") % 10 < 4).select("vec_id")
+  private val ann = Family("AnnIndex",
+    root => AnnIndex.build(annBuild, root, nCells = 8),
+    root => AnnIndex.upsert(spark, root, incoming),
+    root => AnnIndex.delete(spark, root, annDelete),
+    root => rows(AnnIndex.search(spark, root, annQueries, nProbes = 2, k = 5)))
+
+  private val annPq = Family("AnnIndexPq",
+    root => AnnIndexPq.build(annBuild, root),
+    root => AnnIndexPq.upsert(spark, root, incoming),
+    root => AnnIndexPq.delete(spark, root, annDelete),
+    root => rows(AnnIndexPq.search(spark, root, annQueries, nProbes = 2, k = 5)))
+
+  for (f <- Seq(dedup, semDedup, lex, ann, annPq);
        (op, mutate) <- Seq("upsert" -> f.upsert, "delete" -> f.delete)) {
     test(s"${f.name}: a kill before the $op pointer swap reads as the old version; the re-run converges") {
       val root = Files.createTempDirectory(s"killidx_${f.name}_$op").toString

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sync path's state goes through Hadoop via [[graft.streaming
   * .StateCommit]] (one atomic small-file write, one partition lister),
   * the tombstone format lives in [[graft.streaming.GenerationalTable]],
-  * and the folded-meta probe and generation paths live in StateCommit.
+  * the cell-entries format in [[graft.streaming.CellTable]], and the
+  * folded-meta probe and generation paths live in StateCommit.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -85,5 +86,25 @@ class SourceLayoutSpec extends AnyFunSuite {
 
   test("generation paths are built only by StateCommit.genDir") {
     assert(filesContaining("gen-$") == Set("graft/streaming/StateCommit.scala"))
+  }
+
+  private val cellTable = "graft/streaming/CellTable.scala"
+
+  test("the cell-entries reader has one copy, in CellTable") {
+    assert(filesContaining("readParquetBased(").subsetOf(Set(cellTable)))
+    assert(filesContaining("\"basePath\"") == Set(cellTable))
+    assert(filesContaining("def readCells").isEmpty)
+    assert(filesContaining("def readBuckets").isEmpty)
+  }
+
+  test("the cell-entries generation writer has one copy, in CellTable") {
+    // a parquet write partitioned by cell or bucket (a window
+    // partitionBy("cell") is not a write, hence the `.parquet(` tail)
+    val cellWrite = """partitionBy\("(cell|bucket)"\)\s*\.parquet\(""".r
+    assert(sources.collect { case (f, text)
+      if cellWrite.findFirstIn(text).isDefined => f }.toSet.subsetOf(Set(cellTable)))
+    assert(filesContaining("def commitBuckets").isEmpty)
+    assert(filesContaining("listPartitionDirs(") == Set(
+      "graft/streaming/StateCommit.scala", cellTable, "graft/events/Events.scala"))
   }
 }
