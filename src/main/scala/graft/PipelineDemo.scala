@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{AnnIndex, CdcBatch, DsirModel, LexIndex,
   SemDedupIndex, Stage, TextAnalysis}
-import graft.streaming.StreamingCuration
+import graft.streaming.{AvailableNow, StreamingCuration}
 
 /** Dev measurement main (round-16 stretch ask #8): the COMPOSED
   * steady-state curation pipeline a real training-data ingest runs,
@@ -158,15 +157,10 @@ object PipelineDemo {
         f"qual=$tQual%.1f dsir=$tDsir%.1f index=$tIndex%.1f s")
     }
 
-    def startStream() = spark.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", 1).parquet(p("feed"))
-      .writeStream
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        runBatch(batch.toDF(), id); ()
-      }
-      .option("checkpointLocation", p("ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
+    def startStream() = AvailableNow.foreachBatch(
+      spark.readStream.schema(feedSchema)
+        .option("maxFilesPerTrigger", 1).parquet(p("feed")),
+      p("ckpt"))(runBatch)
 
     val tStream0 = System.nanoTime()
     // restart ONLY the planted drill crash: walk the cause chain for the

@@ -95,8 +95,12 @@ object Main {
       events = Some(new graft.events.EventLog(spark, s"$work/events"))))
   }
 
-  private def hasVs(work: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/store_vs"))
+  /** Whether `path` exists, through the Hadoop filesystem of the
+    * session (the state roots' own storage layer). */
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   private def docsAsProducts(spark: SparkSession, dir: String, limit: Int): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
@@ -294,7 +298,7 @@ object Main {
       val store = new ParquetVectorStore(spark, s"$work/store")
       val engine = new SyncEngine(spark, new LocalHashEmbedder(), store, s"$work/sync_state")
       println(s"store: v${store.currentVersion}, ${store.count()} vectors")
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/store_vs"))) {
+      if (exists(spark, s"$work/store_vs")) {
         val vs = new graft.store.EnsureStoreVectorStore(spark, s"$work/store_vs")
         println(s"vs store ${vs.ensureStore()}: v${vs.currentVersion}, ${vs.count()} vectors")
       }
@@ -302,7 +306,7 @@ object Main {
       println(s"sync_state: v${engine.syncVersion}, ${st.count()} rows")
       st.groupBy("status").count().collect()
         .foreach(r => println(s"  ${r.getString(0)}: ${r.getLong(1)}"))
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$work/events"))) {
+      if (exists(spark, s"$work/events")) {
         val ev = new graft.events.EventLog(spark, s"$work/events").read()
         println(s"events: ${ev.count()} rows")
         ev.orderBy(col("ts").desc).limit(3).collect().foreach(r =>
@@ -327,7 +331,7 @@ object Main {
         s"store ${store.count()} vectors (v${store.currentVersion})")
       // a work dir synced with --target both has a second adapter: the
       // delete job must clear EVERY enabled adapter (same rule as purge)
-      if (hasVs(work)) {
+      if (exists(spark, s"$work/store_vs")) {
         val (vs, engine2) = vsAdapter(spark, work)
         val removed2 = engine2.deleteProduct(pid, site)
         println(s"deleted product $pid from vs store: $removed2 sync-state rows; " +
@@ -406,7 +410,7 @@ object Main {
       // semantic posture (embeddings table): cluster survivors, semantic
       // eval-leakage (banded), and DSIR target-likeness vs src1
       val embPath = s"$data/embeddings.parquet"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(embPath))) {
+      if (exists(spark, embPath)) {
         val emb = spark.read.parquet(embPath)
         // threshold 0.35 = the gated catalog's retuned dedup posture
         // (round-12 review: the report previously ran the library default
@@ -437,7 +441,7 @@ object Main {
       println(s"purged site $site; store now ${store.count()} vectors (v${store.currentVersion})")
       // a work dir synced with --target both has a second store: K5 must
       // clear EVERY enabled adapter, as the reference's purge job does
-      if (hasVs(work)) {
+      if (exists(spark, s"$work/store_vs")) {
         val (vs, _) = vsAdapter(spark, work)
         vs.purgeSite(site)
         println(s"purged site $site from vs store; now ${vs.count()} vectors " +
@@ -478,7 +482,7 @@ object Main {
       val spark = session()
       results += ("store" ->
         graft.validate.Validators.validateStore(spark, s"$work/store", expectedDim))
-      if (hasVs(work))
+      if (exists(spark, s"$work/store_vs"))
         results += ("store_vs" ->
           graft.validate.Validators.validateEnsureStore(spark, s"$work/store_vs", expectedDim))
       results.foreach { case (name, r) =>
@@ -1080,47 +1084,55 @@ object Main {
       println(s"family: $family")
       println(s"committed version: $cur")
       println(s"retained versions (time-travel horizon): ${retained.mkString(", ")}")
-      // per-family readers go through each operator's metaTable —
-      // folded-first with the per-table fallback, so the card works on
-      // PRE-fold snapshots too (round-13 review: a raw folded read here
-      // threw PATH_NOT_FOUND on exactly the roots the probe detected
-      // from their per-table dirs)
-      import graft.operators.{DedupIndex, DsirModel, LexIndex}
+      // per-family reads go through StateCommit.metaTable with the
+      // family's MetaSchema — folded-first with the per-table fallback,
+      // so the card works on PRE-fold snapshots too (round-13 review: a
+      // raw folded read here threw PATH_NOT_FOUND on exactly the roots
+      // the probe detected from their per-table dirs)
+      import graft.operators.{AnnIndex, AnnIndexPq, DedupIndex, DsirModel,
+        LexIndex, SemDedupIndex}
+      val schema = family match {
+        case "lexical" => LexIndex.metaSchema
+        case "ivf-pq" => AnnIndexPq.metaSchema
+        case "ann" => AnnIndex.metaSchema
+        case "dsir" => DsirModel.metaSchema
+        case "semdedup" => SemDedupIndex.metaSchema
+        case _ => DedupIndex.metaSchema // an unknown root reads no table
+      }
+      def meta(table: String) =
+        StateCommit.metaTable(spark, root, cur, schema, table)
       def gensCard(referenced: Seq[Long]): Unit =
         println(s"generations: ${gensOnDisk.size} on disk " +
           s"(${gensOnDisk.mkString(", ")}), ${referenced.length} referenced " +
           s"by v$cur (${referenced.mkString(", ")})")
       family match {
         case "lexical" =>
-          gensCard(LexIndex.metaTable(spark, root, cur, "manifest")
-            .collect().map(_.getLong(0)).distinct.sorted.toSeq)
+          gensCard(meta("manifest").collect().map(_.getLong(0))
+            .distinct.sorted.toSeq)
           // headOption, not head(): a snapshot whose folded meta carries
           // zero rows for a family stats table (pre-monitor carry) must
           // print an 'unavailable' placeholder, not escape a raw
           // NoSuchElementException (round-13 advice)
-          val stOpt = LexIndex.metaTable(spark, root, cur, "stats")
-            .collect().headOption
-          val tombs = LexIndex.metaTable(spark, root, cur, "tombstones").count()
+          val stOpt = meta("stats").collect().headOption
+          val tombs = meta("tombstones").count()
           val corpus = stOpt.map(st => s"${st.getLong(0)} docs, " +
             s"${st.getLong(1)} tokens").getOrElse("stats unavailable")
           println(s"corpus: $corpus; tombstoned ids: $tombs")
         case "ann" | "ivf-pq" =>
-          val cells = graft.streaming.CellTable.entries(StateCommit.metaTable(
-            spark, root, cur, "manifest", Seq("cell", "gen")).collect().toSeq)
+          val cells = graft.streaming.CellTable.entries(
+            meta("manifest").collect().toSeq)
           gensCard(cells.values.toSeq.distinct.sorted)
           println(s"live cells: ${cells.size}")
         case "semdedup" =>
-          import graft.operators.SemDedupIndex
-          val entries = SemDedupIndex.metaTable(spark, root, cur, "manifest")
-            .collect()
+          val entries = meta("manifest").collect()
           gensCard(entries.map(_.getLong(0)).distinct.sorted.toSeq)
-          val sch = SemDedupIndex.metaTable(spark, root, cur, "scheme").head()
+          val sch = meta("scheme").head()
           println(s"scheme: cellTarget=${sch.getInt(0)} probes=${sch.getInt(1)} " +
             s"cells=${sch.getInt(2)} buckets=${sch.getInt(3)} " +
             s"quantizer gen=${sch.getLong(4)}; " +
             s"posted vectors across generations (pre-tombstone): " +
             s"${entries.map(_.getLong(1)).sum}; tombstoned ids: " +
-            s"${SemDedupIndex.metaTable(spark, root, cur, "tombstones").count()}")
+            s"${meta("tombstones").count()}")
           // the drift card (round-16): the frozen quantizer's one open
           // operational question is WHEN to rebuild — answered by the
           // live cell-occupancy distribution vs the build-time target.
@@ -1142,11 +1154,9 @@ object Main {
             println("drift: pass --drift for the cell-occupancy card " +
               "(scans the live member table)")
         case "dedup" =>
-          val entries = DedupIndex.metaTable(spark, root, cur, "manifest")
-            .collect()
+          val entries = meta("manifest").collect()
           gensCard(entries.map(_.getLong(0)).distinct.sorted.toSeq)
-          val schOpt = DedupIndex.metaTable(spark, root, cur, "meta")
-            .collect().headOption
+          val schOpt = meta("meta").collect().headOption
           val scheme = schOpt.map(sch => s"k=${sch.getInt(0)} r=${sch.getInt(1)}")
             .getOrElse("unavailable")
           // per-generation doc counts are PRE-tombstone (a replaced
@@ -1155,10 +1165,9 @@ object Main {
           println(s"scheme: $scheme; " +
             s"posted docs across generations (pre-tombstone): " +
             s"${entries.map(_.getLong(1)).sum}; tombstoned ids: " +
-            s"${DedupIndex.metaTable(spark, root, cur, "tombstones").count()}")
+            s"${meta("tombstones").count()}")
         case "dsir" =>
-          val mOpt = DsirModel.metaTable(spark, root, cur, "meta")
-            .collect().headOption
+          val mOpt = meta("meta").collect().headOption
           // width tolerance: a round-11 pre-totals meta carries only
           // `buckets` (the DsirModel.metaAt contract)
           val scheme = mOpt.map { m =>
@@ -1168,7 +1177,7 @@ object Main {
             s"${m.getInt(0)} buckets; frozen totals nt=$nt nr=$nr"
           }.getOrElse("unavailable")
           println(s"scheme: $scheme; populated buckets: " +
-            s"${DsirModel.metaTable(spark, root, cur, "model").count()}")
+            s"${meta("model").count()}")
         case _ =>
           println(s"snapshot tables: ${ts.toSeq.sorted.mkString(", ")}")
       }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.{CellTable, StateCommit}
+import graft.streaming.{CellTable, MetaSchema, StateCommit}
+import graft.streaming.CellTable.Manifest
 
 /** Persisted IVF index — the build-once / query-many form of
   * [[Similarity.ivfKmeansTopK]], which trains and scans in the same
@@ -25,7 +26,7 @@ import graft.streaming.{CellTable, StateCommit}
   * (it is shared with [[AnnIndexPq]] and the vector store).
   * (pre-fold snapshots carried per-table dirs — centroids/ manifest/
   * stats/ drift/ — and stay readable via the folded-first fallback in
-  * `metaTable`)
+  * [[StateCommit.metaTable]])
   *
   * Every mutation ([[build]]/[[upsert]]/[[delete]]/[[compact]]) writes
   * its touched cells as a fresh `gen-v` directory that nothing
@@ -67,7 +68,6 @@ case class DriftReport(buildMeanCos: Double, recentMeanCos: Double,
 object AnnIndex {
 
   private val Centroids = "centroids"
-  private val Manifest = "manifest"
   private val Stats = "stats"
   private val Drift = "drift"
 
@@ -79,34 +79,19 @@ object AnnIndex {
     StructField("embedding", ArrayType(FloatType)),
     StructField("cell", IntegerType))))
 
-  /** Column superset of the four logical metadata tables — every commit
-    * folds them into ONE `meta` parquet (discriminated by column `t`),
-    * the [[LexIndex]]/[[AnnIndexPq]] folded-commit layout: four
-    * per-table coalesce(1) writes per mutation were four driver-side
-    * committer rounds of pure flat cost. Readers ([[metaTable]]) take
-    * folded-first with the per-table directory as the pre-fold
-    * fallback; [[StateCommit.gcGenerations]] already consults the
-    * folded manifest by the same precedence. */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "centroid_id" -> "long", "ce" -> "array<double>") ++
-    CellTable.entryCols("cell", "string") ++ Seq(
-    "build_mean_cos" -> "double", "n" -> "long",
-    "seq" -> "long", "mean_cos" -> "double")
-
-  /** This family's logical-table column lists (select order is the
-    * reader contract). */
-  private[graft] def metaCols(table: String): Seq[String] = table match {
-    case Centroids => Seq("centroid_id", "ce")
-    case Manifest => Seq("cell", "gen")
-    case Stats => Seq("build_mean_cos", "n")
-    case Drift => Seq("seq", "n", "mean_cos")
-  }
-
-  /** Read one logical meta table of snapshot `v` — the shared
-    * folded-first/per-table-fallback probe ([[StateCommit.metaTable]]). */
-  private[graft] def metaTable(spark: SparkSession, root: String,
-      v: Long, table: String): DataFrame =
-    StateCommit.metaTable(spark, root, v, table, metaCols(table))
+  /** The four logical metadata tables, folded into ONE `meta` parquet
+    * per commit (discriminated by column `t`), the [[LexIndex]]/
+    * [[AnnIndexPq]] folded-commit layout: four per-table coalesce(1)
+    * writes per mutation were four driver-side committer rounds of pure
+    * flat cost. Readers take folded-first with the per-table directory
+    * as the pre-fold fallback ([[StateCommit.metaTable]]);
+    * [[StateCommit.gcGenerations]] consults the folded manifest by the
+    * same precedence. */
+  private[graft] val metaSchema = MetaSchema(
+    Centroids -> Seq("centroid_id" -> "long", "ce" -> "array<double>"),
+    Cells.manifest("string"),
+    Stats -> Seq("build_mean_cos" -> "double", "n" -> "long"),
+    Drift -> Seq("seq" -> "long", "n" -> "long", "mean_cos" -> "double"))
 
   /** Snapshot v's metadata-sized tables, read in ONE collect: the
     * live-cell manifest, the build stats (None on a pre-monitor
@@ -117,8 +102,8 @@ object AnnIndex {
       stats: Option[(Double, Long)], drift: Seq[(Long, Long, Double)])
 
   private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
-    val m = StateCommit.metaRows(spark, root, v, Seq(Manifest, Stats, Drift),
-      metaCols)
+    val m = StateCommit.metaRows(spark, root, v, metaSchema,
+      Seq(Manifest, Stats, Drift))
     Meta(CellTable.entries(m(Manifest)),
       m(Stats).headOption.map(r => (r.getDouble(0), r.getLong(1))),
       m(Drift).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -133,27 +118,26 @@ object AnnIndex {
       stats: Option[(Double, Long)], drift: Seq[(Long, Long, Double)],
       droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
       Centroids -> centroids,
-      Manifest -> Cells.entriesDf(spark, cells),
-      Stats -> stats.toSeq.toDF("build_mean_cos", "n"),
-      Drift -> drift.toDF("seq", "n", "mean_cos")), droppedGens)
+      Manifest -> metaSchema.rows(spark, Manifest, cells.toSeq.sortBy(_._1)),
+      Stats -> metaSchema.rows(spark, Stats, stats.toSeq),
+      Drift -> metaSchema.rows(spark, Drift, drift)), droppedGens)
   }
 
   /** Publish snapshot v0 + 1: the `touched` cells of snapshot v0 (`m`)
     * rewritten as `rows` of their current rows, in one fresh generation;
-    * v0's centroids (`cents`) and stats carry over and `drift` extends
-    * the log. */
+    * v0's centroids and stats carry over and `drift` extends the log. */
   private def rewrite(spark: SparkSession, root: String, v0: Long, m: Meta,
-      cents: DataFrame, touched: Set[String],
-      drift: Seq[(Long, Long, Double)] = Seq.empty)(
+      touched: Set[String], drift: Seq[(Long, Long, Double)] = Seq.empty)(
       rows: DataFrame => DataFrame): Unit = {
     val v = v0 + 1
     val (cells, droppedGens) = Cells.write(root, v,
       rows(Cells.read(spark, root, m.cells.filter(e => touched(e._1)))),
       m.cells, touched)
-    writeMeta(spark, root, v, cents, cells, m.stats, m.drift ++ drift,
-      droppedGens)
+    writeMeta(spark, root, v,
+      StateCommit.metaTable(spark, root, v0, metaSchema, Centroids), cells,
+      m.stats, m.drift ++ drift, droppedGens)
   }
 
   /** The committed snapshot version; mutations bump it by one. */
@@ -162,7 +146,8 @@ object AnnIndex {
 
   /** The committed coarse quantizer (broadcast-sized). */
   def centroids(spark: SparkSession, root: String): DataFrame =
-    metaTable(spark, root, version(spark, root), Centroids)
+    StateCommit.metaTable(spark, root, version(spark, root), metaSchema,
+      Centroids)
 
   /** Mean assignment cosine + row count of a scored assignment. */
   private def meanCosOf(scored: DataFrame): (Double, Long) = {
@@ -241,7 +226,7 @@ object AnnIndex {
   def searchAt(spark: SparkSession, root: String, queries: DataFrame,
       v: Long, nProbes: Int = 1, k: Int = 5): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
-    val cents = metaTable(spark, root, v, Centroids)
+    val cents = StateCommit.metaTable(spark, root, v, metaSchema, Centroids)
     val live = metaAt(spark, root, v).cells
     val probes = Similarity.rankAgainst(
         queries.select(col("qid").as("vec_id"), col("qe").as("embedding")),
@@ -276,7 +261,7 @@ object AnnIndex {
       seqCol: String = ""): Unit = {
     val v0 = version(spark, root)
     val m = metaAt(spark, root, v0)
-    val cents = metaTable(spark, root, v0, Centroids)
+    val cents = StateCommit.metaTable(spark, root, v0, metaSchema, Centroids)
     // last-wins collapse: a CDC batch carrying two versions of one
     // vec_id would land the vector TWICE in the new generation (the
     // incoming-id drop only removes prior-generation copies)
@@ -290,7 +275,7 @@ object AnnIndex {
     val incoming = scored.drop("ccos")
     val touched = incoming.select("cell").distinct()
       .collect().map(_.get(0).toString).toSet
-    rewrite(spark, root, v0, m, cents, touched,
+    rewrite(spark, root, v0, m, touched,
         Seq((v0 + 1, batchN, batchMean))) {
       CellTable.dropKeys(_, incoming, "vec_id").unionByName(incoming)
     }
@@ -333,7 +318,7 @@ object AnnIndex {
   }
 
   /** Delete by id — the index-side mirror of the vector store's K4:
-    * locate the victims' cells with one id semi-join over the live
+    * locate the victims' cells with one id join over the live
     * rows (ids are not the partition key, so this pass scans the id
     * column of all cells — a metadata-sized read), then write the
     * survivors of ONLY those cells as a fresh generation. A cell
@@ -345,12 +330,11 @@ object AnnIndex {
     val v0 = version(spark, root)
     val m = metaAt(spark, root, v0)
     val victims = ids.select(col("vec_id"))
-    val touched = Cells.read(spark, root, m.cells)
-      .join(victims, Seq("vec_id"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0).toString).toSet
+    val touched = Cells.holding(spark, root, m.cells, victims, "vec_id")
+      .collect().map(_.get(0).toString).toSet
     if (touched.nonEmpty)
-      rewrite(spark, root, v0, m, metaTable(spark, root, v0, Centroids),
-        touched)(CellTable.dropKeys(_, victims, "vec_id"))
+      rewrite(spark, root, v0, m, touched)(
+        CellTable.dropKeys(_, victims, "vec_id"))
   }
 
   /** Small-file compaction: every [[upsert]]/[[delete]] generation
@@ -370,8 +354,7 @@ object AnnIndex {
     val crowded = Cells.fileCounts(spark, root, m.cells)
       .collect { case (cell, n) if n > maxFilesPerCell => cell }.toSet
     if (crowded.nonEmpty)
-      rewrite(spark, root, v0, m, metaTable(spark, root, v0, Centroids),
-          crowded)(
+      rewrite(spark, root, v0, m, crowded)(
         _.repartition(col("cell"))) // one task -> one file per cell
   }
 

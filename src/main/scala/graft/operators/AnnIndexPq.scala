@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.{CellTable, StateCommit}
+import graft.streaming.{CellTable, MetaSchema, StateCommit}
+import graft.streaming.CellTable.Manifest
 
 /** Persisted IVF-PQ index — [[AnnIndex]] with PQ codes instead of raw
   * vectors in the cells: the production billion-vector layout, where
@@ -29,7 +30,7 @@ import graft.streaming.{CellTable, StateCommit}
   * }}}
   * (pre-fold snapshots carried per-table dirs — coarse/ codebook/
   * params/ manifest/ stats/ drift/ — and stay readable via the
-  * folded-first fallback in `metaTable`).
+  * folded-first fallback in [[StateCommit.metaTable]]).
   * [[graft.streaming.CellTable]] owns the manifest and generation format.
   *
   * Scale posture: the probe set prunes at the FILE level (manifest →
@@ -54,7 +55,6 @@ object AnnIndexPq {
   private val Coarse = "coarse"
   private val Codebook = "codebook"
   private val Params = "params"
-  private val Manifest = "manifest"
   private val Stats = "stats"
   private val Drift = "drift"
 
@@ -72,41 +72,25 @@ object AnnIndexPq {
     StructField("code", LongType),
     StructField("cell", IntegerType))))
 
-  /** Column superset of the six logical metadata tables — every commit
-    * folds them into ONE `meta` parquet (discriminated by column `t`),
-    * the [[LexIndex]] folded-commit layout: the six per-table
-    * coalesce(1) writes were six driver-side committer rounds per
-    * mutation (~0.2–0.3 s each at local[32]), the dominant flat cost of
-    * sim_annpq_store/_rerank after round 12 gave LexIndex the same
-    * treatment. Readers ([[metaTable]]) take folded-first with the
-    * per-table directory as the pre-fold fallback, so time travel
-    * across the upgrade keeps working; [[StateCommit.gcGenerations]]
-    * already consults the folded manifest by the same precedence. */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "ccell" -> "long", "cce" -> "array<double>",
-    "blk" -> "int", "cid" -> "long", "ce" -> "array<double>",
-    "n_coarse" -> "int", "m" -> "int", "sub_dim" -> "int",
-    "n_centroids" -> "int") ++
-    CellTable.entryCols("cell", "string") ++ Seq(
-    "build_mean_err_nano" -> "double", "n" -> "long",
-    "seq" -> "long", "mean_err_nano" -> "double")
-
-  /** This family's logical-table column lists (select order is the
-    * reader contract — positional getters depend on it). */
-  private[graft] def metaCols(table: String): Seq[String] = table match {
-    case Coarse => Seq("ccell", "cce")
-    case Codebook => Seq("blk", "cid", "ce")
-    case Params => Seq("n_coarse", "m", "sub_dim", "n_centroids")
-    case Manifest => Seq("cell", "gen")
-    case Stats => Seq("build_mean_err_nano", "n")
-    case Drift => Seq("seq", "n", "mean_err_nano")
-  }
-
-  /** Read one logical meta table of snapshot `v` — the shared
-    * folded-first/per-table-fallback probe ([[StateCommit.metaTable]]). */
-  private[graft] def metaTable(spark: SparkSession, root: String,
-      v: Long, table: String): DataFrame =
-    StateCommit.metaTable(spark, root, v, table, metaCols(table))
+  /** The six logical metadata tables, folded into ONE `meta` parquet per
+    * commit (discriminated by column `t`), the [[LexIndex]]
+    * folded-commit layout: the six per-table coalesce(1) writes were six
+    * driver-side committer rounds per mutation (~0.2–0.3 s each at
+    * local[32]), the dominant flat cost of sim_annpq_store/_rerank after
+    * round 12 gave LexIndex the same treatment. Readers take
+    * folded-first with the per-table directory as the pre-fold fallback
+    * ([[StateCommit.metaTable]]), so time travel across the upgrade
+    * keeps working; [[StateCommit.gcGenerations]] consults the folded
+    * manifest by the same precedence. Column order is the reader
+    * contract — positional getters depend on it. */
+  private[graft] val metaSchema = MetaSchema(
+    Coarse -> Seq("ccell" -> "long", "cce" -> "array<double>"),
+    Codebook -> Seq("blk" -> "int", "cid" -> "long", "ce" -> "array<double>"),
+    Params -> Seq("n_coarse" -> "int", "m" -> "int", "sub_dim" -> "int",
+      "n_centroids" -> "int"),
+    Cells.manifest("string"),
+    Stats -> Seq("build_mean_err_nano" -> "double", "n" -> "long"),
+    Drift -> Seq("seq" -> "long", "n" -> "long", "mean_err_nano" -> "double"))
 
   /** Snapshot v's metadata-sized tables, read in ONE collect: the
     * build-time (nCoarse, m, subDim, nCentroids), the live-cell
@@ -119,8 +103,8 @@ object AnnIndexPq {
       drift: Seq[(Long, Long, Double)])
 
   private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
-    val t = StateCommit.metaRows(spark, root, v,
-      Seq(Params, Manifest, Stats, Drift), metaCols)
+    val t = StateCommit.metaRows(spark, root, v, metaSchema,
+      Seq(Params, Manifest, Stats, Drift))
     val p = t(Params).head
     Meta((p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)),
       CellTable.entries(t(Manifest)),
@@ -137,29 +121,30 @@ object AnnIndexPq {
       cells: Map[String, Long], stats: Option[(Double, Long)],
       drift: Seq[(Long, Long, Double)], droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
       Coarse -> coarse,
       Codebook -> codebook,
-      Params -> Seq(params).toDF("n_coarse", "m", "sub_dim", "n_centroids"),
-      Manifest -> Cells.entriesDf(spark, cells),
-      Stats -> stats.toSeq.toDF("build_mean_err_nano", "n"),
-      Drift -> drift.toDF("seq", "n", "mean_err_nano")), droppedGens)
+      Params -> metaSchema.rows(spark, Params, Seq(params)),
+      Manifest -> metaSchema.rows(spark, Manifest, cells.toSeq.sortBy(_._1)),
+      Stats -> metaSchema.rows(spark, Stats, stats.toSeq),
+      Drift -> metaSchema.rows(spark, Drift, drift)), droppedGens)
   }
 
   /** Publish snapshot v0 + 1: the `touched` cells of snapshot v0 (`m`)
     * rewritten as `rows` of their current rows, in one fresh generation;
-    * v0's quantizer (`coarse`), codebooks (`cents`), params and stats
-    * carry over and `drift` extends the log. */
+    * v0's quantizer, codebooks, params and stats carry over and `drift`
+    * extends the log. */
   private def rewrite(spark: SparkSession, root: String, v0: Long, m: Meta,
-      coarse: DataFrame, cents: DataFrame, touched: Set[String],
-      drift: Seq[(Long, Long, Double)] = Seq.empty)(
+      touched: Set[String], drift: Seq[(Long, Long, Double)] = Seq.empty)(
       rows: DataFrame => DataFrame): Unit = {
     val v = v0 + 1
     val (cells, droppedGens) = Cells.write(root, v,
       rows(Cells.read(spark, root, m.cells.filter(e => touched(e._1)))),
       m.cells, touched)
-    writeMeta(spark, root, v, coarse, cents, m.params, cells, m.stats,
-      m.drift ++ drift, droppedGens)
+    writeMeta(spark, root, v,
+      StateCommit.metaTable(spark, root, v0, metaSchema, Coarse),
+      StateCommit.metaTable(spark, root, v0, metaSchema, Codebook),
+      m.params, cells, m.stats, m.drift ++ drift, droppedGens)
   }
 
   def version(spark: SparkSession, root: String): Long =
@@ -232,8 +217,8 @@ object AnnIndexPq {
     StateCommit.requireRetained(spark, root, v)
     val meta = metaAt(spark, root, v)
     val (_, m, subDim, _) = meta.params
-    val coarse = metaTable(spark, root, v, Coarse)
-    val cents = metaTable(spark, root, v, Codebook)
+    val coarse = StateCommit.metaTable(spark, root, v, metaSchema, Coarse)
+    val cents = StateCommit.metaTable(spark, root, v, metaSchema, Codebook)
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cnano"), col("ccell"))
     // the probe table is nQueries x nProbes rows of (qid, pcell, rq).
@@ -335,8 +320,8 @@ object AnnIndexPq {
     // drop removes only prior-generation rows)
     val batch = CdcBatch.collapse(rawBatch, "vec_id", seqCol)
     val (_, m, subDim, _) = meta.params
-    val coarse = metaTable(spark, root, v0, Coarse)
-    val cents = metaTable(spark, root, v0, Codebook)
+    val coarse = StateCommit.metaTable(spark, root, v0, metaSchema, Coarse)
+    val cents = StateCommit.metaTable(spark, root, v0, metaSchema, Codebook)
     val residuals = Similarity.assignCoarse(batch, coarse)
       .select(col("vec_id"), col("ccell"),
         zip_with(col("embedding"), col("cce"),
@@ -355,13 +340,13 @@ object AnnIndexPq {
         Seq("vec_id"))
     val touched = residuals.select(col("ccell").cast("string")).distinct()
       .collect().map(_.getString(0)).toSet
-    rewrite(spark, root, v0, meta, coarse, cents, touched,
+    rewrite(spark, root, v0, meta, touched,
         Seq((v0 + 1, batchN, batchMeanErr))) {
       CellTable.dropKeys(_, residuals, "vec_id").unionByName(incoming)
     }
   }
 
-  /** Delete by id — locate the victims' cells with one id semi-join
+  /** Delete by id — locate the victims' cells with one id join
     * over the live code rows (ids are not the partition key, so this
     * scans the id column — m small rows per vector), then write ONLY
     * those cells' survivors as a fresh generation. A cell emptied by
@@ -371,12 +356,10 @@ object AnnIndexPq {
     val v0 = version(spark, root)
     val meta = metaAt(spark, root, v0)
     val victims = ids.select(col("vec_id"))
-    val touched = Cells.read(spark, root, meta.cells)
-      .join(victims, Seq("vec_id"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0).toString).toSet
+    val touched = Cells.holding(spark, root, meta.cells, victims, "vec_id")
+      .collect().map(_.get(0).toString).toSet
     if (touched.nonEmpty)
-      rewrite(spark, root, v0, meta, metaTable(spark, root, v0, Coarse),
-          metaTable(spark, root, v0, Codebook), touched)(
+      rewrite(spark, root, v0, meta, touched)(
         CellTable.dropKeys(_, victims, "vec_id"))
   }
 
@@ -387,8 +370,7 @@ object AnnIndexPq {
     val v0 = version(spark, root)
     val meta = metaAt(spark, root, v0)
     if (meta.cells.nonEmpty)
-      rewrite(spark, root, v0, meta, metaTable(spark, root, v0, Coarse),
-          metaTable(spark, root, v0, Codebook), meta.cells.keySet)(
+      rewrite(spark, root, v0, meta, meta.cells.keySet)(
         _.repartition(col("cell")).sortWithinPartitions("cell", "vec_id", "blk"))
   }
 

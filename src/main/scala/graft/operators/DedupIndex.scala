@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{GenerationalTable, StateCommit}
+import graft.streaming.{GenerationalTable, MetaSchema, StateCommit}
+import graft.streaming.GenerationalTable.Tombstones
 import graft.streaming.StateCommit.genDir
 
 /** Persisted MinHash-LSH dedup index — the build-once / probe-many
@@ -26,7 +27,7 @@ import graft.streaming.StateCommit.genDir
   * }}}
   * (pre-fold snapshots carried per-table dirs — meta/ holding only the
   * k/r scheme, manifest/, tombstones/ — and stay readable via the
-  * schema-probed folded-first fallback in `metaTable`)
+  * schema-probed folded-first fallback in [[StateCommit.metaTable]])
   *
   * Generations are append-only and immutable, with the tombstone
   * liveness rule of [[graft.streaming.GenerationalTable]]. Every
@@ -54,7 +55,6 @@ object DedupIndex {
 
   private val Meta = "meta"
   private val Manifest = "manifest"
-  private val Tombstones = "tombstones"
   private val Key = "doc_id"
 
   private def bandsDir(root: String, gen: Long) = s"${genDir(root, gen)}/bands"
@@ -70,43 +70,26 @@ object DedupIndex {
     (st.k, st.r)
   }
 
-  /** Column superset of the three logical metadata tables — every
-    * commit folds them into ONE `meta` parquet (discriminated by
-    * column `t`), the [[LexIndex]]/[[AnnIndex]]/[[AnnIndexPq]]
-    * folded-commit layout: three per-table coalesce(1) writes per
-    * mutation were three driver-side committer rounds of flat cost on
-    * every probe-and-ingest cycle. The PRE-fold layout also kept a
-    * table at `snap-v/meta` (the k/r scheme, no `t` column), so the
-    * layout probe checks the SCHEMA, not existence alone — exactly the
-    * discrimination [[StateCommit.gcGenerations]] already applies to
-    * this family. */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "k" -> "int", "r" -> "int",
-    "gen" -> "long", "n_docs" -> "long") ++
-    GenerationalTable.tombstoneCols(Key)
-
-  /** This family's logical-table column lists (select order is the
-    * reader contract). */
-  private[graft] def metaCols(table: String): Seq[String] = table match {
-    case Meta => Seq("k", "r")
-    case Manifest => Seq("gen", "n_docs")
-    case Tombstones => GenerationalTable.tombstoneCols(Key).map(_._1)
-  }
-
-  /** Read one logical meta table of snapshot `v` — the shared
-    * schema-probed folded-first/per-table-fallback probe
-    * ([[StateCommit.metaTable]]; the schema probe matters HERE because
-    * the pre-fold layout's k/r scheme table was also named `meta`). */
-  private[graft] def metaTable(spark: SparkSession, root: String,
-      v: Long, table: String): DataFrame =
-    StateCommit.metaTable(spark, root, v, table, metaCols(table))
+  /** The three logical metadata tables, folded into ONE `meta` parquet
+    * per commit (discriminated by column `t`), the [[LexIndex]]/
+    * [[AnnIndex]]/[[AnnIndexPq]] folded-commit layout: three per-table
+    * coalesce(1) writes per mutation were three driver-side committer
+    * rounds of flat cost on every probe-and-ingest cycle. The PRE-fold
+    * layout also kept a table at `snap-v/meta` (the k/r scheme, no `t`
+    * column), so the layout probe checks the SCHEMA, not existence
+    * alone — exactly the discrimination [[StateCommit.gcGenerations]]
+    * already applies to this family. */
+  private[graft] val metaSchema = MetaSchema(
+    Meta -> Seq("k" -> "int", "r" -> "int"),
+    Manifest -> Seq("gen" -> "long", "n_docs" -> "long"),
+    GenerationalTable.tombstones(Key))
 
   /** Scheme + manifest of snapshot `v`, read in ONE driver action
     * ([[StateCommit.metaRows]]). Tombstones stay a lazy DataFrame. */
   private final case class State(k: Int, r: Int, gens: Seq[(Long, Long)])
 
   private def stateAt(spark: SparkSession, root: String, v: Long): State = {
-    val m = StateCommit.metaRows(spark, root, v, Seq(Meta, Manifest), metaCols)
+    val m = StateCommit.metaRows(spark, root, v, metaSchema, Seq(Meta, Manifest))
     val sc = m(Meta).head
     State(sc.getInt(0), sc.getInt(1),
       m(Manifest).map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1))
@@ -118,9 +101,9 @@ object DedupIndex {
       k: Int, r: Int, entries: Seq[(Long, Long)], tombstones: DataFrame,
       droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
-      Meta -> Seq((k, r)).toDF("k", "r"),
-      Manifest -> entries.toDF("gen", "n_docs"),
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
+      Meta -> metaSchema.rows(spark, Meta, Seq((k, r))),
+      Manifest -> metaSchema.rows(spark, Manifest, entries),
       Tombstones -> tombstones), droppedGens)
   }
 
@@ -130,7 +113,7 @@ object DedupIndex {
       st: State, dir: (String, Long) => String): DataFrame =
     GenerationalTable.live(st.gens.map(_._1),
       g => StateCommit.readParquet(spark, dir(root, g)),
-      metaTable(spark, root, v, Tombstones), Key)
+      StateCommit.metaTable(spark, root, v, metaSchema, Tombstones), Key)
 
   /** One signature pass over `documents`: (bands, sigs). The wide
     * minhash table snapshots ONCE and both tables derive from it
@@ -204,7 +187,8 @@ object DedupIndex {
     // old signatures
     val ids = batch.select(col(Key).cast("long")).distinct()
     writeMetaTables(spark, root, v, st.k, st.r, st.gens :+ (v -> n),
-      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+      GenerationalTable.mergeTombstones(
+        StateCommit.metaTable(spark, root, v0, metaSchema, Tombstones),
         ids, Key, beforeGen = v),
       droppedGens = false) // append-only: every prior generation survives
   }
@@ -217,7 +201,8 @@ object DedupIndex {
     val idRows = ids.select(col(Key).cast("long")).distinct()
     val st = stateAt(spark, root, v0)
     writeMetaTables(spark, root, v, st.k, st.r, st.gens,
-      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+      GenerationalTable.mergeTombstones(
+        StateCommit.metaTable(spark, root, v0, metaSchema, Tombstones),
         idRows, Key, GenerationalTable.DeleteAll),
       droppedGens = false) // metadata-only: the manifest is unchanged
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.StateCommit
+import graft.streaming.{MetaSchema, StateCommit}
 
 /** Persisted DSIR importance model — the fit-once / score-many form of
   * [[TextAnalysis.dsirWeights]]. A 100 TB selection run doesn't recompute
@@ -24,8 +24,8 @@ import graft.streaming.StateCommit
   *                         (buckets, nt, nr), discriminated by `t`
   * }}}
   * (pre-fold snapshots carried model/ + a t-less meta/ and stay
-  * readable via the schema-probed fallback in `metaTable` — the
-  * [[DedupIndex]] discrimination)
+  * readable via the schema-probed fallback in [[StateCommit.metaTable]]
+  * — the [[DedupIndex]] discrimination)
   *
   * The model table and the scoring math are [[TextAnalysis.dsirMicro]] /
   * [[TextAnalysis.dsirApply]] — the SAME code the in-query operator runs,
@@ -47,29 +47,15 @@ object DsirModel {
   def version(spark: SparkSession, root: String): Long =
     StateCommit.committedVersion(spark, root, "DSIR model")
 
-  /** Column superset of the two logical tables — one folded `meta`
-    * parquet per commit (see the layout note above; the same fold every
-    * other persisted family got in rounds 12–13). */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "bucket" -> "long", "micro" -> "long",
-    "buckets" -> "int", "nt" -> "long", "nr" -> "long")
-
-  /** This family's logical-table column lists. NOTE: the Meta fallback
-    * must read the per-table dir RAW (a round-11 pre-totals meta
-    * carries only `buckets` — selecting nt/nr there would throw), so
-    * metaAt handles the width tolerance, not the column list. */
-  private[graft] def metaCols(table: String): Seq[String] = table match {
-    case Model => Seq("bucket", "micro")
-    case Meta => Seq("buckets", "nt", "nr")
-  }
-
-  /** Read one logical table of snapshot `v` — the shared schema-probed
-    * folded-first/per-table-fallback probe ([[StateCommit.metaTable]];
-    * the schema probe matters HERE because the pre-fold layout's
-    * buckets/totals row was also named `meta`). */
-  private[graft] def metaTable(spark: SparkSession, root: String,
-      v: Long, table: String): DataFrame =
-    StateCommit.metaTable(spark, root, v, table, metaCols(table))
+  /** The two logical tables — one folded `meta` parquet per commit (see
+    * the layout note above; the same fold every other persisted family
+    * got in rounds 12–13). NOTE: the Meta fallback reads the per-table
+    * dir RAW (a round-11 pre-totals meta carries only `buckets` —
+    * selecting nt/nr there would throw), so metaAt handles the width
+    * tolerance, not the column list. */
+  private[graft] val metaSchema = MetaSchema(
+    Model -> Seq("bucket" -> "long", "micro" -> "long"),
+    Meta -> Seq("buckets" -> "int", "nt" -> "long", "nr" -> "long"))
 
   /** Fit and commit a new model version from the two corpora; returns
     * the committed version. `retain` is the StateCommit snapshot-expiry
@@ -92,12 +78,9 @@ object DsirModel {
       .crossJoin(rB.agg(coalesce(sum("cr"), lit(0L)).as("nr"))).head()
     val (nt, nr) = (tot.getLong(0), tot.getLong(1))
     val s = spark; import s.implicits._
-    StateCommit.writeMetaParquet(
-      StateCommit.foldMetaRows(Model,
-        TextAnalysis.dsirMicroFromAggs(rB, tB, buckets), MetaCols)
-        .unionByName(StateCommit.foldMetaRows(Meta,
-          Seq((buckets, nt, nr)).toDF("buckets", "nt", "nr"), MetaCols)),
-      root, v)
+    StateCommit.writeMetaParquet(metaSchema.fold(Seq(
+      Model -> TextAnalysis.dsirMicroFromAggs(rB, tB, buckets),
+      Meta -> metaSchema.rows(spark, Meta, Seq((buckets, nt, nr))))), root, v)
     StateCommit.commit(spark, root, v, retain)
     v
   }
@@ -111,13 +94,13 @@ object DsirModel {
   // half-written model silently; the shared guard rejects it loudly
   private def modelAt(spark: SparkSession, root: String, v: Long): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
-    metaTable(spark, root, v, Model)
+    StateCommit.metaTable(spark, root, v, metaSchema, Model)
   }
 
   private def metaAt(spark: SparkSession, root: String,
       v: Long): (Int, Long, Long) = {
     StateCommit.requireRetained(spark, root, v)
-    val row = metaTable(spark, root, v, Meta).head()
+    val row = StateCommit.metaTable(spark, root, v, metaSchema, Meta).head()
     // a pre-totals PRE-FOLD meta (round-11 mid-session) carries only
     // `buckets`; treat its totals as 0/0 — the default then matches what
     // the old inner-join behavior NEVER produced anyway (no novel-doc

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{GenerationalTable, StateCommit}
+import graft.streaming.{GenerationalTable, MetaSchema, StateCommit}
+import graft.streaming.GenerationalTable.Tombstones
 
 /** Persisted inverted (lexical) index with BM25 ranking — the
   * build-once / query-many LEXICAL complement to the ANN family
@@ -48,7 +49,6 @@ object LexIndex {
   private val Dfs = "dfs"
   private val Stats = "stats"
   private val Manifest = "manifest"
-  private val Tombstones = "tombstones"
   private val StreamBatch = "stream_batch"
   private val EraTable = "era"
   private val Key = "doc_id"
@@ -140,8 +140,8 @@ object LexIndex {
 
   private def metaScalarsOf(spark: SparkSession, root: String,
       v: Long): MetaScalars = {
-    val m = StateCommit.metaRows(spark, root, v,
-      Seq(Manifest, Stats, StreamBatch, EraTable), metaCols)
+    val m = StateCommit.metaRows(spark, root, v, metaSchema,
+      Seq(Manifest, Stats, StreamBatch, EraTable))
     // manifest order: ascending gen — every writer appends
     val gens = m(Manifest).map(_.getLong(0)).sorted
     val st = m(Stats).head
@@ -179,7 +179,8 @@ object LexIndex {
       // by older code, upgraded by one ingest), and unionByName over
       // heterogeneous schemas would throw on every read
       pruned.select(col("token"), col("doc_id"), col("tf"), col("dl"))
-    }, metaTable(spark, root, v, Tombstones), Key).drop("gen")
+    }, StateCommit.metaTable(spark, root, v, metaSchema, Tombstones), Key)
+      .drop("gen")
 
   /** The LIVE (doc_id, dl) rows of snapshot v — one row per live doc
     * INCLUDING zero-token docs (the doc table, not the postings, is the
@@ -194,40 +195,22 @@ object LexIndex {
           .select("doc_id", "dl").distinct())
         .select(col("doc_id").cast("long").as("doc_id"),
           col("dl").cast("long").as("dl"))
-    }, metaTable(spark, root, v, Tombstones), Key).drop("gen")
+    }, StateCommit.metaTable(spark, root, v, metaSchema, Tombstones), Key)
+      .drop("gen")
 
-  /** The folded snapshot-metadata columns: every metadata-sized table
-    * (dfs/stats/manifest/tombstones/stream_batch/era) lands in ONE
+  /** The folded snapshot metadata: every metadata-sized table
+    * (dfs/stats/manifest/stream_batch/era/tombstones) lands in ONE
     * parquet write under `meta/`, discriminated by `t` — six
     * coalesce(1) committer rounds per commit (~0.2–0.3 s each at any
     * corpus size; the round-11 verdict measured them as lx_search_inc's
-    * whole flat cost) become one. Columns are the union schema; a
-    * table's reader selects its own and the rest stay NULL. */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "token" -> "string", "df" -> "long",
-    "n_docs" -> "long", "sum_dl" -> "long", "n_dl" -> "long",
-    "gen" -> "long",
-    "last_batch_id" -> "long", "build_era" -> "long") ++
-    GenerationalTable.tombstoneCols(Key)
-
-  /** This family's logical-table column lists (select order is the
-    * reader contract). */
-  private[graft] def metaCols(table: String): Seq[String] = table match {
-    case Dfs => Seq("token", "df")
-    case Stats => Seq("n_docs", "sum_dl", "n_dl")
-    case Manifest => Seq("gen")
-    case Tombstones => GenerationalTable.tombstoneCols(Key).map(_._1)
-    case StreamBatch => Seq("last_batch_id")
-    case EraTable => Seq("build_era")
-  }
-
-  /** Read one logical meta table of snapshot `v` — the shared
-    * folded-first/per-table-fallback probe ([[StateCommit.metaTable]],
-    * one edit site for the layout precedence rule across the five
-    * persisted families). */
-  private[graft] def metaTable(spark: SparkSession, root: String,
-      v: Long, table: String): DataFrame =
-    StateCommit.metaTable(spark, root, v, table, metaCols(table))
+    * whole flat cost) become one. */
+  private[graft] val metaSchema = MetaSchema(
+    Dfs -> Seq("token" -> "string", "df" -> "long"),
+    Stats -> Seq("n_docs" -> "long", "sum_dl" -> "long", "n_dl" -> "long"),
+    Manifest -> Seq("gen" -> "long"),
+    StreamBatch -> Seq("last_batch_id" -> "long"),
+    EraTable -> Seq("build_era" -> "long"),
+    GenerationalTable.tombstones(Key))
 
   /** Write the metadata-sized snapshot tables and commit
     * ([[StateCommit.commitMeta]]) — shared by every mutation (postings
@@ -240,17 +223,15 @@ object LexIndex {
       era: Long = 0L, droppedGens: Boolean = false): Long = {
     val s = spark
     import s.implicits._
-    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
       Dfs -> dfs,
       Stats -> stats,
-      Manifest -> gens.toDF("gen"),
+      Manifest -> metaSchema.rows(spark, Manifest, gens),
       Tombstones -> tombstones,
-      StreamBatch -> streamBatch.toSeq.toDF("last_batch_id"),
-      EraTable -> Seq(era).toDF("build_era")), droppedGens)
+      StreamBatch -> metaSchema.rows(spark, StreamBatch, streamBatch.toSeq),
+      EraTable -> metaSchema.rows(spark, EraTable, Seq(era))), droppedGens)
     v
   }
-
-
 
   /** Target posting rows per range bucket (~20 MB of narrow posting
     * rows): a 2-doc upsert generation must not fan out into nBuckets
@@ -385,33 +366,77 @@ object LexIndex {
       CdcBatch.collapse(rawDocuments, "doc_id", seqCol),
       materialize = true)
     val (postings, bDocs, bDfs, bStats, nPost) = batchParts(documents)
-    val oldDfs = metaTable(spark, root, prev, Dfs)
-    val mergedDfs = oldDfs.select(col("token"), col("df").as("a"))
-      .join(bDfs.select(col("token"), col("df").as("b")), Seq("token"), "full_outer")
-      .select(col("token"),
-        (coalesce(col("a"), lit(0L)) + coalesce(col("b"), lit(0L))).as("df"))
+    val mergedDfs = addDfs(
+      StateCommit.metaTable(spark, root, prev, metaSchema, Dfs), bDfs)
     // batch stats in one driver action; the committed side came with the
     // folded MetaScalars read (round-17: was a second crossJoined scan)
-    val sr = bStats.select(col("n_docs").as("bn"),
-        col("sum_dl").as("bs"), col("n_dl").as("bndl"))
-      .head()
-    def g(n: String): Long = sr.getAs[Long](n)
-    val s = spark
-    import s.implicits._
-    val mergedStats = Seq((ms.nDocs + g("bn"),
-      ms.sumDl + g("bs"), ms.nDl + g("bndl")))
-      .toDF("n_docs", "sum_dl", "n_dl")
+    val b = bStats.head()
+    val mergedStats = statsRow(spark, ms.nDocs + b.getLong(0),
+      ms.sumDl + b.getLong(1), ms.nDl + b.getLong(2))
     val gens = ms.gens :+ v
     // tombstone rows for ids this batch RE-ingests advance to this
     // generation (resurrecting the doc with its new content); other
     // rows carry forward — the table stays churn-bounded because only
     // deleted-and-not-yet-reingested ids live in it
-    val prior = metaTable(spark, root, prev, Tombstones)
+    val prior = StateCommit.metaTable(spark, root, prev, metaSchema, Tombstones)
     val batchIds = documents.select(col(Key).cast("long")).distinct()
     val tombs = GenerationalTable.mergeTombstones(prior,
       prior.join(batchIds, Seq(Key), "left_semi").select(Key), Key, v)
     writeSnapshot(spark, root, v, postings, bDocs, mergedDfs, mergedStats,
       gens, nBuckets, tombs, streamBatch, ms.era, nPost)
+  }
+
+  /** One stats row of the folded meta. */
+  private def statsRow(spark: SparkSession, nDocs: Long, sumDl: Long,
+      nDl: Long): DataFrame = {
+    val s = spark; import s.implicits._
+    metaSchema.rows(spark, Stats, Seq((nDocs, sumDl, nDl)))
+  }
+
+  /** The committed df table plus a batch's: exactly additive over
+    * disjoint doc sets. */
+  private def addDfs(dfs: DataFrame, bDfs: DataFrame): DataFrame =
+    dfs.select(col("token"), col("df").as("a"))
+      .join(bDfs.select(col("token"), col("df").as("b")), Seq("token"),
+        "full_outer")
+      .select(col("token"),
+        (coalesce(col("a"), lit(0L)) + coalesce(col("b"), lit(0L))).as("df"))
+
+  /** What some ids' LIVE rows contribute to snapshot `prev`, the part a
+    * delete or an upsert of them subtracts: their doc rows, the
+    * per-token df decrement `ddf` and the one-row stat decrement
+    * (dn, ds, dndl). Already-dead rows never subtract twice, which also
+    * makes a replayed or repeated delete a no-op on the statistics. The
+    * doc table, not the postings, is the membership authority: n_docs
+    * loses EVERY live victim (zero-token ones included), n_dl only those
+    * with tokens. */
+  private final case class DeadPart(docs: DataFrame, ddf: DataFrame,
+      stats: DataFrame) {
+    /** `dfs` less the dead postings (ONE row per (token, doc), so the
+      * per-token dead-row count IS the df decrement); rows at zero
+      * leave, as a rebuild without the dead docs never emits them. */
+    def from(dfs: DataFrame): DataFrame =
+      dfs.join(ddf, Seq("token"), "left_outer")
+        .select(col("token"), (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
+        .where(col("df") > 0)
+  }
+
+  /** The [[DeadPart]] of the distinct long `ids`. The dead docs snap (the
+    * stats and the tombstones both read them); the dead postings have
+    * ONE consumer, the df decrement, so they do not (round-13 review). */
+  private def deadPart(spark: SparkSession, root: String, prev: Long,
+      gens: Seq[Long], ids: DataFrame): DeadPart = {
+    val deadDocs = Stage.snap(
+      liveDocs(spark, root, prev, gens)
+        .join(broadcast(ids), Seq("doc_id"), "left_semi"),
+      materialize = true)
+    DeadPart(deadDocs,
+      livePostings(spark, root, prev, gens)
+        .join(broadcast(ids), Seq("doc_id"), "left_semi")
+        .groupBy("token").agg(count(lit(1)).as("ddf")),
+      deadDocs.agg(count(lit(1)).as("dn"),
+        coalesce(sum("dl"), lit(0L)).as("ds"),
+        count(when(col("dl") > 0, 1)).as("dndl")))
   }
 
   /** Drop documents from the index without a rebuild — the takedown /
@@ -451,46 +476,21 @@ object LexIndex {
       prev: Long, v: Long): Long = {
     val victims = ids.select(col("doc_id").cast("long")).distinct()
     val ms = metaScalarsOf(spark, root, prev)
-    // the victims' LIVE rows only: already-dead rows must not subtract
-    // twice (which is also what makes a replayed or repeated delete a
-    // no-op on the statistics). deadPost has ONE consumer (the df
-    // decrement) — no snap (round-13 review)
-    val deadPost = livePostings(spark, root, prev, ms.gens)
-      .join(broadcast(victims), Seq("doc_id"), "left_semi")
-    val deadDocs = Stage.snap(
-      liveDocs(spark, root, prev, ms.gens)
-        .join(broadcast(victims), Seq("doc_id"), "left_semi"),
-      materialize = true)
-    val oldDfs = metaTable(spark, root, prev, Dfs)
-    // postings hold ONE row per (token, doc), so the per-token dead-row
-    // count IS the df decrement; rows at zero leave the table, exactly
-    // as a rebuild-without-victims would never emit them
-    val deadDf = deadPost.groupBy("token").agg(count(lit(1)).as("ddf"))
-    val mergedDfs = oldDfs
-      .join(deadDf, Seq("token"), "left_outer")
-      .select(col("token"),
-        (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
-      .where(col("df") > 0)
-    // exact stat subtraction from the doc table: n_docs loses EVERY live
-    // victim (zero-token ones included), n_dl only those with tokens;
-    // the committed side came with the folded MetaScalars read
-    val sr = deadDocs.agg(count(lit(1)).as("dn"),
-        coalesce(sum("dl"), lit(0L)).as("ds"),
-        count(when(col("dl") > 0, 1)).as("dndl"))
-      .head()
-    def g(n: String): Long = sr.getAs[Long](n)
-    val s = spark
-    import s.implicits._
-    val mergedStats = Seq((ms.nDocs - g("dn"), ms.sumDl - g("ds"),
-      ms.nDl - g("dndl"))).toDF("n_docs", "sum_dl", "n_dl")
+    val dead = deadPart(spark, root, prev, ms.gens, victims)
+    // exact stat subtraction from the doc table; the committed side came
+    // with the folded MetaScalars read
+    val d = dead.stats.head()
+    val mergedStats = statsRow(spark, ms.nDocs - d.getLong(0),
+      ms.sumDl - d.getLong(1), ms.nDl - d.getLong(2))
     // tombstone only ids that actually had live rows: repeated or
     // bogus takedown lists add no rows, and an already-dead victim
     // keeps its existing tombstone
     val tombs = GenerationalTable.mergeTombstones(
-      metaTable(spark, root, prev, Tombstones),
-      deadDocs.select(Key).distinct(), Key, GenerationalTable.DeleteAll)
-    writeMetaTables(spark, root, v, mergedDfs, mergedStats, ms.gens, tombs,
-      ms.streamBatch, ms.era)
+      StateCommit.metaTable(spark, root, prev, metaSchema, Tombstones),
+      dead.docs.select(Key).distinct(), Key, GenerationalTable.DeleteAll)
+    writeMetaTables(spark, root, v,
+      dead.from(StateCommit.metaTable(spark, root, prev, metaSchema, Dfs)),
+      mergedStats, ms.gens, tombs, ms.streamBatch, ms.era)
   }
 
   /** Atomic live-document UPDATE — tombstone-advance + ingest in ONE
@@ -551,51 +551,28 @@ object LexIndex {
       materialize = true)
     // the batch ids' CURRENT live contribution — empty for brand-new or
     // previously-deleted ids, so the subtraction is exactly the delete()
-    // algebra restricted to docs that really are being replaced.
-    // deadPost has ONE consumer (the df decrement below) — no snap: a
-    // materialization pass over the pruned postings scan bought nothing
-    // (round-13 review)
-    val deadPost = livePostings(spark, root, prev, ms.gens)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-    val deadDocs = Stage.snap(
-      liveDocs(spark, root, prev, ms.gens)
-        .join(broadcast(batchIds), Seq("doc_id"), "left_semi"),
-      materialize = true)
+    // algebra restricted to docs that really are being replaced
+    val dead = deadPart(spark, root, prev, ms.gens, batchIds)
     val (postings, bDocs, bDfs, bStats, nPost) = batchParts(documents)
-    val deadDf = deadPost.groupBy("token").agg(count(lit(1)).as("ddf"))
-    val oldDfs = metaTable(spark, root, prev, Dfs)
-    val mergedDfs = oldDfs.select(col("token"), col("df").as("a"))
-      .join(bDfs.select(col("token"), col("df").as("b")), Seq("token"), "full_outer")
-      .join(deadDf, Seq("token"), "left_outer")
-      .select(col("token"),
-        (coalesce(col("a"), lit(0L)) + coalesce(col("b"), lit(0L))
-          - coalesce(col("ddf"), lit(0L))).as("df"))
-      .where(col("df") > 0)
+    val mergedDfs = dead.from(addDfs(
+      StateCommit.metaTable(spark, root, prev, metaSchema, Dfs), bDfs))
     // ONE driver action for the two 1-row batch-side stat sources (dead,
     // batch) — the committed side came with the folded MetaScalars read
     // (round-13 folded three head() jobs into one; round 17 drops the
     // committed-stats scan from it too)
-    val sr = deadDocs.agg(count(lit(1)).as("dn"),
-        coalesce(sum("dl"), lit(0L)).as("ds"),
-        count(when(col("dl") > 0, 1)).as("dndl"))
-      .crossJoin(bStats.select(col("n_docs").as("bn"),
-        col("sum_dl").as("bs"), col("n_dl").as("bndl")))
-      .head()
+    val sr = dead.stats.crossJoin(bStats).head()
     def g(n: String): Long = sr.getAs[Long](n)
-    val s = spark
-    import s.implicits._
-    val mergedStats = Seq((
-      ms.nDocs + g("bn") - g("dn"),
-      ms.sumDl + g("bs") - g("ds"),
-      ms.nDl + g("bndl") - g("dndl")))
-      .toDF("n_docs", "sum_dl", "n_dl")
+    val mergedStats = statsRow(spark,
+      ms.nDocs + g("n_docs") - g("dn"),
+      ms.sumDl + g("sum_dl") - g("ds"),
+      ms.nDl + g("n_dl") - g("dndl"))
     // tombstones advance to v for every batch id that needs one: ids
     // with live rows being replaced, and previously-deleted ids whose
     // tombstone must move (not vanish — dropping it would resurrect
     // their dead rows; a tombstone at v keeps gens < v dead and only
     // the new generation live). Brand-new ids add no tombstone.
-    val prior = metaTable(spark, root, prev, Tombstones)
-    val needTomb = deadDocs.select(Key)
+    val prior = StateCommit.metaTable(spark, root, prev, metaSchema, Tombstones)
+    val needTomb = dead.docs.select(Key)
       .unionByName(prior.join(batchIds, Seq(Key), "left_semi").select(Key))
       .distinct()
     val tombs = GenerationalTable.mergeTombstones(prior, needTomb, Key, v)
@@ -622,8 +599,8 @@ object LexIndex {
     // (deletes corrected them algebraically at delete time)
     val postings = livePostings(spark, root, prev, ms.gens)
     val docs = liveDocs(spark, root, prev, ms.gens)
-    val dfs = metaTable(spark, root, prev, Dfs)
-    val stats = metaTable(spark, root, prev, Stats)
+    val dfs = StateCommit.metaTable(spark, root, prev, metaSchema, Dfs)
+    val stats = StateCommit.metaTable(spark, root, prev, metaSchema, Stats)
     // bucket hint: the committed sum_dl upper-bounds live posting rows
     // (tf >= 1 per row), from the folded MetaScalars read — no data pass
     writeSnapshot(spark, root, v, postings, docs, dfs, stats, Seq(v),
@@ -654,8 +631,8 @@ object LexIndex {
       return spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0L).as("score_micro"),
           lit(0).as("rank")).limit(0)
-    val stats = metaTable(spark, root, v, Stats)
-    val dfs = metaTable(spark, root, v, Dfs)
+    val stats = StateCommit.metaTable(spark, root, v, metaSchema, Stats)
+    val dfs = StateCommit.metaTable(spark, root, v, metaSchema, Dfs)
       .where(col("token").isin(terms: _*))
     // live rows only (tombstone-filtered; the manifest's generation
     // list is metadata-sized — one entry per ingest since the last
@@ -721,8 +698,8 @@ object LexIndex {
       return Seq.empty[(Long, Long, Long, Int)]
         .toDF("qid", "doc_id", "score_micro", "rank")
     val allTerms = qt.map(_._2).distinct
-    val stats = metaTable(spark, root, v, Stats)
-    val dfs = metaTable(spark, root, v, Dfs)
+    val stats = StateCommit.metaTable(spark, root, v, metaSchema, Stats)
+    val dfs = StateCommit.metaTable(spark, root, v, metaSchema, Dfs)
       .where(col("token").isin(allTerms: _*))
     val postings = livePostings(spark, root, v,
         metaScalarsOf(spark, root, v).gens,

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{GenerationalTable, StateCommit}
+import graft.streaming.{GenerationalTable, MetaSchema, StateCommit}
+import graft.streaming.GenerationalTable.Tombstones
 import graft.streaming.StateCommit.genDir
 
 /** Persisted SEMANTIC dedup index — the build-once / probe-many form of
@@ -83,7 +84,6 @@ object SemDedupIndex {
 
   private val Scheme = "scheme"
   private val Manifest = "manifest"
-  private val Tombstones = "tombstones"
   private val Key = "vec_id"
 
   /** Member/vecs-table directory fan-out cap, with the per-index count
@@ -144,25 +144,13 @@ object SemDedupIndex {
   def version(spark: SparkSession, root: String): Long =
     StateCommit.committedVersion(spark, root, "semantic dedup index")
 
-  /** Column superset of the three logical metadata tables — one folded
-    * `meta` parquet per commit (the shared [[StateCommit.foldMetaRows]]
-    * layout). */
-  private val MetaCols: Seq[(String, String)] = Seq(
-    "cell_target" -> "int", "probes" -> "int", "n_cells" -> "int",
-    "n_buckets" -> "int", "quant_gen" -> "long",
-    "gen" -> "long", "n_vecs" -> "long") ++
-    GenerationalTable.tombstoneCols(Key)
-
-  private[graft] def metaCols(table: String): Seq[String] = table match {
-    case Scheme => Seq("cell_target", "probes", "n_cells", "n_buckets",
-      "quant_gen")
-    case Manifest => Seq("gen", "n_vecs")
-    case Tombstones => GenerationalTable.tombstoneCols(Key).map(_._1)
-  }
-
-  private[graft] def metaTable(spark: SparkSession, root: String,
-      v: Long, table: String): DataFrame =
-    StateCommit.metaTable(spark, root, v, table, metaCols(table))
+  /** The three logical metadata tables, folded into one `meta` parquet
+    * per commit. */
+  private[graft] val metaSchema = MetaSchema(
+    Scheme -> Seq("cell_target" -> "int", "probes" -> "int",
+      "n_cells" -> "int", "n_buckets" -> "int", "quant_gen" -> "long"),
+    Manifest -> Seq("gen" -> "long", "n_vecs" -> "long"),
+    GenerationalTable.tombstones(Key))
 
   /** Scheme + manifest of snapshot `v` in ONE driver action (round 17):
     * the probe/search/upsert paths each paid a scheme head() plus one
@@ -177,8 +165,8 @@ object SemDedupIndex {
 
   private def metaScalarsOf(spark: SparkSession, root: String,
       v: Long): MetaScalars = {
-    val m = StateCommit.metaRows(spark, root, v, Seq(Scheme, Manifest),
-      metaCols)
+    val m = StateCommit.metaRows(spark, root, v, metaSchema,
+      Seq(Scheme, Manifest))
     val sc = m(Scheme).head
     MetaScalars(sc.getInt(0), sc.getInt(1), sc.getInt(2), sc.getInt(3),
       sc.getLong(4),
@@ -203,10 +191,9 @@ object SemDedupIndex {
       scheme: (Int, Int, Int, Int, Long), entries: Seq[(Long, Long)],
       tombstones: DataFrame, droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
-    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
-      Scheme -> Seq(scheme)
-        .toDF("cell_target", "probes", "n_cells", "n_buckets", "quant_gen"),
-      Manifest -> entries.toDF("gen", "n_vecs"),
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
+      Scheme -> metaSchema.rows(spark, Scheme, Seq(scheme)),
+      Manifest -> metaSchema.rows(spark, Manifest, entries),
       Tombstones -> tombstones), droppedGens)
   }
 
@@ -228,7 +215,7 @@ object SemDedupIndex {
       prune.fold(raw) { case (bCol, buckets, kCol, keys) =>
         raw.where(col(bCol).isin(buckets: _*) && col(kCol).isin(keys: _*))
       }
-    }, metaTable(spark, root, v, Tombstones), Key)
+    }, StateCommit.metaTable(spark, root, v, metaSchema, Tombstones), Key)
 
   /** The narrow live (vec_id, cell) assignment rows, optionally pruned
     * to `cells` (their cbk buckets + the residual cell IN). */
@@ -354,7 +341,8 @@ object SemDedupIndex {
     val ids = batch.select(col(Key).cast("long")).distinct()
     writeMetaTables(spark, root, v, ms.scheme,
       ms.gens :+ (v -> n),
-      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+      GenerationalTable.mergeTombstones(
+        StateCommit.metaTable(spark, root, v0, metaSchema, Tombstones),
         ids, Key, beforeGen = v),
       droppedGens = false)
   }
@@ -367,7 +355,8 @@ object SemDedupIndex {
     val ms = metaScalarsOf(spark, root, v0)
     val idRows = ids.select(col(Key).cast("long")).distinct()
     writeMetaTables(spark, root, v, ms.scheme, ms.gens,
-      GenerationalTable.mergeTombstones(metaTable(spark, root, v0, Tombstones),
+      GenerationalTable.mergeTombstones(
+        StateCommit.metaTable(spark, root, v0, metaSchema, Tombstones),
         idRows, Key, GenerationalTable.DeleteAll),
       droppedGens = false)
   }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.{CellTable, StateCommit}
+import graft.streaming.{CellTable, MetaSchema, StateCommit}
+import graft.streaming.CellTable.Manifest
 
 /** The adapter contract (reference
   * `includes/adapters/class-adapter-interface.php:24-34`, injected per
@@ -75,22 +76,16 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     StructField("fingerprint", StringType),
     StructField("fields", ArrayType(StringType))))
 
-  private val Manifest = "manifest"
   private val Params = "params"
 
   /** The bucket-partitioned store table: the store schema plus `bucket`. */
   private val Cells = CellTable("bucket", schema.add("bucket", IntegerType))
 
-  /** Column superset of the two logical meta tables (the folded-meta
-    * layout of [[StateCommit.commitMeta]]). */
-  private val MetaCols: Seq[(String, String)] =
-    CellTable.entryCols("bucket", "int") ++ Seq(
-      "n_buckets" -> "int", "site_buckets" -> "boolean")
-
-  private def metaCols(table: String): Seq[String] = table match {
-    case Manifest => Seq("bucket", "gen")
-    case Params => Seq("n_buckets", "site_buckets")
-  }
+  /** The two logical meta tables (the folded-meta layout of
+    * [[StateCommit.commitMeta]]). */
+  private[graft] val metaSchema = MetaSchema(
+    Cells.manifest("int"),
+    Params -> Seq("n_buckets" -> "int", "site_buckets" -> "boolean"))
 
   /** The committed version (0 before the first commit) and its
     * bucket → generation manifest. */
@@ -104,8 +99,8 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     * loudly instead, as does a store root of the old cursor layouts. */
   private def committed(): Committed =
     committedVersion.fold(new Committed(0L, Map.empty)) { v =>
-      val m = StateCommit.metaRows(spark, root, v, Seq(Manifest, Params),
-        metaCols)
+      val m = StateCommit.metaRows(spark, root, v, metaSchema,
+        Seq(Manifest, Params))
       m(Params).foreach { p =>
         val (n, site) = (p.getInt(0), p.getBoolean(1))
         if (n != nBuckets) throw new IllegalStateException(
@@ -175,9 +170,9 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     val (manifest, droppedGens) = Cells.write(root, v,
       rows(Cells.read(spark, root, c.manifest.filter(e => keys(e._1)))),
       c.manifest, keys)
-    StateCommit.commitMeta(spark, root, v, MetaCols, Seq(
-      Manifest -> Cells.entriesDf(spark, manifest),
-      Params -> Seq((nBuckets, siteBuckets)).toDF("n_buckets", "site_buckets")),
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
+      Manifest -> metaSchema.rows(spark, Manifest, manifest.toSeq.sortBy(_._1)),
+      Params -> metaSchema.rows(spark, Params, Seq((nBuckets, siteBuckets)))),
       droppedGens)
     v.toInt
   }

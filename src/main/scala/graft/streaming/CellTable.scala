@@ -91,12 +91,22 @@ final case class CellTable(key: String, emptySchema: StructType) {
     (next, prior.values.toSet.diff(next.values.toSet).nonEmpty)
   }
 
-  /** The manifest as the rows of its meta table, for
-    * [[StateCommit.commitMeta]]. */
-  def entriesDf(spark: SparkSession, entries: Map[String, Long]): DataFrame = {
-    val s = spark; import s.implicits._
-    entries.toSeq.sortBy(_._1).toDF(key, "gen")
-  }
+  /** The manifest table for a key whose folded-meta type is `keyType`:
+    * the [[MetaSchema]] entry every cell-entries family declares. */
+  def manifest(keyType: String): (String, Seq[(String, String)]) =
+    CellTable.Manifest -> Seq(key -> keyType, "gen" -> "long")
+
+  /** The distinct key values of `entries`' partitions that hold a row
+    * whose `id` is in `ids`: the partitions a delete of `ids` touches.
+    * An inner join rather than a left-semi join, for the reason
+    * [[CellTable.dropKeys]] gives: the optimizer pushes a semi join
+    * below the per-generation union of [[read]], one broadcast of `ids`
+    * per generation, while the inner join stays above it. A duplicate
+    * id only repeats a row that the final distinct drops. */
+  def holding(spark: SparkSession, root: String, entries: Map[String, Long],
+      ids: DataFrame, id: String): DataFrame =
+    read(spark, root, entries).join(ids.select(col(id)), Seq(id))
+      .select(key).distinct()
 
   /** Parquet files per partition of `entries`; 0 for a dir that cannot
     * be listed. */
@@ -113,10 +123,8 @@ final case class CellTable(key: String, emptySchema: StructType) {
 
 object CellTable {
 
-  /** The manifest table's meta columns for a key whose folded-meta type
-    * is `keyType`; each family splices them into its meta superset. */
-  def entryCols(key: String, keyType: String): Seq[(String, String)] =
-    Seq(key -> keyType, "gen" -> "long")
+  /** The manifest table's name in a snapshot's folded meta. */
+  val Manifest = "manifest"
 
   /** The manifest from its meta rows, (key, gen) as
     * [[StateCommit.metaRows]] returns them. */

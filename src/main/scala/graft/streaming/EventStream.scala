@@ -2,12 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Structured-Streaming consumption of the CDC `events` table (the stand-in
   * for the reference's lifecycle hooks, SURVEY §2.11 T1–T4;
   * `includes/class-lifecycle.php:17-31`): watermarked tumbling-window
-  * aggregation, run with `Trigger.AvailableNow` so a batch of parquet
+  * aggregation, run by the [[AvailableNow]] runner so a batch of parquet
   * drives the streaming query synchronously.
   *
   * Scale posture: the hourly agg is keyed on (window, event_type) — state
@@ -72,14 +72,7 @@ object EventStream {
         // identical locally (same fix as q1_pricing; see COVERAGE.md
         // "driver-hash decimal contract").
         sum(floor(col("value") * 1000000 + 0.5).cast("long")).as("total_micros"))
-    val name = s"graft_hourly_${System.nanoTime()}"
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    AvailableNow.toMemory(agg, "complete", "graft_hourly")
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("total_micros"))
@@ -194,7 +187,7 @@ object EventStream {
     * watermark passes the deadline the group flushes one
     * (key, burst_size) row and clears its state. Event-time (not
     * processing-time) keeps the operator deterministic under replay and
-    * lets `Trigger.AvailableNow` terminate — a wall-clock timeout would
+    * lets an [[AvailableNow]] run terminate — a wall-clock timeout would
     * schedule timer batches forever. Input: (parent_id, event ts);
     * `watermarkDelay` bounds out-of-orderness.
     * [[debouncedTotals]] is the per-batch-dedup approximation. */
@@ -277,15 +270,9 @@ object EventStream {
           state.update((n, cents, t))
           (key, n, cents, t)
       }
-    val name = s"graft_debounce_${System.nanoTime()}"
-    val q = updated.toDF("user_id", "n_events", "total_cents", "last_ts_s")
-      .writeStream
-      .format("memory").queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    AvailableNow.toMemory(
+        updated.toDF("user_id", "n_events", "total_cents", "last_ts_s"),
+        "update", "graft_debounce")
       // one row per key per micro-batch; keep the final state per key
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("total_cents"), col("last_ts_s"))).as("s"))

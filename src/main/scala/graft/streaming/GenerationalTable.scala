@@ -24,10 +24,13 @@ object GenerationalTable {
   /** `before_gen` of a delete: every generation of the id is dead. */
   val DeleteAll: Long = Long.MaxValue
 
-  /** The tombstone table's meta columns for an id column `key`; each
-    * family appends them to its folded-meta column superset. */
-  def tombstoneCols(key: String): Seq[(String, String)] =
-    Seq(key -> "long", "before_gen" -> "long")
+  /** The tombstone table's name in a snapshot's folded meta. */
+  val Tombstones = "tombstones"
+
+  /** The tombstone table for an id column `key`: the [[MetaSchema]]
+    * entry every tombstoned family declares. */
+  def tombstones(key: String): (String, Seq[(String, String)]) =
+    Tombstones -> Seq(key -> "long", "before_gen" -> "long")
 
   /** A tombstone table with no rows: a build or compaction starts clean. */
   def emptyTombstones(spark: SparkSession, key: String): DataFrame = {

@@ -194,6 +194,13 @@ object StateCommit {
     Try(readSmallFile(spark.sparkContext.hadoopConfiguration,
       s"$statePath/$Pointer").map(_.trim.toLong)).toOption.flatten
 
+  /** The replay guard of the foreachBatch sinks whose snapshot version
+    * is the stream's batch id: true when batch `batchId` (or a later
+    * one) is already committed at `statePath`, so re-applying it must
+    * be a no-op. */
+  def applied(spark: SparkSession, statePath: String, batchId: Long): Boolean =
+    currentVersion(spark, statePath).exists(batchId <= _)
+
   /** The committed version of a persisted `family` root; throws
     * `IllegalStateException` before its first commit. */
   def committedVersion(spark: SparkSession, statePath: String,
@@ -276,10 +283,10 @@ object StateCommit {
   val GcSweepEvery = 8L
 
   /** The one commit tail of every generational index (AnnIndex,
-    * AnnIndexPq, DedupIndex, LexIndex, SemDedupIndex): fold the
-    * logical `(table, rows)` pairs onto the family's `metaCols`
-    * superset, write them as snapshot `v`'s one `meta` parquet, publish
-    * `v`, then reclaim generations.
+    * AnnIndexPq, DedupIndex, LexIndex, SemDedupIndex) and the vector
+    * store: fold the logical `(table, rows)` pairs by the family's
+    * [[MetaSchema]], write them as snapshot `v`'s one `meta` parquet,
+    * publish `v`, then reclaim generations.
     *
     * GC is deferred: it runs on a commit that dropped generations from
     * the manifest (`droppedGens`: compaction, rebuild) and otherwise
@@ -290,16 +297,17 @@ object StateCommit {
     * later, where no manifest shrinks — the periodic sweep bounds that
     * leak at [[GcSweepEvery]] commits' worth of superseded dirs. */
   def commitMeta(spark: SparkSession, statePath: String, v: Long,
-      metaCols: Seq[(String, String)], tables: Seq[(String, DataFrame)],
+      schema: MetaSchema, tables: Seq[(String, DataFrame)],
       droppedGens: Boolean): Unit = {
     // a mistyped or retired spark.graft.* key fails before the commit
     graft.GraftConf.validate(spark)
-    val meta = tables.map { case (t, df) => foldMetaRows(t, df, metaCols) }
-      .reduce(_.unionByName(_))
-    writeMetaParquet(meta, statePath, v)
+    writeMetaParquet(schema.fold(tables), statePath, v)
     commit(spark, statePath, v)
     if (droppedGens || v % GcSweepEvery == 0) gcGenerations(spark, statePath)
   }
+
+  /** The one column [[gcGenerations]] reads of any family's manifest. */
+  private val GcManifest = MetaSchema("manifest" -> Seq("gen" -> "long"))
 
   /** Garbage-collect generation directories (`gen-<v>` under
     * `statePath`) that no COMMITTED snapshot's manifest references —
@@ -330,7 +338,7 @@ object StateCommit {
     // the committed snapshot still references (round-12 advice). One
     // union, one job for all of them.
     val referenced = Try(snaps
-      .map(v => metaTable(spark, statePath, v, "manifest", Seq("gen"))
+      .map(v => metaTable(spark, statePath, v, GcManifest, "manifest")
         .select(col("gen").cast("long")))
       .reduce(_.unionByName(_)).collect().map(_.getLong(0))
       .toSet).getOrElse(return) // abort: never guess
@@ -349,26 +357,14 @@ object StateCommit {
       .sorted
   }
 
-  /** Shared folded-metadata machinery (round 13): every persisted index
-    * family (LexIndex/AnnIndex/AnnIndexPq/DedupIndex/DsirModel) commits
-    * its metadata-sized tables as ONE `meta` parquet whose rows carry a
-    * `t` discriminator column — N per-table coalesce(1) writes were N
-    * driver-side committer rounds per mutation. Families differ only in
-    * their column superset and logical-table column lists; the fold/read
-    * shape lives here so the mixed-layout precedence rule has one edit
-    * site (it previously had five drifting private copies).
-    *
-    * [[foldMetaRows]] projects one logical table's rows onto the
-    * family's column superset (absent columns null-padded, every column
-    * cast to its canonical type). */
-  def foldMetaRows(t: String, df: DataFrame,
-      metaCols: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val have = df.columns.toSet
-    df.select(lit(t).as("t") +: metaCols.map { case (c, tp) =>
-      (if (have(c)) col(c) else lit(null)).cast(tp).as(c)
-    }: _*)
-  }
+  // Shared folded-metadata machinery (round 13): every persisted root
+  // (the five indexes, DsirModel and the vector store) commits its
+  // metadata-sized tables as ONE `meta` parquet whose rows carry a `t`
+  // discriminator column — N per-table coalesce(1) writes were N
+  // driver-side committer rounds per mutation. Each family declares its
+  // tables once, as a MetaSchema, which owns the fold and every table's
+  // column order; the layout probe and the mixed-layout precedence rule
+  // live here, one edit site for all of them.
 
   /** Snapshot `v`'s folded `meta` parquet; None for a snapshot written
     * by pre-fold code. "Folded" is decided by SCHEMA (`t` column
@@ -401,12 +397,14 @@ object StateCommit {
     }
   }
 
-  /** Read one logical meta table of snapshot `v`: folded layout first,
-    * per-table directory as the fallback for snapshots written by
-    * pre-fold code (time travel across the upgrade keeps working). */
+  /** Read one logical meta table of snapshot `v` in `schema`'s column
+    * order: folded layout first, per-table directory as the fallback for
+    * snapshots written by pre-fold code (time travel across the upgrade
+    * keeps working). */
   def metaTable(spark: SparkSession, statePath: String, v: Long,
-      table: String, cols: Seq[String]): DataFrame = {
+      schema: MetaSchema, table: String): DataFrame = {
     import org.apache.spark.sql.functions.col
+    val cols = schema.cols(table)
     foldedMeta(spark, statePath, v) match {
       case Some(m) => m.where(col("t") === table).select(cols.map(col): _*)
       case None =>
@@ -424,21 +422,20 @@ object StateCommit {
     * in ONE driver action: a mutation or query that needs its scheme,
     * manifest and watermarks reads them with one filtered collect of
     * the folded meta instead of one single-task job per table. Each
-    * table's rows come in its `metaCols` order, as [[metaTable]] returns
-    * them. A pre-fold snapshot falls back to per-table reads, where an
-    * absent table reads as zero rows — the folded layout cannot tell an
-    * absent table from an empty one either. */
+    * table's rows come in its `schema` column order, as [[metaTable]]
+    * returns them. A pre-fold snapshot falls back to per-table reads,
+    * where an absent table reads as zero rows — the folded layout
+    * cannot tell an absent table from an empty one either. */
   def metaRows(spark: SparkSession, statePath: String, v: Long,
-      tables: Seq[String],
-      metaCols: String => Seq[String]): Map[String, Seq[Row]] = {
+      schema: MetaSchema, tables: Seq[String]): Map[String, Seq[Row]] = {
     import org.apache.spark.sql.functions.col
     foldedMeta(spark, statePath, v) match {
       case Some(m) =>
-        val cols = tables.flatMap(metaCols).distinct
+        val cols = tables.flatMap(schema.cols).distinct
         val rows = m.where(col("t").isin(tables: _*))
           .select(col("t") +: cols.map(col): _*).collect()
         tables.map { t =>
-          val at = metaCols(t).map(c => 1 + cols.indexOf(c))
+          val at = schema.cols(t).map(c => 1 + cols.indexOf(c))
           t -> rows.toSeq.filter(_.getString(0) == t)
             .map(r => Row.fromSeq(at.map(r.get)))
         }.toMap
@@ -447,7 +444,7 @@ object StateCommit {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         tables.map { t =>
           t -> (if (fs.exists(new Path(tableDir(statePath, v, t))))
-            metaTable(spark, statePath, v, t, metaCols(t)).collect().toSeq
+            metaTable(spark, statePath, v, schema, t).collect().toSeq
           else Seq.empty)
         }.toMap
     }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{HistSpec, IncrementalAgg}
 
@@ -32,16 +32,10 @@ object StreamingAgg {
       keys: Seq[String], values: Seq[String],
       distincts: Seq[String] = Nil,
       hists: Seq[HistSpec] = Nil): StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        IncrementalAgg.ingest(batch.sparkSession, root, batch.toDF(),
-          keys, values, batchId + 1, distincts, hists)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(rows, checkpoint) { (batch, batchId) =>
+      IncrementalAgg.ingest(batch.sparkSession, root, batch,
+        keys, values, batchId + 1, distincts, hists)
+    }
 
   /** The maintained view (derived averages included) — read-side
     * convenience over [[IncrementalAgg.view]]. */

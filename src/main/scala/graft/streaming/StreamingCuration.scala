@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
@@ -61,7 +61,7 @@ object StreamingCuration {
     * cleanly (its partial snapshot dir was never referenced). */
   def applyBatch(statePath: String, batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (StateCommit.currentVersion(spark, statePath).exists(batchId <= _)) return
+    if (StateCommit.applied(spark, statePath, batchId)) return
     val curSha = shaState(spark, statePath)
     val curSigs = sigState(spark, statePath)
     Dedup.incrementalDedupAgainstKeys(batch, curSha, curSigs)
@@ -87,12 +87,7 @@ object StreamingCuration {
     * rows) through the filter at `statePath`. */
   def start(documents: DataFrame, statePath: String,
       checkpoint: String): StreamingQuery =
-    documents.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(statePath, batch.toDF(), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(documents, checkpoint) { (batch, batchId) =>
+      applyBatch(statePath, batch, batchId)
+    }
 }

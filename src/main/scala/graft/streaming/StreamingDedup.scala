@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.DedupIndex
 
@@ -36,17 +36,11 @@ object StreamingDedup {
     * (round-11 review). */
   def start(documents: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery =
-    documents.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty)
-          DedupIndex.upsert(batch.sparkSession, root, batch.toDF(),
-            seqCol = seqCol)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(documents, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        DedupIndex.upsert(batch.sparkSession, root, batch,
+          seqCol = seqCol)
+    }
 
   /** Classify-then-ingest: verdicts for batch B land at
     * `out/batch_id=B` BEFORE the batch joins the index (a doc is never
@@ -54,20 +48,14 @@ object StreamingDedup {
   def startClassified(documents: DataFrame, root: String,
       checkpoint: String, out: String,
       seqCol: String = ""): StreamingQuery =
-    documents.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          DedupIndex.classifyBatch(spark, root, batch.toDF())
-            .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-          DedupIndex.upsert(spark, root, batch.toDF(), seqCol = seqCol)
-        }
-        ()
+    AvailableNow.foreachBatch(documents, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        DedupIndex.classifyBatch(spark, root, batch)
+          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+        DedupIndex.upsert(spark, root, batch, seqCol = seqCol)
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** All batches' verdicts, with the `batch_id` partition column
     * recovered from the directory layout. */

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{CdcBatch, DsirModel}
 
@@ -42,7 +42,7 @@ object StreamingDsir {
   def applyBatch(modelRoot: String, statePath: String, batch: DataFrame,
       batchId: Long, modelVersion: Long, seqCol: String = ""): Unit = {
     val spark = batch.sparkSession
-    if (StateCommit.currentVersion(spark, statePath).exists(batchId <= _)) return
+    if (StateCommit.applied(spark, statePath, batchId)) return
     val collapsed = CdcBatch.collapse(batch, "doc_id", seqCol)
     DsirModel.scoreAt(spark, modelRoot, collapsed, modelVersion)
       .withColumn("model_v", lit(modelVersion))
@@ -59,22 +59,6 @@ object StreamingDsir {
   private val PinMarker = "graft-dsir-model-pin"
   private val SweepMarker = "graft-dsir-sweep-id"
 
-  private def readMarkerFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    } else None
-
-  private def writeMarkerFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, s: String): Unit = {
-    val out = fs.create(p, false)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** Guard the checkpoint↔statePath pairing (round-12 review): the
     * applied-batch watermark lives in `statePath` while batch ids come
     * from the CHECKPOINT — a fresh checkpoint restarts ids at 0, so
@@ -87,18 +71,18 @@ object StreamingDsir {
   private def requirePairing(spark: org.apache.spark.sql.SparkSession,
       statePath: String, checkpoint: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val ckptMarker = new org.apache.hadoop.fs.Path(checkpoint, SweepMarker)
-    val fs = ckptMarker.getFileSystem(conf)
+    val ckptMarker = s"$checkpoint/$SweepMarker"
+    val fs = new org.apache.hadoop.fs.Path(checkpoint).getFileSystem(conf)
     val ckptExisted = fs.exists(
       new org.apache.hadoop.fs.Path(checkpoint, PinMarker))
-    val ckptId = readMarkerFile(fs, ckptMarker).getOrElse {
-      val id = java.util.UUID.randomUUID().toString
-      writeMarkerFile(fs, ckptMarker, id)
-      id
-    }
-    val stateMarker = new org.apache.hadoop.fs.Path(statePath, SweepMarker)
-    val sfs = stateMarker.getFileSystem(conf)
-    readMarkerFile(sfs, stateMarker) match {
+    val ckptId = StateCommit.readSmallFile(conf, ckptMarker).map(_.trim)
+      .getOrElse {
+        val id = java.util.UUID.randomUUID().toString
+        StateCommit.writeSmallFile(conf, ckptMarker, id)
+        id
+      }
+    val stateMarker = s"$statePath/$SweepMarker"
+    StateCommit.readSmallFile(conf, stateMarker).map(_.trim) match {
       case Some(sid) if sid != ckptId =>
         throw new IllegalStateException(
           s"statePath $statePath belongs to sweep $sid but checkpoint " +
@@ -144,8 +128,7 @@ object StreamingDsir {
               s"$checkpoint (last committed $lastCommitted) <-> statePath " +
               s"$statePath (watermark $wm); sweep id $ckptId minted")
         }
-        sfs.mkdirs(new org.apache.hadoop.fs.Path(statePath))
-        writeMarkerFile(sfs, stateMarker, ckptId)
+        StateCommit.writeSmallFile(conf, stateMarker, ckptId)
     }
   }
 
@@ -158,32 +141,26 @@ object StreamingDsir {
   private def resolvePin(documents: DataFrame, modelRoot: String,
       checkpoint: String): Long = {
     val spark = documents.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(checkpoint, PinMarker)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val pin =
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
-      // round-12 review: with the default fit(retain = 2), two refits
-      // landing mid-sweep expire the pinned snapshot — scoreAt would
-      // fail on some arbitrary batch deep in the sweep. Surface the
-      // retention problem AT RESTART with the remedy in the message.
-      val retained = StateCommit.versions(spark, modelRoot)
-      if (!retained.contains(pin))
-        throw new IllegalStateException(
-          s"pinned DSIR model v$pin at $modelRoot has been " +
-            s"retention-expired (retained: ${retained.mkString(", ")}) — " +
-            "raise DsirModel.fit(retain = ...) so sweeps outlive refits, " +
-            "or restart the sweep with a fresh checkpoint to re-pin")
-      pin
-    } else {
-      val v = DsirModel.version(spark, modelRoot)
-      val out = fs.create(marker, false)
-      try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      v
+    val conf = spark.sparkContext.hadoopConfiguration
+    val marker = s"$checkpoint/$PinMarker"
+    StateCommit.readSmallFile(conf, marker).map(_.trim.toLong) match {
+      case Some(pin) =>
+        // round-12 review: with the default fit(retain = 2), two refits
+        // landing mid-sweep expire the pinned snapshot — scoreAt would
+        // fail on some arbitrary batch deep in the sweep. Surface the
+        // retention problem AT RESTART with the remedy in the message.
+        val retained = StateCommit.versions(spark, modelRoot)
+        if (!retained.contains(pin))
+          throw new IllegalStateException(
+            s"pinned DSIR model v$pin at $modelRoot has been " +
+              s"retention-expired (retained: ${retained.mkString(", ")}) — " +
+              "raise DsirModel.fit(retain = ...) so sweeps outlive refits, " +
+              "or restart the sweep with a fresh checkpoint to re-pin")
+        pin
+      case None =>
+        val v = DsirModel.version(spark, modelRoot)
+        StateCommit.writeSmallFile(conf, marker, v.toString)
+        v
     }
   }
 
@@ -195,13 +172,8 @@ object StreamingDsir {
       checkpoint: String, seqCol: String = ""): StreamingQuery = {
     requirePairing(documents.sparkSession, statePath, checkpoint)
     val pinned = resolvePin(documents, modelRoot, checkpoint)
-    documents.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(modelRoot, statePath, batch.toDF(), batchId, pinned, seqCol)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(documents, checkpoint) { (batch, batchId) =>
+      applyBatch(modelRoot, statePath, batch, batchId, pinned, seqCol)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.AnnIndex
 
@@ -35,17 +35,10 @@ object StreamingIndex {
     * embedding arrays — deterministic, but not recency). */
   def start(vectors: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty)
-          AnnIndex.upsert(batch.sparkSession, root, batch.toDF(),
-            seqCol = seqCol)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(vectors, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        AnnIndex.upsert(batch.sparkSession, root, batch, seqCol = seqCol)
+    }
 
   /** Same ingest against the persisted IVF-PQ index
     * ([[graft.operators.AnnIndexPq]]): each batch encodes against the
@@ -54,15 +47,9 @@ object StreamingIndex {
     * against fixed tables). */
   def startPq(vectors: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.AnnIndexPq.upsert(batch.sparkSession, root,
-            batch.toDF(), seqCol = seqCol)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(vectors, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.operators.AnnIndexPq.upsert(batch.sparkSession, root, batch,
+          seqCol = seqCol)
+    }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.LexIndex
 
@@ -45,35 +45,30 @@ object StreamingLex {
       checkpoint: String): Unit = {
     val spark = docs.sparkSession
     val era = LexIndex.buildEra(spark, root)
-    val marker = new org.apache.hadoop.fs.Path(checkpoint, EraMarker)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val recorded =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
-      require(recorded == era,
-        s"checkpoint $checkpoint was created against build era $recorded " +
-          s"but the index at $root is now era $era — it was rebuilt; " +
-          "resume with a FRESH checkpoint (replaying this one could " +
-          "double-count documents the rebuild corpus already contains)")
-    } else {
-      // A marker-less checkpoint that ALREADY holds Spark streaming
-      // state predates this guard — its true era is unknown, so
-      // anchoring it to the CURRENT era would let a pre-rebuild
-      // checkpoint sail through (the exact replay double-count the
-      // guard exists to stop). Only a genuinely fresh checkpoint (no
-      // offsets yet) may adopt the current era.
-      val offsets = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-      require(!fs.exists(offsets) || fs.listStatus(offsets).isEmpty,
-        s"checkpoint $checkpoint has streaming offsets but no recorded " +
-          s"build era — it predates the era guard, and the index at $root " +
-          "may have been rebuilt since it was written; resume with a " +
-          "FRESH checkpoint")
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(marker, false)
-      try out.write(era.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val marker = s"$checkpoint/$EraMarker"
+    StateCommit.readSmallFile(conf, marker).map(_.trim.toLong) match {
+      case Some(recorded) =>
+        require(recorded == era,
+          s"checkpoint $checkpoint was created against build era $recorded " +
+            s"but the index at $root is now era $era — it was rebuilt; " +
+            "resume with a FRESH checkpoint (replaying this one could " +
+            "double-count documents the rebuild corpus already contains)")
+      case None =>
+        // A marker-less checkpoint that ALREADY holds Spark streaming
+        // state predates this guard — its true era is unknown, so
+        // anchoring it to the CURRENT era would let a pre-rebuild
+        // checkpoint sail through (the exact replay double-count the
+        // guard exists to stop). Only a genuinely fresh checkpoint (no
+        // offsets yet) may adopt the current era.
+        val offsets = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
+        val fs = offsets.getFileSystem(conf)
+        require(!fs.exists(offsets) || fs.listStatus(offsets).isEmpty,
+          s"checkpoint $checkpoint has streaming offsets but no recorded " +
+            s"build era — it predates the era guard, and the index at $root " +
+            "may have been rebuilt since it was written; resume with a " +
+            "FRESH checkpoint")
+        StateCommit.writeSmallFile(conf, marker, era.toString)
     }
   }
 
@@ -85,16 +80,10 @@ object StreamingLex {
   def start(docs: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery = {
     guardEra(docs, root, checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        LexIndex.ingestBatch(batch.sparkSession, batch.toDF(), root, batchId,
-          seqCol = seqCol)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(docs, checkpoint) { (batch, batchId) =>
+      LexIndex.ingestBatch(batch.sparkSession, batch, root, batchId,
+        seqCol = seqCol)
+    }
   }
 
   /** Start an AvailableNow UPSERT pass — the CDC shape: each micro-batch
@@ -106,16 +95,10 @@ object StreamingLex {
   def startUpsert(docs: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery = {
     guardEra(docs, root, checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        LexIndex.upsertBatch(batch.sparkSession, batch.toDF(), root, batchId,
-          seqCol = seqCol)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(docs, checkpoint) { (batch, batchId) =>
+      LexIndex.upsertBatch(batch.sparkSession, batch, root, batchId,
+        seqCol = seqCol)
+    }
   }
 
   /** Read-side convenience: BM25 top-k over the maintained index. */

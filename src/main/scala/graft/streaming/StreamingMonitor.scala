@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Temporal
 
@@ -39,7 +39,7 @@ object StreamingMonitor {
     * unreferenced and gets overwritten). */
   def applyBatch(statePath: String, batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (StateCommit.currentVersion(spark, statePath).exists(batchId <= _)) return
+    if (StateCommit.applied(spark, statePath, batchId)) return
     val inc = Temporal.hourlyOf(batch)
     // reads snap-<prev>, writes snap-<batchId> — never its own input
     val merged = StateCommit.readTable(spark, statePath, "hourly") match {
@@ -66,12 +66,7 @@ object StreamingMonitor {
   /** Start an AvailableNow monitoring pass of `events` (raw event rows
     * with ts + event_type) into the state at `statePath`. */
   def start(events: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(statePath, batch.toDF(), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(events, checkpoint) { (batch, batchId) =>
+      applyBatch(statePath, batch, batchId)
+    }
 }

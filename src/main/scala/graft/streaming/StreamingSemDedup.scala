@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{CdcBatch, SemDedupIndex, Stage}
 
@@ -35,17 +35,11 @@ object StreamingSemDedup {
     * one vector inside a trigger window collapse to the recent one. */
   def start(vectors: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty)
-          SemDedupIndex.upsert(batch.sparkSession, root, batch.toDF(),
-            seqCol = seqCol)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(vectors, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        SemDedupIndex.upsert(batch.sparkSession, root, batch,
+          seqCol = seqCol)
+    }
 
   /** Probe-then-ingest: verdicts for batch B land at `out/batch_id=B`
     * BEFORE the batch joins the index (a vector is never its own
@@ -58,23 +52,17 @@ object StreamingSemDedup {
   def startProbed(vectors: DataFrame, root: String,
       checkpoint: String, out: String, threshold: Double = 0.35,
       seqCol: String = ""): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val collapsed = Stage.snap(
-            CdcBatch.collapse(batch.toDF(), "vec_id", seqCol),
-            materialize = true)
-          SemDedupIndex.probe(spark, root, collapsed, threshold)
-            .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-          SemDedupIndex.upsertCollapsed(spark, root, collapsed)
-        }
-        ()
+    AvailableNow.foreachBatch(vectors, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val spark = batch.sparkSession
+        val collapsed = Stage.snap(
+          CdcBatch.collapse(batch, "vec_id", seqCol),
+          materialize = true)
+        SemDedupIndex.probe(spark, root, collapsed, threshold)
+          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+        SemDedupIndex.upsertCollapsed(spark, root, collapsed)
       }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** All batches' verdicts, with the `batch_id` partition column
     * recovered from the directory layout. */

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sync.SyncEngine
 
@@ -29,13 +29,7 @@ object StreamingSync {
     * same DataFrame `SyncEngine.sync` returns in batch mode). */
   def start(engine: SyncEngine, normalized: DataFrame, checkpoint: String,
       onSummary: Seq[Row] => Unit = _ => ()): StreamingQuery =
-    normalized.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        onSummary(engine.sync(batch).collect().toSeq)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    AvailableNow.foreachBatch(normalized, checkpoint) { (batch, _) =>
+      onSummary(engine.sync(batch).collect().toSeq)
+    }
 }

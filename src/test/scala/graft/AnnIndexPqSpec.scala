@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
 import graft.operators.{AnnIndexPq, Similarity}
+import graft.streaming.StateCommit
 
 /** Persisted IVF-PQ index: row-for-row parity with the in-query
   * operator, file-level pruning (unprobed cells are never read — not
@@ -117,7 +118,7 @@ class AnnIndexPqSpec extends SparkSpec {
     // OTHER cell must leave the result identical
     val probedCell = {
       // recompute the probe the same way search does: nearest coarse cell
-      val coarse = AnnIndexPq.metaTable(spark, root, v, "coarse")
+      val coarse = StateCommit.metaTable(spark, root, v, AnnIndexPq.metaSchema, "coarse")
       val r = one.crossJoin(broadcast(coarse))
         .select(col("ccell"),
           expr("aggregate(zip_with(qe, cce, (x, c) -> (double(x) - c) * (double(x) - c)), 0D, (acc, x) -> acc + x)").as("d2"))
@@ -145,7 +146,8 @@ class AnnIndexPqSpec extends SparkSpec {
     // every vector posts exactly m code rows, once
     val counts = {
       val v = AnnIndexPq.version(spark, root)
-      val entries = AnnIndexPq.metaTable(spark, root, v, "manifest")
+      val entries = StateCommit.metaTable(spark, root, v,
+        AnnIndexPq.metaSchema, "manifest")
         .collect().map(r => (r.getString(0), r.getLong(1)))
       entries.groupBy(_._2).map { case (g, es) =>
         spark.read.option("basePath", s"$root/gen-$g")
@@ -165,7 +167,8 @@ class AnnIndexPqSpec extends SparkSpec {
     AnnIndexPq.upsert(spark, root, part2)
     val bad2 = {
       val v = AnnIndexPq.version(spark, root)
-      val entries = AnnIndexPq.metaTable(spark, root, v, "manifest")
+      val entries = StateCommit.metaTable(spark, root, v,
+        AnnIndexPq.metaSchema, "manifest")
         .collect().map(r => (r.getString(0), r.getLong(1)))
       entries.groupBy(_._2).map { case (g, es) =>
         spark.read.option("basePath", s"$root/gen-$g")
@@ -225,7 +228,7 @@ class AnnIndexPqSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
     assert(resAfter == resBefore, "compaction changed probe results")
     val v = AnnIndexPq.version(spark, root)
-    val gens = AnnIndexPq.metaTable(spark, root, v, "manifest")
+    val gens = StateCommit.metaTable(spark, root, v, AnnIndexPq.metaSchema, "manifest")
       .collect().map(_.getLong(1)).toSet
     assert(gens == Set(v), s"compaction left multiple live generations: $gens")
   }

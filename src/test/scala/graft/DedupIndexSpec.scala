@@ -156,10 +156,11 @@ class DedupIndexSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().sorted.toSeq
     assert(after == before, "compaction changed probe results")
     val v = DedupIndex.version(spark, root)
-    val gens = DedupIndex.metaTable(spark, root, v, "manifest")
+    val gens = StateCommit.metaTable(spark, root, v, DedupIndex.metaSchema, "manifest")
       .collect().map(_.getLong(0)).toSeq
     assert(gens == Seq(v), s"compaction left multiple live generations: $gens")
-    val tombs = DedupIndex.metaTable(spark, root, v, "tombstones").count()
+    val tombs = StateCommit.metaTable(spark, root, v, DedupIndex.metaSchema,
+      "tombstones").count()
     assert(tombs == 0, s"compaction left $tombs tombstones")
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
 import graft.operators.LexIndex
+import graft.streaming.StateCommit
 
 /** Inverted-index contracts: search equals corpus-recomputed BM25, the
   * query plan touches only the query terms' postings (filter pushed to
@@ -177,7 +178,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.ingest(spark, Seq(fresh).toDF("doc_id", "text"), ref)
     def stats(r: String): Seq[Long] = {
       val v = graft.streaming.StateCommit.currentVersion(spark, r).get
-      val row = LexIndex.metaTable(spark, r, v, "stats").head()
+      val row = StateCommit.metaTable(spark, r, v, LexIndex.metaSchema, "stats").head()
       Seq(row.getLong(0), row.getLong(1), row.getLong(2))
     }
     assert(stats(root) == stats(ref),
@@ -251,7 +252,7 @@ class LexIndexSpec extends SparkSpec {
     val before = rows()
     val vc = LexIndex.compactGenerations(spark, root)
     assert(rows() == before, "compaction changed the post-delete answer")
-    val tombs = LexIndex.metaTable(spark, root, vc, "tombstones")
+    val tombs = StateCommit.metaTable(spark, root, vc, LexIndex.metaSchema, "tombstones")
     assert(tombs.count() == 0, "compaction must clear the tombstones")
     // the compacted generation must not carry the dead rows
     val compacted = spark.read.parquet(s"$root/gen-$vc/postings")
@@ -483,7 +484,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.build(spark, docs, root)
     def tombRows(): Long = {
       val v = graft.streaming.StateCommit.currentVersion(spark, root).get
-      LexIndex.metaTable(spark, root, v, "tombstones").count()
+      StateCommit.metaTable(spark, root, v, LexIndex.metaSchema, "tombstones").count()
     }
     val sweep = docs.where(col("doc_id") % 9 === 0).select("doc_id")
     LexIndex.delete(spark, root, sweep)
@@ -530,7 +531,7 @@ class LexIndexSpec extends SparkSpec {
     // n_docs must equal the reference's exactly (pre-fix: off by one)
     def nDocs(r: String): Long = {
       val v = graft.streaming.StateCommit.currentVersion(spark, r).get
-      LexIndex.metaTable(spark, r, v, "stats").head().getLong(0)
+      StateCommit.metaTable(spark, r, v, LexIndex.metaSchema, "stats").head().getLong(0)
     }
     assert(nDocs(root) == nDocs(rootRef), "duplicate batch inflated n_docs")
     // without a seq column the collapse is deterministic: two identical
@@ -554,7 +555,7 @@ class LexIndexSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
 
     val v = LexIndex.compactGenerations(spark, root)
-    val manifest = LexIndex.metaTable(spark, root, v, "manifest")
+    val manifest = StateCommit.metaTable(spark, root, v, LexIndex.metaSchema, "manifest")
       .collect().map(_.getLong(0)).toSeq
     assert(manifest == Seq(v), s"manifest not compacted: $manifest")
     val after = LexIndex.search(spark, root, terms, k = 20)

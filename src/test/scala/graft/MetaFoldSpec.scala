@@ -78,13 +78,8 @@ class MetaFoldSpec extends SparkSpec {
 
     // hand-unfold the committed snapshot into the pre-fold layout and
     // re-read everything through the public APIs
-    unfold(root, v, Seq(
-      "coarse" -> AnnIndexPq.metaTable(spark, root, v, "coarse"),
-      "codebook" -> AnnIndexPq.metaTable(spark, root, v, "codebook"),
-      "params" -> AnnIndexPq.metaTable(spark, root, v, "params"),
-      "manifest" -> AnnIndexPq.metaTable(spark, root, v, "manifest"),
-      "stats" -> AnnIndexPq.metaTable(spark, root, v, "stats"),
-      "drift" -> AnnIndexPq.metaTable(spark, root, v, "drift")))
+    unfold(root, v, Seq("coarse", "codebook", "params", "manifest", "stats", "drift")
+      .map(t => t -> StateCommit.metaTable(spark, root, v, AnnIndexPq.metaSchema, t)))
     val after = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
       .collect().map(_.toString).toSeq
     assert(after == before, "pre-fold fallback read a different index")
@@ -108,11 +103,8 @@ class MetaFoldSpec extends SparkSpec {
     val before = AnnIndex.search(spark, root, q, nProbes = 2, k = 5)
       .collect().map(_.toString).toSeq
     assert(before.nonEmpty)
-    unfold(root, v, Seq(
-      "centroids" -> AnnIndex.metaTable(spark, root, v, "centroids"),
-      "manifest" -> AnnIndex.metaTable(spark, root, v, "manifest"),
-      "stats" -> AnnIndex.metaTable(spark, root, v, "stats"),
-      "drift" -> AnnIndex.metaTable(spark, root, v, "drift")))
+    unfold(root, v, Seq("centroids", "manifest", "stats", "drift")
+      .map(t => t -> StateCommit.metaTable(spark, root, v, AnnIndex.metaSchema, t)))
     val after = AnnIndex.search(spark, root, q, nProbes = 2, k = 5)
       .collect().map(_.toString).toSeq
     assert(after == before, "pre-fold fallback read a different index")
@@ -131,9 +123,8 @@ class MetaFoldSpec extends SparkSpec {
     // t-less schema is what the fallback probe discriminates on.
     // Capture the scheme BEFORE the unfold deletes the folded file.
     val (k, r) = DedupIndex.scheme(spark, root)
-    unfold(root, v, Seq(
-      "manifest" -> DedupIndex.metaTable(spark, root, v, "manifest"),
-      "tombstones" -> DedupIndex.metaTable(spark, root, v, "tombstones")))
+    unfold(root, v, Seq("manifest", "tombstones")
+      .map(t => t -> StateCommit.metaTable(spark, root, v, DedupIndex.metaSchema, t)))
     Seq((k, r)).toDF("k", "r")
       .coalesce(1).write.parquet(StateCommit.tableDir(root, v, "meta"))
     val after = DedupIndex.classifyBatch(spark, root, probe)

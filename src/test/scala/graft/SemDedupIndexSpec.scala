@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SemDedupIndex, Similarity}
-import graft.streaming.StreamingSemDedup
+import graft.streaming.{StateCommit, StreamingSemDedup}
 
 /** Persisted semantic-dedup index (round-15 ask #1): probe over a
   * fresh index is row-identical to the in-query cells operator, the
@@ -78,8 +78,8 @@ class SemDedupIndexSpec extends SparkSpec {
       s"upserted vector not probeable: ${vB.head}")
     // quantizer identity: the scheme's quant_gen still points at the
     // build generation (no retrain happened on upsert)
-    val scheme = SemDedupIndex.metaTable(spark, root,
-      SemDedupIndex.version(spark, root), "scheme").head()
+    val scheme = StateCommit.metaTable(spark, root,
+      SemDedupIndex.version(spark, root), SemDedupIndex.metaSchema, "scheme").head()
     assert(scheme.getLong(4) == 1L,
       s"upsert retrained/moved the quantizer: quant_gen=${scheme.getLong(4)}")
   }

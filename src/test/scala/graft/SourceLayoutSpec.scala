@@ -14,8 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * sync path's state goes through Hadoop via [[graft.streaming
   * .StateCommit]] (one atomic small-file write, one partition lister),
   * the tombstone format lives in [[graft.streaming.GenerationalTable]],
-  * the cell-entries format in [[graft.streaming.CellTable]], and the
-  * folded-meta probe and generation paths live in StateCommit.
+  * the cell-entries format in [[graft.streaming.CellTable]], the
+  * folded-meta probe and generation paths live in StateCommit, each
+  * family's folded meta is declared once as a
+  * [[graft.streaming.MetaSchema]], and every streaming query runs
+  * through [[graft.streaming.AvailableNow]].
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -64,6 +67,10 @@ class SourceLayoutSpec extends AnyFunSuite {
       f.startsWith("graft/sync/") || f.startsWith("graft/store/")).isEmpty)
   }
 
+  test("the cli checks state paths through Hadoop, not java.nio.file") {
+    assert(!filesContaining("java.nio.file")("graft/cli/Main.scala"))
+  }
+
   test("ATOMIC_MOVE appears nowhere: cursor files go through StateCommit") {
     assert(filesContaining("ATOMIC_MOVE").isEmpty)
   }
@@ -106,5 +113,24 @@ class SourceLayoutSpec extends AnyFunSuite {
     assert(filesContaining("def commitBuckets").isEmpty)
     assert(filesContaining("listPartitionDirs(") == Set(
       "graft/streaming/StateCommit.scala", cellTable, "graft/events/Events.scala"))
+  }
+
+  test("each family declares its folded meta once, as a MetaSchema") {
+    val copies = Seq("MetaCols", "def metaCols(", "def metaTable(")
+      .flatMap(filesContaining).filterNot(_.startsWith("graft/streaming/"))
+    assert(copies.isEmpty, copies.toString)
+    assert(filesContaining("foldMetaRows(").subsetOf(Set(
+      "graft/streaming/StateCommit.scala", "graft/streaming/MetaSchema.scala")))
+  }
+
+  test("Trigger.AvailableNow appears only in the streaming runner") {
+    assert(filesContaining("Trigger.AvailableNow") ==
+      Set("graft/streaming/AvailableNow.scala"))
+  }
+
+  test("neither ANN index finds a delete's cells with a left_semi join") {
+    assert(filesContaining("left_semi").intersect(Set(
+      "graft/operators/AnnIndex.scala", "graft/operators/AnnIndexPq.scala"))
+      .isEmpty)
   }
 }
