@@ -65,6 +65,9 @@ final class EnsureStoreVectorStore(spark: SparkSession, root: String,
 
   def upsert(payloads: DataFrame): Int = { ensureStore(); inner.upsert(payloads) }
   def deleteByIds(ids: DataFrame): Int = { ensureStore(); inner.deleteByIds(ids) }
+  override def replace(ids: DataFrame, payloads: DataFrame): Int = {
+    ensureStore(); inner.replace(ids, payloads)
+  }
   def deleteByProduct(productId: Long, siteId: Int): Int = {
     ensureStore(); inner.deleteByProduct(productId, siteId)
   }

@@ -33,6 +33,9 @@ final class RetryingStore(
 
   override def upsert(payloads: DataFrame): Int = withRetry(inner.upsert(payloads))
   override def deleteByIds(ids: DataFrame): Int = withRetry(inner.deleteByIds(ids))
+  /** One op: a transient failure retries the whole fused delete+upsert. */
+  override def replace(ids: DataFrame, payloads: DataFrame): Int =
+    withRetry(inner.replace(ids, payloads))
   override def deleteByProduct(p: Long, s: Int): Int =
     withRetry(inner.deleteByProduct(p, s))
   override def purgeSite(s: Int): Int = withRetry(inner.purgeSite(s))

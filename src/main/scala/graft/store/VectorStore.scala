@@ -14,6 +14,17 @@ import graft.streaming.CellTable.Manifest
 trait VectorStoreWriter {
   def upsert(payloads: DataFrame): Int
   def deleteByIds(ids: DataFrame): Int
+
+  /** A sync pass's chunk delta: delete `ids`, then upsert `payloads`, so
+    * an id in both ends as the upsert. The default is the reference's two
+    * calls (`class-indexer.php:390-409`); a store that can apply both in
+    * one commit overrides it, and then a reader never sees the deletes
+    * without the upserts. */
+  def replace(ids: DataFrame, payloads: DataFrame): Int = {
+    deleteByIds(ids)
+    upsert(payloads)
+  }
+
   def deleteByProduct(productId: Long, siteId: Int): Int
   def purgeSite(siteId: Int): Int
   def read(): DataFrame
@@ -51,7 +62,10 @@ trait VectorStoreWriter {
   * generation no manifest references any more is reclaimed by the
   * shared commit tail. All of a product's chunk vectors share a bucket,
   * so the per-product delete and the sync delta's upserts each touch
-  * exactly the buckets they name.
+  * exactly the buckets they name. A sync pass that both deletes stale
+  * chunks and upserts new ones applies them with [[replace]], one read
+  * and one rewrite of their buckets in one commit, where the trait's
+  * default would commit twice and rewrite the shared buckets twice.
   *
   * `siteBuckets = true` extends the bucket key to
   * `site_id * nBuckets + product_id % nBuckets` — every bucket then holds
@@ -193,12 +207,7 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     * batch, and without the collapse both rows land and read() returns
     * duplicate ids until a later upsert replaces them. */
   def upsert(payloads: DataFrame): Int = {
-    // cache: the touched-bucket collect() and the commit write would
-    // otherwise each evaluate the caller's (possibly expensive) plan
-    val incoming = graft.operators.CdcBatch.collapse(
-        payloads.select(schema.fieldNames.toIndexedSeq.map(col): _*), "id")
-      .withColumn("bucket", bucketCol)
-      .cache()
+    val incoming = keyedPayloads(payloads)
     try {
       val touched = incoming.select("bucket").distinct()
         .collect().map(_.getInt(0)).toIndexedSeq
@@ -209,13 +218,49 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
 
   /** K4 — delete by ids, routed to buckets via the id format. */
   def deleteByIds(ids: DataFrame): Int = {
-    val keyed = ids.select("id").withColumn("bucket", bucketOfId).cache()
+    val keyed = keyedIds(ids)
     try {
       val touched = keyed.select("bucket").distinct()
         .collect().map(_.getInt(0)).filter(_ >= 0).toIndexedSeq
       delete(committed(), touched)(CellTable.dropKeys(_, keyed, "id"))
     } finally keyed.unpersist()
   }
+
+  /** Delete `ids` and upsert `payloads` as ONE commit: the upserts'
+    * buckets plus the live buckets of the deletes are read once and
+    * rewritten once, without every id of either set and with the incoming
+    * rows, so an id in both ends as the upsert. A kill before the pointer
+    * swap leaves the previous version whole. */
+  override def replace(ids: DataFrame, payloads: DataFrame): Int = {
+    val keyed = keyedIds(ids)
+    val incoming = keyedPayloads(payloads)
+    try {
+      val c = committed()
+      // one job for both sets' buckets; a delete bucket with no manifest
+      // entry holds nothing to delete
+      val touched = incoming.select(col("bucket"), lit(true).as("up"))
+        .unionByName(keyed.select(col("bucket"), lit(false).as("up")))
+        .distinct().collect()
+        .filter(r => r.getBoolean(1) || c.manifest.contains(r.getInt(0).toString))
+        .map(_.getInt(0)).distinct.toIndexedSeq
+      val dropped = keyed.select("id").unionByName(incoming.select("id"))
+      rewrite(c, touched)(
+        CellTable.dropKeys(_, dropped, "id").unionByName(incoming))
+    } finally { keyed.unpersist(); incoming.unpersist() }
+  }
+
+  /** Incoming payloads in store columns with their bucket, cached: the
+    * touched-bucket collect() and the commit write would otherwise each
+    * evaluate the caller's (possibly expensive) plan. */
+  private def keyedPayloads(payloads: DataFrame): DataFrame =
+    graft.operators.CdcBatch.collapse(
+        payloads.select(schema.fieldNames.toIndexedSeq.map(col): _*), "id")
+      .withColumn("bucket", bucketCol)
+      .cache()
+
+  /** Ids to delete with the bucket their id format routes to, cached. */
+  private def keyedIds(ids: DataFrame): DataFrame =
+    ids.select("id").withColumn("bucket", bucketOfId).cache()
 
   /** K3 — delete by metadata filter {product_id, site_id} (the Pinecone
     * `$eq` filter form); exactly one bucket rewritten. */

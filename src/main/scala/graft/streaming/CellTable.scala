@@ -7,7 +7,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  StructField, StructType}
 
 /** The cell-entries layout shared by the roots whose rows are partitioned
   * by one key column ([[graft.operators.AnnIndex]] and
@@ -79,12 +80,18 @@ final case class CellTable(key: String, emptySchema: StructType) {
   /** Write `df` partitioned by the key as generation `v` and return the
     * next manifest — `prior` without the `replaced` values, plus every
     * partition written, pointing at `v` — and whether it dropped a
-    * generation `prior` referenced (the commit's GC trigger). */
+    * generation `prior` referenced (the commit's GC trigger).
+    *
+    * Vector columns (`array<float>`, `array<double>`) are written without
+    * a dictionary. Dense embeddings are unique floats, so parquet's
+    * dictionary attempt always falls back to PLAIN and leaves the same
+    * bytes, yet the attempt costs a quarter of the write. */
   def write(root: String, v: Long, df: DataFrame, prior: Map[String, Long],
       replaced: Set[String]): (Map[String, Long], Boolean) = {
     val spark = df.sparkSession
     val dir = StateCommit.genDir(root, v)
-    df.write.mode("overwrite").partitionBy(key).parquet(dir)
+    df.write.options(CellTable.noVectorDictionary(df.schema))
+      .mode("overwrite").partitionBy(key).parquet(dir)
     StateCommit.noteWrittenSchema(spark, dir, withKey(df.schema))
     val next = prior -- replaced ++
       StateCommit.listPartitionDirs(spark, dir, key).map(_ -> v)
@@ -130,6 +137,15 @@ object CellTable {
     * [[StateCommit.metaRows]] returns them. */
   def entries(rows: Seq[Row]): Map[String, Long] =
     rows.map(r => r.get(0).toString -> r.getLong(1)).toMap
+
+  /** Parquet writer options that turn the dictionary off for every
+    * top-level `array<float>`/`array<double>` column of `schema`, by the
+    * column path Spark's standard list layout gives its elements. */
+  private def noVectorDictionary(schema: StructType): Map[String, String] =
+    schema.collect {
+      case StructField(name, ArrayType(FloatType | DoubleType, _), _, _) =>
+        s"parquet.enable.dictionary#$name.list.element" -> "false"
+    }.toMap
 
   /** The footer key under which Spark records a parquet file's row
     * schema as JSON. */

@@ -1,6 +1,6 @@
 package graft.sync
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,7 +26,14 @@ import graft.streaming.StateCommit
   *     → payloads
   *     → full-outer join with sync_state on (product_id, chunk_index)  [J4]
   *     → route delete / upsert / skip
-  *     → vector-store merge + sync_state snapshot merge + summary      [A4]
+  *     → summary [A4] → vector-store merge → sync_state snapshot merge
+  *
+  * The short-circuit split is planned and computed once (cached) and read
+  * by every later stage. The summary (per-action chunk counts, the
+  * skipped products and the event's site) is read in one job BEFORE any
+  * write, and its counts pick the store call: deletes and upserts go
+  * through [[VectorStoreWriter.replace]], so a pass commits the store at
+  * most ONCE, and a pass with nothing to write commits it not at all.
   *
   * Scale posture: the only wide exchanges are (a) the short-circuit
   * anti-join and (b) the J4 full-outer join, both equi-joins on
@@ -171,21 +178,22 @@ final class SyncEngine(
   /** The delta plan shared by [[sync]] (which executes it) and
     * [[sampleDryRun]] (which only reports it): short-circuit split,
     * payload build, per-chunk full-outer routing, and the would-be
-    * delete-id / upsert sets. withSha/existing/payloads/routed are
-    * cached (the multiply-consumed frames) — call
-    * [[DeltaParts.unpersistAll]] when done. */
+    * delete-id / upsert sets. existing/split/payloads/routed are cached
+    * (the multiply-consumed frames; `unchanged` and `changed` are
+    * filters of `split`, which carries the per-candidate `unchanged`
+    * flag) — call [[DeltaParts.unpersistAll]] when done. */
   private final case class DeltaParts(
-      withSha: DataFrame, existing: DataFrame, unchanged: DataFrame,
+      existing: DataFrame, split: DataFrame, unchanged: DataFrame,
       changed: DataFrame, payloads: DataFrame, routed: DataFrame,
       deleteIds: DataFrame, upserts: DataFrame) {
     def unpersistAll(): Unit = {
-      withSha.unpersist(); existing.unpersist()
+      existing.unpersist(); split.unpersist()
       payloads.unpersist(); routed.unpersist()
     }
   }
 
   private def deltaParts(normalized: DataFrame, force: Boolean): DeltaParts = {
-    val withSha = fingerprinted(normalized).cache()
+    val withSha = fingerprinted(normalized)
     val existing = readSyncState().where(col("target") === target).cache()
 
     // Rebuild triggers: model/dimension mismatch → treat as changed
@@ -201,16 +209,16 @@ final class SyncEngine(
 
     // Short-circuit (`class-indexer.php:329-360`) hoisted BEFORE embedding:
     // unchanged = same product_sha and no rebuild trigger and not forced.
-    val joined = withSha.join(existingByProduct, Seq("product_id"), "left_outer")
-    val unchanged =
-      if (force) joined.where(lit(false))
-      else joined.where(col("old_sha") === col("product_sha") &&
-        col("rebuild") === 0 && col("has_error") === 0)
-    val changed =
-      if (force) joined
-      else joined.where(col("old_sha").isNull ||
-        col("old_sha") =!= col("product_sha") || col("rebuild") === 1 ||
-        col("has_error") === 1)
+    // Planned and computed once: the payload build, the routing's
+    // semi-join, the summary read and the sync_state merge all read it.
+    val split = withSha.join(existingByProduct, Seq("product_id"), "left_outer")
+      .withColumn("unchanged",
+        if (force) lit(false)
+        else coalesce(col("old_sha") === col("product_sha") &&
+          col("rebuild") === 0 && col("has_error") === 0, lit(false)))
+      .cache()
+    val unchanged = split.where(col("unchanged"))
+    val changed = split.where(!col("unchanged"))
 
     val payloads = buildPayloads(
       changed.select("product_id", "site_id", "sku", "text", "product_sha")).cache()
@@ -247,7 +255,7 @@ final class SyncEngine(
       routed.where(col("action") === "upsert")
         .select("product_id", "chunk_index"),
       Seq("product_id", "chunk_index"), "left_semi")
-    DeltaParts(withSha, existing, unchanged, changed, payloads, routed,
+    DeltaParts(existing, split, unchanged, changed, payloads, routed,
       deleteIds, upserts)
   }
 
@@ -297,27 +305,54 @@ final class SyncEngine(
     * Returns the per-action summary DataFrame (upserted/deleted/skipped). */
   def sync(normalized: DataFrame, force: Boolean = false): DataFrame = {
     val parts = deltaParts(normalized, force)
-    try syncImpl(parts, force) finally parts.unpersistAll()
+    try syncImpl(parts) finally parts.unpersistAll()
   }
 
-  private def syncImpl(parts: DeltaParts, force: Boolean): DataFrame = {
+  private def syncImpl(parts: DeltaParts): DataFrame = {
     val unchanged = parts.unchanged
     val changed = parts.changed
     val payloads = parts.payloads
     val routed = parts.routed
-    val deleteIds = parts.deleteIds
-    val upserts = parts.upserts
+
+    // A4 summary (`class-indexer.php:468-477`) and the event's site, read
+    // in ONE job before any write: the per-action chunk counts route the
+    // store call, and the pass needs no other action to learn them.
+    // Site attribution from the batch itself (a hardcoded 1 mislabeled
+    // every non-default-site pass): single-site batch → that site;
+    // multi-site or empty batch → NULL (an equality filter on site_id
+    // then correctly excludes the row rather than mis-attributing it).
+    val acted = routed.groupBy("action").agg(count(lit(1)).as("n"))
+    val skippedUnchanged = parts.split.agg(
+        coalesce(sum(when(col("unchanged"), 1L)), lit(0L)).as("n"),
+        min("site_id").as("site_lo"), max("site_id").as("site_hi"),
+        max(col("site_id").isNull).as("site_null"))
+      .withColumn("action", lit("skip_unchanged"))
+    val tally = acted.unionByName(skippedUnchanged, allowMissingColumns = true)
+    val tallied = tally.collect()
+    val materialized = tallied.map(r => Row(r.getString(0), r.getLong(1)))
+      .sortBy(_.getString(0)).toSeq
+    val counts = materialized.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val siteForEvent: Option[Int] = tallied.collectFirst {
+      case r if r.getString(0) == "skip_unchanged" && !r.isNullAt(2) &&
+          r.getInt(2) == r.getInt(3) && !r.getBoolean(4) => r.getInt(2)
+    }
+
     // Zero-remote-call short-circuit (golden case B): unchanged products
     // must produce NO store writes at all (`class-indexer.php:329-360`).
+    // A pass with both deletes and upserts commits them as ONE store
+    // version ([[VectorStoreWriter.replace]]).
     // Write failure poisons only this run's rows (marked status=error and
     // re-picked next pass), not the job (`class-indexer.php:438-443`).
+    val (hasDeletes, hasUpserts) =
+      (counts.getOrElse("delete", 0L) > 0, counts.getOrElse("upsert", 0L) > 0)
+    val upserts = parts.upserts.select(
+      col("id"), col("values"), col("site_id"), col("product_id"),
+      col("sku"), col("url"), col("updated_at"), col("fingerprint"), col("fields"))
     val writeError: Option[Throwable] =
       try {
-        if (deleteIds.limit(1).count() > 0) store.deleteByIds(deleteIds)
-        if (upserts.limit(1).count() > 0)
-          store.upsert(upserts.select(
-            col("id"), col("values"), col("site_id"), col("product_id"),
-            col("sku"), col("url"), col("updated_at"), col("fingerprint"), col("fields")))
+        if (hasDeletes && hasUpserts) store.replace(parts.deleteIds, upserts)
+        else if (hasDeletes) store.deleteByIds(parts.deleteIds)
+        else if (hasUpserts) store.upsert(upserts)
         None
       } catch { case e: Throwable => Some(e) }
 
@@ -339,9 +374,8 @@ final class SyncEngine(
     // The merge rewrites only THIS target's rows — a second adapter's
     // bookkeeping (other `target` values, reference's per-target row model
     // `includes/class-plugin.php:126-127`) passes through untouched.
-    val all = readSyncState()
-    val others = all.where(col("target") =!= target)
-    val mine = all.where(col("target") === target)
+    val others = readSyncState().where(col("target") =!= target)
+    val mine = parts.existing
     val untouched = mine
       .join(changed.select("product_id"), Seq("product_id"), "left_anti")
     val touched = untouched
@@ -371,26 +405,10 @@ final class SyncEngine(
       .unionByName(freshRows.select(rest.columns.toIndexedSeq.map(col): _*))
       .unionByName(failedDeletes.select(rest.columns.toIndexedSeq.map(col): _*)))
 
-    // A4 summary (`class-indexer.php:468-477`).
-    val acted = routed.groupBy("action").agg(count(lit(1)).as("n"))
-    val skippedUnchanged = unchanged.agg(
-      coalesce(sum(lit(1)), lit(0L)).as("n_products"))
-      .select(lit("skip_unchanged").as("action"), col("n_products").as("n"))
-    val out = acted.unionByName(skippedUnchanged).orderBy("action")
-    val materialized = out.collect()
-
     // K8: append one event row per sync pass (reference logs per action,
     // `includes/class-events.php:18-47`; SURVEY §2.2 K8).
     events.foreach { log =>
-      val counts = materialized.map(r => r.getString(0) -> r.getLong(1)).toMap
       val outcome = if (writeError.isEmpty) "success" else "error"
-      // Site attribution from the batch itself (a hardcoded 1 mislabeled
-      // every non-default-site pass): single-site batch → that site;
-      // multi-site or empty batch → NULL (an equality filter on site_id
-      // then correctly excludes the row rather than mis-attributing it).
-      val sites = parts.withSha.select("site_id").distinct().limit(2).collect()
-      val siteForEvent: Option[Int] =
-        if (sites.length == 1) Some(sites(0).getInt(0)) else None
       import spark.implicits._
       log.append(Seq((clock, siteForEvent, target, "sync", outcome,
           counts.getOrElse("upsert", 0L), counts.getOrElse("delete", 0L),
@@ -400,7 +418,7 @@ final class SyncEngine(
           "upserted", "deleted", "skipped", "error_msg")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s"))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(materialized.toSeq), out.schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(materialized),
+      tally.select("action", "n").schema)
   }
 }

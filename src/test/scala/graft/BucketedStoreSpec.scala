@@ -89,6 +89,122 @@ class BucketedStoreSpec extends SparkSpec {
     assert(gens == gensBefore, "a delete matching no live bucket wrote a generation")
   }
 
+  private def payloadSku(pid: Long, chunk: Int, sku: String) =
+    payload(pid, chunk).copy(_5 = sku)
+
+  /** Every stored row as text, sorted. */
+  private def contents(store: ParquetVectorStore): Seq[String] =
+    store.read().collect().map(_.toString).sorted.toSeq
+
+  /** The bucket dirs of generation `g` under `root`. */
+  private def bucketsOf(root: Path, g: Int): Set[String] =
+    Files.list(root.resolve(s"gen-$g")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("bucket=")).toSet
+
+  test("replace: one commit rewrites the upsert and live delete buckets; the rest stay byte-identical") {
+    val seed = Seq(payload(0, 0), payload(1, 0), payload(2, 0), payload(6, 0))
+    // product 1 (bucket 1) is deleted outright, product 2's chunk 0
+    // (bucket 2) is both deleted and upserted, product 7 routes to bucket
+    // 3, which has no manifest entry
+    val ids = Seq("site-1:product-1:chunk-0", "site-1:product-2:chunk-0",
+      "site-1:product-7:chunk-0").toDF("id")
+    val ups = Seq(payloadSku(2, 0, "NEW"), payload(6, 1)).toDF(cols: _*)
+
+    val root = Files.createTempDirectory("breplace")
+    val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4)
+    store.upsert(seed.toDF(cols: _*))
+    val bucket0 = fileHashes(root.resolve("gen-1/bucket=0"))
+    assert(store.replace(ids, ups) == 2)
+    assert(store.currentVersion == 2, "delete and upsert commit as one version")
+    // only bucket 2 was written: bucket 1 came out empty and bucket 3
+    // (delete-only, never committed) was not touched
+    assert(bucketsOf(root, 2) == Set("bucket=2"))
+    assert(fileHashes(root.resolve("gen-1/bucket=0")) == bucket0)
+    assert(store.read().select("id", "sku").as[(String, String)].collect()
+      .sorted.toSeq == Seq("site-1:product-0:chunk-0" -> "SKU-0",
+        "site-1:product-2:chunk-0" -> "NEW", "site-1:product-6:chunk-0" -> "SKU-6",
+        "site-1:product-6:chunk-1" -> "SKU-6"))
+
+    // the same rows as the reference's delete-then-upsert
+    val ref = new ParquetVectorStore(spark,
+      Files.createTempDirectory("breplace_ref").toString, nBuckets = 4)
+    ref.upsert(seed.toDF(cols: _*))
+    ref.deleteByIds(ids)
+    ref.upsert(ups)
+    assert(ref.currentVersion == 3)
+    assert(contents(store) == contents(ref))
+  }
+
+  test("replace with only foreign-format ids equals a plain upsert") {
+    val seed = Seq(payload(0, 0), payload(1, 0)).toDF(cols: _*)
+    val ups = Seq(payloadSku(1, 0, "NEW"), payload(3, 0)).toDF(cols: _*)
+    val (rootA, rootB) = (Files.createTempDirectory("bforeign"),
+      Files.createTempDirectory("bforeign_ref"))
+    val a = new ParquetVectorStore(spark, rootA.toString, nBuckets = 4)
+    val b = new ParquetVectorStore(spark, rootB.toString, nBuckets = 4)
+    a.upsert(seed); b.upsert(seed)
+    a.replace(Seq("bogus-id", "also:not:ours").toDF("id"), ups)
+    b.upsert(ups)
+    assert(a.currentVersion == b.currentVersion)
+    assert(bucketsOf(rootA, 2) == bucketsOf(rootB, 2))
+    assert(contents(a) == contents(b))
+  }
+
+  test("vector columns are written without a dictionary and read back bit-identical") {
+    import org.apache.parquet.column.Encoding
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+
+    /** (column path → dictionary-encoded?) of the first parquet file
+      * under `dir`. */
+    def dictionaryByColumn(dir: Path): Map[String, Boolean] = {
+      val file = Files.walk(dir).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toString),
+        spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> (c.hasDictionaryPage ||
+          c.getEncodings.asScala.exists(e =>
+            e == Encoding.PLAIN_DICTIONARY || e == Encoding.RLE_DICTIONARY)))
+        .groupMapReduce(_._1)(_._2)(_ || _)
+      finally reader.close()
+    }
+
+    // low cardinality: four distinct floats, which parquet would
+    // otherwise dictionary-encode, including -0.0 and a subnormal
+    val palette = Seq(0.5f, -0.0f, 1.4e-45f, 3.25f)
+    val rows = (0 until 200).map { i =>
+      (s"site-1:product-0:chunk-$i", Seq.tabulate(8)(j => palette((i + j) % 4)),
+        1, 0L, "SKU-0", "https://x", "2024-01-01", "sha256:x", Seq("title"))
+    }
+    val root = Files.createTempDirectory("bnodict")
+    val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4)
+    store.upsert(rows.toDF(cols: _*))
+    val dict = dictionaryByColumn(root.resolve("gen-1/bucket=0"))
+    assert(!dict("values.list.element"), dict)
+    // the option is scoped to vector columns: a repeated string keeps it
+    assert(dict("sku"), dict)
+    def bits(vs: Seq[Float]) = vs.map(java.lang.Float.floatToRawIntBits)
+    assert(store.read().select("id", "values").as[(String, Seq[Float])]
+      .collect().sortBy(_._1).toSeq.map(r => r._1 -> bits(r._2)) ==
+      rows.sortBy(_._1).map(r => r._1 -> bits(r._2)))
+
+    // and the array<double> embeddings of an AnnIndex
+    val vecs = (0 until 64).map(i =>
+      (i.toLong, Seq.tabulate(8)(j => ((i + j) % 4).toDouble / 4 - 0.3)))
+    val annRoot = Files.createTempDirectory("bnodict_ann")
+    graft.operators.AnnIndex.build(vecs.toDF("vec_id", "embedding"),
+      annRoot.toString, nCells = 2)
+    val annDict = dictionaryByColumn(annRoot.resolve("gen-1"))
+    assert(!annDict("embedding.list.element"), annDict)
+    val back = graft.operators.AnnIndex.vectors(spark, annRoot.toString)
+      .select("vec_id", "embedding").as[(Long, Seq[Double])].collect()
+      .sortBy(_._1).toSeq
+    assert(back.map(r => r._1 -> r._2.map(java.lang.Double.doubleToRawLongBits)) ==
+      vecs.map(r => r._1 -> r._2.map(java.lang.Double.doubleToRawLongBits)))
+  }
+
   test("ensure-store: lazy creation, cached id, deterministic re-mint") {
     val root = Files.createTempDirectory("vsstore").resolve("s").toString
     val store = new EnsureStoreVectorStore(spark, root)

@@ -22,7 +22,17 @@ class RetryingStoreSpec extends SparkSpec {
         case Nil => inner.upsert(p)
       }
     }
-    override def deleteByIds(ids: DataFrame): Int = inner.deleteByIds(ids)
+    override def deleteByIds(ids: DataFrame): Int = {
+      calls += 1
+      inner.deleteByIds(ids)
+    }
+    override def replace(ids: DataFrame, p: DataFrame): Int = {
+      calls += 1
+      failures match {
+        case msg :: rest => failures = rest; throw new RuntimeException(msg)
+        case Nil => inner.replace(ids, p)
+      }
+    }
     override def deleteByProduct(p: Long, s: Int): Int = inner.deleteByProduct(p, s)
     override def purgeSite(s: Int): Int = inner.purgeSite(s)
     override def read(): DataFrame = inner.read()
@@ -51,6 +61,31 @@ class RetryingStoreSpec extends SparkSpec {
     assert(scripted.calls == 3)
     assert(slept.toSeq == Seq(250L, 750L))
     assert(inner.count() == 3)
+  }
+
+  test("a transient failure inside replace retries the whole fused op") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val (inner, raw) = payloadDf
+    // ids in the store's format, so the delete routes to its bucket
+    val df = raw.withColumn("id",
+      format_string("site-1:product-%d:chunk-0", col("product_id")))
+    inner.upsert(df)
+    val v = inner.currentVersion
+    val ids = Seq("site-1:product-0:chunk-0").toDF("id")
+    val ups = df.where("product_id > 0").withColumn("sku", lit("NEW"))
+    val scripted = new ScriptedStore(inner, List("HTTP 429"))
+    val slept = scala.collection.mutable.ArrayBuffer[Long]()
+    new RetryingStore(scripted, slept.append(_)).replace(ids, ups)
+    // two replace calls and nothing else: no half-op was retried alone
+    assert(scripted.calls == 2 && slept.toSeq == Seq(250L))
+    assert(inner.currentVersion == v + 1)
+    // the same store as an uninterrupted run
+    val (ref, _) = payloadDf
+    ref.upsert(df)
+    ref.replace(ids, ups)
+    def rows(s: ParquetVectorStore) = s.read().collect().map(_.toString).sorted.toSeq
+    assert(rows(inner) == rows(ref) && rows(inner).length == 2)
   }
 
   test("non-transient failure propagates immediately, no retry") {

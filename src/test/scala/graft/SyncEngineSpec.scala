@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.embed.LocalHashEmbedder
 import graft.model.Selection
@@ -206,6 +207,56 @@ class SyncEngineSpec extends SparkSpec {
       e.getMessage.contains("re-sync into a fresh dir"), e.getMessage)
     intercept[IllegalStateException](engine.syncVersion)
     assert(store.currentVersion == 0, "the failed pass wrote nothing")
+  }
+
+  /** Spark jobs submitted by `f`, counted with a job group once the
+    * status tracker has seen a later marker job (events arrive in order). */
+  private def jobsOf(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(5)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("a pass plans its split once: no-change and edit passes submit fewer jobs") {
+    // adaptive execution submits query stages as jobs of their own, a
+    // count that varies from run to run; with it off a pass's jobs are
+    // fixed by its plan
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val base = docs(Seq(1L -> longText, 2L -> longText, 3L -> "tiny doc."))
+      val edit = docs(Seq(1L -> "Just one tiny sentence.",
+        2L -> (longText + " More words."), 3L -> "tiny doc."))
+      // warm the session's per-file schema caches on a throwaway root
+      val (warm, _) = mkEngine(Files.createTempDirectory("graftJobsWarm"))
+      warm.sync(base).collect(); warm.sync(edit).collect()
+
+      val (engine, store) = mkEngine(Files.createTempDirectory("graftJobs"))
+      engine.sync(base).collect()
+      val v0 = store.currentVersion
+      val noChange = jobsOf("sync-no-change")(engine.sync(base).collect())
+      assert(store.currentVersion == v0)
+      var summary: DataFrame = null
+      val edited = jobsOf("sync-edit") { summary = engine.sync(edit); summary.collect() }
+      assert(actions(summary) ==
+        Map("delete" -> 3L, "skip_unchanged" -> 1L, "upsert" -> 6L))
+      assert(summary.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+        Seq(("action", StringType, false), ("n", LongType, false)))
+      assert(store.currentVersion == v0 + 1, "the edit pass commits the store once")
+      // the same passes' counts when each consumer re-planned the split,
+      // two guard counts ran, the store committed delete and upsert
+      // apart, and the summary was read after the writes
+      val (oldNoChange, oldEdit) = (15, 27)
+      assert(noChange < oldNoChange && edited < oldEdit,
+        s"jobs: no-change $noChange (was $oldNoChange), edit $edited (was $oldEdit)")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("embeddings are deterministic and dimension-locked") {

@@ -15,7 +15,9 @@ import graft.sync.SyncEngine
   * sync_state, which both commit through [[StateCommit]]. A crash after a
   * commit's data write and before its pointer swap is simulated by
   * writing `CURRENT` back to the previous version: readers must see the
-  * old state, and re-running the interrupted operation must converge.
+  * old state, and re-running the interrupted operation must converge. A
+  * sync pass's store write is one commit, so there is no version that
+  * holds its deletes without its upserts.
   */
 class SyncKillPointSpec extends SparkSpec {
 
@@ -66,6 +68,45 @@ class SyncKillPointSpec extends SparkSpec {
 
   private val longText =
     (1 to 8).map(i => s"Sentence number $i with some padding words here.").mkString(" ")
+
+  test("sync: an edit pass commits its deletes and upserts as one store version; a kill before it reads as the whole old state") {
+    val dir = Files.createTempDirectory("killfused")
+    val storeRoot = dir.resolve("store").toString
+    val store = new ParquetVectorStore(spark, storeRoot)
+    val syncRoot = dir.resolve("sync").toString
+    val engine = new SyncEngine(spark, new LocalHashEmbedder(), store, syncRoot,
+      Selection(chunkSize = 25, chunkOverlap = 0))
+    def vectors = store.read().select("id", "values").as[(String, Seq[Float])]
+      .collect().sortBy(_._1).toSeq
+
+    engine.sync(docs(Seq(1L -> longText, 2L -> longText, 3L -> "tiny doc.")))
+      .collect()
+    val (vStore, vSync) = (store.currentVersion, engine.syncVersion)
+    val old = vectors
+    // product 1 shrinks (its later chunks go stale), product 2 changes
+    val b = docs(Seq(1L -> "tiny now.", 2L -> (longText + " More words."),
+      3L -> "tiny doc."))
+    val s = engine.sync(b).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(s.getOrElse("delete", 0L) > 0L && s.getOrElse("upsert", 0L) > 0L, s)
+    assert(store.currentVersion == vStore + 1)
+    val fresh = vectors
+    assert(fresh != old)
+
+    // killed before either pointer swap: the store reads as the complete
+    // old state, stale chunks and old vectors alike
+    rollBack(storeRoot, vStore)
+    rollBack(syncRoot, vSync)
+    assert(vectors == old)
+    assert(old.exists(_._1 == "site-1:product-1:chunk-1"))
+
+    engine.sync(b).collect()
+    assert(store.currentVersion == vStore + 1)
+    assert(vectors == fresh)
+    val state = engine.readSyncState()
+    assert(state.where(col("status") =!= "synced").count() == 0)
+    assert(state.select("vector_id").as[String].collect().sorted.toSeq ==
+      fresh.map(_._1))
+  }
 
   test("sync: a store commit without its sync_state commit heals on the re-run") {
     val dir = Files.createTempDirectory("killsync")
