@@ -8,6 +8,7 @@ import graft.embed.LocalHashEmbedder
 import graft.fingerprint.Fingerprint
 import graft.model.{Selection, Tuning}
 import graft.store.ParquetVectorStore
+import graft.streaming.StateCommit.exists
 import graft.sync.SyncEngine
 
 /** CLI surface mirroring the reference's `wp wcvec` commands + planned set
@@ -95,13 +96,6 @@ object Main {
       events = Some(new graft.events.EventLog(spark, s"$work/events"))))
   }
 
-  /** Whether `path` exists, through the Hadoop filesystem of the
-    * session (the state roots' own storage layer). */
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   private def docsAsProducts(spark: SparkSession, dir: String, limit: Int): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
       .limit(limit)
@@ -110,6 +104,124 @@ object Main {
         lit(1).as("site_id"),
         concat(lit("DOC-"), col("doc_id")).as("sku"),
         col("text"))
+
+  /** The `index-status` card of the persisted-index root `root`; throws
+    * `IllegalStateException` for a root with no commit or one the
+    * readers refuse. */
+  private def indexStatus(spark: SparkSession, root: String,
+      args: Array[String]): Unit = {
+    import graft.streaming.StateCommit
+    val cur = StateCommit.currentVersion(spark, root).getOrElse(
+      throw new IllegalStateException(s"no committed index at $root"))
+    val retained = StateCommit.versions(spark, root)
+    val ts = StateCommit.metaTableNames(spark, root, cur)
+    val family =
+      if (ts.contains("dfs")) "lexical"
+      else if (ts.contains("coarse")) "ivf-pq"
+      else if (ts.contains("centroids")) "ann"
+      else if (ts.contains("model")) "dsir"
+      // SemDedupIndex's folded meta: scheme + manifest (+ tombstones
+      // when churned) — `scheme` is its distinguishing table
+      else if (ts.contains("scheme") && ts.contains("manifest")) "semdedup"
+      // dedup's distinguishing tables: an EMPTY tombstone table emits
+      // zero meta rows, so membership tests on `tombstones` alone
+      // would miss a churn-free index — its (meta + manifest) pair is
+      // the stable signature once the richer families are ruled out
+      else if (ts.contains("meta") && ts.contains("manifest")) "dedup"
+      else "unknown"
+    val gensOnDisk = StateCommit.generationsOnDisk(spark, root)
+    println(s"family: $family")
+    println(s"committed version: $cur")
+    println(s"retained versions (time-travel horizon): ${retained.mkString(", ")}")
+    // per-family reads go through StateCommit.metaTable with the
+    // family's MetaSchema
+    import graft.operators.{AnnIndex, AnnIndexPq, DedupIndex, DsirModel,
+      LexIndex, SemDedupIndex}
+    val schema = family match {
+      case "lexical" => LexIndex.metaSchema
+      case "ivf-pq" => AnnIndexPq.metaSchema
+      case "ann" => AnnIndex.metaSchema
+      case "dsir" => DsirModel.metaSchema
+      case "semdedup" => SemDedupIndex.metaSchema
+      case _ => DedupIndex.metaSchema // an unknown root reads no table
+    }
+    def meta(table: String) =
+      StateCommit.metaTable(spark, root, cur, schema, table)
+    def gensCard(referenced: Seq[Long]): Unit =
+      println(s"generations: ${gensOnDisk.size} on disk " +
+        s"(${gensOnDisk.mkString(", ")}), ${referenced.length} referenced " +
+        s"by v$cur (${referenced.mkString(", ")})")
+    family match {
+      case "lexical" =>
+        gensCard(meta("manifest").collect().map(_.getLong(0))
+          .distinct.sorted.toSeq)
+        // headOption, not head(): a snapshot whose folded meta carries
+        // zero rows for a family stats table (pre-monitor carry) must
+        // print an 'unavailable' placeholder, not escape a raw
+        // NoSuchElementException (round-13 advice)
+        val stOpt = meta("stats").collect().headOption
+        val tombs = meta("tombstones").count()
+        val corpus = stOpt.map(st => s"${st.getLong(0)} docs, " +
+          s"${st.getLong(1)} tokens").getOrElse("stats unavailable")
+        println(s"corpus: $corpus; tombstoned ids: $tombs")
+      case "ann" | "ivf-pq" =>
+        val cells = graft.streaming.CellTable.entries(
+          meta("manifest").collect().toSeq)
+        gensCard(cells.values.toSeq.distinct.sorted)
+        println(s"live cells: ${cells.size}")
+      case "semdedup" =>
+        val entries = meta("manifest").collect()
+        gensCard(entries.map(_.getLong(0)).distinct.sorted.toSeq)
+        val sch = meta("scheme").head()
+        println(s"scheme: cellTarget=${sch.getInt(0)} probes=${sch.getInt(1)} " +
+          s"cells=${sch.getInt(2)} buckets=${sch.getInt(3)} " +
+          s"quantizer gen=${sch.getLong(4)}; " +
+          s"posted vectors across generations (pre-tombstone): " +
+          s"${entries.map(_.getLong(1)).sum}; tombstoned ids: " +
+          s"${meta("tombstones").count()}")
+        // the drift card (round-16): the frozen quantizer's one open
+        // operational question is WHEN to rebuild — answered by the
+        // live cell-occupancy distribution vs the build-time target.
+        // OPT-IN (--drift): unlike every other status line this reads
+        // the full live member table (a corpus-sized scan at the
+        // design scale), so a quick "what version is committed?"
+        // check must not pay it
+        if (args.contains("--drift")) {
+          val d = SemDedupIndex.driftCard(spark, root)
+          val advisory = graft.GraftConf.long(spark,
+            graft.GraftConf.SemDedupRebuildAt)
+          println(f"drift: ${d.memberRows} member rows in ${d.liveCells} " +
+            f"live cells (built for ${d.nCells}); cell size " +
+            f"p50=${d.p50}%.0f p95=${d.p95}%.0f max=${d.maxCell} vs " +
+            f"target ${d.cellTarget}; ${d.oversizedPct}%.1f%% of rows in " +
+            f"cells >4x target (advisory ${advisory}%%)" +
+            (if (d.rebuildAdvised) " -> REBUILD ADVISED" else ""))
+        } else
+          println("drift: pass --drift for the cell-occupancy card " +
+            "(scans the live member table)")
+      case "dedup" =>
+        val entries = meta("manifest").collect()
+        gensCard(entries.map(_.getLong(0)).distinct.sorted.toSeq)
+        val schOpt = meta("meta").collect().headOption
+        val scheme = schOpt.map(sch => s"k=${sch.getInt(0)} r=${sch.getInt(1)}")
+          .getOrElse("unavailable")
+        // per-generation doc counts are PRE-tombstone (a replaced
+        // doc's superseded copies still count until a compact) —
+        // label accordingly instead of implying live-corpus size
+        println(s"scheme: $scheme; " +
+          s"posted docs across generations (pre-tombstone): " +
+          s"${entries.map(_.getLong(1)).sum}; tombstoned ids: " +
+          s"${meta("tombstones").count()}")
+      case "dsir" =>
+        val scheme = meta("meta").collect().headOption.map(m =>
+          s"${m.getInt(0)} buckets; frozen totals nt=${m.getLong(1)} " +
+            s"nr=${m.getLong(2)}").getOrElse("unavailable")
+        println(s"scheme: $scheme; populated buckets: " +
+          s"${meta("model").count()}")
+      case _ =>
+        println(s"snapshot tables: ${ts.toSeq.sorted.mkString(", ")}")
+    }
+  }
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("chunk") =>
@@ -1056,130 +1168,14 @@ object Main {
     // horizon, generation accounting (on disk vs referenced — the gap
     // is the GC-deferral transient), and a family-specific summary.
     // Family detection reads the folded meta's `t` values, the one
-    // layout every family shares (pre-fold roots: probe per-table dirs).
+    // layout every family shares. A root the readers refuse (an old
+    // layout, an unreadable commit pointer) prints its error and exits 2.
     case Some("index-status") =>
       val root = opt(args, "root").getOrElse { System.err.println("error: --root required"); sys.exit(2); "" }
       val spark = session()
-      import graft.streaming.StateCommit
-      val cur = StateCommit.currentVersion(spark, root).getOrElse {
-        System.err.println(s"error: no committed index at $root"); sys.exit(2); 0L
-      }
-      val retained = StateCommit.versions(spark, root)
-      val ts = StateCommit.metaTableNames(spark, root, cur)
-      val family =
-        if (ts.contains("dfs")) "lexical"
-        else if (ts.contains("coarse")) "ivf-pq"
-        else if (ts.contains("centroids")) "ann"
-        else if (ts.contains("model")) "dsir"
-        // SemDedupIndex's folded meta: scheme + manifest (+ tombstones
-        // when churned) — `scheme` is its distinguishing table
-        else if (ts.contains("scheme") && ts.contains("manifest")) "semdedup"
-        // dedup's distinguishing tables: an EMPTY tombstone table emits
-        // zero meta rows, so membership tests on `tombstones` alone
-        // would miss a churn-free index — its (meta + manifest) pair is
-        // the stable signature once the richer families are ruled out
-        else if (ts.contains("meta") && ts.contains("manifest")) "dedup"
-        else "unknown"
-      val gensOnDisk = StateCommit.generationsOnDisk(spark, root)
-      println(s"family: $family")
-      println(s"committed version: $cur")
-      println(s"retained versions (time-travel horizon): ${retained.mkString(", ")}")
-      // per-family reads go through StateCommit.metaTable with the
-      // family's MetaSchema — folded-first with the per-table fallback,
-      // so the card works on PRE-fold snapshots too (round-13 review: a
-      // raw folded read here threw PATH_NOT_FOUND on exactly the roots
-      // the probe detected from their per-table dirs)
-      import graft.operators.{AnnIndex, AnnIndexPq, DedupIndex, DsirModel,
-        LexIndex, SemDedupIndex}
-      val schema = family match {
-        case "lexical" => LexIndex.metaSchema
-        case "ivf-pq" => AnnIndexPq.metaSchema
-        case "ann" => AnnIndex.metaSchema
-        case "dsir" => DsirModel.metaSchema
-        case "semdedup" => SemDedupIndex.metaSchema
-        case _ => DedupIndex.metaSchema // an unknown root reads no table
-      }
-      def meta(table: String) =
-        StateCommit.metaTable(spark, root, cur, schema, table)
-      def gensCard(referenced: Seq[Long]): Unit =
-        println(s"generations: ${gensOnDisk.size} on disk " +
-          s"(${gensOnDisk.mkString(", ")}), ${referenced.length} referenced " +
-          s"by v$cur (${referenced.mkString(", ")})")
-      family match {
-        case "lexical" =>
-          gensCard(meta("manifest").collect().map(_.getLong(0))
-            .distinct.sorted.toSeq)
-          // headOption, not head(): a snapshot whose folded meta carries
-          // zero rows for a family stats table (pre-monitor carry) must
-          // print an 'unavailable' placeholder, not escape a raw
-          // NoSuchElementException (round-13 advice)
-          val stOpt = meta("stats").collect().headOption
-          val tombs = meta("tombstones").count()
-          val corpus = stOpt.map(st => s"${st.getLong(0)} docs, " +
-            s"${st.getLong(1)} tokens").getOrElse("stats unavailable")
-          println(s"corpus: $corpus; tombstoned ids: $tombs")
-        case "ann" | "ivf-pq" =>
-          val cells = graft.streaming.CellTable.entries(
-            meta("manifest").collect().toSeq)
-          gensCard(cells.values.toSeq.distinct.sorted)
-          println(s"live cells: ${cells.size}")
-        case "semdedup" =>
-          val entries = meta("manifest").collect()
-          gensCard(entries.map(_.getLong(0)).distinct.sorted.toSeq)
-          val sch = meta("scheme").head()
-          println(s"scheme: cellTarget=${sch.getInt(0)} probes=${sch.getInt(1)} " +
-            s"cells=${sch.getInt(2)} buckets=${sch.getInt(3)} " +
-            s"quantizer gen=${sch.getLong(4)}; " +
-            s"posted vectors across generations (pre-tombstone): " +
-            s"${entries.map(_.getLong(1)).sum}; tombstoned ids: " +
-            s"${meta("tombstones").count()}")
-          // the drift card (round-16): the frozen quantizer's one open
-          // operational question is WHEN to rebuild — answered by the
-          // live cell-occupancy distribution vs the build-time target.
-          // OPT-IN (--drift): unlike every other status line this reads
-          // the full live member table (a corpus-sized scan at the
-          // design scale), so a quick "what version is committed?"
-          // check must not pay it
-          if (args.contains("--drift")) {
-            val d = SemDedupIndex.driftCard(spark, root)
-            val advisory = graft.GraftConf.long(spark,
-              graft.GraftConf.SemDedupRebuildAt)
-            println(f"drift: ${d.memberRows} member rows in ${d.liveCells} " +
-              f"live cells (built for ${d.nCells}); cell size " +
-              f"p50=${d.p50}%.0f p95=${d.p95}%.0f max=${d.maxCell} vs " +
-              f"target ${d.cellTarget}; ${d.oversizedPct}%.1f%% of rows in " +
-              f"cells >4x target (advisory ${advisory}%%)" +
-              (if (d.rebuildAdvised) " -> REBUILD ADVISED" else ""))
-          } else
-            println("drift: pass --drift for the cell-occupancy card " +
-              "(scans the live member table)")
-        case "dedup" =>
-          val entries = meta("manifest").collect()
-          gensCard(entries.map(_.getLong(0)).distinct.sorted.toSeq)
-          val schOpt = meta("meta").collect().headOption
-          val scheme = schOpt.map(sch => s"k=${sch.getInt(0)} r=${sch.getInt(1)}")
-            .getOrElse("unavailable")
-          // per-generation doc counts are PRE-tombstone (a replaced
-          // doc's superseded copies still count until a compact) —
-          // label accordingly instead of implying live-corpus size
-          println(s"scheme: $scheme; " +
-            s"posted docs across generations (pre-tombstone): " +
-            s"${entries.map(_.getLong(1)).sum}; tombstoned ids: " +
-            s"${meta("tombstones").count()}")
-        case "dsir" =>
-          val mOpt = meta("meta").collect().headOption
-          // width tolerance: a round-11 pre-totals meta carries only
-          // `buckets` (the DsirModel.metaAt contract)
-          val scheme = mOpt.map { m =>
-            val (nt, nr) =
-              if (m.schema.fieldNames.length >= 3)
-                (m.getLong(1), m.getLong(2)) else (0L, 0L)
-            s"${m.getInt(0)} buckets; frozen totals nt=$nt nr=$nr"
-          }.getOrElse("unavailable")
-          println(s"scheme: $scheme; populated buckets: " +
-            s"${meta("model").count()}")
-        case _ =>
-          println(s"snapshot tables: ${ts.toSeq.sorted.mkString(", ")}")
+      try indexStatus(spark, root, args)
+      catch { case e: IllegalStateException =>
+        System.err.println(s"error: ${e.getMessage}"); sys.exit(2)
       }
       spark.stop()
 

@@ -24,9 +24,6 @@ import graft.streaming.CellTable.Manifest
   * }}}
   * [[graft.streaming.CellTable]] owns the manifest and generation format
   * (it is shared with [[AnnIndexPq]] and the vector store).
-  * (pre-fold snapshots carried per-table dirs — centroids/ manifest/
-  * stats/ drift/ — and stay readable via the folded-first fallback in
-  * [[StateCommit.metaTable]])
   *
   * Every mutation ([[build]]/[[upsert]]/[[delete]]/[[compact]]) writes
   * its touched cells as a fresh `gen-v` directory that nothing
@@ -83,10 +80,8 @@ object AnnIndex {
     * per commit (discriminated by column `t`), the [[LexIndex]]/
     * [[AnnIndexPq]] folded-commit layout: four per-table coalesce(1)
     * writes per mutation were four driver-side committer rounds of pure
-    * flat cost. Readers take folded-first with the per-table directory
-    * as the pre-fold fallback ([[StateCommit.metaTable]]);
-    * [[StateCommit.gcGenerations]] consults the folded manifest by the
-    * same precedence. */
+    * flat cost. Readers and [[StateCommit.gcGenerations]] read it
+    * through [[StateCommit.metaTable]]. */
   private[graft] val metaSchema = MetaSchema(
     Centroids -> Seq("centroid_id" -> "long", "ce" -> "array<double>"),
     Cells.manifest("string"),
@@ -94,18 +89,17 @@ object AnnIndex {
     Drift -> Seq("seq" -> "long", "n" -> "long", "mean_cos" -> "double"))
 
   /** Snapshot v's metadata-sized tables, read in ONE collect: the
-    * live-cell manifest, the build stats (None on a pre-monitor
-    * snapshot) and the drift log — one row per upsert since the last
-    * build (seq, n, mean_cos), reset by [[build]] and carried forward by
-    * every other mutation. */
+    * live-cell manifest, the build stats and the drift log — one row
+    * per upsert since the last build (seq, n, mean_cos), reset by
+    * [[build]] and carried forward by every other mutation. */
   private final case class Meta(cells: Map[String, Long],
-      stats: Option[(Double, Long)], drift: Seq[(Long, Long, Double)])
+      stats: (Double, Long), drift: Seq[(Long, Long, Double)])
 
   private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
     val m = StateCommit.metaRows(spark, root, v, metaSchema,
       Seq(Manifest, Stats, Drift))
-    Meta(CellTable.entries(m(Manifest)),
-      m(Stats).headOption.map(r => (r.getDouble(0), r.getLong(1))),
+    val st = StateCommit.oneRow(m, Stats, root)
+    Meta(CellTable.entries(m(Manifest)), (st.getDouble(0), st.getLong(1)),
       m(Drift).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(_._1))
   }
@@ -115,13 +109,13 @@ object AnnIndex {
     * generations from the manifest. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
       centroids: DataFrame, cells: Map[String, Long],
-      stats: Option[(Double, Long)], drift: Seq[(Long, Long, Double)],
+      stats: (Double, Long), drift: Seq[(Long, Long, Double)],
       droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
     StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
       Centroids -> centroids,
       Manifest -> metaSchema.rows(spark, Manifest, cells.toSeq.sortBy(_._1)),
-      Stats -> metaSchema.rows(spark, Stats, stats.toSeq),
+      Stats -> metaSchema.rows(spark, Stats, Seq(stats)),
       Drift -> metaSchema.rows(spark, Drift, drift)), droppedGens)
   }
 
@@ -197,7 +191,7 @@ object AnnIndex {
     writeMeta(spark, root, v,
       centroids = cents,
       cells = cells,
-      stats = Some((buildMean, n)),
+      stats = (buildMean, n),
       drift = Seq.empty, // a rebuild resets the log
       // a rebuild over a live index replaces the whole manifest —
       // every prior generation loses its reference
@@ -308,7 +302,8 @@ object AnnIndex {
       margin: Double = 0.15, lastK: Int = 5): Option[DriftReport] = {
     val m = metaAt(spark, root, version(spark, root))
     val drift = m.drift.takeRight(lastK)
-    for ((buildMean, _) <- m.stats if drift.nonEmpty) yield {
+    val buildMean = m.stats._1
+    Option.when(drift.nonEmpty) {
       val n = drift.map(_._2).sum
       val recent =
         if (n == 0L) buildMean

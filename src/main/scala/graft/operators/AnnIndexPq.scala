@@ -28,9 +28,6 @@ import graft.streaming.CellTable.Manifest
   *                              discriminated by column `t`
   *   root/gen-v/cell=C/       — IMMUTABLE (vec_id, blk, code) rows
   * }}}
-  * (pre-fold snapshots carried per-table dirs — coarse/ codebook/
-  * params/ manifest/ stats/ drift/ — and stay readable via the
-  * folded-first fallback in [[StateCommit.metaTable]]).
   * [[graft.streaming.CellTable]] owns the manifest and generation format.
   *
   * Scale posture: the probe set prunes at the FILE level (manifest →
@@ -77,12 +74,10 @@ object AnnIndexPq {
     * folded-commit layout: the six per-table coalesce(1) writes were six
     * driver-side committer rounds per mutation (~0.2–0.3 s each at
     * local[32]), the dominant flat cost of sim_annpq_store/_rerank after
-    * round 12 gave LexIndex the same treatment. Readers take
-    * folded-first with the per-table directory as the pre-fold fallback
-    * ([[StateCommit.metaTable]]), so time travel across the upgrade
-    * keeps working; [[StateCommit.gcGenerations]] consults the folded
-    * manifest by the same precedence. Column order is the reader
-    * contract — positional getters depend on it. */
+    * round 12 gave LexIndex the same treatment. Readers and
+    * [[StateCommit.gcGenerations]] read it through
+    * [[StateCommit.metaTable]]. Column order is the reader contract —
+    * positional getters depend on it. */
   private[graft] val metaSchema = MetaSchema(
     Coarse -> Seq("ccell" -> "long", "cce" -> "array<double>"),
     Codebook -> Seq("blk" -> "int", "cid" -> "long", "ce" -> "array<double>"),
@@ -94,21 +89,20 @@ object AnnIndexPq {
 
   /** Snapshot v's metadata-sized tables, read in ONE collect: the
     * build-time (nCoarse, m, subDim, nCentroids), the live-cell
-    * manifest, the build stats (None on a pre-monitor snapshot) and the
-    * drift log — one row per upsert since the last build
-    * (seq, n, mean_err_nano), reset by [[build]] and carried forward by
-    * every other mutation. */
+    * manifest, the build stats and the drift log — one row per upsert
+    * since the last build (seq, n, mean_err_nano), reset by [[build]]
+    * and carried forward by every other mutation. */
   private final case class Meta(params: (Int, Int, Int, Int),
-      cells: Map[String, Long], stats: Option[(Double, Long)],
+      cells: Map[String, Long], stats: (Double, Long),
       drift: Seq[(Long, Long, Double)])
 
   private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
     val t = StateCommit.metaRows(spark, root, v, metaSchema,
       Seq(Params, Manifest, Stats, Drift))
     val p = t(Params).head
+    val st = StateCommit.oneRow(t, Stats, root)
     Meta((p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)),
-      CellTable.entries(t(Manifest)),
-      t(Stats).headOption.map(r => (r.getDouble(0), r.getLong(1))),
+      CellTable.entries(t(Manifest)), (st.getDouble(0), st.getLong(1)),
       t(Drift).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(_._1))
   }
@@ -118,7 +112,7 @@ object AnnIndexPq {
     * generations from the manifest. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
       coarse: DataFrame, codebook: DataFrame, params: (Int, Int, Int, Int),
-      cells: Map[String, Long], stats: Option[(Double, Long)],
+      cells: Map[String, Long], stats: (Double, Long),
       drift: Seq[(Long, Long, Double)], droppedGens: Boolean): Unit = {
     val s = spark; import s.implicits._
     StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
@@ -126,7 +120,7 @@ object AnnIndexPq {
       Codebook -> codebook,
       Params -> metaSchema.rows(spark, Params, Seq(params)),
       Manifest -> metaSchema.rows(spark, Manifest, cells.toSeq.sortBy(_._1)),
-      Stats -> metaSchema.rows(spark, Stats, stats.toSeq),
+      Stats -> metaSchema.rows(spark, Stats, Seq(stats)),
       Drift -> metaSchema.rows(spark, Drift, drift)), droppedGens)
   }
 
@@ -191,7 +185,7 @@ object AnnIndexPq {
       coarse = parts.coarse, codebook = parts.cents,
       params = (nCoarse, m, subDim, nCentroids),
       cells = cells,
-      stats = Some((meanErr, n)),
+      stats = (meanErr, n),
       drift = Seq.empty,
       // a rebuild over a live index replaces the whole manifest —
       // every prior generation loses its reference
@@ -401,7 +395,8 @@ object AnnIndexPq {
       floorNano: Double = 1e6): Option[PqDriftReport] = {
     val meta = metaAt(spark, root, version(spark, root))
     val drift = meta.drift.takeRight(lastK)
-    for ((buildMean, _) <- meta.stats if drift.nonEmpty) yield {
+    val buildMean = meta.stats._1
+    Option.when(drift.nonEmpty) {
       val n = drift.map(_._2).sum
       val recent =
         if (n == 0L) buildMean

@@ -25,9 +25,6 @@ import graft.streaming.StateCommit.genDir
   *   root/gen-v/bands/       — IMMUTABLE (doc_id, band, sig) rows of mutation v
   *   root/gen-v/sigs/        — IMMUTABLE (doc_id, mh0..mh{k-1}) of mutation v
   * }}}
-  * (pre-fold snapshots carried per-table dirs — meta/ holding only the
-  * k/r scheme, manifest/, tombstones/ — and stay readable via the
-  * schema-probed folded-first fallback in [[StateCommit.metaTable]])
   *
   * Generations are append-only and immutable, with the tombstone
   * liveness rule of [[graft.streaming.GenerationalTable]]. Every
@@ -76,9 +73,8 @@ object DedupIndex {
     * coalesce(1) writes per mutation were three driver-side committer
     * rounds of flat cost on every probe-and-ingest cycle. The PRE-fold
     * layout also kept a table at `snap-v/meta` (the k/r scheme, no `t`
-    * column), so the layout probe checks the SCHEMA, not existence
-    * alone — exactly the discrimination [[StateCommit.gcGenerations]]
-    * already applies to this family. */
+    * column), which is why [[StateCommit.metaTable]] tells a folded
+    * meta by its SCHEMA, not by existence, and refuses the old one. */
   private[graft] val metaSchema = MetaSchema(
     Meta -> Seq("k" -> "int", "r" -> "int"),
     Manifest -> Seq("gen" -> "long", "n_docs" -> "long"),

@@ -23,9 +23,6 @@ import graft.streaming.{MetaSchema, StateCommit}
   *                         ≤ buckets rows) and the scheme row
   *                         (buckets, nt, nr), discriminated by `t`
   * }}}
-  * (pre-fold snapshots carried model/ + a t-less meta/ and stay
-  * readable via the schema-probed fallback in [[StateCommit.metaTable]]
-  * — the [[DedupIndex]] discrimination)
   *
   * The model table and the scoring math are [[TextAnalysis.dsirMicro]] /
   * [[TextAnalysis.dsirApply]] — the SAME code the in-query operator runs,
@@ -49,10 +46,7 @@ object DsirModel {
 
   /** The two logical tables — one folded `meta` parquet per commit (see
     * the layout note above; the same fold every other persisted family
-    * got in rounds 12–13). NOTE: the Meta fallback reads the per-table
-    * dir RAW (a round-11 pre-totals meta carries only `buckets` —
-    * selecting nt/nr there would throw), so metaAt handles the width
-    * tolerance, not the column list. */
+    * got in rounds 12–13). */
   private[graft] val metaSchema = MetaSchema(
     Model -> Seq("bucket" -> "long", "micro" -> "long"),
     Meta -> Seq("buckets" -> "int", "nt" -> "long", "nr" -> "long"))
@@ -101,13 +95,7 @@ object DsirModel {
       v: Long): (Int, Long, Long) = {
     StateCommit.requireRetained(spark, root, v)
     val row = StateCommit.metaTable(spark, root, v, metaSchema, Meta).head()
-    // a pre-totals PRE-FOLD meta (round-11 mid-session) carries only
-    // `buckets`; treat its totals as 0/0 — the default then matches what
-    // the old inner-join behavior NEVER produced anyway (no novel-doc
-    // caller existed before the totals landed)
-    if (row.schema.fieldNames.length >= 3)
-      (row.getInt(0), row.getLong(1), row.getLong(2))
-    else (row.getInt(0), 0L, 0L)
+    (row.getInt(0), row.getLong(1), row.getLong(2))
   }
 
   /** Score `docs` against the committed model: (doc_id, n_grams,

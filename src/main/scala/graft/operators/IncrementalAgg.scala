@@ -130,24 +130,18 @@ object IncrementalAgg {
     batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Legacy-state shim: snapshots committed before the `cnt_<v>`
-    * non-null counts existed cannot be upgraded in place — the non-null
-    * history is gone. Without it, [[ingest]] and [[view]] would throw a
-    * bare UNRESOLVED_COLUMN AnalysisException on the first post-upgrade
-    * read (round-11 review finding). Fail with the migration story
-    * instead, or — when the caller can assert the value columns never
-    * held NULLs — adopt `cnt` as the divisor, which is then exact. */
-  private def upgraded(state: DataFrame, values: Seq[String],
-      assumeNoNulls: Boolean): DataFrame = {
+  /** The committed state, required to carry the `cnt_<v>` non-null
+    * count of every value column. State committed before those counts
+    * existed cannot be upgraded in place (the non-null history is gone),
+    * so it is refused with the rebuild message instead of failing later
+    * with a bare UNRESOLVED_COLUMN AnalysisException. */
+  private def checked(state: DataFrame, root: String,
+      values: Seq[String]): DataFrame = {
     val missing = values.map(v => s"cnt_$v").filterNot(state.columns.contains)
-    if (missing.isEmpty) state
-    else if (assumeNoNulls)
-      missing.foldLeft(state)((df, m) => df.withColumn(m, col("cnt")))
-    else throw new IllegalStateException(
-      s"aggregate state predates the non-null count column(s) " +
-        s"${missing.mkString(", ")} — rebuild the view by re-ingesting " +
-        "the fact, or pass assumeNoNulls=true to adopt cnt as the " +
-        "divisor (exact ONLY if the value columns never held NULLs)")
+    if (missing.nonEmpty) throw StateCommit.staleLayout(root,
+      s"aggregate state without the non-null count column(s) " +
+        missing.mkString(", "))
+    state
   }
 
   private def merged(state: DataFrame, partial: DataFrame,
@@ -172,13 +166,13 @@ object IncrementalAgg {
   def ingest(spark: SparkSession, root: String, batch: DataFrame,
       keys: Seq[String], values: Seq[String], batchId: Long,
       distincts: Seq[String] = Nil, hists: Seq[HistSpec] = Nil,
-      retain: Int = 2, assumeNoNulls: Boolean = false): Boolean = {
+      retain: Int = 2): Boolean = {
     val cur = lastBatch(spark, root)
     if (batchId <= cur) return false // replay — already folded in
     val partial = partialOf(batch, keys, values, distincts, hists)
     val next = read(spark, root) match {
       case Some(state) =>
-        merged(upgraded(state, values, assumeNoNulls), partial,
+        merged(checked(state, root, values), partial,
           keys, values, distincts, hists)
       case None => partial
     }
@@ -281,11 +275,11 @@ object IncrementalAgg {
     * value count, exact BIGINT — avg(v)'s divisor, not the row count) —
     * what a reader queries instead of the 100 TB fact. */
   def view(spark: SparkSession, root: String,
-      values: Seq[String], assumeNoNulls: Boolean = false): DataFrame = {
-    val state = upgraded(
+      values: Seq[String]): DataFrame = {
+    val state = checked(
       read(spark, root).getOrElse(
         throw new IllegalStateException(s"no committed aggregate at $root")),
-      values, assumeNoNulls)
+      root, values)
     values.foldLeft(state) { (df, v) =>
       df.withColumn(s"avg_$v", expr(s"sum_$v div cnt_$v"))
     }

@@ -147,16 +147,16 @@ object LexIndex {
     val st = m(Stats).head
     MetaScalars(gens, st.getLong(0), st.getLong(1), st.getLong(2),
       m(StreamBatch).headOption.map(_.getLong(0)),
-      m(EraTable).headOption.map(_.getLong(0)).getOrElse(0L))
+      StateCommit.oneRow(m, EraTable, root).getLong(0))
   }
 
-  /** The index's BUILD ERA: the snapshot version of the last [[build]]
-    * (0 for a pre-era snapshot). Every ingest/delete/compact carries it
-    * forward unchanged; a rebuild bumps it. A maintenance stream records
-    * the era it started against and refuses to apply batches once the
-    * index has been rebuilt under it — resuming an OLD checkpoint after
-    * a rebuild could otherwise re-apply a crashed in-flight batch whose
-    * docs the rebuild corpus already contains. */
+  /** The index's BUILD ERA: the snapshot version of the last [[build]].
+    * Every ingest/delete/compact carries it forward unchanged; a rebuild
+    * bumps it. A maintenance stream records the era it started against
+    * and refuses to apply batches once the index has been rebuilt under
+    * it — resuming an OLD checkpoint after a rebuild could otherwise
+    * re-apply a crashed in-flight batch whose docs the rebuild corpus
+    * already contains. */
   def buildEra(spark: SparkSession, root: String): Long =
     metaScalarsOf(spark, root, version(spark, root)).era
 
@@ -164,37 +164,36 @@ object LexIndex {
     * shape (token, doc_id, tf, dl). `prefixes` applies directory-level
     * pruning: only the named `tpfx=` partitions of each generation are
     * listed/opened (a query passes its terms' first letters;
-    * maintenance passes read everything). */
+    * maintenance passes read everything). A generation without the
+    * `tpfx` partition column is refused. */
   private def livePostings(spark: SparkSession, root: String, v: Long,
       gens: Seq[Long], prefixes: Option[Seq[String]] = None): DataFrame =
     GenerationalTable.live(gens, { g =>
       val full = StateCommit.readParquet(spark, genDir(root, g))
-      val pruned = prefixes match {
-        case Some(ps) if full.columns.contains("tpfx") =>
-          full.where(col("tpfx").isin(ps: _*))
-        case _ => full
-      }
-      // canonical projection BEFORE the union: a manifest can mix
-      // tpfx-partitioned generations with pre-tpfx ones (an index built
-      // by older code, upgraded by one ingest), and unionByName over
-      // heterogeneous schemas would throw on every read
-      pruned.select(col("token"), col("doc_id"), col("tf"), col("dl"))
+      if (!full.columns.contains("tpfx")) throw StateCommit.staleLayout(
+        root, s"postings ${genDir(root, g)} without the tpfx partition column")
+      prefixes.fold(full)(ps => full.where(col("tpfx").isin(ps: _*)))
+        .select(col("token"), col("doc_id"), col("tf"), col("dl"))
     }, StateCommit.metaTable(spark, root, v, metaSchema, Tombstones), Key)
       .drop("gen")
 
   /** The LIVE (doc_id, dl) rows of snapshot v — one row per live doc
     * INCLUDING zero-token docs (the doc table, not the postings, is the
-    * membership authority). A generation written before the doc table
-    * existed falls back to the postings-derived (doc_id, dl) set —
-    * where zero-token docs are invisible, the pre-docs-table behavior. */
+    * membership authority). A generation without its doc table is
+    * refused. */
   private def liveDocs(spark: SparkSession, root: String, v: Long,
       gens: Seq[Long]): DataFrame =
     GenerationalTable.live(gens, { g =>
-      scala.util.Try(StateCommit.readParquet(spark, docsDir(root, g)))
-        .getOrElse(StateCommit.readParquet(spark, genDir(root, g))
-          .select("doc_id", "dl").distinct())
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("dl").cast("long").as("dl"))
+      val dir = docsDir(root, g)
+      val docs =
+        try StateCommit.readParquet(spark, dir)
+        catch { case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "PATH_NOT_FOUND" =>
+          throw StateCommit.staleLayout(root,
+            s"a generation without its docs table $dir")
+        }
+      docs.select(col("doc_id").cast("long").as("doc_id"),
+        col("dl").cast("long").as("dl"))
     }, StateCommit.metaTable(spark, root, v, metaSchema, Tombstones), Key)
       .drop("gen")
 
@@ -219,8 +218,8 @@ object LexIndex {
     * manifest (compaction, rebuild). */
   private def writeMetaTables(spark: SparkSession, root: String, v: Long,
       dfs: DataFrame, stats: DataFrame, gens: Seq[Long],
-      tombstones: DataFrame, streamBatch: Option[Long] = None,
-      era: Long = 0L, droppedGens: Boolean = false): Long = {
+      tombstones: DataFrame, streamBatch: Option[Long], era: Long,
+      droppedGens: Boolean = false): Long = {
     val s = spark
     import s.implicits._
     StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
@@ -247,7 +246,7 @@ object LexIndex {
       postings: DataFrame, docs: DataFrame, dfs: DataFrame,
       stats: DataFrame, gens: Seq[Long], nBuckets: Int,
       tombstones: DataFrame, streamBatch: Option[Long] = None,
-      era: Long = 0L, rowHint: Long = -1L,
+      era: Long, rowHint: Long = -1L,
       droppedGens: Boolean = false): Long = {
     val buckets =
       if (rowHint < 0) nBuckets

@@ -67,10 +67,13 @@ object StateCommit {
     String, (Long, StructType)]()
 
   /** The cache-validity token for `path`: the directory's modification
-    * time (a rewrite-in-place — the layout-upgrade case MetaFoldSpec
-    * simulates — replaces the dir's children and bumps its mtime). One
-    * driver-side fs stat (~µs locally) instead of a scheduled
-    * inference job. -1 = path unreadable (never cached). */
+    * time. Snapshot dirs are not strictly write-once: a replayed
+    * foreachBatch batch B rewrites `snap-B/` in place (the replay
+    * overwrites the same dir, see above), which replaces the dir's
+    * children and bumps its mtime, so a schema cached from the first
+    * attempt is not served for the rewrite. One driver-side fs stat
+    * (~µs locally) instead of a scheduled inference job. -1 = path
+    * unreadable (never cached). */
   private def mtimeOf(spark: SparkSession, path: String): Long =
     Try(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(new Path(path)).getModificationTime).getOrElse(-1L)
@@ -163,6 +166,13 @@ object StateCommit {
     }
   }
 
+  /** Whether `path` exists, through the Hadoop filesystem of the
+    * session (the state roots' own storage layer). */
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Partition values (the `column=` directory suffixes) under `path`,
     * sorted; empty when `path` does not exist. Over a written generation
     * these are the touched partitions a mutation produced output for. */
@@ -188,11 +198,23 @@ object StateCommit {
     * and what [[gcGenerations]] reclaims once no snapshot does. */
   def genDir(statePath: String, g: Long): String = s"$statePath/gen-$g"
 
-  /** The committed version (last applied batch id), if any commit has
-    * completed. */
-  def currentVersion(spark: SparkSession, statePath: String): Option[Long] =
-    Try(readSmallFile(spark.sparkContext.hadoopConfiguration,
-      s"$statePath/$Pointer").map(_.trim.toLong)).toOption.flatten
+  /** The committed version (last applied batch id); None only when no
+    * `CURRENT` exists, i.e. no commit has completed. A pointer that
+    * cannot be read (a directory in its place, a storage error) or does
+    * not hold a version throws: reading it as "never committed" would
+    * restart every writer at version 1 over the committed state. */
+  def currentVersion(spark: SparkSession, statePath: String): Option[Long] = {
+    val pointer = s"$statePath/$Pointer"
+    def broken(what: String, cause: Throwable) = new IllegalStateException(
+      s"$statePath: commit pointer $pointer $what; restore it or rebuild " +
+        "into a fresh root", cause)
+    val body =
+      try readSmallFile(spark.sparkContext.hadoopConfiguration, pointer)
+      catch { case e: java.io.IOException =>
+        throw broken(s"is unreadable ($e)", e) }
+    body.map(b => b.trim.toLongOption.getOrElse(
+      throw broken(s"holds '${b.take(64)}', not a version", null)))
+  }
 
   /** The replay guard of the foreachBatch sinks whose snapshot version
     * is the stream's batch id: true when batch `batchId` (or a later
@@ -208,6 +230,17 @@ object StateCommit {
     currentVersion(spark, statePath).getOrElse(throw new IllegalStateException(
       s"no committed $family at $statePath (build it first)"))
 
+  /** The one refusal of an on-disk layout that no writer at this
+    * version produces: `root` holds `layout` (a description naming the
+    * old shape), and the fix is to rebuild or re-sync into a fresh root.
+    * Every persisted root keeps exactly one read path, the layout its
+    * writers produce; an older one fails here instead of being read
+    * through a second path. */
+  private[graft] def staleLayout(root: String,
+      layout: String): IllegalStateException =
+    new IllegalStateException(s"$root holds $layout, a layout this " +
+      "version no longer reads; rebuild or re-sync it into a fresh root")
+
   /** [[currentVersion]] for a root that older code committed through a
     * hand-rolled cursor file: with no `CURRENT` but one of
     * `legacyCursors` present, fail loudly instead of reading the old
@@ -219,9 +252,7 @@ object StateCommit {
       val root = new Path(statePath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       legacyCursors.find(c => fs.exists(new Path(root, c))).foreach { c =>
-        throw new IllegalStateException(
-          s"$statePath uses the legacy $c layout, which this version no " +
-            "longer reads; re-sync into a fresh dir")
+        throw staleLayout(statePath, s"the legacy $c cursor")
       }
       None
     }
@@ -333,10 +364,9 @@ object StateCommit {
     // a listing that misses CURRENT's own snapshot is not to be trusted
     if (!snaps.contains(cur)) return
     // each committed manifest is read through the readers' own
-    // folded-first probe ([[metaTable]]): GC consulting a stale per-table
-    // manifest that the readers no longer follow would delete generations
-    // the committed snapshot still references (round-12 advice). One
-    // union, one job for all of them.
+    // [[metaTable]]: a stray per-table manifest dir is never consulted,
+    // and a snapshot the readers refuse (no folded meta) aborts the pass
+    // below. One union, one job for all of them.
     val referenced = Try(snaps
       .map(v => metaTable(spark, statePath, v, GcManifest, "manifest")
         .select(col("gen").cast("long")))
@@ -363,59 +393,43 @@ object StateCommit {
   // discriminator column — N per-table coalesce(1) writes were N
   // driver-side committer rounds per mutation. Each family declares its
   // tables once, as a MetaSchema, which owns the fold and every table's
-  // column order; the layout probe and the mixed-layout precedence rule
-  // live here, one edit site for all of them.
+  // column order; the layout check lives here, one edit site for all.
 
-  /** Snapshot `v`'s folded `meta` parquet; None for a snapshot written
-    * by pre-fold code. "Folded" is decided by SCHEMA (`t` column
-    * present), not existence — two families' PRE-fold layouts also kept
-    * a table named `meta` (DedupIndex's k/r scheme, DsirModel's
-    * buckets/totals row), the same discrimination [[gcGenerations]]
-    * applies. */
-  private def foldedMeta(spark: SparkSession, statePath: String,
-      v: Long): Option[DataFrame] = {
+  /** Snapshot `v`'s folded `meta` parquet, carrying the columns `cols`.
+    * "Folded" is decided by SCHEMA (`t` column present), not existence:
+    * two families' pre-fold layouts also kept a table named `meta`
+    * (DedupIndex's k/r scheme, DsirModel's buckets/totals row). A
+    * snapshot without it, or whose meta lacks one of `cols`, is refused
+    * ([[staleLayout]]). */
+  private def foldedMeta(spark: SparkSession, statePath: String, v: Long,
+      cols: Seq[String]): DataFrame = {
     val metaPath = new Path(tableDir(statePath, v, "meta"))
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(metaPath))
-      Some(readParquet(spark, metaPath.toString)).filter(_.columns.contains("t"))
-    else None
+    Option.when(fs.exists(metaPath))(readParquet(spark, metaPath.toString))
+      .filter(_.columns.contains("t"))
+      .filter(m => cols.forall(m.columns.contains))
+      .getOrElse(throw staleLayout(statePath, s"a snap-$v without a " +
+        s"folded meta of columns ${("t" +: cols).mkString(", ")}"))
   }
 
   /** The logical meta tables snapshot `v` holds: the folded meta's `t`
-    * values, or the per-table dirs of a pre-fold snapshot. A folded
-    * table with zero rows (an empty tombstone table) is not listed. */
+    * values. A table with zero rows (an empty tombstone table) is not
+    * listed. */
   def metaTableNames(spark: SparkSession, statePath: String,
       v: Long): Set[String] = {
     import org.apache.spark.sql.functions.col
-    foldedMeta(spark, statePath, v) match {
-      case Some(m) =>
-        m.select(col("t")).distinct().collect().map(_.getString(0)).toSet
-      case None =>
-        val snap = new Path(s"$statePath/$SnapPrefix$v")
-        snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .listStatus(snap).map(_.getPath.getName).toSet
-    }
+    foldedMeta(spark, statePath, v, Nil).select(col("t")).distinct()
+      .collect().map(_.getString(0)).toSet
   }
 
   /** Read one logical meta table of snapshot `v` in `schema`'s column
-    * order: folded layout first, per-table directory as the fallback for
-    * snapshots written by pre-fold code (time travel across the upgrade
-    * keeps working). */
+    * order. */
   def metaTable(spark: SparkSession, statePath: String, v: Long,
       schema: MetaSchema, table: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val cols = schema.cols(table)
-    foldedMeta(spark, statePath, v) match {
-      case Some(m) => m.where(col("t") === table).select(cols.map(col): _*)
-      case None =>
-        // project `cols` whenever the pre-fold snapshot has them all, so
-        // positional readers see the SAME column order on both layouts;
-        // raw only when some are missing (DsirModel's pre-totals meta is
-        // the one genuinely narrower legacy schema) — round-13 advice
-        val raw = readParquet(spark, tableDir(statePath, v, table))
-        if (cols.forall(raw.columns.contains)) raw.select(cols.map(col): _*)
-        else raw
-    }
+    foldedMeta(spark, statePath, v, cols).where(col("t") === table)
+      .select(cols.map(col): _*)
   }
 
   /** The rows of several metadata-sized logical tables of snapshot `v`
@@ -423,32 +437,29 @@ object StateCommit {
     * manifest and watermarks reads them with one filtered collect of
     * the folded meta instead of one single-task job per table. Each
     * table's rows come in its `schema` column order, as [[metaTable]]
-    * returns them. A pre-fold snapshot falls back to per-table reads,
-    * where an absent table reads as zero rows — the folded layout
-    * cannot tell an absent table from an empty one either. */
+    * returns them; an absent table reads as zero rows (the folded
+    * layout cannot tell it from an empty one). */
   def metaRows(spark: SparkSession, statePath: String, v: Long,
       schema: MetaSchema, tables: Seq[String]): Map[String, Seq[Row]] = {
     import org.apache.spark.sql.functions.col
-    foldedMeta(spark, statePath, v) match {
-      case Some(m) =>
-        val cols = tables.flatMap(schema.cols).distinct
-        val rows = m.where(col("t").isin(tables: _*))
-          .select(col("t") +: cols.map(col): _*).collect()
-        tables.map { t =>
-          val at = schema.cols(t).map(c => 1 + cols.indexOf(c))
-          t -> rows.toSeq.filter(_.getString(0) == t)
-            .map(r => Row.fromSeq(at.map(r.get)))
-        }.toMap
-      case None =>
-        val fs = new Path(statePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        tables.map { t =>
-          t -> (if (fs.exists(new Path(tableDir(statePath, v, t))))
-            metaTable(spark, statePath, v, schema, t).collect().toSeq
-          else Seq.empty)
-        }.toMap
-    }
+    val cols = tables.flatMap(schema.cols).distinct
+    val rows = foldedMeta(spark, statePath, v, cols)
+      .where(col("t").isin(tables: _*))
+      .select(col("t") +: cols.map(col): _*).collect()
+    tables.map { t =>
+      val at = schema.cols(t).map(c => 1 + cols.indexOf(c))
+      t -> rows.toSeq.filter(_.getString(0) == t)
+        .map(r => Row.fromSeq(at.map(r.get)))
+    }.toMap
   }
+
+  /** The one row of the single-row meta table `table` in `rows` (a
+    * [[metaRows]] result): every writer at this version commits it, so
+    * its absence marks a snapshot of an older layout. */
+  private[graft] def oneRow(rows: Map[String, Seq[Row]], table: String,
+      statePath: String): Row =
+    rows(table).headOption.getOrElse(
+      throw staleLayout(statePath, s"a snapshot without its `$table` row"))
 
   /** Time travel: read `table` as of snapshot `v`. Fails loudly when
     * `v` was never committed or has been retention-GC'd — a silent

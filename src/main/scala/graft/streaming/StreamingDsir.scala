@@ -66,70 +66,47 @@ object StreamingDsir {
     * skip every batch at or under the old watermark (new documents
     * never scored, nothing failed). A sweep id minted once per
     * checkpoint lifetime is recorded in BOTH places; a mismatch — or a
-    * fresh checkpoint against a statePath that already carries a
-    * watermark — fails loudly instead. */
+    * statePath that carries a watermark but no sweep id — fails loudly
+    * instead. A checkpoint that has already run (its model pin is
+    * recorded) but carries no sweep id predates the pairing guard and
+    * is refused before anything is minted, as [[StreamingLex]] refuses
+    * a checkpoint with no era marker. */
   private def requirePairing(spark: org.apache.spark.sql.SparkSession,
       statePath: String, checkpoint: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val ckptMarker = s"$checkpoint/$SweepMarker"
-    val fs = new org.apache.hadoop.fs.Path(checkpoint).getFileSystem(conf)
-    val ckptExisted = fs.exists(
-      new org.apache.hadoop.fs.Path(checkpoint, PinMarker))
-    val ckptId = StateCommit.readSmallFile(conf, ckptMarker).map(_.trim)
-      .getOrElse {
-        val id = java.util.UUID.randomUUID().toString
-        StateCommit.writeSmallFile(conf, ckptMarker, id)
-        id
-      }
     val stateMarker = s"$statePath/$SweepMarker"
-    StateCommit.readSmallFile(conf, stateMarker).map(_.trim) match {
-      case Some(sid) if sid != ckptId =>
+    val ckptId = StateCommit.readSmallFile(conf, ckptMarker).map(_.trim)
+    if (ckptId.isEmpty) {
+      val pin = new org.apache.hadoop.fs.Path(checkpoint, PinMarker)
+      if (pin.getFileSystem(conf).exists(pin)) throw StateCommit.staleLayout(
+        checkpoint, "a DSIR sweep checkpoint with a model pin but no sweep id")
+    }
+    val stateId = StateCommit.readSmallFile(conf, stateMarker).map(_.trim)
+    stateId match {
+      case Some(sid) if !ckptId.contains(sid) =>
         throw new IllegalStateException(
           s"statePath $statePath belongs to sweep $sid but checkpoint " +
-            s"$checkpoint carries sweep $ckptId — a fresh checkpoint " +
-            "restarts batch ids at 0 and the existing watermark would " +
-            "silently skip every new batch; resume the original " +
-            "checkpoint or point the sweep at a fresh statePath")
-      case Some(_) => ()
-      case None =>
-        val watermark = StateCommit.currentVersion(spark, statePath)
-        if (!ckptExisted && watermark.nonEmpty)
-          throw new IllegalStateException(
-            s"statePath $statePath already carries an applied-batch " +
-              s"watermark but checkpoint $checkpoint is fresh — batch " +
-              "ids restart at 0 and every new batch would be silently " +
-              "skipped; resume the sweep's original checkpoint or use " +
-              "a fresh statePath")
-        // PRE-UPGRADE adoption (round-12 advice): a checkpoint from
-        // before the sweep-marker mechanism (PinMarker present, no
-        // SweepMarker) paired with a pre-existing statePath used to be
-        // adopted blind — the wrong statePath's higher watermark still
-        // silently skipped every batch. Cross-check: a correctly paired
-        // sweep has watermark == the checkpoint's last committed batch
-        // id (or +1 for a crash between the state commit and Spark's
-        // commit marker). Anything else means the two dirs never ran
-        // together.
-        if (ckptExisted && watermark.nonEmpty) {
-          val wm = watermark.get
-          val lastCommitted = scala.util.Try {
-            fs.listStatus(new org.apache.hadoop.fs.Path(checkpoint, "commits"))
-              .map(_.getPath.getName)
-              .flatMap(n => scala.util.Try(n.toLong).toOption)
-          }.toOption.toSeq.flatten.sorted.lastOption.getOrElse(-1L)
-          if (wm != lastCommitted && wm != lastCommitted + 1)
-            throw new IllegalStateException(
-              s"statePath $statePath (applied-batch watermark $wm) does " +
-                s"not pair with pre-upgrade checkpoint $checkpoint (last " +
-                s"committed batch id $lastCommitted) — adopting the " +
-                "mismatch would silently skip batches; resume the " +
-                "sweep's original statePath or start fresh")
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"adopting pre-upgrade DSIR sweep pairing: checkpoint " +
-              s"$checkpoint (last committed $lastCommitted) <-> statePath " +
-              s"$statePath (watermark $wm); sweep id $ckptId minted")
-        }
-        StateCommit.writeSmallFile(conf, stateMarker, ckptId)
+            s"$checkpoint carries ${ckptId.fold("none")(c => s"sweep $c")}" +
+            " — a fresh checkpoint restarts batch ids at 0 and the " +
+            "existing watermark would silently skip every new batch; " +
+            "resume the original checkpoint or point the sweep at a " +
+            "fresh statePath")
+      case None if StateCommit.currentVersion(spark, statePath).nonEmpty =>
+        throw new IllegalStateException(
+          s"statePath $statePath already carries an applied-batch " +
+            s"watermark but no sweep id pairing it with checkpoint " +
+            s"$checkpoint — batch ids restart at 0 and every new batch " +
+            "would be silently skipped; resume the sweep's original " +
+            "checkpoint or use a fresh statePath")
+      case _ =>
     }
+    val id = ckptId.getOrElse {
+      val minted = java.util.UUID.randomUUID().toString
+      StateCommit.writeSmallFile(conf, ckptMarker, minted)
+      minted
+    }
+    if (stateId.isEmpty) StateCommit.writeSmallFile(conf, stateMarker, id)
   }
 
   /** The sweep's model pin, persisted in the CHECKPOINT on first start

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.embed.{Embedder, GraftEmbedError}
 import graft.store.{EnsureStoreVectorStore, ParquetVectorStore}
+import graft.streaming.StateCommit.exists
 
 /** One validation outcome — the reference returns `{ok, message}` pairs
   * (`includes/class-validators.php:20,77`); `code` adds the
@@ -60,13 +61,14 @@ object Validators {
     * compare against). */
   def validateStore(spark: SparkSession, root: String,
       expectedDim: Option[Int]): ValidationResult = {
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root)))
+    if (!exists(spark, root))
       return ValidationResult(ok = false, "store_unreachable",
         s"store root $root does not exist — nothing has been synced there.")
     try {
       val store = new ParquetVectorStore(spark, root)
-      // a legacy layout throws at currentVersion, a bucket-count or mode
-      // mismatch at read(), which parses the committed meta
+      // a legacy layout or an unreadable commit pointer throws at
+      // currentVersion, a bucket-count or mode mismatch at read(), which
+      // parses the committed meta
       val version = store.currentVersion
       val sample = store.read().select("values").head(1)
       if (sample.isEmpty)
@@ -89,7 +91,8 @@ object Validators {
         }
       }
     } catch {
-      // bucket-count/mode mismatch, legacy layout, unreadable meta
+      // bucket-count/mode mismatch, legacy layout, unreadable pointer or
+      // meta
       case e: Exception =>
         ValidationResult(ok = false, "store_invalid",
           s"store at $root is not readable: ${Option(e.getMessage).getOrElse(e.getClass.getSimpleName)}")
@@ -110,7 +113,7 @@ object Validators {
       // the nested data store is created lazily on first WRITE — an ensured
       // adapter with no data dir yet is a valid empty store
       val innerResult =
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "data")))
+        if (!exists(spark, s"$root/data"))
           ValidationResult(ok = true, "ok", "ensured, no vectors yet.")
         else validateStore(spark, s"$root/data", expectedDim)
       innerResult.copy(message = s"store ${vs.ensureStore()}: ${innerResult.message}")

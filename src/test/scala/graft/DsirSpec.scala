@@ -148,4 +148,32 @@ class DsirSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(pinned == s1, "scoreAt(v1) diverged from the pre-refit scores")
   }
+
+  test("a DSIR meta without the totals is refused, files untouched") {
+    import graft.streaming.StateCommit
+    val raw = Seq((1L, legal), (2L, recipe)).toDF("doc_id", "text")
+    // the pre-totals meta carried only `buckets`: as the pre-fold t-less
+    // table beside model/, and as a folded meta without nt/nr
+    val layouts = Seq[(String, org.apache.spark.sql.DataFrame) => Unit](
+      (dir, folded) => {
+        folded.where(col("t") === "model").select("bucket", "micro")
+          .write.parquet(dir.replace("/meta", "/model"))
+        folded.where(col("t") === "meta").select("buckets").write.parquet(dir)
+      },
+      (dir, folded) =>
+        folded.select("t", "bucket", "micro", "buckets").write.parquet(dir))
+    for (rewrite <- layouts) {
+      val root = java.nio.file.Files.createTempDirectory("dsir_old_").toString
+      val v = graft.operators.DsirModel.fit(raw,
+        Seq((100L, legal)).toDF("doc_id", "text"), root)
+      val dir = StateCommit.tableDir(root, v, "meta")
+      val folded = spark.read.parquet(dir).localCheckpoint()
+      val meta = new org.apache.hadoop.fs.Path(dir)
+      meta.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(meta, true)
+      rewrite(dir, folded)
+      assertRefused(root) {
+        graft.operators.DsirModel.score(spark, root, raw).collect()
+      }
+    }
+  }
 }

@@ -225,7 +225,7 @@ class IncrementalAggSpec extends SparkSpec {
     assert(avg == 10L, s"expected truncating 21 div 2 = 10, got $avg")
   }
 
-  test("legacy pre-cnt_v state fails LOUDLY with the migration story; assumeNoNulls adopts cnt exactly") {
+  test("legacy pre-cnt_v state is refused by view and ingest, files untouched") {
     val root = freshRoot()
     val b1 = Seq(("A", 10L), ("A", 20L), ("B", 5L)).toDF("k", "v")
     IncrementalAgg.ingest(spark, root, b1, Seq("k"), Seq("v"), 1L)
@@ -240,26 +240,14 @@ class IncrementalAggSpec extends SparkSpec {
       .write.mode("overwrite").parquet(aggsDir)
     // read and write paths both fail with the actionable error, not an
     // UNRESOLVED_COLUMN AnalysisException (round-11 review)
-    val e1 = intercept[IllegalStateException] {
+    val e1 = assertRefused(root) {
       IncrementalAgg.view(spark, root, Seq("v")).collect()
     }
-    assert(e1.getMessage.contains("cnt_v") && e1.getMessage.contains("rebuild"))
-    val e2 = intercept[IllegalStateException] {
+    assert(e1.getMessage.contains("cnt_v"), e1.getMessage)
+    val e2 = assertRefused(root) {
       IncrementalAgg.ingest(spark, root,
         Seq(("B", 7L)).toDF("k", "v"), Seq("k"), Seq("v"), 2L)
     }
-    assert(e2.getMessage.contains("cnt_v"))
-    // the opt-in: a no-NULLs fact makes cnt the exact divisor, and the
-    // upgraded state merges forward with real cnt_v from here on
-    val avg = IncrementalAgg.view(spark, root, Seq("v"), assumeNoNulls = true)
-      .where(col("k") === "A").select("avg_v").as[Long].head()
-    assert(avg == 15L, s"legacy avg under assumeNoNulls: $avg")
-    assert(IncrementalAgg.ingest(spark, root,
-      Seq(("A", 3L), ("B", 7L)).toDF("k", "v"), Seq("k"), Seq("v"), 2L,
-      assumeNoNulls = true))
-    val got = IncrementalAgg.read(spark, root).get
-      .select("k", "cnt", "sum_v", "cnt_v")
-      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(got == Seq(("A", 3L, 33L, 3L), ("B", 2L, 12L, 2L)), got.toString)
+    assert(e2.getMessage.contains("cnt_v"), e2.getMessage)
   }
 }

@@ -336,7 +336,7 @@ class LexIndexSpec extends SparkSpec {
       "delete-then-reingest diverged from the full rebuild")
   }
 
-  test("a pre-tpfx generation mixes with partitioned ones: search, delete and compaction still work") {
+  test("a generation without the tpfx partition column is refused, files untouched") {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_mix_").toString
     val v1 = LexIndex.build(spark, docs.where(col("doc_id") % 2 === 0), root)
@@ -350,24 +350,30 @@ class LexIndexSpec extends SparkSpec {
       .write.parquet(flatTmp.toString)
     fs.delete(g1, true)
     assert(fs.rename(flatTmp, g1))
-    // a pre-docs-table generation has no docs dir either — the delete
-    // below must take liveDocs' postings-derived fallback for gen-1
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/gen-$v1/docs"), true)
+    val e = assertRefused(root) {
+      LexIndex.search(spark, root, Seq("vector", "merge", "spark"), k = 20)
+        .collect()
+    }
+    assert(e.getMessage.contains(s"gen-$v1") && e.getMessage.contains("tpfx"),
+      e.getMessage)
+    assertRefused(root)(LexIndex.compactGenerations(spark, root))
+  }
 
-    val rootFull = Files.createTempDirectory("lex_mixf_").toString
-    LexIndex.build(spark, docs, rootFull)
-    val terms = Seq("vector", "merge", "spark")
-    def rows(r: String) = LexIndex.search(spark, r, terms, k = 20)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSeq
-    assert(rows(root) == rows(rootFull),
-      "mixed-layout index diverged from the rebuild")
-    LexIndex.delete(spark, root,
-      docs.where(col("doc_id") % 5 === 0).select("doc_id"))
-    LexIndex.compactGenerations(spark, root)
-    val rootDel = Files.createTempDirectory("lex_mixd_").toString
-    LexIndex.build(spark, docs.where(col("doc_id") % 5 =!= 0), rootDel)
-    assert(rows(root) == rows(rootDel),
-      "mixed-layout delete+compact diverged from the filtered rebuild")
+  test("a generation without its docs table is refused, files untouched") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("lex_nodocs_").toString
+    val v1 = LexIndex.build(spark, docs.where(col("doc_id") % 2 === 0), root)
+    LexIndex.ingest(spark, docs.where(col("doc_id") % 2 =!= 0), root)
+    // the pre-docs-table layout: postings only, no gen-1/docs
+    val d1 = new org.apache.hadoop.fs.Path(s"$root/gen-$v1/docs")
+    assert(d1.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(d1, true))
+    val e = assertRefused(root) {
+      LexIndex.delete(spark, root,
+        docs.where(col("doc_id") % 5 === 0).select("doc_id"))
+    }
+    assert(e.getMessage.contains(s"gen-$v1") && e.getMessage.contains("docs"),
+      e.getMessage)
   }
 
   test("searchAt: a retained prior snapshot answers exactly what it answered when current") {

@@ -89,7 +89,7 @@ class LifecycleSpec extends SparkSpec {
       Files.write(dir.resolve(cursor), "7".getBytes)
       val r = Validators.validateStore(spark, dir.toString, Some(Dim))
       assert(!r.ok && r.code == "store_invalid", r.message)
-      assert(r.message.contains("fresh dir"), r.message)
+      assert(r.message.contains("fresh root"), r.message)
     }
   }
 

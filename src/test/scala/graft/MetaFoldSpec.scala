@@ -20,9 +20,10 @@ import graft.streaming.StateCommit
   * Pinned here:
   *   1. the snapshot dir really is ONE meta table (a regression back
   *      to per-table writes re-grows the constant silently);
-  *   2. a PRE-fold snapshot (per-table dirs, hand-unfolded) reads
-  *      identically through every public API — the time-travel
-  *      compatibility contract of the fold;
+  *   2. a PRE-fold snapshot (per-table dirs, hand-unfolded) is refused
+  *      by every public read and write with the rebuild message, and
+  *      its files are left as they were — no writer produces that
+  *      layout any more, so no reader keeps a second path for it;
   *   3. generation GC still reclaims superseded generations under the
   *      deferred policy (dropped-gens commits trigger it; the retain=2
   *      lag is one commit, as before).
@@ -60,7 +61,7 @@ class MetaFoldSpec extends SparkSpec {
     assert(fs.delete(meta, true), "meta dir did not exist to delete")
   }
 
-  test("AnnIndexPq: one meta table per snapshot; pre-fold snapshots read identically") {
+  test("AnnIndexPq: one meta table per snapshot; a pre-fold snapshot is refused") {
     val root = freshRoot("pq")
     AnnIndexPq.build(emb.where(col("vec_id") < 400), root)
     AnnIndexPq.upsert(spark, root,
@@ -68,68 +69,46 @@ class MetaFoldSpec extends SparkSpec {
     val v = AnnIndexPq.version(spark, root)
     assert(snapDirs(root, v) == Set("meta"),
       s"folded snapshot must carry ONLY meta/: ${snapDirs(root, v)}")
-
-    val q = queries(6)
-    val before = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
-      .collect().map(_.toString).toSeq
-    assert(before.nonEmpty, "fixture returned nothing — parity is vacuous")
-    val driftBefore = AnnIndexPq.driftReport(spark, root)
-    assert(driftBefore.isDefined, "expected a drift report after upsert")
-
-    // hand-unfold the committed snapshot into the pre-fold layout and
-    // re-read everything through the public APIs
     unfold(root, v, Seq("coarse", "codebook", "params", "manifest", "stats", "drift")
       .map(t => t -> StateCommit.metaTable(spark, root, v, AnnIndexPq.metaSchema, t)))
-    val after = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
-      .collect().map(_.toString).toSeq
-    assert(after == before, "pre-fold fallback read a different index")
-    assert(AnnIndexPq.driftReport(spark, root) == driftBefore,
-      "drift report changed across the unfold")
-    // and a mutation OVER a pre-fold snapshot re-folds cleanly
-    AnnIndexPq.upsert(spark, root,
-      emb.where(col("vec_id") >= 450 && col("vec_id") < 470))
-    val v2 = AnnIndexPq.version(spark, root)
-    assert(snapDirs(root, v2) == Set("meta"), snapDirs(root, v2).toString)
-    assert(AnnIndexPq.driftReport(spark, root).get.nRecent == 70,
-      "drift log lost rows across the pre-fold carry")
+    assertRefused(root) {
+      AnnIndexPq.search(spark, root, queries(6), nProbes = 2, k = 5).collect()
+    }
+    assertRefused(root)(AnnIndexPq.driftReport(spark, root))
+    assertRefused(root) {
+      AnnIndexPq.upsert(spark, root,
+        emb.where(col("vec_id") >= 450 && col("vec_id") < 470))
+    }
   }
 
-  test("AnnIndex: one meta table per snapshot; pre-fold snapshots read identically") {
+  test("AnnIndex: one meta table per snapshot; a pre-fold snapshot is refused") {
     val root = freshRoot("ann")
     AnnIndex.build(emb.where(col("vec_id") < 400), root, nCells = 8)
     val v = AnnIndex.version(spark, root)
     assert(snapDirs(root, v) == Set("meta"), snapDirs(root, v).toString)
-    val q = queries(6)
-    val before = AnnIndex.search(spark, root, q, nProbes = 2, k = 5)
-      .collect().map(_.toString).toSeq
-    assert(before.nonEmpty)
     unfold(root, v, Seq("centroids", "manifest", "stats", "drift")
       .map(t => t -> StateCommit.metaTable(spark, root, v, AnnIndex.metaSchema, t)))
-    val after = AnnIndex.search(spark, root, q, nProbes = 2, k = 5)
-      .collect().map(_.toString).toSeq
-    assert(after == before, "pre-fold fallback read a different index")
+    assertRefused(root) {
+      AnnIndex.search(spark, root, queries(6), nProbes = 2, k = 5).collect()
+    }
   }
 
-  test("DedupIndex: one meta table per snapshot; the pre-fold layout (t-less meta) reads identically") {
+  test("DedupIndex: one meta table per snapshot; a pre-fold t-less meta is refused") {
     val root = freshRoot("dd")
     DedupIndex.build(docs, root)
     val v = DedupIndex.version(spark, root)
     assert(snapDirs(root, v) == Set("meta"), snapDirs(root, v).toString)
-    val probe = docs.limit(40)
-    val before = DedupIndex.classifyBatch(spark, root, probe)
-      .collect().map(_.toString).toSeq
-    assert(before.nonEmpty)
     // the pre-fold DedupIndex ALSO named its scheme table `meta` — the
-    // t-less schema is what the fallback probe discriminates on.
+    // t-less schema, not the dir's existence, marks the old layout.
     // Capture the scheme BEFORE the unfold deletes the folded file.
     val (k, r) = DedupIndex.scheme(spark, root)
     unfold(root, v, Seq("manifest", "tombstones")
       .map(t => t -> StateCommit.metaTable(spark, root, v, DedupIndex.metaSchema, t)))
     Seq((k, r)).toDF("k", "r")
       .coalesce(1).write.parquet(StateCommit.tableDir(root, v, "meta"))
-    val after = DedupIndex.classifyBatch(spark, root, probe)
-      .collect().map(_.toString).toSeq
-    assert(after == before, "pre-fold fallback read a different index")
+    assertRefused(root) {
+      DedupIndex.classifyBatch(spark, root, docs.limit(40)).collect()
+    }
   }
 
   test("generation GC still reclaims under the deferred policy (rebuild = dropped gens)") {

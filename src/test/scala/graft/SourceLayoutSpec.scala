@@ -11,14 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * `main`s, every one of them builds its session through
   * [[LocalSession]], generation GC is reached only through the shared
   * commit tail ([[graft.streaming.StateCommit.commitMeta]]), the
-  * sync path's state goes through Hadoop via [[graft.streaming
-  * .StateCommit]] (one atomic small-file write, one partition lister),
+  * sync path's and the validators' state checks go through Hadoop via
+  * [[graft.streaming.StateCommit]] (one atomic small-file write, one
+  * partition lister),
   * the tombstone format lives in [[graft.streaming.GenerationalTable]],
   * the cell-entries format in [[graft.streaming.CellTable]], the
-  * folded-meta probe and generation paths live in StateCommit, each
-  * family's folded meta is declared once as a
-  * [[graft.streaming.MetaSchema]], and every streaming query runs
-  * through [[graft.streaming.AvailableNow]].
+  * folded-meta probe and generation paths live in StateCommit, the meta
+  * readers keep no per-table path for old layouts, each family's folded
+  * meta is declared once as a [[graft.streaming.MetaSchema]], and every
+  * streaming query runs through [[graft.streaming.AvailableNow]].
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -67,6 +68,11 @@ class SourceLayoutSpec extends AnyFunSuite {
       f.startsWith("graft/sync/") || f.startsWith("graft/store/")).isEmpty)
   }
 
+  test("no file under graft/validate names java.nio.file") {
+    assert(filesContaining("java.nio.file").filter(
+      _.startsWith("graft/validate/")).isEmpty)
+  }
+
   test("the cli checks state paths through Hadoop, not java.nio.file") {
     assert(!filesContaining("java.nio.file")("graft/cli/Main.scala"))
   }
@@ -89,6 +95,19 @@ class SourceLayoutSpec extends AnyFunSuite {
   test("the folded-meta schema probe has one copy, in StateCommit") {
     assert(filesContaining(""".filter(_.columns.contains("t"))""") ==
       Set("graft/streaming/StateCommit.scala"))
+  }
+
+  test("metaTable and metaRows read the folded meta, never a per-table dir") {
+    val text = sources("graft/streaming/StateCommit.scala")
+    val readers = text.substring(text.indexOf("def metaTableNames("),
+      text.indexOf("def oneRow("))
+    assert(readers.contains("def metaTable(") && readers.contains("def metaRows("))
+    assert(readers.contains("foldedMeta(") && !readers.contains("tableDir("),
+      readers)
+  }
+
+  test("no main source keeps the assumeNoNulls knob") {
+    assert(filesContaining("assumeNoNulls").isEmpty)
   }
 
   test("generation paths are built only by StateCommit.genDir") {

@@ -6,14 +6,14 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.StateCommit
 
-/** [[StateCommit.gcGenerations]] layout-precedence contract (round-12
-  * advice): GC must resolve the manifest through the SAME layout
-  * precedence readers use — folded `meta` (discriminated by its `t`
-  * column) first, per-table manifest only for pre-fold snapshots —
-  * or a snapshot dir carrying both layouts (a pre-fold build attempt
-  * crashed before commit, then the version was rewritten post-fold)
-  * makes GC follow the STALE manifest and delete generations the
-  * committed snapshot still references. */
+/** [[StateCommit.gcGenerations]] layout contract (round-12 advice): GC
+  * must resolve the manifest through the SAME read the readers use —
+  * the folded `meta`, told by its `t` column. A stray per-table manifest
+  * dir (a pre-fold build attempt crashed before commit, then the version
+  * was rewritten post-fold) is never consulted, and a snapshot with no
+  * folded meta, which the readers refuse, makes GC abort without
+  * deleting anything: a guessed manifest would delete generations the
+  * committed snapshot may still reference. */
 class StateCommitSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,10 +42,9 @@ class StateCommitSpec extends SparkSpec {
     assert(genDirs(root) == Seq("gen-2"), genDirs(root).toString)
   }
 
-  test("a params table also named `meta` (no `t` column) does not shadow the per-table manifest") {
-    // the DedupIndex shape: `meta` holds k/r params, the real manifest
-    // is per-table — folded-layout detection must be by schema, not by
-    // directory existence, or GC silently aborts for that family
+  test("GC over a meta with no t column aborts and deletes nothing") {
+    // the pre-fold DedupIndex shape: `meta` holds k/r params and the
+    // manifest is a per-table dir — a layout the readers refuse
     val root = Files.createTempDirectory("graft-scommit2").toString
     Seq(3L).toDF("gen").write
       .parquet(StateCommit.tableDir(root, 4L, "manifest"))
@@ -54,7 +53,9 @@ class StateCommitSpec extends SparkSpec {
     Seq(0L).toDF("x").write.parquet(s"$root/gen-2")
     Seq(0L).toDF("x").write.parquet(s"$root/gen-3")
     commitPointer(root, 4L)
+    val before = fileTree(root)
     StateCommit.gcGenerations(spark, root)
-    assert(genDirs(root) == Seq("gen-3"), genDirs(root).toString)
+    assert(genDirs(root) == Seq("gen-2", "gen-3"), genDirs(root).toString)
+    assert(fileTree(root) == before)
   }
 }

@@ -212,37 +212,20 @@ class StreamingDsirSpec extends SparkSpec {
       StreamingDsir.start(msB.toDF().toDF("doc_id", "text"),
         modelRoot, stateB, ckptB).awaitTermination(60000)
     }
-    // simulate the pre-upgrade on-disk state, then mispair A's
-    // checkpoint with B's statePath: watermark 2 can never belong to a
-    // checkpoint whose last committed batch is 0 (round-12 advice: this
-    // combination used to be adopted silently, and every batch at or
-    // under watermark 2 would have been skipped without a trace)
+    // the pre-upgrade on-disk state: a checkpoint that has run (its
+    // model pin is recorded) but carries no sweep id. Paired with a
+    // foreign statePath (round-12 advice: watermark 2 would have
+    // swallowed every batch at or under it) or with its own, it is
+    // refused before any marker is minted, as StreamingLex refuses a
+    // checkpoint with no era marker
     stripSweepMarkers(ckptA, stateA, ckptB, stateB)
-    val msC = MemoryStream[(Long, String)](spark)
-    msC.addData((20L, legal))
-    val e = intercept[IllegalStateException] {
-      StreamingDsir.start(msC.toDF().toDF("doc_id", "text"),
-        modelRoot, stateB, ckptA).awaitTermination(60000)
+    for (state <- Seq(stateB, stateA)) {
+      val msC = MemoryStream[(Long, String)](spark)
+      msC.addData((20L, legal))
+      assertRefused(ckptA, stateA, stateB) {
+        StreamingDsir.start(msC.toDF().toDF("doc_id", "text"),
+          modelRoot, state, ckptA).awaitTermination(60000)
+      }
     }
-    assert(e.getMessage.contains("does not pair"), e.getMessage)
-  }
-
-  test("pre-upgrade checkpoint + its OWN statePath adopts and resumes") {
-    val modelRoot = fitModel()
-    val state = Files.createTempDirectory("dsir_stateC_").toString
-    val ckpt = Files.createTempDirectory("dsir_ckptC_").toString
-    val ms = MemoryStream[(Long, String)](spark)
-    ms.addData((1L, legal))
-    StreamingDsir.start(ms.toDF().toDF("doc_id", "text"),
-      modelRoot, state, ckpt).awaitTermination(60000)
-    stripSweepMarkers(ckpt, state)
-    // the matched pair (watermark == last committed batch id) must
-    // adopt: markers re-mint and the sweep continues scoring
-    ms.addData((2L, recipe))
-    StreamingDsir.start(ms.toDF().toDF("doc_id", "text"),
-      modelRoot, state, ckpt).awaitTermination(60000)
-    val got = StreamingDsir.scores(spark, state).collect()
-      .map(_.getLong(0)).toSet
-    assert(got == Set(1L, 2L), s"adopted sweep lost batches: $got")
   }
 }

@@ -201,10 +201,9 @@ class SyncEngineSpec extends SparkSpec {
     Files.createDirectories(dir.resolve("sync"))
     Files.write(dir.resolve("sync/_VERSION"), "3".getBytes)
     val (engine, store) = mkEngine(dir)
-    val e = intercept[IllegalStateException](
+    val e = assertRefused(dir.resolve("sync").toString, dir.toString)(
       engine.sync(docs(Seq(1L -> "tiny doc."))))
-    assert(e.getMessage.contains("_VERSION") &&
-      e.getMessage.contains("re-sync into a fresh dir"), e.getMessage)
+    assert(e.getMessage.contains("_VERSION"), e.getMessage)
     intercept[IllegalStateException](engine.syncVersion)
     assert(store.currentVersion == 0, "the failed pass wrote nothing")
   }
