@@ -90,8 +90,11 @@ object Bench {
     val total = results.values.map(_._1).filter(_ >= 0).sum
     val totalMax = results.values.map(_._2).filter(_ >= 0).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // the master (local[N]) rides the long line only: the medians
+    // builder reads it from the passes instead of assuming a host
+    val master = spark.sparkContext.master
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_max":$totalMax,"queries":$qs,"queries_max":$qsMax,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","value_max":$totalMax,"queries":$qs,"queries_max":$qsMax,"failed":$failedJson,"sf":"$sfDir","master":"$master"}"""
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), line + "\n")
     println(line)

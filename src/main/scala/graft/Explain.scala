@@ -37,7 +37,7 @@ object Explain {
   }
 
   /** Lazy (materialize=false) builders for the stage-snapshotting queries. */
-  private val lazyForms
+  private[graft] val lazyForms
       : Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
     // bounded rounds = 3 for every lazy plan dump: per-round plan shape
     // is identical to the fixpoint's, and the bounded path runs no
@@ -53,7 +53,7 @@ object Explain {
     "dd_near_apply" -> ((s, dir) => graft.operators.Dedup.nearDupApply(
       graft.catalog.Catalog.documents(s, dir), materialize = false,
       rounds = 3)),
-    "sim_semdedup" -> ((s, dir) => graft.operators.Similarity.semanticDedup(
-      graft.catalog.Catalog.embeddings(s, dir), threshold = 0.25,
+    "sim_semdedup" -> ((s, dir) => graft.operators.Similarity.semanticDedupCells(
+      graft.catalog.Catalog.embeddings(s, dir), threshold = 0.35,
       rounds = 3, materialize = false)))
 }

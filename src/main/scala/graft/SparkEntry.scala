@@ -1595,19 +1595,16 @@ object SparkEntry {
     "ta_mix_temp" -> ((s, dir) =>
       TextAnalysis.mixTemperature(Catalog.documents(s, dir))),
 
-    // per-language token-count quantiles (exact; approx form is the
-    // 100 TB path, spec-bounded against this)
+    // per-language token-count quantiles (exact)
     "ta_quantiles" -> ((s, dir) =>
       TextAnalysis.tokenQuantiles(Catalog.documents(s, dir))),
 
-    // per-language exact vocabulary cardinality (HLL approx form is the
-    // 100 TB path, spec-bounded)
+    // per-language exact vocabulary cardinality
     "ta_cardinality" -> ((s, dir) =>
       TextAnalysis.tokenCardinality(Catalog.documents(s, dir))),
 
     // heavy hitters: frequent tokens above an absolute count (exact,
-    // one combinable shuffle; heavyHittersApprox is the spec-bounded
-    // Misra-Gries bounded-memory path)
+    // one combinable shuffle)
     "ta_heavy" -> ((s, dir) =>
       TextAnalysis.heavyHitters(Catalog.documents(s, dir), minCount = 300)),
 
@@ -1786,8 +1783,7 @@ object SparkEntry {
     "j7_asof" -> ((s, dir) => Temporal.asofAttribution(Catalog.events(s, dir))),
 
     // J8 interval join: ALL clicks within 30 min before each purchase —
-    // equi-join on user_id + residual range predicate (batch form of the
-    // streaming attributionJoin)
+    // equi-join on user_id + residual range predicate
     "j8_interval" -> ((s, dir) => Temporal.intervalJoin(Catalog.events(s, dir))),
 
     // J9 ordered funnel: signup -> click -> purchase conversion counts

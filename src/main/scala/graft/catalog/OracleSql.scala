@@ -74,9 +74,6 @@ object OracleSql {
        |)
        |""".stripMargin
 
-  /** Prefix `sql` with the catalog prologue. */
-  def withCatalog(sql: String): String = prologue + sql
-
   /** Shared unigram-LM scoring chain
     * ([[graft.operators.TextAnalysis.unigramSurprisal]]): defines `scored`
     * (doc_id, n_tokens, micro_bits, micro_bpt). ONE definition feeds both

@@ -14,14 +14,6 @@ object Functions {
   def stripHtml(c: Column): Column =
     trim(regexp_replace(regexp_replace(c, "<[^>]*>", ""), "\\s+", " "))
 
-  /** F2 chunker text normalize: CRLF/CR→LF, tab→space, 3+ newlines→2,
-    * per-line trim (reference `includes/class-chunker.php:109-123`). */
-  def normalizeWhitespace(c: Column): Column = {
-    val lf = regexp_replace(regexp_replace(c, "\\r\\n|\\r", "\n"), "\\t", " ")
-    val collapsed = regexp_replace(lf, "\\n{3,}", "\n\n")
-    trim(regexp_replace(collapsed, "[ ]+(\\n)", "$1"))
-  }
-
   /** F4 `label: value` section line
     * (reference `includes/class-field-normalizer.php:69-78`). */
   def labelValue(label: String, value: Column): Column =
@@ -43,10 +35,6 @@ object Functions {
     * which is what makes these operators oracle-checkable). */
   def sha32(c: Column): Column =
     conv(substring(sha2(c, 256), 1, 8), 16, 10).cast("long")
-
-  /** sha32 scaled into [-1, 1) — one deterministic embedding coordinate. */
-  def shaUnit(c: Column): Column =
-    sha32(c) / lit(4294967296.0) * 2.0 - 1.0
 
   /** F15 slug prettifier: `royal-blue`/`matte_black` → `Royal Blue` /
     * `Matte Black` (reference `ucwords(replace(_,-, ' '))`,

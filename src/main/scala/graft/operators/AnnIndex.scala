@@ -153,18 +153,6 @@ object AnnIndex {
   def vectors(spark: SparkSession, root: String): DataFrame =
     Cells.read(spark, root, metaAt(spark, root, version(spark, root)).cells)
 
-  /** The pruned candidate scan for a probe-cell set — exposed for the
-    * plan gate (asserts `cell IN (…)` lands in PartitionFilters; the
-    * manifest additionally prunes at the PATH level, so unprobed cells'
-    * directories are never even listed). */
-  def prunedVectors(spark: SparkSession, root: String,
-      cells: Seq[Any]): DataFrame = {
-    val want = cells.map(_.toString).toSet
-    val live = metaAt(spark, root, version(spark, root)).cells
-    Cells.read(spark, root, live.filter(e => want(e._1)))
-      .where(col("cell").isin(cells: _*))
-  }
-
   /** Train the coarse quantizer and persist the cell-partitioned vector
     * table as snapshot v+1 (v=0 for a fresh root). The assignment pass
     * reads the PERSISTED centroids, so build and search rank against
@@ -352,10 +340,4 @@ object AnnIndex {
       rewrite(spark, root, v0, m, crowded)(
         _.repartition(col("cell"))) // one task -> one file per cell
   }
-
-  /** Per-cell parquet file counts of the committed snapshot — the
-    * [[compact]] trigger's input, exposed for ops/specs. */
-  def filesPerCell(spark: SparkSession, root: String): Map[String, Int] =
-    Cells.fileCounts(spark, root,
-      metaAt(spark, root, version(spark, root)).cells)
 }

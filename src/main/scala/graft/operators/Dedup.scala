@@ -62,9 +62,9 @@ object Dedup {
     * any row in the global per-source top-N is also in its salt
     * subgroup's top-N, so keeping ≤ N per (source, salt) is lossless,
     * and the phase-2 window sees at most N·salts rows per source —
-    * bounded regardless of source skew (same two-phase shape as
-    * [[graft.operators.Skew]]'s salted aggregation). Only (doc_id,
-    * source, pri) rows shuffle; text never leaves the scan. */
+    * bounded regardless of source skew (the two-phase salted
+    * aggregation shape). Only (doc_id, source, pri) rows shuffle; text
+    * never leaves the scan. */
   def capPerSource(documents: DataFrame, maxPerSource: Int = 20,
       salts: Int = 16): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

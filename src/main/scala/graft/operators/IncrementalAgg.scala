@@ -182,33 +182,6 @@ object IncrementalAgg {
     true
   }
 
-  /** Time travel: the maintained aggregate AS OF batch `v` — every
-    * batch ≤ v folded in, nothing after. Requires `v` within the
-    * retention horizon the ingests were run with ([[StateCommit
-    * .versions]] lists what survives); each retained snapshot is one
-    * keyed state table, so the horizon costs retain × |keys| rows, not
-    * history. The reproducibility surface: re-running yesterday's
-    * report against yesterday's state, exactly. */
-  def readAt(spark: SparkSession, root: String, v: Long): DataFrame =
-    StateCommit.readTableAt(spark, root, Aggs, v)
-
-  /** Approximate distinct counts from the maintained sketches:
-    * `approx_distinct_<col>` per requested column. Sketches are
-    * Datasketches HLL (exact while the sketch is still in sparse mode,
-    * ~2% beyond), merged losslessly across batches — the maintainable
-    * form of COUNT(DISTINCT), whose exact version cannot merge without
-    * keeping every key. Estimates are engine-specific, so this surface
-    * is spec-gated rather than oracle-gated. */
-  def viewDistinct(spark: SparkSession, root: String,
-      distincts: Seq[String]): DataFrame = {
-    val state = read(spark, root).getOrElse(
-      throw new IllegalStateException(s"no committed aggregate at $root"))
-    distincts.foldLeft(state) { (df, d) =>
-      df.withColumn(s"approx_distinct_$d",
-        hll_sketch_estimate(col(s"hll_$d")))
-    }
-  }
-
   /** The maintained histogram exploded to (keys..., bin, n_in_bin)
     * rows — bin 0 = underflow, nBins+1 = overflow. Deterministic
     * integer bucketing, so this IS oracle-gateable. */
@@ -223,33 +196,6 @@ object IncrementalAgg {
     state.select(keyCols.map(col) :+ posexplode(col(hist.name)): _*)
       .select(keyCols.map(col) :+ col("pos").cast("long").as("bin") :+
         col("col").as("n_in_bin"): _*)
-  }
-
-  /** Per-key quantile ESTIMATE from the maintained histogram: the
-    * lower edge of the first bin whose cumulative count reaches
-    * p·(in-range total) — error bounded by one bin width, the
-    * resolution the spec bought. Under/overflow bins are excluded from
-    * the mass (their edges are unbounded). */
-  def histQuantile(spark: SparkSession, root: String, hist: HistSpec,
-      p: Double): DataFrame = {
-    val binned = viewHist(spark, root, hist)
-      .where(col("bin") >= 1 && col("bin") <= hist.nBins)
-    val keyCols = binned.columns.toSeq.filterNot(c => c == "bin" || c == "n_in_bin")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy("bin")
-    val width = (hist.hi - hist.lo) / hist.nBins
-    binned
-      .withColumn("cum", sum("n_in_bin").over(w))
-      .withColumn("total",
-        sum("n_in_bin").over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(keyCols.map(col): _*)))
-      .where(col("cum") >= lit(p) * col("total"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(min("bin").as("qbin"))
-      .withColumn(s"q_${hist.column}",
-        lit(hist.lo) + (col("qbin") - 1) * lit(width))
   }
 
   /** Register this maintained aggregate as a transparent materialized

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton curve) file layout — multi-column data skipping for
@@ -140,23 +140,4 @@ object Layout {
       .drop("_zkey", "_t1", "_t2")
       .write.mode("overwrite").parquet(path)
   }
-
-  /** Per-file min/max bounding boxes of (`c1`, `c2`) for a written
-    * layout — the stats a reader's skipping logic consults, surfaced
-    * as a DataFrame so layouts are COMPARABLE (spec-gated: z-order
-    * prunes more files than a linear sort for 2-D boxes). */
-  def fileStats(spark: SparkSession, path: String, c1: String,
-      c2: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(min(col(c1)).as("min1"), max(col(c1)).as("max1"),
-        min(col(c2)).as("min2"), max(col(c2)).as("max2"))
-
-  /** Files whose bounding box intersects the 2-D range predicate —
-    * the files a skipping reader must open. */
-  def candidateFiles(stats: DataFrame, lo1: Long, hi1: Long, lo2: Long,
-      hi2: Long): Long =
-    stats.where(
-      col("max1") >= lo1 && col("min1") <= hi1 &&
-      col("max2") >= lo2 && col("min2") <= hi2).count()
 }

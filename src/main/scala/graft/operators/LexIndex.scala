@@ -616,8 +616,7 @@ object LexIndex {
     searchAt(spark, root, terms, version(spark, root), k, k1, b)
 
   /** Time travel: [[search]] as of snapshot `v` — the reproducibility
-    * surface ([[graft.streaming.StateCommit.readTableAt]]'s stance at
-    * the index level): a retrieval run re-executed against yesterday's
+    * surface: a retrieval run re-executed against yesterday's
     * committed snapshot answers exactly what it answered yesterday,
     * because generations are immutable and every snapshot pins its own
     * manifest/df/stats/tombstones. `v` must be within the retention
@@ -763,8 +762,8 @@ object LexIndex {
       .limit(k)
 
   /** Per-qid exact integer RRF fusion of (qid, doc_id, rank_lex) and
-    * (qid, doc_id, rank_vec) pools — the batched form ([[hybridAnn]] /
-    * [[hybridAnnMany]]): the join carries qid, so N queries fuse in ONE
+    * (qid, doc_id, rank_vec) pools — the batched form ([[hybridAnn]]):
+    * the join carries qid, so N queries fuse in ONE
     * job with no driver round-trips, and the per-qid top-k is a rank
     * window over (qid). Pools are ≤ poolK rows per qid by construction,
     * so the window partitions are bounded. */
@@ -797,9 +796,8 @@ object LexIndex {
     * qid), so batching N queries is one job, not N driver round-trips,
     * and the round-14 `require(nq == 1)` + its `count()` action are
     * retired (a spec pins multi-query fusion ≡ the per-query loop).
-    * Every qid fuses against the SAME `terms` lexical pool here; for
-    * per-qid term sets use [[hybridAnnMany]]. Output: (qid, doc_id,
-    * rank_lex, rank_vec, rrf_micro), top-k per qid. */
+    * Every qid fuses against the SAME `terms` lexical pool. Output:
+    * (qid, doc_id, rank_lex, rank_vec, rrf_micro), top-k per qid. */
   def hybridAnn(spark: SparkSession, root: String, terms: Seq[String],
       annRoot: String, queries: DataFrame, k: Int = 10,
       poolK: Int = 50, nProbes: Int = 1): DataFrame = {
@@ -812,22 +810,7 @@ object LexIndex {
     rrfFusePerQid(lexQ, annPool(spark, annRoot, queries, nProbes, poolK), k)
   }
 
-  /** [[hybridAnn]] with PER-QID term sets — the full production batch
-    * shape: `termsByQid` drives one [[searchMany]] pass (union-pruned
-    * postings scan, per-qid rank window) and the ANN leg serves every
-    * qid's probes in one search; fusion joins on (qid, doc_id). Output
-    * contract identical to [[hybridAnn]]. */
-  def hybridAnnMany(spark: SparkSession, root: String,
-      termsByQid: Seq[(Long, Seq[String])], annRoot: String,
-      queries: DataFrame, k: Int = 10, poolK: Int = 50,
-      nProbes: Int = 1): DataFrame = {
-    val lex = searchMany(spark, root, termsByQid, poolK)
-      .select(col("qid"), col("doc_id"), col("rank").as("rank_lex"))
-    rrfFusePerQid(lex, annPool(spark, annRoot, queries, nProbes, poolK), k)
-  }
-
-  /** The ANN leg's (qid, doc_id, rank_vec) pool, shared by both hybrid
-    * batch forms. */
+  /** The ANN leg's (qid, doc_id, rank_vec) pool of [[hybridAnn]]. */
   private def annPool(spark: SparkSession, annRoot: String,
       queries: DataFrame, nProbes: Int, poolK: Int): DataFrame =
     AnnIndex.search(spark, annRoot, queries, nProbes, k = poolK)

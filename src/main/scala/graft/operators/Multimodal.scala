@@ -1,48 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: image/audio/video as opaque `binary` columns with
-  * typed metadata. Image decode is REAL — `javax.imageio` ships in the
-  * JDK, so PNG/JPEG/GIF/BMP headers are parsed for true dimensions
-  * ([[decodeImage]]). Video/audio CONTAINER metadata is also real:
-  * MP4 track width/height come from the `moov`→`trak`→`tkhd` box and WAV
-  * sample-rate/channels/frame-count from the RIFF `fmt `/`data` chunks —
-  * pure byte reads, no codec needed ([[decodeMedia]]). PCM WAV *samples*
-  * are real too: PCM is codec-free, so [[decodeWavPcm]] reads the raw
-  * interleaved samples and [[audioStats]] computes per-asset signal
-  * statistics from them. Only payloads that sniff as none of these fall
-  * back to the clearly-marked deterministic fake ([[fakeDecode]]); the
-  * one remaining stub is pixel/sample decode of COMPRESSED av streams
-  * (MP4 video, MP3/AAC audio), which needs codecs the JRE lacks.
-  *
-  * Scale posture (100 TB): binary payloads never shuffle — metadata is
-  * projected out in the scan stage and all downstream ops run on the
-  * narrow metadata columns. Decode runs in `mapPartitions` so decoder
-  * init amortizes per partition, the Scala equivalent of the
-  * `mapInPandas` batch shape; dimension reads are header-only
-  * (`ImageReader.getWidth`), never a full pixel decode.
+  * typed metadata, derived by pure expressions so the `mm_*` queries stay
+  * oracle-checkable. Binary payloads never shuffle — metadata is projected
+  * out in the scan stage and all downstream ops run on the narrow
+  * metadata columns.
   */
 object Multimodal {
-
-  /** Typed metadata of a decoded media payload. `sample_rate`/`channels`/
-    * `n_samples` are 0 for anything that isn't sniffed audio. */
-  case class MediaMeta(doc_id: Long, n_bytes: Long, sha: String,
-      width: Int, height: Int, format: String,
-      sample_rate: Int, channels: Int, n_samples: Long)
-
-  /** Decode result of one payload (no identity fields). `nSamples` is the
-    * per-channel frame count (header-derived — data bytes / block align),
-    * real for PCM WAV, 0 elsewhere. */
-  case class MediaInfo(width: Int, height: Int, format: String,
-      sampleRate: Int, channels: Int, nSamples: Long = 0L)
-
-  /** Fully decoded PCM WAV audio: layout from `fmt `, raw samples from
-    * `data`, normalized to [-1, 1], channel-interleaved
-    * (`samples.length == frames * channels`). */
-  case class PcmAudio(sampleRate: Int, channels: Int, bitsPerSample: Int,
-      frames: Int, samples: Array[Float])
 
   /** Column-level metadata extraction over a binary column — pure
     * expressions, oracle-checkable. */
@@ -65,8 +32,7 @@ object Multimodal {
     * 24 fps — a real container parser slots in at the same column), pick
     * an even sampling stride targeting ≤ `maxFrames` samples, and emit
     * one row per sampled frame with its index and timestamp. This is the
-    * PLAN side of frame extraction — the rows feed the batched decode
-    * path ([[decodePartitioned]]) which would seek those offsets.
+    * PLAN side of frame extraction: the offsets a decoder would seek.
     *
     * Scale posture: pure expressions + one `posexplode` whose fan-out is
     * capped at `maxFrames` rows per asset; binary payloads stay in place. */
@@ -90,627 +56,4 @@ object Multimodal {
         col("col").as("frame_idx"),
         round(col("col") / lit(fps), 3).as("ts_sec"))
       .orderBy("doc_id", "sample_idx")
-
-  /** Magic-byte sniff for the formats the JDK's ImageIO can read. The
-    * PNG/JPEG magics contain non-ASCII bytes, so text can't collide; the
-    * BMP/GIF magics are printable ASCII ("BM", "GIF89a"), so those checks
-    * additionally require a CONTROL byte right after the magic — the
-    * header region of a real BMP/GIF always has one (dimension/flag bytes;
-    * a GIF would need both dimensions ≥ 0x2000 px AND printable flag,
-    * background and aspect bytes to evade it), while a text payload that
-    * merely STARTS with "GIF89a …" is all-printable there and falls
-    * through to the non-image fallback. */
-  private def sniffImageFormat(bytes: Array[Byte]): Option[String] = {
-    def at(i: Int, v: Int) = bytes.length > i && (bytes(i) & 0xff) == v
-    // a byte no plain-text document contains (control chars minus \t\n\r)
-    def ctl(i: Int) = bytes.length > i && {
-      val b = bytes(i) & 0xff
-      b < 0x09 || (b > 0x0d && b < 0x20)
-    }
-    if (at(0, 0x89) && at(1, 'P') && at(2, 'N') && at(3, 'G')) Some("png")
-    else if (at(0, 0xff) && at(1, 0xd8) && at(2, 0xff)) Some("jpeg")
-    else if (at(0, 'G') && at(1, 'I') && at(2, 'F') && at(3, '8') &&
-      (at(4, '7') || at(4, '9')) && at(5, 'a') &&
-      (6 to 12).exists(ctl)) Some("gif")
-    else if (at(0, 'B') && at(1, 'M') &&
-      at(6, 0) && at(7, 0) && at(8, 0) && at(9, 0)) Some("bmp")
-    else None
-  }
-
-  // ---- container-header byte reads (no codec involved) ----
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    if (o < 0 || o + 4 > b.length) -1L
-    else ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  private def le32(b: Array[Byte], o: Int): Long =
-    if (o < 0 || o + 4 > b.length) -1L
-    else ((b(o + 3) & 0xffL) << 24) | ((b(o + 2) & 0xffL) << 16) |
-      ((b(o + 1) & 0xffL) << 8) | (b(o) & 0xffL)
-  private def le16(b: Array[Byte], o: Int): Int =
-    if (o < 0 || o + 2 > b.length) -1
-    else ((b(o + 1) & 0xff) << 8) | (b(o) & 0xff)
-  private def tag(b: Array[Byte], o: Int): String =
-    if (o < 0 || o + 4 > b.length) "" else new String(b, o, 4, "ISO-8859-1")
-
-  /** ISO-BMFF (MP4/MOV) sniff: the first box must be `ftyp` with a sane
-    * 32-bit size. The tag sits at bytes 4–7, after the size word, so a
-    * text payload can't collide without embedding an exact box header. */
-  private def sniffMp4(bytes: Array[Byte]): Boolean = {
-    val size = be32(bytes, 0)
-    tag(bytes, 4) == "ftyp" && size >= 16 && size <= bytes.length
-  }
-
-  /** RIFF/WAVE sniff: "RIFF" at 0 and "WAVE" at 8. */
-  private def sniffWav(bytes: Array[Byte]): Boolean =
-    tag(bytes, 0) == "RIFF" && tag(bytes, 8) == "WAVE"
-
-  /** MP4 track dimensions from `moov`→`trak`→`tkhd`: in EVERY tkhd
-    * version the last 8 bytes of the box are width/height as 16.16
-    * fixed-point, so the read is a box walk + two big-endian words —
-    * the same magic-byte discipline as [[sniffImageFormat]], no codec.
-    * 64-bit (`size == 1`) and to-end-of-file (`size == 0`) boxes are
-    * treated as malformed for a header-only read. None on any
-    * truncated/inconsistent structure. */
-  private[operators] def parseMp4Dims(bytes: Array[Byte]): Option[(Int, Int)] = {
-    def findBoxes(name: String, from: Int, to: Int): Seq[(Int, Int)] = {
-      val found = Seq.newBuilder[(Int, Int)]
-      var o = from
-      while (o + 8 <= to) {
-        val size = be32(bytes, o)
-        if (size < 8 || o + size > to) return found.result() // malformed tail: stop
-        if (tag(bytes, o + 4) == name) found += ((o + 8, (o + size).toInt))
-        o += size.toInt
-      }
-      found.result()
-    }
-    // walk EVERY trak and take the first with nonzero dims — audio tracks
-    // carry a 0×0 tkhd and routinely precede the video track
-    (for {
-      moov <- findBoxes("moov", 0, bytes.length).iterator
-      trak <- findBoxes("trak", moov._1, moov._2).iterator
-      tkhd <- findBoxes("tkhd", trak._1, trak._2).iterator
-      if tkhd._2 - tkhd._1 >= 76 // v0 tkhd body is 84 bytes; be lenient, read from the end
-      w = (be32(bytes, tkhd._2 - 8) >> 16).toInt
-      h = (be32(bytes, tkhd._2 - 4) >> 16).toInt
-      if w > 0 && h > 0
-    } yield (w, h)).nextOption()
-  }
-
-  /** One pass over the RIFF chunk list: the `fmt ` layout words plus the
-    * `data` chunk's position. Little-endian reads, word-aligned chunks;
-    * None on a missing/short `fmt ` or inconsistent sizes. */
-  private case class WavLayout(audioFormat: Int, channels: Int, rate: Int,
-      blockAlign: Int, bitsPerSample: Int, dataAt: Int, dataLen: Int) {
-    def isPcm: Boolean = audioFormat == 1 &&
-      Set(8, 16, 24, 32).contains(bitsPerSample) &&
-      blockAlign == channels * (bitsPerSample / 8)
-    /** Per-channel frame count the header implies (0 without a data chunk). */
-    def frames: Int = if (dataAt >= 0 && blockAlign > 0) dataLen / blockAlign else 0
-  }
-
-  private def parseWavLayout(bytes: Array[Byte]): Option[WavLayout] = {
-    var o = 12
-    var fmt: Option[(Int, Int, Int, Int, Int)] = None
-    var dataAt = -1
-    var dataLen = 0
-    var halted = false
-    while (!halted && o + 8 <= bytes.length) {
-      val id = tag(bytes, o)
-      val size = le32(bytes, o + 4)
-      // A chunk whose declared size overruns the payload: streamed and
-      // truncated WAVs carry exactly this shape (a 0xFFFFFFFF or stale
-      // `data` size placeholder, or a file cut mid-data). An intact `fmt `
-      // read before the overrun must SURVIVE — real rate/channels must not
-      // downgrade to corrupt-wav — and an overrunning `data` clamps to the
-      // bytes actually present (whole frames only, via `frames`). The walk
-      // stops there: nothing after an overrun is addressable.
-      val overruns = size < 0 || o + 8 + size > bytes.length
-      if (id == "fmt " && !overruns) {
-        if (size < 16) return None // malformed fmt body: refuse the file
-        fmt = Some((le16(bytes, o + 8), le16(bytes, o + 10),
-          le32(bytes, o + 12).toInt, le16(bytes, o + 20), le16(bytes, o + 22)))
-      } else if (id == "data" && dataAt < 0) {
-        dataAt = o + 8
-        dataLen = if (overruns) bytes.length - dataAt else size.toInt
-      }
-      if (overruns) halted = true
-      else o += 8 + size.toInt + (size.toInt & 1)
-    }
-    fmt.collect { case (af, ch, rate, ba, bits) if rate > 0 && ch > 0 =>
-      WavLayout(af, ch, rate, ba, bits, dataAt, dataLen)
-    }
-  }
-
-  /** WAV (sample_rate, channels) from the RIFF `fmt ` chunk (header-only
-    * compatibility wrapper over [[parseWavLayout]]). */
-  private[operators] def parseWavFmt(bytes: Array[Byte]): Option[(Int, Int)] =
-    parseWavLayout(bytes).map(l => (l.rate, l.channels))
-
-  /** REAL sample decode for PCM WAV — the codec-free case the JRE can
-    * handle without any library: `fmt ` fixes the byte layout and `data`
-    * is raw interleaved samples. 8-bit is unsigned, 16/24/32-bit are
-    * signed little-endian; every width normalizes to [-1, 1]. None for
-    * non-PCM encodings (ADPCM/float/extensible), malformed layouts, or a
-    * missing data chunk — those keep the header-only metadata path. */
-  def decodeWavPcm(bytesIn: Array[Byte]): Option[PcmAudio] = {
-    val bytes = if (bytesIn eq null) Array.emptyByteArray else bytesIn
-    if (!sniffWav(bytes)) return None
-    parseWavLayout(bytes).filter(l => l.isPcm && l.dataAt >= 0).map { l =>
-      // a truncated data chunk was clamped by the layout walk: decode the
-      // whole frames present rather than failing the asset
-      val n = l.frames * l.channels
-      val out = new Array[Float](n)
-      val bytesPer = l.bitsPerSample / 8
-      var i = 0
-      while (i < n) {
-        out(i) = pcmSampleAt(bytes, l.bitsPerSample, l.dataAt + i * bytesPer)
-        i += 1
-      }
-      PcmAudio(l.rate, l.channels, l.bitsPerSample, l.frames, out)
-    }
-  }
-
-  /** One normalized PCM sample at byte offset `o`. 8-bit is unsigned;
-    * 16/24/32-bit are signed little-endian; 24-bit sign-extends via the
-    * top byte. */
-  @inline private def pcmSampleAt(bytes: Array[Byte], bits: Int, o: Int): Float =
-    bits match {
-      case 8 => ((bytes(o) & 0xff) - 128) / 128.0f
-      case 16 => (le16(bytes, o).toShort) / 32768.0f
-      case 24 =>
-        val v = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-          (bytes(o + 2) << 16) // top byte keeps its sign
-        v / 8388608.0f
-      case _ => le32(bytes, o).toInt / 2147483648.0f
-    }
-
-  /** STUB decode for payloads that sniff as NO known container (the only
-    * remaining fake — image dims, MP4 dims, WAV rates AND PCM WAV samples
-    * are all real byte-level reads): deterministic, keeps the pipeline
-    * testable end-to-end. */
-  def fakeDecode(bytes: Array[Byte]): (Int, Int) = {
-    val n = bytes.length
-    (n % 640, n % 480) // ??? real compressed-av-codec decode goes here
-  }
-
-  private def fakeFormat(bytes: Array[Byte]): String =
-    (bytes.length % 3) match {
-      case 0 => "png"; case 1 => "jpeg"; case _ => "webp"
-    }
-
-  /** Real image decode via JDK-builtin `javax.imageio`: header-only
-    * dimension read (no pixel decode) for PNG/JPEG/GIF/BMP. A payload the
-    * sniffer positively identified but ImageIO can't read keeps its
-    * sniffed identity as `corrupt-<fmt>` with ZEROED dimensions (unknown
-    * metadata is 0, never a fabricated value), so a truncated real asset
-    * stays distinguishable from a non-image payload; anything unsniffed
-    * falls back to [[fakeDecode]] with the length-derived pseudo-format
-    * (the exact behavior [[binaryMeta]]'s pure-expression oracle
-    * mirrors). */
-  def decodeImage(bytesIn: Array[Byte]): (Int, Int, String) = {
-    // NULL payloads decode as empty (degrade-don't-fail: a null column
-    // value must not NPE a 100 TB job)
-    val bytes = if (bytesIn eq null) Array.emptyByteArray else bytesIn
-    sniffImageFormat(bytes) match {
-      case Some(fmt) =>
-        def corrupt = (0, 0, s"corrupt-$fmt")
-        try {
-          val in = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val readers = javax.imageio.ImageIO.getImageReaders(in)
-            if (readers.hasNext) {
-              val r = readers.next()
-              try { r.setInput(in, true); (r.getWidth(0), r.getHeight(0), fmt) }
-              finally r.dispose()
-            } else corrupt
-          } finally in.close()
-        } catch {
-          // a truncated/corrupt header must degrade, not fail a 100 TB
-          // job on one bad asset. NonFatal, not an exception list: the
-          // fuzz property found GIF-magic bytes on which ImageIO's reader
-          // throws IndexOutOfBoundsException ("read past end of image
-          // sequence") — any decoder-internal unchecked throw must land
-          // here, only JVM-fatal errors may propagate
-          case scala.util.control.NonFatal(_) => corrupt
-        }
-      case None =>
-        val (w, h) = fakeDecode(bytes)
-        (w, h, fakeFormat(bytes))
-    }
-  }
-
-  /** Full media decode: ImageIO dimensions for sniffed images, container
-    * header reads for MP4 (tkhd width/height) and WAV (fmt sample
-    * rate/channels), the deterministic fake only for genuinely opaque
-    * bytes. Sniffed-but-unparsable payloads are labeled
-    * `corrupt-<container>` rather than masquerading as the pseudo-format.
-    * Reference analog: the media-field metadata preference chain in
-    * `includes/class-field-normalizer.php:404-431`. */
-  def decodeMedia(bytesIn: Array[Byte]): MediaInfo = {
-    val bytes = if (bytesIn eq null) Array.emptyByteArray else bytesIn
-    if (sniffImageFormat(bytes).isDefined) {
-      val (w, h, fmt) = decodeImage(bytes)
-      MediaInfo(w, h, fmt, 0, 0)
-    } else if (sniffMp4(bytes)) {
-      parseMp4Dims(bytes) match {
-        case Some((w, h)) => MediaInfo(w, h, "mp4", 0, 0)
-        // unknown metadata is ZERO, never fabricated: a corrupt container
-        // must not carry image-shaped fake dimensions downstream
-        case None => MediaInfo(0, 0, "corrupt-mp4", 0, 0)
-      }
-    } else if (sniffWav(bytes)) {
-      parseWavLayout(bytes) match {
-        // header-only frame count: data bytes / block align — no sample
-        // loop in the metadata path (decodeWavPcm is the on-demand reader)
-        case Some(l) =>
-          MediaInfo(0, 0, "wav", l.rate, l.channels,
-            if (l.isPcm) l.frames.toLong else 0L)
-        case None => MediaInfo(0, 0, "corrupt-wav", 0, 0)
-      }
-    } else {
-      val (w, h) = fakeDecode(bytes)
-      MediaInfo(w, h, fakeFormat(bytes), 0, 0)
-    }
-  }
-
-  /** Per-asset audio signal statistics from REAL decoded PCM samples. */
-  case class AudioStats(doc_id: Long, format: String, sample_rate: Int,
-      channels: Int, n_samples: Long, duration_sec: Double,
-      rms: Double, peak: Double)
-
-  /** Audio feature extraction over a binary column: decode PCM WAV
-    * payloads ([[decodeWavPcm]]) and compute per-asset RMS and peak —
-    * the "feature-extract" stage of the multimodal pipeline, running on
-    * true samples. Non-PCM / non-WAV payloads emit their sniffed format
-    * with zeroed stats (same degrade-don't-fail discipline as the
-    * decoders).
-    *
-    * Scale posture: `mapPartitions` over (doc_id, payload) — samples are
-    * decoded, folded into two scalars and DROPPED inside the partition;
-    * only the narrow stats rows ever shuffle or return. */
-  def audioStats(documents: DataFrame): Dataset[AudioStats] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents
-      .select(col("doc_id").cast("long"), col("text").cast("binary").as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val bytes = if (raw eq null) Array.emptyByteArray else raw
-          val pcm =
-            if (sniffWav(bytes))
-              parseWavLayout(bytes).filter(l => l.isPcm && l.dataAt >= 0)
-            else None
-          pcm match {
-            case Some(l) =>
-              // STREAMING fold over the data chunk: decode one sample,
-              // accumulate two scalars, discard. O(1) extra memory per
-              // asset — a 1 GB WAV must not allocate a 2 GB Float array
-              // just to be reduced to rms/peak.
-              val n = l.frames * l.channels
-              val bytesPer = l.bitsPerSample / 8
-              var i = 0; var sumSq = 0.0; var peak = 0.0
-              while (i < n) {
-                val v = pcmSampleAt(bytes, l.bitsPerSample, l.dataAt + i * bytesPer).toDouble
-                sumSq += v * v
-                val av = math.abs(v); if (av > peak) peak = av
-                i += 1
-              }
-              val rms = if (n > 0) math.sqrt(sumSq / n) else 0.0
-              AudioStats(id, "wav", l.rate, l.channels, l.frames.toLong,
-                l.frames.toDouble / l.rate, rms, peak)
-            case None =>
-              AudioStats(id, decodeMedia(bytes).format, 0, 0, 0L, 0.0, 0.0, 0.0)
-          }
-        }
-      }
-  }
-
-  /** Per-asset image signal statistics from REAL decoded pixels. */
-  case class ImageStats(doc_id: Long, format: String, width: Int,
-      height: Int, mean_r: Double, mean_g: Double, mean_b: Double,
-      luminance: Double)
-
-  /** Image feature extraction over a binary column: FULL pixel decode
-    * via JDK-builtin ImageIO (PNG/JPEG/GIF/BMP need no external codecs —
-    * only compressed audio/video streams do) → per-asset channel means
-    * and Rec.709 luminance, the "feature-extract" stage for the image
-    * modality ([[audioStats]]' photographic sibling).
-    *
-    * `maxPixels` is the decompression-bomb guard: a 100 TB job must not
-    * let one crafted 50 KB PNG allocate gigabytes — oversize assets keep
-    * their true header dimensions but skip the pixel pass, labeled
-    * `oversize-<fmt>`. Corrupt sniffed images degrade to
-    * `corrupt-<fmt>` with zeroed stats; non-image payloads pass through
-    * their [[decodeMedia]] identity with zeroed stats.
-    *
-    * Scale posture: `mapPartitions` — pixels are decoded, folded into
-    * three channel sums in-partition and dropped; only narrow stats rows
-    * shuffle or return. */
-  /** The shared pixel-decode guard ladder (round-11 review: imageStats
-    * and imageDHash each carried a full copy — exactly how a future
-    * bomb-guard fix would land in one and silently not the other):
-    * sniff → header-only dimension read FIRST (a decompression bomb
-    * declares huge dimensions in a tiny payload, and ImageIO.read
-    * allocates the full pixel buffer BEFORE any post-decode check
-    * could run, so the guard must fire off the header alone) →
-    * ImageIO decode under the degrade-don't-fail catch (decoder
-    * internals throw unchecked types on crafted bytes). `onGuard`
-    * builds the labeled degraded row (dims are the header's for
-    * oversize, 0 otherwise); `onImage` folds the decoded pixels. */
-  private def withDecodedImage[A](bytes: Array[Byte], maxPixels: Long)(
-      onGuard: (String, Int, Int) => A)(
-      onImage: (String, java.awt.image.BufferedImage) => A): A =
-    sniffImageFormat(bytes) match {
-      case Some(fmt) =>
-        val (hw, hh, hfmt) = decodeImage(bytes)
-        if (hfmt.startsWith("corrupt-")) onGuard(s"corrupt-$fmt", 0, 0)
-        else if (hw.toLong * hh > maxPixels) onGuard(s"oversize-$fmt", hw, hh)
-        else try {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          if (img eq null) onGuard(s"corrupt-$fmt", 0, 0)
-          else onImage(fmt, img)
-        } catch {
-          case scala.util.control.NonFatal(_) => onGuard(s"corrupt-$fmt", 0, 0)
-        }
-      case None => onGuard(decodeMedia(bytes).format, 0, 0)
-    }
-
-  def imageStats(documents: DataFrame,
-      maxPixels: Long = 16L * 1024 * 1024): Dataset[ImageStats] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents
-      .select(col("doc_id").cast("long"), col("text").cast("binary").as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val bytes = if (raw eq null) Array.emptyByteArray else raw
-          withDecodedImage(bytes, maxPixels)(
-            (fmt, w, h) => ImageStats(id, fmt, w, h, 0, 0, 0, 0)) { (fmt, img) =>
-            val w = img.getWidth; val h = img.getHeight
-            var r = 0.0; var g = 0.0; var b = 0.0
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val p = img.getRGB(x, y)
-                r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            val n = w.toDouble * h
-            val (mr, mg, mb) = (r / n, g / n, b / n)
-            ImageStats(id, fmt, w, h, mr, mg, mb,
-              0.2126 * mr + 0.7152 * mg + 0.0722 * mb)
-          }
-        }
-      }
-  }
-
-  /** One image's 64-bit difference hash (0 when undecodable). */
-  case class DHashRow(doc_id: Long, format: String, dhash: Long)
-
-  /** Perceptual difference-hash (dHash) over a binary image column —
-    * the image modality's near-dup signature, closing the dedup matrix
-    * (text: MinHash/SimHash; embeddings: SemDeDup; pixels: this).
-    * Decode → 9×8 luminance grid (deterministic integer box average,
-    * not platform-filtered rescale) → 64 bits of left<right adjacent
-    * comparisons. Brightness/contrast/scale shifts preserve most bits;
-    * different pictures land ~32 bits apart.
-    *
-    * Same guard ladder as [[imageStats]]: header-only bomb check first,
-    * corrupt/oversize/non-image rows degrade to hash 0 with a labeled
-    * format (excluded from pairing downstream, never a job failure).
-    *
-    * Scale posture: map-only `mapPartitions`; pixels fold to 72 cell
-    * means in-partition and only (doc_id, format, INT64) rows leave. */
-  def imageDHash(documents: DataFrame,
-      maxPixels: Long = 16L * 1024 * 1024): Dataset[DHashRow] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents
-      .select(col("doc_id").cast("long"), col("text").cast("binary").as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val bytes = if (raw eq null) Array.emptyByteArray else raw
-          withDecodedImage(bytes, maxPixels)(
-            (fmt, _, _) => DHashRow(id, fmt, 0L)) { (fmt, img) =>
-            val w = img.getWidth; val h = img.getHeight
-            val grid = Array.ofDim[Double](8, 9)
-            var gy = 0
-            while (gy < 8) {
-              var gx = 0
-              while (gx < 9) {
-                val x0 = gx * w / 9
-                val x1 = math.min(w, math.max(x0 + 1, (gx + 1) * w / 9))
-                val y0 = gy * h / 8
-                val y1 = math.min(h, math.max(y0 + 1, (gy + 1) * h / 8))
-                var s = 0.0; var n = 0
-                var y = y0
-                while (y < y1) {
-                  var x = x0
-                  while (x < x1) {
-                    val p = img.getRGB(x, y)
-                    s += 0.2126 * ((p >> 16) & 0xff) +
-                      0.7152 * ((p >> 8) & 0xff) + 0.0722 * (p & 0xff)
-                    n += 1; x += 1
-                  }
-                  y += 1
-                }
-                grid(gy)(gx) = if (n == 0) 0.0 else s / n
-                gx += 1
-              }
-              gy += 1
-            }
-            var hash = 0L; var i = 0
-            while (i < 64) {
-              if (grid(i / 8)(i % 8) < grid(i / 8)(i % 8 + 1))
-                hash |= (1L << i)
-              i += 1
-            }
-            DHashRow(id, fmt, hash)
-          }
-        }
-      }
-  }
-
-  /** Near-dup image pairs among [[imageDHash]] rows: pigeonhole-block
-    * candidate join (hamming ≤ maxHamming ⇒ at least one of the
-    * maxHamming+1 disjoint bit blocks matches exactly) + exact
-    * `bit_count(xor)` verification — the [[graft.operators.Dedup]]
-    * simhashPairs shape lifted to 64-bit perceptual hashes. Only
-    * successfully-decoded rows pair (corrupt/oversize/non-image rows
-    * all share hash 0 and would cross-join each other). */
-  def dhashPairs(hashes: DataFrame, maxHamming: Int = 7): DataFrame =
-    hammingPairs64(
-      hashes.where(col("format").isin("png", "jpeg", "gif", "bmp"))
-        .select(col("doc_id"), col("dhash").as("h")), maxHamming)
-
-  /** Pigeonhole-block hamming pairs over 64-bit perceptual hashes
-    * (shared by the image dHash and the audio fingerprint): hamming ≤
-    * maxHamming ⇒ at least one of the maxHamming+1 disjoint bit blocks
-    * matches exactly, so the candidate join is a bucket equi-join on
-    * (block, value) — never all-pairs — with an exact `bit_count(xor)`
-    * verification after. */
-  private def hammingPairs64(hashed: DataFrame, maxHamming: Int): DataFrame = {
-    val nBlocks = maxHamming + 1
-    require(64 % nBlocks == 0,
-      s"maxHamming+1 = $nBlocks must divide 64 for full block coverage")
-    val blockBits = 64 / nBlocks
-    // blockBits == 64 (maxHamming = 0): the JVM masks `1L << 64` back
-    // to 1, so the mod would send EVERY hash to bucket 0 and the
-    // "bucketed" join would silently degrade to all-pairs (round-11
-    // review) — the single block's value is the whole hash
-    def blockVal(b: Int) =
-      if (blockBits == 64) col("h")
-      else pmod(shiftrightunsigned(col("h"), b * blockBits),
-        lit(1L << blockBits))
-    val blocks = hashed.select(col("doc_id"), col("h"),
-      explode(array((0 until nBlocks).map(b =>
-        struct(lit(b).as("blk"), blockVal(b).as("v"))): _*)).as("x"))
-      .select(col("doc_id"), col("h"),
-        col("x.blk").as("blk"), col("x.v").as("v"))
-    val a = blocks.select(col("blk"), col("v"),
-      col("doc_id").as("d1"), col("h").as("h1"))
-    val b = blocks.select(col("blk"), col("v"),
-      col("doc_id").as("d2"), col("h").as("h2"))
-    a.join(b, Seq("blk", "v"))
-      .where(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        bit_count(col("h1").bitwiseXOR(col("h2"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-      .orderBy("d1", "d2")
-  }
-
-  /** One audio asset's 64-bit energy-delta fingerprint (0 when
-    * undecodable or too short). */
-  case class AHashRow(doc_id: Long, format: String, ahash: Long)
-
-  /** Perceptual audio fingerprint over PCM WAV payloads — the audio
-    * modality's near-dup signature, completing the dedup matrix (text:
-    * MinHash/SimHash; embeddings: SemDeDup; pixels: dHash; samples:
-    * this). The sample stream folds into 65 equal time windows of
-    * summed energy in ONE streaming pass (O(1) extra memory per asset,
-    * the audioStats discipline), and bit i = [energy(i+1) > energy(i)]
-    * — the dHash idea in the time domain. Uniform GAIN cannot flip a
-    * strict energy comparison, so re-leveled copies collide exactly;
-    * different material lands ~32 bits apart.
-    *
-    * Same guard ladder as [[imageDHash]]: non-WAV / corrupt / sub-65-
-    * sample rows degrade to hash 0 with a labeled format, excluded
-    * from pairing. Pairs via [[audioPairs]] (the shared pigeonhole
-    * block join). */
-  def audioFingerprint(documents: DataFrame): Dataset[AHashRow] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents
-      .select(col("doc_id").cast("long"), col("text").cast("binary").as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val bytes = if (raw eq null) Array.emptyByteArray else raw
-          val layout =
-            if (sniffWav(bytes))
-              parseWavLayout(bytes).filter(l => l.isPcm && l.dataAt >= 0)
-            else None
-          layout match {
-            case Some(l) =>
-              val n = l.frames * l.channels
-              if (n < 65) AHashRow(id, "short-wav", 0L)
-              else {
-                val bytesPer = l.bitsPerSample / 8
-                val wins = new Array[Double](65)
-                var i = 0
-                while (i < n) {
-                  val v = pcmSampleAt(bytes, l.bitsPerSample,
-                    l.dataAt + i * bytesPer).toDouble
-                  wins((i.toLong * 65L / n).toInt) += v * v
-                  i += 1
-                }
-                var hash = 0L
-                var b = 0
-                while (b < 64) {
-                  if (wins(b + 1) > wins(b)) hash |= (1L << b)
-                  b += 1
-                }
-                AHashRow(id, "wav", hash)
-              }
-            case None =>
-              // a WAV that PARSES but is not integer PCM (IEEE-float /
-              // ADPCM) is a VALID asset this fingerprint cannot read —
-              // label it nonpcm-wav, not corrupt (round-11 review:
-              // decodeMedia/audioStats call the same payload "wav", so
-              // "corrupt" double-counted healthy assets in corruption
-              // cards). Either label excludes it from pairing.
-              val fmt =
-                if (!sniffWav(bytes)) decodeMedia(bytes).format
-                else if (parseWavLayout(bytes).exists(l => !l.isPcm))
-                  "nonpcm-wav"
-                else "corrupt-wav"
-              AHashRow(id, fmt, 0L)
-          }
-        }
-      }
-  }
-
-  /** Near-dup audio pairs among [[audioFingerprint]] rows — only
-    * successfully fingerprinted assets pair (guard rows share hash 0
-    * and would cross-join each other). */
-  def audioPairs(hashes: DataFrame, maxHamming: Int = 7): DataFrame =
-    hammingPairs64(
-      hashes.where(col("format") === "wav")
-        .select(col("doc_id"), col("ahash").as("h")), maxHamming)
-
-  /** The batched per-partition decode path (the `mapInPandas` shape):
-    * binary in, typed metadata out, decoder init amortized per partition.
-    * Real image payloads get true ImageIO dimensions, MP4/WAV payloads
-    * get true container-header metadata; unsniffed payloads agree exactly
-    * with [[binaryMeta]] (spec-asserted). */
-  def decodePartitioned(documents: DataFrame): Dataset[MediaMeta] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents
-      .select(col("doc_id").cast("long"), col("text").cast("binary").as("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition decoder init (MessageDigest; ImageIO reader
-        // registry is JVM-global and warms once)
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        it.map { case (id, raw) =>
-          val bytes = if (raw eq null) Array.emptyByteArray else raw
-          val m = decodeMedia(bytes)
-          val sha = md.digest(bytes).map("%02x".format(_)).mkString
-          md.reset()
-          MediaMeta(id, bytes.length.toLong, sha, m.width, m.height,
-            m.format, m.sampleRate, m.channels, m.nSamples)
-        }
-      }
-  }
 }

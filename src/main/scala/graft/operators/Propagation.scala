@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Shared min-label components over a symmetric edge set — the
   * connected-components core behind BOTH dedup engines
   * ([[Dedup.lshComponents]], lexical MinHash pair graph) and
-  * [[Similarity.semanticDedup]] (embedding-cosine pair graph). One
+  * [[Similarity.semanticDedupCells]] (embedding-cosine pair graph). One
   * entry point, one convergence contract, one backstop: convergence
   * work lands once instead of drifting between the two files (the
   * round-10 state — the lexical side was convergence-driven while the

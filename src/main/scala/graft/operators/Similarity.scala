@@ -89,69 +89,20 @@ object Similarity {
   }
 
   /** Incremental SEMANTIC dedup — the online-ingestion shape of
-    * [[semanticDedup]] (the embedding counterpart of
+    * [[semanticDedupCells]] (the embedding counterpart of
     * [[graft.operators.Dedup.incrementalDedup]]): for each INCOMING
     * vector, is there an EXISTING-corpus vector within the cosine
-    * near-dup threshold? The corpus never re-clusters; it reduces once
-    * to its (bucket, vector) rows and each batch pays one bucket
-    * equi-join plus per-candidate cosine math. Output per incoming
-    * vector: candidate count, best corpus cosine (NULL when its bucket
-    * has no corpus member — honest abstention, same stance as
-    * [[knnClassify]]), and the dup flag.
-    *
-    * Scale posture: candidates are sign-LSH bucket-mates only (never
-    * batch × corpus) — but banded candidates are corpus-PROPORTIONAL:
-    * each incoming vector meets ≈ bands·n/2^bandBits ≈ n/32 corpus
-    * candidates at corpus size n, the same quadratic-flavor exponent
-    * the cells work removed from the batch path. This form is the
-    * disclosed BASELINE since round 14; the shipped dedup-at-ingest
-    * path is [[semanticDedupIncrementalCells]] (corpus-size-independent
-    * candidates). Threshold default aligned to the family's 0.35
-    * operating point (round-13 advice: call sites passed it explicitly
-    * but the stale 0.25 default was a silent-behavior trap). */
-  def semanticDedupIncremental(incoming: DataFrame, corpus: DataFrame,
-      bands: Int = 8, threshold: Double = 0.35,
-      bandBits: Int = 8): DataFrame = {
-    val incSig = incoming.select(col("vec_id"),
-      explode(bandSigs(col("embedding"), bands, bandBits)).as("sig"))
-    val corSig = corpus.select(col("vec_id").as("cid"),
-      explode(bandSigs(col("embedding"), bands, bandBits)).as("sig"))
-    // vec_id =!= cid: an at-least-once replay puts the batch's own rows
-    // in the corpus snapshot — without the exclusion each replayed
-    // vector self-matches at cos 1.0 and flags itself duplicate.
-    // DISTINCT pairs before scoring: a multi-band match must count the
-    // candidate once, not once per matching band.
-    val cands = incSig.join(corSig,
-        incSig("sig") === corSig("sig") && col("vec_id") =!= col("cid"))
-      .select("vec_id", "cid").distinct()
-    val scored = cands
-      .join(incoming.select(col("vec_id"), col("embedding").as("ie")),
-        Seq("vec_id"))
-      .join(corpus.select(col("vec_id").as("cid"), col("embedding").as("ce")),
-        Seq("cid"))
-      .select(col("vec_id"),
-        round(cos(incoming)(col("ie"), col("ce")), 6).as("cos"))
-    // left join back so zero-candidate vectors surface with n=0, is_dup=0
-    incoming.select(col("vec_id"))
-      .join(scored, Seq("vec_id"), "left_outer")
-      .groupBy("vec_id")
-      .agg(count(col("cos")).as("n_candidates"), max(col("cos")).as("max_cos"))
-      .withColumn("is_dup",
-        coalesce((col("max_cos") >= threshold).cast("int"), lit(0)))
-      .orderBy("vec_id")
-  }
-
-  /** CELL-LOCAL incremental semantic dedup — [[semanticDedupIncremental]]
-    * with candidates drawn from the SAME corpus-adaptive two-level
-    * quantizer the batch path ([[cosineNearDupCells]]) trains, instead
-    * of fixed sign-bands: the quantizer trains ONCE on the corpus
-    * (seeds, super ranking, one Lloyd round — [[trainCellQuantizer]]),
+    * near-dup threshold? Candidates are drawn from the SAME
+    * corpus-adaptive two-level quantizer the batch path
+    * ([[cosineNearDupCells]]) trains: the quantizer trains ONCE on the
+    * corpus (seeds, super ranking, one Lloyd round —
+    * [[trainCellQuantizer]]),
     * the corpus assigns to its `probes` best cells, and each INCOMING
     * vector routes through the same super→child search to its own
-    * `probes` cells; candidates are cell-mates only. Output contract
-    * identical to the banded form (vec_id, n_candidates, max_cos,
-    * is_dup; zero-candidate vectors surface with n=0 — honest
-    * abstention).
+    * `probes` cells; candidates are cell-mates only. Output per incoming
+    * vector: (vec_id, n_candidates, max_cos, is_dup); zero-candidate
+    * vectors surface with n=0 and a NULL max_cos — honest abstention,
+    * same stance as [[knnClassify]].
     *
     * Scale posture — the round-13 verdict's one named scale-killer,
     * closed: banded candidates grow as ≈ n/32 PER INCOMING VECTOR at
@@ -182,8 +133,9 @@ object Similarity {
     // (the assignment below) — the eager snap was a pure extra job
     val incAssign = assignWithQuantizer(incoming,
       topSupers(incoming, q.supers, materialize = false), q, probes)
-    // vec_id =!= cid: same at-least-once replay guard as the banded form
-    // (a replayed vector finds itself in the corpus snapshot at cos 1.0).
+    // vec_id =!= cid: an at-least-once replay puts the batch's own rows
+    // in the corpus snapshot — without the exclusion each replayed
+    // vector self-matches at cos 1.0 and flags itself duplicate.
     // DISTINCT: a pair sharing both probed cells must score once.
     val cands = incAssign.join(corAssign, Seq("cell"))
       .where(col("vec_id") =!= col("cid"))
@@ -308,8 +260,8 @@ object Similarity {
     * (≈ 1.0 at cosine 0.9, ≈ 0.66 at 0.3 with 8×4) — the same
     * banding scheme the lexical MinHash LSH has always used, applied to
     * the sign-hash. Output contract identical to the single-bucket form.
-    * The COARSE 4-bit default is deliberate here and wrong for the
-    * all-pairs operators ([[cosineNearDup]] defaults to 8-bit bands):
+    * The COARSE 4-bit default is deliberate here and wrong for an
+    * all-pairs operator (Θ(bands·n²/2^bandBits) candidates):
     * decontamination joins the corpus against a SMALL eval set, so
     * candidate volume is ≈ bands · n_train · n_bench / 2^bandBits —
     * linear in the corpus at any band width — and coarse bands buy the
@@ -343,55 +295,6 @@ object Similarity {
         max(col("cos")).as("max_cos"),
         min(col("bench_id")).as("bench_id"))
       .orderBy("vec_id")
-  }
-
-  /** Embedding-cosine near-dup: pairs sharing ANY sign-LSH band with
-    * rounded cosine ≥ threshold. Banded ([[bandSigs]]) rather than
-    * single-bucket since round 11: one 8-bit bucket's pair recall is
-    * p^8 ≈ 0.69 even at cosine 0.99 — a third of true near-dup PAIRS
-    * silently missed before clustering ever ran; 8×8 banding takes
-    * pair recall to ~1 at near-dup cosine (0.94 at 0.9, 0.999 at 0.99).
-    *
-    * Band width is the candidate-volume knob for an ALL-PAIRS operator:
-    * expected candidates ≈ bands · n²/2^bandBits, so 4-bit bands (16
-    * buckets/band) measured 40% of ALL pairs as candidates at sf0.1 —
-    * quadratic, unacceptable at corpus scale — while 8-bit bands hold
-    * 3% (n²/32) with the banding still repairing the recall. Coarser
-    * bands belong only where one join side is small (the
-    * [[semanticDecontaminateBanded]] bench-bounded case).
-    *
-    * Scale posture: the band explode carries ids only (the embedding
-    * does NOT ride the ×bands blow-up); candidates are DISTINCT
-    * same-band id pairs (bounded by band-bucket collisions, never
-    * all-pairs); embeddings join back by id for the one scoring pass. */
-  def cosineNearDup(embeddings: DataFrame, bands: Int = 8,
-      bandBits: Int = 8, threshold: Double = 0.99,
-      materialize: Boolean = true): DataFrame =
-    cosineNearDupUnsorted(embeddings, bands, bandBits, threshold,
-      materialize).orderBy("d1", "d2")
-
-  /** [[cosineNearDup]] without the trailing global sort — the form the
-    * clustering consumer snapshots (a sort evaluated inside an edge-set
-    * snapshot is pure waste; round-12 review). */
-  private def cosineNearDupUnsorted(embeddings: DataFrame, bands: Int,
-      bandBits: Int, threshold: Double, materialize: Boolean): DataFrame = {
-    // the sig table feeds BOTH sides of the candidate self-join: snap it
-    // (narrow id+sig rows) so the fat embedding column scans once for
-    // signature derivation, not twice (round-11 plan audit)
-    val sigs = Stage.snap(embeddings.select(col("vec_id"),
-      explode(bandSigs(col("embedding"), bands, bandBits)).as("sig")),
-      materialize)
-    val cands = sigs.select(col("sig"), col("vec_id").as("d1"))
-      .join(sigs.select(col("sig"), col("vec_id").as("d2")), Seq("sig"))
-      .where(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-    val e = embeddings.select(col("vec_id"), col("embedding"))
-    cands
-      .join(e.select(col("vec_id").as("d1"), col("embedding").as("e1")), Seq("d1"))
-      .join(e.select(col("vec_id").as("d2"), col("embedding").as("e2")), Seq("d2"))
-      .select(col("d1"), col("d2"),
-        round(cos(embeddings)(col("e1"), col("e2")), 6).as("cos"))
-      .where(col("cos") >= threshold)
   }
 
   /** Corpus-adaptive coarse-quantizer size: one cell per `cellTarget`
@@ -546,21 +449,21 @@ object Similarity {
     assignWithQuantizer(embeddings, vsup, q, probes)
   }
 
-  /** CELL-LOCAL embedding near-dup — the 100× form of [[cosineNearDup]]
-    * (SemDeDup's published shape: cluster first with the coarse
-    * quantizer, then compare only within clusters). Candidates are
-    * DISTINCT same-cell id pairs under a corpus-adaptive k-means
-    * quantizer (one cell per `cellTarget` vectors, Lloyd-refined — the
-    * SAME [[trainCentroids]] the IVF/ANN family trains) with `probes`
-    * cells per vector, then ONE exact-cosine scoring pass.
+  /** CELL-LOCAL embedding near-dup (SemDeDup's published shape: cluster
+    * first with the coarse quantizer, then compare only within
+    * clusters). Candidates are DISTINCT same-cell id pairs under a
+    * corpus-adaptive k-means quantizer (one cell per `cellTarget`
+    * vectors, Lloyd-refined — the SAME [[trainCentroids]] the IVF/ANN
+    * family trains) with `probes` cells per vector, then ONE
+    * exact-cosine scoring pass.
     *
-    * Scale posture, against the banded form it supersedes in the dedup
-    * pipeline: banded candidates are Θ(bands·n²/2^bandBits) — the
-    * quadratic exponent survives any band width — while cell-local
-    * candidates are ≈ probes²·cellTarget·n/2, linear in n because the
-    * quantizer GROWS with the corpus. Assignment is two-level and
-    * size-gated (see [[maybeBroadcastCells]]): child centroids broadcast
-    * while they fit, and past the bound the super-key equi-join prunes
+    * Scale posture, against sign-LSH banding: banded candidates are
+    * Θ(bands·n²/2^bandBits) — the quadratic exponent survives any band
+    * width — while cell-local candidates are ≈ probes²·cellTarget·n/2,
+    * linear in n because the quantizer GROWS with the corpus.
+    * Assignment is two-level and size-gated (see
+    * [[maybeBroadcastCells]]): child centroids broadcast while they
+    * fit, and past the bound the super-key equi-join prunes
     * exactly as FAISS's coarse-index search would — each vector meets
     * only its 2 supers' ~√c children; the shuffled volume is n·probes
     * rows either way.
@@ -588,8 +491,7 @@ object Similarity {
       cellTarget: Int, probes: Int, threshold: Double,
       materialize: Boolean): (DataFrame, DataFrame) = {
     // narrow (vec_id, cell) rows feed BOTH sides of the candidate
-    // self-join: snap so the quantizer trains once (the cosineNearDup
-    // sig-table lesson)
+    // self-join: snap so the quantizer trains once
     val assigned = Stage.snap(
       assignCellsHierarchical(embeddings, cellTarget, probes, materialize),
       materialize)
@@ -802,27 +704,6 @@ object Similarity {
     cellTopK(q, c, k, embeddings)
   }
 
-  /** SEMANTIC dedup survivors (SemDeDup, Abbas et al. 2023): documents
-    * whose EMBEDDINGS are near-duplicates cluster together and only the
-    * canonical (minimum-id) member survives — the embedding-space
-    * counterpart of [[graft.operators.Dedup.nearDupApply]], catching
-    * paraphrases and re-encodings that lexical MinHash can't see.
-    * Edges are the sign-LSH-bucketed cosine pairs ([[cosineNearDup]]);
-    * clusters come from the SAME convergence-driven min-label propagation
-    * core as `lshComponents` ([[Propagation.minLabel]] — `rounds <= 0`,
-    * the default, iterates until a round changes no label, so embedding
-    * paraphrase CHAINS deeper than any fixed cap stop silently splitting;
-    * the round-10 lexical fixpoint fix, now shared rather than
-    * duplicated). A positive `rounds` keeps the bounded-unroll form for
-    * shallow-graph equivalence specs. Survivors are `vec_id == cluster`.
-    * Returns (vec_id, cluster, survivor).
-    *
-    * Scale posture: identical to the lexical components chain — edges
-    * snapshot once (the near-dup subgraph only), each round is one
-    * narrow (edge ⋈ label) equi-join keyed on vec_id, labels checkpoint
-    * per round so plan depth stays O(1) in rounds (convergence count
-    * folded into the checkpoint action), isolated vectors skip the
-    * rounds and union back. */
   /** EXACT semantic decontamination — the brute-force companion of the
     * sign-LSH-bucketed [[semanticDecontaminate]], in the engine's
     * exact↔approx pairing convention (ta_quantiles/ta_cardinality):
@@ -902,20 +783,10 @@ object Similarity {
     * `defaultRank`). Documents join by vec_id ≡ doc_id (the
     * sim_semdedup_apply convention of the testdata).
     *
-    * Scale posture: [[semanticDedup]]'s shuffles plus one narrow
+    * Scale posture: [[semanticDedupCells]]'s shuffles plus one narrow
     * (id, source) join and a per-cluster rank window — cluster sizes
     * are bounded by near-dup diameter, so the window partitions stay
     * small. */
-  def semanticDedupByPriority(embeddings: DataFrame, documents: DataFrame,
-      rank: Map[String, Int], defaultRank: Int = 100,
-      threshold: Double = 0.25, materialize: Boolean = true): DataFrame =
-    priorityFromClusters(
-      semanticDedup(embeddings, threshold = threshold,
-        materialize = materialize),
-      documents, rank, defaultRank)
-
-  /** [[semanticDedupByPriority]] over the cell-local cluster chain —
-    * same survivor policy, sub-quadratic candidates. */
   def semanticDedupByPriorityCells(embeddings: DataFrame,
       documents: DataFrame, rank: Map[String, Int], defaultRank: Int = 100,
       cellTarget: Int = 32, probes: Int = 2, threshold: Double = 0.35,
@@ -944,46 +815,19 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** The 100 TB form of [[prototypesPrune]] — the exact↔approx pairing
-    * applied to the per-cell rank window: instead of ranking every
-    * member of a cell (a window whose skew is the largest cluster), cut
-    * at the cell's (1 − dropFrac) ccos quantile from a t-digest
-    * (`approx_percentile`, one combinable aggregation), then keep
-    * members BELOW the cut. No window, no per-cell sort — the prune is
-    * one broadcast threshold join + a map-side comparison, so the
-    * largest cluster costs the same as the smallest. Drop counts are
-    * approximate at the quantile's accuracy (spec-bounded against the
-    * exact form); ties at the cut keep (the exact form's rank breaks
-    * ties by vec_id — the approx form has no rank to break them with,
-    * and keeping is the conservative direction for a PRUNE). */
-  def prototypesPruneApprox(embeddings: DataFrame, nCentroids: Int = 8,
-      dropFrac: Double = 0.3, accuracy: Int = 10000,
-      materialize: Boolean = true): DataFrame = {
-    val assigned = Stage.snap(
-      assignCellsScored(embeddings, trainCentroids(embeddings, nCentroids)),
-      materialize)
-    val cuts = assigned.groupBy("cell").agg(
-      expr(s"approx_percentile(ccos, ${1.0 - dropFrac}, $accuracy)").as("cut"),
-      count(lit(1)).as("n_cell"))
-    assigned.join(broadcast(cuts), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("ccos"), col("n_cell"),
-        col("cut"), (col("ccos") <= col("cut")).as("kept"))
-      .orderBy("vec_id")
-  }
-
-  def semanticDedup(embeddings: DataFrame, bands: Int = 8,
-      threshold: Double = 0.25, rounds: Int = 0,
-      materialize: Boolean = true,
-      maxRounds: Int = Propagation.DefaultMaxRounds,
-      bandBits: Int = 8): DataFrame =
-    clustersFromPairs(embeddings,
-      cosineNearDupUnsorted(embeddings, bands, bandBits, threshold,
-        materialize),
-      rounds, materialize, maxRounds)
-
-  /** [[semanticDedup]] on the CELL-LOCAL candidate path
-    * ([[cosineNearDupCells]]) — the sub-quadratic form the gated dedup
-    * pipeline ships; same output contract (vec_id, cluster, survivor). */
+  /** SEMANTIC dedup survivors (SemDeDup, Abbas et al. 2023): documents
+    * whose EMBEDDINGS are near-duplicates cluster together and only the
+    * canonical (minimum-id) member survives — the embedding-space
+    * counterpart of [[graft.operators.Dedup.nearDupApply]], catching
+    * paraphrases and re-encodings that lexical MinHash can't see.
+    * Edges are the cell-local cosine pairs ([[cosineNearDupCells]]);
+    * clusters come from the SAME convergence-driven min-label propagation
+    * core as `lshComponents` ([[Propagation.minLabel]] — `rounds <= 0`,
+    * the default, iterates until a round changes no label, so embedding
+    * paraphrase CHAINS deeper than any fixed cap stop silently
+    * splitting). A positive `rounds` keeps the bounded-unroll form for
+    * shallow-graph equivalence specs. Survivors are `vec_id == cluster`.
+    * Returns (vec_id, cluster, survivor). */
   def semanticDedupCells(embeddings: DataFrame, cellTarget: Int = 32,
       probes: Int = 2, threshold: Double = 0.35, rounds: Int = 0,
       materialize: Boolean = true,

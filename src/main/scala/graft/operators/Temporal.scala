@@ -99,11 +99,10 @@ object Temporal {
       .orderBy("step")
   }
 
-  /** Interval join (batch form of the streaming
-    * [[graft.streaming.EventStream.attributionJoin]]): every (target,
-    * source) pair of the same user with source inside
-    * [target_ts − horizon, target_ts] — the all-qualifying-touchpoints
-    * attribution, where [[asofAttribution]] keeps only the latest one.
+  /** Interval join: every (target, source) pair of the same user with
+    * source inside [target_ts − horizon, target_ts] — the
+    * all-qualifying-touchpoints attribution, where [[asofAttribution]]
+    * keeps only the latest one.
     *
     * Scale posture: an EQUI-join on user_id with the interval as a
     * residual predicate — sort-merge/shuffled-hash on the key, never a

@@ -168,9 +168,9 @@ object TextAnalysis {
     *
     * Scale posture: exact percentile buffers each group's values — fine
     * for a per-language card (values are one int per doc), wrong for
-    * high-cardinality keys at 100 TB; [[tokenQuantilesApprox]] is the
-    * scale path (t-digest sketch, map-side combinable, bounded memory)
-    * and its error is spec-bounded against this exact form. */
+    * high-cardinality keys at 100 TB, where a t-digest
+    * `approx_percentile` (map-side combinable, bounded memory) is the
+    * swap. */
   def tokenQuantiles(documents: DataFrame): DataFrame =
     documents.select(col("lang"), nTokensCol.as("t"))
       .groupBy("lang")
@@ -182,28 +182,13 @@ object TextAnalysis {
         max("t").cast("bigint").as("p100"))
       .orderBy("lang")
 
-  /** Sketch-based quantiles (the 100 TB path): `approx_percentile`
-    * (t-digest) with `accuracy` — combinable partial aggregation,
-    * bounded state per group, no per-group value buffering. Not
-    * oracle-gated (sketches are engine-specific); spec-bounded against
-    * [[tokenQuantiles]]. */
-  def tokenQuantilesApprox(documents: DataFrame, accuracy: Int = 10000): DataFrame =
-    documents.select(col("lang"), nTokensCol.as("t"))
-      .groupBy("lang")
-      .agg(
-        expr(s"approx_percentile(t, 0.5, $accuracy)").as("p50"),
-        expr(s"approx_percentile(t, 0.9, $accuracy)").as("p90"),
-        expr(s"approx_percentile(t, 0.99, $accuracy)").as("p99"))
-      .orderBy("lang")
-
   /** Per-language vocabulary cardinality — the lexical-diversity row of
     * a dataset card: token total and EXACT distinct-token count.
     *
     * Scale posture: exact distinct is a two-phase shuffle on (lang,
     * token) — fine for a per-language card, expensive at extreme
-    * cardinality; [[tokenCardinalityApprox]] (HyperLogLog++ sketch,
-    * combinable, bounded memory) is the 100 TB path, spec-bounded
-    * against this exact form. */
+    * cardinality, where an HLL++ `approx_count_distinct` (combinable,
+    * bounded memory) is the swap. */
   def tokenCardinality(documents: DataFrame): DataFrame =
     documents.select(col("lang"),
       explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
@@ -213,20 +198,8 @@ object TextAnalysis {
         countDistinct(col("token")).as("n_distinct"))
       .orderBy("lang")
 
-  /** Sketch-based cardinality (the 100 TB path): `approx_count_distinct`
-    * (HLL++) with `rsd` relative error. Not oracle-gated (sketches are
-    * engine-specific); spec-bounded against [[tokenCardinality]]. */
-  def tokenCardinalityApprox(documents: DataFrame, rsd: Double = 0.02): DataFrame =
-    documents.select(col("lang"),
-      explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-        .as("token"))
-      .groupBy("lang")
-      .agg(approx_count_distinct(col("token"), rsd).as("n_distinct_approx"))
-      .orderBy("lang")
-
   /** Heavy hitters (frequent tokens above an absolute count): one
-    * map-side-combinable (token) aggregation + threshold filter — the
-    * exact form, and [[heavyHittersApprox]]'s correctness reference.
+    * map-side-combinable (token) aggregation + threshold filter.
     * Only (token, n) rows above the threshold survive to the sort. */
   def heavyHitters(documents: DataFrame, minCount: Long = 100): DataFrame =
     documents.select(
@@ -236,51 +209,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"))
       .where(col("n") >= minCount)
       .orderBy(col("n").desc, col("token"))
-
-  /** Misra–Gries heavy-hitters SKETCH — the bounded-memory single-pass
-    * path for when even the distinct-token shuffle is too much (the
-    * summary is ≤ `k` counters per partition, merged pairwise): every
-    * token with true count > N/k is guaranteed present, and each
-    * reported count underestimates by at most N/k (the classic MG
-    * bounds survive the distributed merge). Not oracle-gated — the
-    * surviving counter set depends on merge order — but the BOUNDS are
-    * order-independent and spec-asserted against [[heavyHitters]].
-    * Output: (token, n_min) candidate heavy hitters, n_min ≤ true n. */
-  def heavyHittersApprox(documents: DataFrame, k: Int = 64): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val agg = new org.apache.spark.sql.expressions.Aggregator[
-        String, Map[String, Long], Map[String, Long]] {
-      def zero: Map[String, Long] = Map.empty
-      private def shrink(m: Map[String, Long]): Map[String, Long] =
-        if (m.size <= k) m
-        else {
-          // decrement all by the (k+1)-th largest count; drop non-positive
-          val cut = m.values.toSeq.sorted(Ordering[Long].reverse)(k)
-          m.flatMap { case (t, n) =>
-            if (n - cut > 0) Some(t -> (n - cut)) else None
-          }
-        }
-      def reduce(b: Map[String, Long], t: String): Map[String, Long] =
-        shrink(b.updated(t, b.getOrElse(t, 0L) + 1L))
-      def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
-        shrink(b.foldLeft(a) { case (acc, (t, n)) =>
-          acc.updated(t, acc.getOrElse(t, 0L) + n)
-        })
-      def finish(m: Map[String, Long]): Map[String, Long] = m
-      def bufferEncoder = implicitly[org.apache.spark.sql.Encoder[Map[String, Long]]]
-      def outputEncoder = implicitly[org.apache.spark.sql.Encoder[Map[String, Long]]]
-    }
-    documents.select(
-      explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-        .as("token"))
-      .as[String]
-      .select(agg.toColumn) // typed select: one MG summary row
-      .toDF("summary")
-      .select(explode(col("summary")))
-      .toDF("token", "n_min")
-      .orderBy(col("n_min").desc, col("token"))
-  }
 
   /** Stratified sampling with per-language fractions — the mixture-
     * rebalancing action form of [[mixPlan]] (`sampleBy` with a
@@ -437,8 +365,7 @@ object TextAnalysis {
     * Scale posture: the global NTILE is a single total-order window —
     * acceptable for the card (one narrow (doc_id, quality, tokens) row
     * per doc through one range partitioner); at extreme scale swap in
-    * approx-percentile cutpoints and a map-only bucket assign, the
-    * same exact↔approx pairing as quantiles/cardinality. */
+    * approx-percentile cutpoints and a map-only bucket assign. */
   def qualityTiers(documents: DataFrame, tiers: Int = 10): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("quality"), col("doc_id"))
@@ -1099,8 +1026,8 @@ object TextAnalysis {
     *
     * Scale posture: the bounds table is |groups| rows (one exact
     * percentile aggregation — swap `percentile` for t-digest
-    * `approx_percentile` at 100 TB, the [[tokenQuantilesApprox]]
-    * pairing) and broadcasts; the clamp itself is map-only. */
+    * `approx_percentile` at 100 TB) and broadcasts; the clamp itself is
+    * map-only. */
   def winsorize(documents: DataFrame, group: String = "lang",
       value: String = "n_chars", pLo: Double = 0.05,
       pHi: Double = 0.95): DataFrame = {

@@ -52,8 +52,7 @@ object EventStream {
     * watermark adds no semantics here — but it DOES schedule a no-data
     * finalize micro-batch (to publish the advanced watermark), and in
     * complete mode that batch re-emits the ENTIRE result to the sink a
-    * second time. That doubled cost was round 2's st_hourly regression.
-    * The watermarked, state-bounded form is [[hourlyAppend]]. */
+    * second time. That doubled cost was round 2's st_hourly regression. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame = withNanosAsLong(spark) {
     val path = s"$dir/events.parquet"
     val schema = spark.read.parquet(path).schema
@@ -115,126 +114,10 @@ object EventStream {
       .orderBy("user_id", "session_start")
   }
 
-  /** Watermarked APPEND-mode hourly aggregation over a streaming input —
-    * the late-data-DROPPING form of [[hourlyCounts]] (complete mode keeps
-    * all state and can't exhibit watermark semantics). A window emits
-    * exactly once, when the watermark passes its end; events older than
-    * the watermark are discarded. Driven by StreamingSemanticsSpec with a
-    * MemoryStream; the caller starts the returned streaming DataFrame.
-    *
-    * Scale posture: state is bounded by the watermark horizon — the
-    * property that keeps an infinite CDC stream's state finite. */
-  def hourlyAppend(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"), col("n"))
-
-  /** Streaming exactly-once dedup of an at-least-once delivery feed:
-    * `dropDuplicatesWithinWatermark` on the delivery key keeps the FIRST
-    * arrival and drops replays that land within the watermark horizon.
-    * State holds one entry per key only until the watermark passes it —
-    * the property that makes infinite-stream dedup feasible (plain
-    * dropDuplicates grows state forever). The ingest guard an
-    * at-least-once CDC hook feed needs before the sync fan-out. */
-  def dedupStream(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Batch analog of [[dedupStream]] for the oracle: replayed rows are
-    * byte-identical, so keep-any per event_id is deterministic. */
+  /** Exactly-once dedup of an at-least-once delivery feed: replayed rows
+    * are byte-identical, so keep-any per event_id is deterministic. */
   def dedupBatch(replayed: DataFrame): DataFrame =
     replayed.dropDuplicates("event_id")
-
-  /** Stream-stream INTERVAL JOIN — streaming attribution over two live
-    * feeds: each purchase pairs with the same user's clicks inside
-    * [purchase_ts − horizon, purchase_ts]. Spark buffers both sides in
-    * watermark-bounded state, and the interval condition is what lets it
-    * EVICT: click state older than (watermark − horizon) can never match
-    * a future purchase and is dropped — bounded state on infinite feeds.
-    * The batch as-of form (latest single prior click) is
-    * [[graft.operators.Temporal.asofAttribution]]; the interval join is
-    * the streaming-native shape (all qualifying clicks, no per-key
-    * ordering state). Driven by StreamingSemanticsSpec.
-    *
-    * Scale posture: state keyed on user_id, bounded by watermark +
-    * horizon; the join shuffles both feeds once on the key. */
-  def attributionJoin(clicks: DataFrame, purchases: DataFrame,
-      horizon: String = "30 minutes",
-      watermarkDelay: String = "10 seconds"): DataFrame = {
-    val c = clicks.withWatermark("ts", watermarkDelay)
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("click_ts"))
-    val p = purchases.withWatermark("ts", watermarkDelay)
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-    p.join(c,
-      col("c_user") === col("user_id") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $horizon"))
-      .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
-        col("click_id"), col("click_ts"))
-  }
-
-  /** T2 debounce with the reference's ACTUAL flush semantics
-    * (`includes/class-lifecycle.php:107-152`: variation burst → ONE parent
-    * refresh after a 30 s quiet period): `flatMapGroupsWithState` with an
-    * EVENT-time timeout. Bursts accumulate silently in per-key state and
-    * push the key's flush deadline to last_event + `quietMs`; when the
-    * watermark passes the deadline the group flushes one
-    * (key, burst_size) row and clears its state. Event-time (not
-    * processing-time) keeps the operator deterministic under replay and
-    * lets an [[AvailableNow]] run terminate — a wall-clock timeout would
-    * schedule timer batches forever. Input: (parent_id, event ts);
-    * `watermarkDelay` bounds out-of-orderness.
-    * [[debouncedTotals]] is the per-batch-dedup approximation. */
-  def debounceFlush(events: DataFrame, quietMs: Long = 30000,
-      watermarkDelay: String = "10 seconds"): org.apache.spark.sql.Dataset[(Long, Long)] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("parent_id").cast("long"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, it: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (n, _) = state.get
-            state.remove()
-            Iterator((key, n))
-          } else {
-            // Event-time burst segmentation: walk this batch's rows in ts
-            // order, seeded with any stored burst; whenever the gap to the
-            // next event is ≥ the quiet period, the accumulated burst
-            // flushes as its own refresh. This handles BOTH a lagging
-            // watermark (stored burst already stale when new events
-            // arrive) and several well-separated bursts landing in ONE
-            // micro-batch (catch-up replay) — neither may merge.
-            val sorted = it.toSeq.sortBy(_._2.getTime)
-            val flushes = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-            var (curN, curT) = state.getOption.getOrElse((0L, Long.MinValue))
-            sorted.foreach { case (_, tsv) =>
-              val ms = tsv.getTime
-              if (curN > 0 && curT + quietMs <= ms) {
-                flushes += ((key, curN))
-                curN = 0L
-              }
-              curN += 1
-              curT = math.max(curT, ms)
-            }
-            state.update((curN, curT))
-            state.setTimeoutTimestamp(curT + quietMs)
-            flushes.iterator
-          }
-      }
-  }
 
   /** Per-key debounced rollup — the reference's T2 parent-refresh debounce
     * (variation burst → one parent refresh; `includes/class-lifecycle.php:

@@ -275,9 +275,10 @@ object StateCommit {
     * committed snapshots survive (the default 2 = the new one plus its
     * predecessor, which lives one round for in-flight readers holding
     * its paths in lazy plans); older ones GC. A larger horizon buys
-    * TIME TRAVEL — [[readTableAt]] serves any retained version — at
-    * the cost of `retain` copies of the (keyed, metadata-sized) state,
-    * the Iceberg/Delta snapshot-expiry trade. */
+    * TIME TRAVEL — the index families' `…At` reads serve any retained
+    * version ([[requireRetained]]) — at the cost of `retain` copies of
+    * the (keyed, metadata-sized) state, the Iceberg/Delta
+    * snapshot-expiry trade. */
   def commit(spark: SparkSession, statePath: String, v: Long,
       retain: Int): Unit = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
@@ -460,16 +461,6 @@ object StateCommit {
       statePath: String): Row =
     rows(table).headOption.getOrElse(
       throw staleLayout(statePath, s"a snapshot without its `$table` row"))
-
-  /** Time travel: read `table` as of snapshot `v`. Fails loudly when
-    * `v` was never committed or has been retention-GC'd — a silent
-    * fallback to another version would be a correctness bug in any
-    * downstream reproduction run. */
-  def readTableAt(spark: SparkSession, statePath: String, table: String,
-      v: Long): DataFrame = {
-    requireRetained(spark, statePath, v)
-    readParquet(spark, tableDir(statePath, v, table))
-  }
 
   /** The retained-snapshot guard every time-travel read shares (one
     * edit site for retention semantics and the error wording instead of

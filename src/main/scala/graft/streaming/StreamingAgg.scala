@@ -17,7 +17,7 @@ import graft.operators.{HistSpec, IncrementalAgg}
   * Why not `groupBy().agg()` with Spark's own streaming state? That
   * state lives inside the checkpoint, keyed to one query — this state
   * is a TABLE: batch jobs, other queries, and post-hoc readers query
-  * it directly ([[IncrementalAgg.view]]/viewDistinct/viewHist), it
+  * it directly ([[IncrementalAgg.view]]/[[IncrementalAgg.viewHist]]), it
   * survives checkpoint surgery, and its merge algebra (BIGINT sums,
   * HLL union, histogram vector-add) is the documented, spec-gated one.
   *

@@ -39,17 +39,4 @@ object StreamingIndex {
       if (!batch.isEmpty)
         AnnIndex.upsert(batch.sparkSession, root, batch, seqCol = seqCol)
     }
-
-  /** Same ingest against the persisted IVF-PQ index
-    * ([[graft.operators.AnnIndexPq]]): each batch encodes against the
-    * persisted quantizer + codebooks and rewrites only its touched
-    * cells — same replay-convergence argument (id-keyed, deterministic
-    * against fixed tables). */
-  def startPq(vectors: DataFrame, root: String,
-      checkpoint: String, seqCol: String = ""): StreamingQuery =
-    AvailableNow.foreachBatch(vectors, checkpoint) { (batch, _) =>
-      if (!batch.isEmpty)
-        graft.operators.AnnIndexPq.upsert(batch.sparkSession, root, batch,
-          seqCol = seqCol)
-    }
 }

@@ -86,21 +86,6 @@ object StreamingLex {
     }
   }
 
-  /** Start an AvailableNow UPSERT pass — the CDC shape: each micro-batch
-    * carries changed documents (updates of live docs, resurrections of
-    * deleted ids, brand-new ids — any mix), applied atomically per batch
-    * via [[LexIndex.upsertBatch]]'s exact delete+ingest algebra. The
-    * same watermark + era guards as [[start]]: re-delivered batches are
-    * refused, and a checkpoint cannot outlive a rebuild. */
-  def startUpsert(docs: DataFrame, root: String,
-      checkpoint: String, seqCol: String = ""): StreamingQuery = {
-    guardEra(docs, root, checkpoint)
-    AvailableNow.foreachBatch(docs, checkpoint) { (batch, batchId) =>
-      LexIndex.upsertBatch(batch.sparkSession, batch, root, batchId,
-        seqCol = seqCol)
-    }
-  }
-
   /** Read-side convenience: BM25 top-k over the maintained index. */
   def search(spark: SparkSession, root: String, terms: Seq[String],
       k: Int = 10): DataFrame = LexIndex.search(spark, root, terms, k)

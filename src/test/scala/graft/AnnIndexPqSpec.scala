@@ -179,32 +179,6 @@ class AnnIndexPqSpec extends SparkSpec {
     assert(bad2 == 0, "re-upsert duplicated code rows")
   }
 
-  test("streaming ingest converges to the batch upsert") {
-    val batchRoot = freshRoot(); val streamRoot = freshRoot()
-    val part1 = emb.where(col("vec_id") < 400)
-    val part2 = emb.where(col("vec_id") >= 400)
-    AnnIndexPq.build(part1, batchRoot)
-    AnnIndexPq.upsert(spark, batchRoot, part2)
-    AnnIndexPq.build(part1, streamRoot)
-    implicit val ctx = spark.sqlContext
-    val input =
-      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-    val vectors = input.toDF()
-      .select(col("_1").as("vec_id"),
-        col("_2").cast("array<float>").as("embedding"))
-    val rows = part2.select("vec_id", "embedding")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    input.addData(rows)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pq_ck").toString
-    graft.streaming.StreamingIndex.startPq(vectors, streamRoot, ckpt)
-      .awaitTermination()
-    def probe(root: String) =
-      AnnIndexPq.search(spark, root, queries(8), nProbes = 2, k = 5)
-        .collect().map(_.toString).toSeq
-    assert(probe(streamRoot) == probe(batchRoot),
-      "streamed index diverged from batch upsert")
-  }
-
   test("delete removes victims from search; compact preserves probes on one generation") {
     val root = freshRoot()
     AnnIndexPq.build(emb, root)

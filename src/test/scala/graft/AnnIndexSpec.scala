@@ -50,7 +50,7 @@ class AnnIndexSpec extends SparkSpec {
   test("probe cells prune at the partition level (PartitionFilters, not a row filter)") {
     val cells = AnnIndex.vectors(spark, root)
       .select("cell").distinct().limit(2).collect().map(_.get(0)).toSeq
-    val p = AnnIndex.prunedVectors(spark, root, cells)
+    val p = AnnIndex.vectors(spark, root).where(col("cell").isin(cells: _*))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     val pf = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.contains("cell"), s"cell predicate missing from PartitionFilters\n$p")
@@ -199,7 +199,11 @@ class AnnIndexSpec extends SparkSpec {
         emb.where(col("vec_id") >= 40 + i * 5 && col("vec_id") < 45 + i * 5)
           .select(col("vec_id"), col("embedding")))
     }
-    def filesPerCell: Map[String, Int] = AnnIndex.filesPerCell(spark, dir)
+    // per-cell parquet file counts of the committed snapshot
+    def filesPerCell: Map[String, Int] = AnnIndex.vectors(spark, dir)
+      .select(col("cell").cast("string"), input_file_name()).distinct()
+      .groupBy("cell").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1).toInt).toMap
     assert(filesPerCell.values.exists(_ > 1), "fixture never fragmented — test is vacuous")
     val before = AnnIndex.vectors(spark, dir)
       .select(col("vec_id"), col("cell").cast("long")).collect()

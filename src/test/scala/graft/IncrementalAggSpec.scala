@@ -146,8 +146,8 @@ class IncrementalAggSpec extends SparkSpec {
     }
     IncrementalAgg.ingest(spark, oneShot, keyed.drop("o_orderkey"), keys,
       Seq.empty, 1L, distincts = Seq("o_custkey"))
-    def est(r: String) = IncrementalAgg.viewDistinct(spark, r, Seq("o_custkey"))
-      .select(col("o_orderpriority"), col("approx_distinct_o_custkey"))
+    def est(r: String) = IncrementalAgg.read(spark, r).get
+      .select(col("o_orderpriority"), hll_sketch_estimate(col("hll_o_custkey")))
       .as[(String, Long)].collect().toMap
     val inc = est(root); val one = est(oneShot)
     assert(inc == one, s"union of batch sketches != one-shot sketch: $inc vs $one")
@@ -161,47 +161,6 @@ class IncrementalAggSpec extends SparkSpec {
     }
   }
 
-  test("histogram quantile estimate lands within one bin of the exact percentile") {
-    val root = freshRoot()
-    IncrementalAgg.ingest(spark, root, fact.drop("o_orderkey"), keys,
-      Seq.empty, 1L, hists = Seq(spec))
-    val got = IncrementalAgg.histQuantile(spark, root, spec, 0.5)
-      .select(col("o_orderpriority"), col("q_total_cents"))
-      .as[(String, Long)].collect().toMap
-    val exact = fact.groupBy("o_orderpriority")
-      .agg(expr("percentile_approx(total_cents, 0.5, 100000)").as("m"))
-      .as[(String, Long)].collect().toMap
-    val width = (spec.hi - spec.lo) / spec.nBins
-    exact.foreach { case (k, m) =>
-      assert(math.abs(got(k) - m) <= width,
-        s"median estimate ${got(k)} more than one bin from exact $m for $k")
-    }
-  }
-
-  test("time travel: readAt(v) is the prefix aggregate as of batch v") {
-    val root = freshRoot()
-    batches.zipWithIndex.foreach { case (b, i) =>
-      IncrementalAgg.ingest(spark, root, b, keys, values, i + 1L, retain = 3)
-    }
-    assert(StateCommit.versions(spark, root) == Seq(1L, 2L, 3L))
-    (1 to 3).foreach { v =>
-      val got = IncrementalAgg.readAt(spark, root, v)
-        .select("o_orderpriority", "cnt", "sum_total_cents",
-          "min_total_cents", "max_total_cents")
-        .collect().map(_.toString).sorted.toSeq
-      val want = fact.where(col("o_orderkey") % 3 < v)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("cnt"),
-          sum("total_cents").as("sum_total_cents"),
-          min("total_cents").as("min_total_cents"),
-          max("total_cents").as("max_total_cents"))
-        .select("o_orderpriority", "cnt", "sum_total_cents",
-          "min_total_cents", "max_total_cents")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == want, s"snapshot $v is not the prefix aggregate")
-    }
-  }
-
   test("retention: default horizon keeps two snapshots; GC'd versions fail loudly") {
     val root = freshRoot()
     batches.zipWithIndex.foreach { case (b, i) =>
@@ -210,10 +169,16 @@ class IncrementalAggSpec extends SparkSpec {
     assert(StateCommit.versions(spark, root) == Seq(2L, 3L),
       "default retain=2 should keep exactly the newest two snapshots")
     val e = intercept[IllegalArgumentException] {
-      IncrementalAgg.readAt(spark, root, 1L)
+      StateCommit.requireRetained(spark, root, 1L)
     }
     assert(e.getMessage.contains("retained"),
       s"GC'd-version error should list what survives: ${e.getMessage}")
+    // a wider horizon keeps every snapshot it names
+    val wide = freshRoot()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      IncrementalAgg.ingest(spark, wide, b, keys, values, i + 1L, retain = 3)
+    }
+    assert(StateCommit.versions(spark, wide) == Seq(1L, 2L, 3L))
   }
 
   test("view derives exact integer averages (sum div cnt)") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
@@ -14,6 +15,22 @@ import graft.operators.Layout
   */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Per-file min/max bounding boxes of (`c1`, `c2`) for a written
+    * layout — the stats a reader's skipping logic consults. */
+  private def fileStats(path: String, c1: String, c2: String): DataFrame =
+    spark.read.parquet(path)
+      .groupBy(input_file_name().as("file"))
+      .agg(min(col(c1)).as("min1"), max(col(c1)).as("max1"),
+        min(col(c2)).as("min2"), max(col(c2)).as("max2"))
+
+  /** Files whose bounding box intersects the 2-D range predicate —
+    * the files a skipping reader must open. */
+  private def candidateFiles(stats: DataFrame, lo1: Long, hi1: Long,
+      lo2: Long, hi2: Long): Long =
+    stats.where(
+      col("max1") >= lo1 && col("min1") <= hi1 &&
+      col("max2") >= lo2 && col("min2") <= hi2).count()
 
   test("zkey interleaves bits (hand-computed cases)") {
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (255L, 255L))
@@ -41,8 +58,8 @@ class LayoutSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(rows(s"$base/z") == rows(s"$base/linear"))
 
-    val zStats = Layout.fileStats(spark, s"$base/z", "l_orderkey", "l_partkey")
-    val lStats = Layout.fileStats(spark, s"$base/linear", "l_orderkey", "l_partkey")
+    val zStats = fileStats(s"$base/z", "l_orderkey", "l_partkey")
+    val lStats = fileStats(s"$base/linear", "l_orderkey", "l_partkey")
     assert(zStats.count() == nFiles && lStats.count() == nFiles)
 
     // the honest workload: window predicates on EACH dimension. A
@@ -59,8 +76,8 @@ class LayoutSpec extends SparkSpec {
         (o1 + i * 2 * oStep, o1 + (i * 2 + 1) * oStep, p1, p2)) ++
       (0 until 4).map(j => // partkey windows, orderkey unbounded
         (o1, o2, p1 + j * 2 * pStep, p1 + (j * 2 + 1) * pStep))
-    def opened(stats: org.apache.spark.sql.DataFrame) = workload.map {
-      case (a, b, c, d) => Layout.candidateFiles(stats, a, b, c, d) }
+    def opened(stats: DataFrame) = workload.map {
+      case (a, b, c, d) => candidateFiles(stats, a, b, c, d) }
     val (zOpened, lOpened) = (opened(zStats), opened(lStats))
     // partkey windows alone: the linear layout must open EVERY file
     // (full-range stats on the unsorted column), z-order must not
@@ -138,17 +155,17 @@ class LayoutSpec extends SparkSpec {
     // tiles -> per-file x-ranges in the dense region stay WIDE relative
     // to the data mass; quantile tiling splits by mass. Compare the
     // dense-region pruning directly: windows over the low-x half.
-    val zq = Layout.fileStats(spark, s"$base/quant", "x", "y")
-    val zm = Layout.fileStats(spark, s"$base/minmax", "x", "y")
+    val zq = fileStats(s"$base/quant", "x", "y")
+    val zm = fileStats(s"$base/minmax", "x", "y")
     val xMax = 4000L * 4000L
     val boxes = (0 until 8).map { i =>
       val lo = i * xMax / 64; val hi = (i + 1) * xMax / 64
       (lo, hi, 0L, 63L) // dense-region x-windows, y unbounded
     }
     val qOpened = boxes.map { case (a, b, c, d) =>
-      Layout.candidateFiles(zq, a, b, c, d) }.sum
+      candidateFiles(zq, a, b, c, d) }.sum
     val mOpened = boxes.map { case (a, b, c, d) =>
-      Layout.candidateFiles(zm, a, b, c, d) }.sum
+      candidateFiles(zm, a, b, c, d) }.sum
     assert(qOpened < mOpened,
       s"quantile tiling opened $qOpened vs minmax $mOpened on the dense region")
   }

@@ -1,450 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Multimodal
 
-/** The batched per-partition decode path must agree with the column-level
-  * metadata extraction (same sha/width/height/format per doc) — i.e. the
-  * mapPartitions plumbing is semantically identical to the pure-expression
-  * variant the oracle checks.
-  */
 class MultimodalSpec extends SparkSpec {
-
-  test("decodePartitioned agrees with binaryMeta") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
-    val viaExpr = Multimodal.binaryMeta(docs)
-      .select("doc_id", "n_bytes", "sha", "width", "height", "format")
-      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-    val viaPart = Multimodal.decodePartitioned(docs).collect()
-    assert(viaPart.length == viaExpr.size && viaPart.nonEmpty)
-    viaPart.foreach { m =>
-      val e = viaExpr(m.doc_id)
-      assert(Seq(m.n_bytes, m.sha, m.width, m.height, m.format) == e,
-        s"doc ${m.doc_id}: $m vs $e")
-    }
-  }
-
-  private def imageBytes(fmt: String, w: Int, h: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    (0 until w).foreach(x => img.setRGB(x, 0, x * 31))
-    val out = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, fmt, out), s"no $fmt writer")
-    out.toByteArray
-  }
-
-  test("decodePartitioned reads TRUE dimensions from real PNG/JPEG bytes") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, imageBytes("png", 37, 21)),
-      (2L, imageBytes("jpeg", 64, 48)),
-      (3L, "plain text payload, not an image".getBytes("UTF-8")))
-    val docs = rows.toDF("doc_id", "text")
-    val metas = Multimodal.decodePartitioned(docs).collect()
-      .map(m => m.doc_id -> m).toMap
-    assert((metas(1L).width, metas(1L).height, metas(1L).format) == ((37, 21, "png")))
-    assert((metas(2L).width, metas(2L).height, metas(2L).format) == ((64, 48, "jpeg")))
-    // non-image payloads keep the deterministic fallback binaryMeta mirrors
-    val n = rows(2)._2.length
-    assert((metas(3L).width, metas(3L).height) == ((n % 640, n % 480)))
-  }
-
-  test("decodeImage degrades on a truncated image header: corrupt-<fmt>, zero dims") {
-    val good = imageBytes("png", 10, 10)
-    val truncated = good.take(12) // magic survives, header doesn't
-    val (w, h, fmt) = Multimodal.decodeImage(truncated)
-    // unknown metadata is ZERO, never fabricated
-    assert((w, h) == ((0, 0)))
-    // the sniffed identity survives corruption — a damaged real asset
-    // must not masquerade as a length-derived pseudo-format
-    assert(fmt == "corrupt-png")
-  }
-
-  private def patternPng(w: Int, h: Int, f: (Int, Int) => Int,
-      brighten: Int = 0): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      val v = math.min(255, math.max(0, f(x, y) + brighten))
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
-  }
-
-  test("imageDHash: brightness shift preserves the hash; different pictures diverge") {
-    import spark.implicits._
-    def gradient(x: Int, y: Int) = (x * 4) % 256
-    def checker(x: Int, y: Int) = if (((x / 8) + (y / 8)) % 2 == 0) 30 else 220
-    val docs = Seq(
-      (1L, patternPng(64, 64, gradient)),
-      (2L, patternPng(64, 64, gradient, brighten = 25)), // same scene, brighter
-      (3L, patternPng(64, 64, checker)),                 // different picture
-      (4L, "not an image".getBytes("UTF-8")),
-      (5L, patternPng(64, 64, gradient).take(12)))       // corrupt
-      .toDF("doc_id", "text")
-    val rows = Multimodal.imageDHash(docs).collect()
-      .map(r => r.doc_id -> r).toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    // dHash is brightness-invariant by construction (adjacent deltas)
-    assert(ham(rows(1L).dhash, rows(2L).dhash) <= 7,
-      s"brightened copy too far: ${ham(rows(1L).dhash, rows(2L).dhash)}")
-    assert(ham(rows(1L).dhash, rows(3L).dhash) > 12,
-      s"different pictures too close: ${ham(rows(1L).dhash, rows(3L).dhash)}")
-    assert(rows(4L).dhash == 0L && rows(5L).format == "corrupt-png")
-    // deterministic: a second run produces identical hashes
-    val again = Multimodal.imageDHash(docs).collect().map(r => r.doc_id -> r.dhash).toMap
-    assert(rows.view.mapValues(_.dhash).toMap == again)
-  }
-
-  test("dhashPairs: near-dup pair found, different pair absent, corrupt rows never pair") {
-    import spark.implicits._
-    def gradient(x: Int, y: Int) = (x * 4) % 256
-    def checker(x: Int, y: Int) = if (((x / 8) + (y / 8)) % 2 == 0) 30 else 220
-    val docs = Seq(
-      (1L, patternPng(64, 64, gradient)),
-      (2L, patternPng(64, 64, gradient, brighten = 25)),
-      (3L, patternPng(64, 64, checker)),
-      (4L, "not an image A".getBytes("UTF-8")),
-      (5L, "not an image B".getBytes("UTF-8"))) // both hash 0 — must not pair
-      .toDF("doc_id", "text")
-    val pairs = Multimodal.dhashPairs(Multimodal.imageDHash(docs).toDF())
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)), s"near-dup pair missing: $pairs")
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L || p._1 == 5L),
-      s"undecodable rows paired: $pairs")
-    assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)),
-      s"different pictures paired: $pairs")
-  }
-
-  // ---- minimal container builders (header bytes only, no codec) ----
-
-  private def be32(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def ascii(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
-
-  /** ftyp + moov>trak>tkhd(v0) with 16.16 fixed-point dims at the tail. */
-  private def mp4Bytes(w: Int, h: Int): Array[Byte] = {
-    val tkhdBody = new Array[Byte](76) // version..matrix zeroed (v0)
-    // full box size = 8 (header) + 76 (body) + 8 (16.16 width+height) = 92
-    val tkhd = be32(8L + tkhdBody.length + 8) ++ ascii("tkhd") ++ tkhdBody ++
-      be32(w.toLong << 16) ++ be32(h.toLong << 16)
-    val trak = be32(8L + tkhd.length) ++ ascii("trak") ++ tkhd
-    val moov = be32(8L + trak.length) ++ ascii("moov") ++ trak
-    val ftyp = be32(16) ++ ascii("ftyp") ++ ascii("isom") ++ be32(0)
-    ftyp ++ moov
-  }
-
-  /** RIFF/WAVE with a 16-byte PCM `fmt ` chunk and an empty data chunk. */
-  private def wavBytes(rate: Int, channels: Int): Array[Byte] = {
-    val fmt = ascii("fmt ") ++ le32(16) ++
-      le16(1) ++ le16(channels) ++ le32(rate.toLong) ++
-      le32(rate.toLong * channels * 2) ++ le16(channels * 2) ++ le16(16)
-    val data = ascii("data") ++ le32(0)
-    ascii("RIFF") ++ le32(4L + fmt.length + data.length) ++ ascii("WAVE") ++
-      fmt ++ data
-  }
-
-  test("decodeMedia reads TRUE MP4 dims and WAV rate/channels from container headers") {
-    val mp4 = Multimodal.decodeMedia(mp4Bytes(1920, 1080))
-    assert((mp4.width, mp4.height, mp4.format) == ((1920, 1080, "mp4")), mp4)
-    val wav = Multimodal.decodeMedia(wavBytes(44100, 2))
-    assert((wav.sampleRate, wav.channels, wav.format) == ((44100, 2, "wav")), wav)
-    val mono = Multimodal.decodeMedia(wavBytes(16000, 1))
-    assert((mono.sampleRate, mono.channels) == ((16000, 1)), mono)
-  }
-
-  test("decodeMedia labels truncated containers corrupt-<fmt> with zeroed metadata") {
-    val cutMp4 = mp4Bytes(640, 360).take(40) // ftyp survives, moov truncated
-    val m = Multimodal.decodeMedia(cutMp4)
-    assert(m.format == "corrupt-mp4", m)
-    assert((m.width, m.height, m.sampleRate, m.channels) == ((0, 0, 0, 0)), m)
-    val cutWav = wavBytes(8000, 1).take(20) // RIFF/WAVE survive, fmt gone
-    val wv = Multimodal.decodeMedia(cutWav)
-    assert(wv.format == "corrupt-wav", wv)
-    assert((wv.width, wv.height, wv.sampleRate, wv.channels) == ((0, 0, 0, 0)), wv)
-  }
-
-  test("decodeMedia finds the VIDEO trak behind a leading 0x0 audio trak") {
-    // real encoders routinely order traks [audio, video]; the audio tkhd
-    // carries width=height=0 and must not shadow the video dims
-    val videoTkhd = be32(92) ++ ascii("tkhd") ++ new Array[Byte](76) ++
-      be32(1280L << 16) ++ be32(720L << 16)
-    val audioTkhd = be32(92) ++ ascii("tkhd") ++ new Array[Byte](76) ++
-      be32(0) ++ be32(0)
-    def trak(tkhd: Array[Byte]) = be32(8L + tkhd.length) ++ ascii("trak") ++ tkhd
-    val traks = trak(audioTkhd) ++ trak(videoTkhd)
-    val moov = be32(8L + traks.length) ++ ascii("moov") ++ traks
-    val ftyp = be32(16) ++ ascii("ftyp") ++ ascii("isom") ++ be32(0)
-    val m = Multimodal.decodeMedia(ftyp ++ moov)
-    assert((m.width, m.height, m.format) == ((1280, 720, "mp4")), m)
-  }
-
-  test("decodeMedia NEVER throws on arbitrary bytes (fuzz — one bad asset must not kill a job)") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    // adversarial prefixes: every sniffer magic, then random tails —
-    // exercises the bounds checks of the box/chunk walkers
-    val magics = Seq(
-      Array[Byte](0x89.toByte, 'P', 'N', 'G'),
-      Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte),
-      "GIF89a".getBytes("ISO-8859-1"),
-      "BM".getBytes("ISO-8859-1"),
-      "RIFF????WAVE".getBytes("ISO-8859-1"),
-      Array[Byte](0, 0, 0, 16) ++ "ftyp".getBytes("ISO-8859-1"),
-      Array.empty[Byte])
-    val g = for {
-      magic <- Gen.oneOf(magics)
-      tail <- Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
-    } yield magic ++ tail.toArray
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(300),
-      Prop.forAll(g) { bytes =>
-        val m = Multimodal.decodeMedia(bytes)
-        m.format.nonEmpty && m.width >= 0 && m.height >= 0 &&
-          m.sampleRate >= 0 && m.channels >= 0
-      })
-    assert(res.passed, res.status.toString)
-  }
-
-  // ---- PCM WAV sample decode (codec-free, so the samples are REAL) ----
-
-  /** 16-bit PCM WAV with actual sample data (channel-interleaved). */
-  private def wavPcm16(rate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
-    val data = samples.flatMap(s => le16(s & 0xffff))
-    val fmt = ascii("fmt ") ++ le32(16) ++
-      le16(1) ++ le16(channels) ++ le32(rate.toLong) ++
-      le32(rate.toLong * channels * 2) ++ le16(channels * 2) ++ le16(16)
-    val dataChunk = ascii("data") ++ le32(data.length.toLong) ++ data
-    ascii("RIFF") ++ le32(4L + fmt.length + dataChunk.length) ++ ascii("WAVE") ++
-      fmt ++ dataChunk
-  }
-
-  private def sine16(rate: Int, freq: Double, frames: Int, amp: Double): Array[Short] =
-    Array.tabulate(frames)(i =>
-      (math.sin(2 * math.Pi * freq * i / rate) * amp * 32767).toShort)
-
-  test("decodeWavPcm round-trips synthesized sine waves exactly (property)") {
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
-    val g = for {
-      rate <- Gen.oneOf(8000, 16000, 44100)
-      freq <- Gen.chooseNum(20.0, 4000.0)
-      frames <- Gen.chooseNum(1, 2000)
-      amp <- Gen.chooseNum(0.05, 1.0)
-    } yield (rate, freq, frames, amp)
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(100),
-      Prop.forAll(g) { case (rate, freq, frames, amp) =>
-        val raw = sine16(rate, freq, frames, amp)
-        val decoded = Multimodal.decodeWavPcm(wavPcm16(rate, 1, raw))
-        decoded.exists { a =>
-          a.sampleRate == rate && a.channels == 1 && a.frames == frames &&
-            a.samples.length == frames &&
-            // 16-bit decode is s/32768 EXACTLY — no tolerance needed
-            a.samples.zip(raw).forall { case (f, s) => f == s / 32768.0f }
-        }
-      })
-    assert(res.passed, res.status.toString)
-  }
-
-  test("decodeMedia reports the real PCM frame count header-only") {
-    val stereo = wavPcm16(44100, 2, sine16(44100, 440, 480, 0.5) ++ sine16(44100, 440, 480, 0.5))
-    val m = Multimodal.decodeMedia(stereo)
-    assert((m.sampleRate, m.channels, m.nSamples, m.format) == ((44100, 2, 480L, "wav")), m)
-    // the empty-data builder used elsewhere: 0 frames, still valid wav
-    assert(Multimodal.decodeMedia(wavBytes(8000, 1)).nSamples == 0L)
-  }
-
-  test("decodeWavPcm clamps a truncated/streamed data chunk to whole frames present") {
-    val full = wavPcm16(8000, 1, sine16(8000, 100, 100, 0.5))
-    // cut mid-sample: the declared data size now overruns by 7 bytes;
-    // real rate/channels must survive and the 96 intact frames decode
-    val truncated = full.dropRight(7)
-    val a = Multimodal.decodeWavPcm(truncated)
-    assert(a.exists(x => x.frames == 96 && x.sampleRate == 8000), a.map(_.frames))
-    val m = Multimodal.decodeMedia(truncated)
-    assert((m.format, m.sampleRate, m.nSamples) == (("wav", 8000, 96L)), m)
-  }
-
-  test("decodeWavPcm rejects non-PCM encodings and truncated data") {
-    // audioFormat=3 (IEEE float) — metadata stays readable, samples don't
-    val float32 = {
-      val fmt = ascii("fmt ") ++ le32(16) ++ le16(3) ++ le16(1) ++
-        le32(8000L) ++ le32(32000L) ++ le16(4) ++ le16(32)
-      val data = ascii("data") ++ le32(8) ++ new Array[Byte](8)
-      ascii("RIFF") ++ le32(4L + fmt.length + data.length) ++ ascii("WAVE") ++ fmt ++ data
-    }
-    assert(Multimodal.decodeWavPcm(float32).isEmpty)
-    assert(Multimodal.decodeMedia(float32).format == "wav") // header still real
-    assert(Multimodal.decodeMedia(float32).nSamples == 0L)  // but no PCM claim
-    // a cut that destroys the fmt chunk itself (not just data) stays None
-    assert(Multimodal.decodeWavPcm(wavBytes(8000, 1).take(20)).isEmpty)
-    // null payloads degrade, never NPE (the fuzz property's null analog)
-    assert(Multimodal.decodeWavPcm(null).isEmpty)
-    assert(Multimodal.decodeMedia(null).format.nonEmpty)
-  }
-
-  test("audioStats computes RMS/peak from true samples, degrades on non-audio") {
-    import spark.implicits._
-    val amp = 0.5
-    val wav = wavPcm16(8000, 1, sine16(8000, 250, 8000, amp)) // 1 s, whole cycles
-    val txt = "not audio at all".getBytes("UTF-8")
-    val docs = Seq((1L, wav), (2L, txt), (3L, null: Array[Byte]))
-      .toDF("doc_id", "text")
-    val stats = Multimodal.audioStats(docs).collect().map(s => s.doc_id -> s).toMap
-    assert(stats(3L).n_samples == 0L) // null payload degrades, no NPE
-    val a = stats(1L)
-    assert((a.format, a.sample_rate, a.channels, a.n_samples) == (("wav", 8000, 1, 8000L)))
-    assert(math.abs(a.duration_sec - 1.0) < 1e-9)
-    // a full-period sine's RMS is amp/√2; quantization noise is ≤ ~1e-4
-    assert(math.abs(a.rms - amp / math.sqrt(2)) < 1e-3, s"rms=${a.rms}")
-    assert(math.abs(a.peak - amp) < 1e-3, s"peak=${a.peak}")
-    val t = stats(2L)
-    assert(t.n_samples == 0L && t.rms == 0.0 && t.sample_rate == 0)
-  }
-
-  test("imageStats computes exact channel means from true pixels; guards bombs") {
-    import spark.implicits._
-    def solid(fmt: String, w: Int, h: Int, rgb: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      (0 until h).foreach(y => (0 until w).foreach(x => img.setRGB(x, y, rgb)))
-      val out = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, fmt, out), s"no $fmt writer")
-      out.toByteArray
-    }
-    // (200, 100, 50) solid PNG — lossless, so the means are EXACT
-    val png = solid("png", 24, 16, (200 << 16) | (100 << 8) | 50)
-    val docs = Seq(
-      (1L, png),
-      (2L, png.take(16)),                      // truncated: corrupt-png
-      (3L, "plain text".getBytes("UTF-8")),    // non-image passthrough
-      (4L, null: Array[Byte]))
-      .toDF("doc_id", "text")
-    val stats = Multimodal.imageStats(docs).collect().map(s => s.doc_id -> s).toMap
-    val a = stats(1L)
-    assert((a.format, a.width, a.height) == (("png", 24, 16)), a.toString)
-    assert(a.mean_r == 200.0 && a.mean_g == 100.0 && a.mean_b == 50.0, a.toString)
-    assert(math.abs(a.luminance -
-      (0.2126 * 200 + 0.7152 * 100 + 0.0722 * 50)) < 1e-9, a.toString)
-    assert(stats(2L).format == "corrupt-png" && stats(2L).mean_r == 0.0)
-    assert(stats(3L).width == 0 && stats(3L).mean_r == 0.0)
-    assert(stats(4L).mean_r == 0.0) // null payload degrades, no NPE
-    // decompression-bomb guard: true header dims survive, pixel pass skipped
-    val bombed = Multimodal.imageStats(
-      Seq((9L, solid("png", 20, 20, 0xffffff))).toDF("doc_id", "text"),
-      maxPixels = 100).collect().head
-    assert(bombed.format == "oversize-png", bombed.toString)
-    assert((bombed.width, bombed.height) == ((20, 20)), bombed.toString)
-    assert(bombed.mean_r == 0.0 && bombed.luminance == 0.0, bombed.toString)
-    // a TRUE decompression bomb: 33-byte payload whose IHDR declares
-    // 60000×60000 (~14 GB decoded at 4 B/px). The guard must fire from
-    // the header read ALONE — ImageIO.read would allocate the full
-    // pixel buffer before any post-decode check could run
-    val bomb = {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(Array[Int](0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-        .map(_.toByte))
-      val ihdr = java.nio.ByteBuffer.allocate(17)
-      ihdr.put("IHDR".getBytes("US-ASCII"))
-      ihdr.putInt(60000).putInt(60000)
-      ihdr.put(8.toByte).put(2.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-      val body = ihdr.array()
-      out.write(java.nio.ByteBuffer.allocate(4).putInt(13).array())
-      out.write(body)
-      val crc = new java.util.zip.CRC32(); crc.update(body)
-      out.write(java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array())
-      out.toByteArray
-    }
-    val trueBomb = Multimodal.imageStats(
-      Seq((10L, bomb)).toDF("doc_id", "text")).collect().head
-    assert(trueBomb.format == "oversize-png", trueBomb.toString)
-    assert((trueBomb.width, trueBomb.height) == ((60000, 60000)), trueBomb.toString)
-  }
-
-  test("decodeMedia: text payloads still take the deterministic fallback") {
-    val txt = "RIFFles in a pond — not a wave container".getBytes("UTF-8")
-    val m = Multimodal.decodeMedia(txt)
-    // "RIFF" prefix alone must not sniff as WAV ("WAVE" tag absent at 8)
-    assert(m.format == (txt.length % 3 match {
-      case 0 => "png"; case 1 => "jpeg"; case _ => "webp"
-    }), m)
-    assert((m.width, m.height) == ((txt.length % 640, txt.length % 480)))
-  }
-
-  test("audio fingerprint: gain-invariant, discriminative, guard rows excluded from pairing") {
-    import spark.implicits._
-    // 65 windows x 100 frames; amplitude alternates per window so every
-    // adjacent energy comparison has a wide margin (quantization noise
-    // cannot flip a strict inequality)
-    def envelope(phase: Int, gain: Double): Array[Short] =
-      (0 until 65).flatMap { w =>
-        val amp = (if ((w + phase) % 2 == 0) 0.2 else 0.8) * gain
-        sine16(8000, 250, 100, amp).toSeq
-      }.toArray
-    val docs = Seq(
-      (1L, wavPcm16(8000, 1, envelope(0, 1.0))),
-      (2L, wavPcm16(8000, 1, envelope(0, 0.5))),  // re-leveled copy of 1
-      (3L, wavPcm16(8000, 1, envelope(1, 1.0))),  // opposite envelope
-      (4L, "not audio at all".getBytes("UTF-8")), // non-wav guard
-      (5L, wavPcm16(8000, 1, sine16(8000, 250, 10, 0.5))) // < 65 samples
-    ).toDF("doc_id", "text")
-    val fp = Multimodal.audioFingerprint(docs).collect()
-      .map(r => r.doc_id -> r).toMap
-    assert(fp(1L).format == "wav" && fp(1L).ahash != 0L)
-    assert(fp(1L).ahash == fp(2L).ahash, "uniform gain must not move the hash")
-    assert(java.lang.Long.bitCount(fp(1L).ahash ^ fp(3L).ahash) > 32,
-      "opposite envelopes must be far apart")
-    assert(fp(4L).ahash == 0L && fp(4L).format != "wav")
-    assert(fp(5L).format == "short-wav" && fp(5L).ahash == 0L)
-    val pairs = Multimodal.audioPairs(
-      Multimodal.audioFingerprint(docs).toDF()).collect()
-    assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)),
-      s"only the re-leveled copy should pair: ${pairs.toSeq}")
-    assert(pairs.head.getInt(2) == 0)
-  }
-
-  test("a valid non-PCM WAV fingerprints as nonpcm-wav, not corrupt (decodeMedia calls it wav)") {
-    import spark.implicits._
-    // round-11 review: audioFingerprint labeled a well-formed
-    // IEEE-float WAV "corrupt-wav" while decodeMedia/audioStats called
-    // the same payload "wav" — corruption cards double-counted healthy
-    // assets. The honest label: valid container, unreadable samples.
-    val float32 = {
-      val fmt = ascii("fmt ") ++ le32(16) ++ le16(3) ++ le16(1) ++
-        le32(8000L) ++ le32(32000L) ++ le16(4) ++ le16(32)
-      val data = ascii("data") ++ le32(8) ++ new Array[Byte](8)
-      ascii("RIFF") ++ le32(4L + fmt.length + data.length) ++ ascii("WAVE") ++ fmt ++ data
-    }
-    val truncated = wavBytes(8000, 1).take(20) // fmt chunk destroyed
-    val fp = Multimodal.audioFingerprint(
-      Seq((1L, float32), (2L, truncated)).toDF("doc_id", "text"))
-      .collect().map(r => r.doc_id -> r).toMap
-    assert(fp(1L).format == "nonpcm-wav" && fp(1L).ahash == 0L, fp(1L).toString)
-    assert(fp(2L).format == "corrupt-wav", fp(2L).toString)
-  }
-
-  test("maxHamming = 0: only EXACT hash matches pair (the 64-bit single-block bucket)") {
-    import spark.implicits._
-    // round-11 review: blockBits = 64 made `1L << 64` wrap to 1, so
-    // every hash landed in one bucket and the bucketed join silently
-    // degraded to all-pairs (results stayed right; the pruning didn't).
-    // The single block's value is now the hash itself — this drives the
-    // 64-bit branch and pins the exact-match semantics.
-    val hs = Seq((1L, "wav", 5L), (2L, "wav", 5L), (3L, "wav", 4L),
-      (4L, "wav", Long.MinValue), (5L, "wav", Long.MinValue))
-      .toDF("doc_id", "format", "ahash")
-    val got = Multimodal.audioPairs(hs, maxHamming = 0).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(got == Seq((1L, 2L, 0), (4L, 5L, 0)), got.toString)
-  }
 
   test("frameSamplePlan covers the FULL stream span when maxFrames < n_frames < 2*maxFrames") {
     import spark.implicits._

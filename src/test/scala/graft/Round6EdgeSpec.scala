@@ -13,9 +13,9 @@ class Round6EdgeSpec extends SparkSpec {
     Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
 
   test("semanticDedup on empty / single-vector input") {
-    assert(Similarity.semanticDedup(emptyEmb).count() == 0)
+    assert(Similarity.semanticDedupCells(emptyEmb).count() == 0)
     val one = Seq((7L, Array.fill(16)(1.0f))).toDF("vec_id", "embedding")
-    val r = Similarity.semanticDedup(one).collect()
+    val r = Similarity.semanticDedupCells(one).collect()
     assert(r.length == 1 && r.head.getLong(1) == 7L && r.head.getInt(2) == 1)
   }
 
@@ -23,15 +23,6 @@ class Round6EdgeSpec extends SparkSpec {
     assert(TextAnalysis.heavyHitters(emptyDocs, minCount = 1).count() == 0)
     val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
     assert(TextAnalysis.heavyHitters(docs, minCount = 2).count() == 0)
-    assert(TextAnalysis.heavyHittersApprox(emptyDocs).count() == 0)
-  }
-
-  test("heavyHittersApprox: k larger than the vocabulary is exact") {
-    val docs = Seq((1L, "x x x y y z")).toDF("doc_id", "text")
-    val got = TextAnalysis.heavyHittersApprox(docs, k = 64).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // no counter ever evicts, so MG degenerates to exact counting
-    assert(got == Map("x" -> 3L, "y" -> 2L, "z" -> 1L), got.toString)
   }
 
   test("suffixArraySpans: doc shorter than the gram width never flags") {

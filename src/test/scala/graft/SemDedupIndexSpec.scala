@@ -258,66 +258,54 @@ class SemDedupIndexSpec extends SparkSpec {
 
   test("streaming ingest: later batches dedup against earlier ones; crash-replay converges") {
     implicit val ctx = spark.sqlContext
-    def mkStream() = {
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Array[Float])]
-      (input, input.toDF()
-        .select(col("_1").as("vec_id"), col("_2").as("embedding")))
-    }
     val root = Files.createTempDirectory("semdd_st_root").toString
-    val out = Files.createTempDirectory("semdd_st_out").toString
-    val ckpt1 = Files.createTempDirectory("semdd_st_ck1").toString
     // seed corpus: the quantizer needs training points by design
     SemDedupIndex.build(fixture, root)
-    val (in1, vecs1) = mkStream()
-    in1.addData(Seq((100L, center(9)), (101L, center(10))))
-    StreamingSemDedup.startProbed(vecs1, root, ckpt1, out, threshold = 0.99)
-      .awaitTermination()
+    def verdicts(rows: Seq[(Long, Array[Float])]) = verdictRows(
+      SemDedupIndex.probe(spark, root, rows.toDF("vec_id", "embedding"),
+        threshold = 0.99))
+    // probe-then-ingest one micro-batch: the verdicts `rows` get BEFORE
+    // they join the index, then one StreamingSemDedup.start pass under a
+    // fresh checkpoint folds them in
+    def probeThenIngest(rows: Seq[(Long, Array[Float])]) = {
+      val got = verdicts(rows)
+      val input = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, Array[Float])]
+      input.addData(rows)
+      StreamingSemDedup.start(
+        input.toDF().select(col("_1").as("vec_id"), col("_2").as("embedding")),
+        root, Files.createTempDirectory("semdd_st_ck").toString)
+        .awaitTermination()
+      got
+    }
+    val batch1 = Seq((100L, center(9)), (101L, center(10)))
+    val before = probeThenIngest(batch1)
+    assert(before.forall(_._4 == 0), s"first batch must be new: $before")
     // crash-and-lose-the-checkpoint replay of batch 1 under a fresh
     // checkpoint, BEFORE any later batch (an at-least-once replay
-    // re-delivers before subsequent offsets commit): the verdict
-    // partition overwrites byte-identically — own-id exclusion means
-    // the already-upserted rows don't self-match — and the re-upserted
-    // generation's predecessor is masked by its own tombstones
-    val before = StreamingSemDedup.probed(spark, out)
-      .collect().map(_.toString).sorted.toSeq
-    val ckpt2 = Files.createTempDirectory("semdd_st_ck2").toString
-    val (in2, vecs2) = mkStream()
-    in2.addData(Seq((100L, center(9)), (101L, center(10))))
-    StreamingSemDedup.startProbed(vecs2, root, ckpt2, out, threshold = 0.99)
-      .awaitTermination()
-    val after = StreamingSemDedup.probed(spark, out)
-      .collect().map(_.toString).sorted.toSeq
-    assert(after == before, "replay duplicated or changed verdict rows")
+    // re-delivers before subsequent offsets commit): own-id exclusion
+    // means the already-upserted rows don't self-match, and the
+    // re-upserted generation's predecessor is masked by its own
+    // tombstones
+    assert(probeThenIngest(batch1) == before,
+      "replay changed verdict rows")
     // batch 2 against the (converged) index: a twin of batch 1's vector
     // flags through the upserted generation; fresh vectors stay new
-    in2.addData(Seq((200L, center(9).map(v => v + 0.004f)),
-      (201L, center(11))))
-    StreamingSemDedup.startProbed(vecs2, root, ckpt2, out, threshold = 0.99)
-      .awaitTermination()
-    val verdicts = StreamingSemDedup.probed(spark, out)
-      .collect().map(r => r.getLong(0) -> r.getInt(3)).toMap
-    assert(verdicts(100L) == 0 && verdicts(101L) == 0,
-      s"first batch must be new: $verdicts")
-    assert(verdicts(200L) == 1,
-      s"batch-2 twin of batch-1's vector 100 must flag: $verdicts")
-    assert(verdicts(201L) == 0, s"fresh vector misflagged: $verdicts")
-    val probe = verdictRows(SemDedupIndex.probe(spark, root,
-      Seq((900L, center(9))).toDF("vec_id", "embedding"), threshold = 0.99))
+    val batch2 = probeThenIngest(Seq((200L, center(9).map(v => v + 0.004f)),
+      (201L, center(11)))).map(r => r._1 -> r._4).toMap
+    assert(batch2(200L) == 1,
+      s"batch-2 twin of batch-1's vector 100 must flag: $batch2")
+    assert(batch2(201L) == 0, s"fresh vector misflagged: $batch2")
+    val probe = verdicts(Seq((900L, center(9))))
     assert(probe.head._4 == 1, "replayed index lost batch-1 state")
   }
 
-  test("probed CDC window: the verdict describes the version that lands, not the superseded one") {
-    // round-15 advice: startProbed used to probe the RAW micro-batch
-    // but upsert the collapsed one — a window carrying two versions of
-    // one vec_id aggregated candidates/max_cos across the superseded
-    // embedding. Here version 1 of id 300 is a near-dup of the seeded
-    // cluster (would flag at 0.99) while version 2 — the one that
-    // actually lands — is a fresh center: the verdict must be is_dup=0,
-    // and the index must hold version 2.
+  test("streamed CDC window: the version that lands is the seq winner, not the superseded one") {
+    // a window carrying two versions of one vec_id: version 1 of id 300
+    // is a near-dup of the seeded cluster while version 2 — the seq
+    // winner — is a fresh center; the index must hold version 2.
     implicit val ctx = spark.sqlContext
     val root = Files.createTempDirectory("semdd_cdc_root").toString
-    val out = Files.createTempDirectory("semdd_cdc_out").toString
     val ckpt = Files.createTempDirectory("semdd_cdc_ck").toString
     SemDedupIndex.build(fixture, root)
     val input = org.apache.spark.sql.execution.streaming.runtime
@@ -327,15 +315,9 @@ class SemDedupIndexSpec extends SparkSpec {
     input.addData(Seq(
       (300L, center(0).map(v => v + 0.005f), 1), // superseded near-dup
       (300L, center(12), 2)))                    // the landing version
-    StreamingSemDedup.startProbed(vecs, root, ckpt, out, threshold = 0.99,
-      seqCol = "seq").awaitTermination()
-    val v300 = StreamingSemDedup.probed(spark, out)
-      .where(col("vec_id") === 300L).collect()
-    assert(v300.length == 1, s"one verdict row expected: ${v300.toSeq}")
-    assert(v300.head.getInt(3) == 0,
-      s"verdict aggregated the superseded version: ${v300.head}")
-    // the landed row IS version 2: a twin of center(12) flags, a twin
-    // of the superseded version 1 does not
+    StreamingSemDedup.start(vecs, root, ckpt, seqCol = "seq")
+      .awaitTermination()
+    // the landed row IS version 2: a twin of center(12) flags
     val twin12 = verdictRows(SemDedupIndex.probe(spark, root,
       Seq((901L, center(12).map(v => v + 0.004f)))
         .toDF("vec_id", "embedding"), threshold = 0.99))

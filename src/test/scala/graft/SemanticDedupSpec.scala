@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
-/** [[Similarity.semanticDedup]] — SemDeDup survivors over the
-  * embedding-cosine near-dup graph: cluster collapse, canonical-min
+/** [[Similarity.semanticDedupCells]] — SemDeDup survivors over the
+  * cell-local embedding-cosine near-dup graph: cluster collapse, canonical-min
   * survivor policy, singleton passthrough, and the composition property
   * that every dropped vector's cluster IS a surviving id.
   */
@@ -33,7 +33,7 @@ class SemanticDedupSpec extends SparkSpec {
   }
 
   test("near-identical embeddings collapse; min id survives; singletons pass") {
-    val rows = Similarity.semanticDedup(fixture, threshold = 0.99)
+    val rows = Similarity.semanticDedupCells(fixture, threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val byId = rows.map(t => t._1 -> t).toMap
     // cluster c's members are ids {c, c+3, c+6, c+9}; min = c survives
@@ -50,7 +50,7 @@ class SemanticDedupSpec extends SparkSpec {
   }
 
   test("every dropped vector's cluster is a surviving id (apply-safety)") {
-    val rows = Similarity.semanticDedup(fixture, threshold = 0.99)
+    val rows = Similarity.semanticDedupCells(fixture, threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val survivors = rows.filter(_._3 == 1).map(_._1).toSet
     rows.filter(_._3 == 0).foreach { case (id, cluster, _) =>
@@ -60,10 +60,13 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("deep paraphrase chain: fixpoint collapses depth >> 3 into one cluster") {
     // A 13-vector PATH in embedding space: dims 0-7 are a shared positive
-    // base (one sign-LSH bucket for all), dims 8+k/9+k an overlapping
-    // two-dim window. Consecutive cosine = (s+w²)/(s+2w²) = 0.6, two-apart
-    // = s/(s+2w²) = 0.2 with s = 8·0.25² = 0.5, w = 1 — so at threshold
-    // 0.5 the pair graph is EXACTLY the path v0—v1—…—v12 (diameter 12).
+    // base, dims 8+k/9+k an overlapping two-dim window. Consecutive
+    // cosine = (s+w²)/(s+2w²) = 0.6, two-apart = s/(s+2w²) = 0.2 with
+    // s = 8·0.25² = 0.5, w = 1 — so at threshold 0.5 the pair graph is
+    // EXACTLY the path v0—v1—…—v12 (diameter 12). The subject is the
+    // clustering depth, not candidate recall: 13 vectors train the
+    // 8-cell floor of the quantizer, and probing all 8 cells makes every
+    // pair a candidate.
     val n = 12
     def vec(k: Int): Array[Float] = {
       val a = Array.fill(8 + n + 2)(0f)
@@ -73,12 +76,13 @@ class SemanticDedupSpec extends SparkSpec {
     }
     val chain = (0 to n).map(k => (k.toLong, vec(k))).toDF("vec_id", "embedding")
     // fixpoint (default): the whole chain collapses to min id 0
-    val fixed = Similarity.semanticDedup(chain, threshold = 0.5)
+    val fixed = Similarity.semanticDedupCells(chain, probes = 8, threshold = 0.5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fixed == (0 to n).map(k => k.toLong -> 0L).toMap, fixed.toString)
     // the old 3-round cap demonstrably splits this chain (non-vacuous:
     // the silent under-dedup this round's fixpoint port fixes)
-    val capped = Similarity.semanticDedup(chain, threshold = 0.5, rounds = 3)
+    val capped = Similarity.semanticDedupCells(chain, probes = 8,
+      threshold = 0.5, rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(capped.values.toSet.size > 1, "cap did not split — deepen the fixture")
   }
@@ -88,7 +92,7 @@ class SemanticDedupSpec extends SparkSpec {
     // 0,3,6,9) carries the curated source; everyone else is crawl
     val docs = (0 until 16).map(i =>
       (i.toLong, if (i == 9) "curated" else "crawl")).toDF("doc_id", "source")
-    val rows = Similarity.semanticDedupByPriority(
+    val rows = Similarity.semanticDedupByPriorityCells(
       fixture, docs, Map("curated" -> 0), defaultRank = 1, threshold = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val byCluster = rows.map(t => t._2 -> t).toMap
@@ -122,25 +126,46 @@ class SemanticDedupSpec extends SparkSpec {
   }
 
   test("threshold gates the graph: at cos >= 1.1 nothing clusters") {
-    val rows = Similarity.semanticDedup(fixture, threshold = 1.1).collect()
+    val rows = Similarity.semanticDedupCells(fixture, threshold = 1.1).collect()
     assert(rows.forall(r => r.getLong(0) == r.getLong(1) && r.getInt(2) == 1))
   }
 
   test("deterministic across runs") {
-    def run() = Similarity.semanticDedup(fixture, threshold = 0.99)
+    def run() = Similarity.semanticDedupCells(fixture, threshold = 0.99)
       .collect().map(_.toString).toSeq
     assert(run() == run())
   }
 
   test("incremental: a copy of a corpus vector flags, an isolated vector abstains") {
+    // one re-ingested copy per cluster (members 3, 4, 5 -> ids 103-105)
+    // plus one isolated vector: each copy sees its whole 4-member cluster
+    // among its candidates and flags at cosine ~1; the isolated vector
+    // has no corpus neighbour above the threshold
     val all = fixture
+    val corpus = all.where(col("vec_id") < 12)
+    val incoming = all.where(col("vec_id") === 12)
+      .unionByName(all.where(col("vec_id").between(3, 5))
+        .select((col("vec_id") + 100).as("vec_id"), col("embedding")))
+    val r = Similarity.semanticDedupIncrementalCells(incoming, corpus,
+        threshold = 0.99)
+      .collect().map(x => x.getLong(0) -> x).toMap
+    assert(r.keySet == Set(12L, 103L, 104L, 105L), r.keySet.toString)
+    (103L to 105L).foreach { id =>
+      assert(r(id).getInt(3) == 1 && r(id).getDouble(2) > 0.999, r(id).toString)
+      assert(r(id).getLong(1) >= 4L, s"$id should see its whole cluster: ${r(id)}")
+    }
+    assert(r(12L).getInt(3) == 0, s"isolated vector misflagged: ${r(12L)}")
+  }
+
+  test("cells incremental: copy flags, singleton abstains, batch-split invariant") {
     // corpus = the 3 clusters; incoming = a near-copy of vector 0 plus
     // the well-separated singletons (ids 12-15)
+    val all = fixture
     val corpus = all.where(col("vec_id") < 12)
     val incoming = all.where(col("vec_id") >= 12)
       .unionByName(all.where(col("vec_id") === 0)
         .select((col("vec_id") + 100).as("vec_id"), col("embedding")))
-    val r = Similarity.semanticDedupIncremental(incoming, corpus,
+    val r = Similarity.semanticDedupIncrementalCells(incoming, corpus,
         threshold = 0.99)
       .collect().map(x => x.getLong(0) -> x).toMap
     // the re-ingested copy finds its cluster at cosine ~1
@@ -150,37 +175,9 @@ class SemanticDedupSpec extends SparkSpec {
     (12L to 15L).foreach { id =>
       assert(r(id).getInt(3) == 0, s"singleton $id misflagged: ${r(id)}")
     }
-    // batch-splitting invariance: verdicts don't depend on batch grouping
-    val half1 = Similarity.semanticDedupIncremental(
-      incoming.where(col("vec_id") % 2 === 0), corpus, threshold = 0.99).collect()
-    val half2 = Similarity.semanticDedupIncremental(
-      incoming.where(col("vec_id") % 2 =!= 0), corpus, threshold = 0.99).collect()
-    val together = (half1 ++ half2).map(x => x.getLong(0) -> x.toString).toMap
-    r.foreach { case (id, row) =>
-      assert(together(id) == row.toString, s"batch split changed verdict for $id")
-    }
-  }
-
-  test("cells incremental: copy flags, singleton abstains, batch-split invariant") {
-    // the round-14 shipped form: candidates from the corpus-trained cell
-    // quantizer, not sign bands — same behavioral contract as the banded
-    // baseline on the same fixture
-    val all = fixture
-    val corpus = all.where(col("vec_id") < 12)
-    val incoming = all.where(col("vec_id") >= 12)
-      .unionByName(all.where(col("vec_id") === 0)
-        .select((col("vec_id") + 100).as("vec_id"), col("embedding")))
-    val r = Similarity.semanticDedupIncrementalCells(incoming, corpus,
-        threshold = 0.99)
-      .collect().map(x => x.getLong(0) -> x).toMap
-    assert(r(100L).getInt(3) == 1 && r(100L).getDouble(2) > 0.999, r(100L).toString)
-    (12L to 15L).foreach { id =>
-      assert(r(id).getInt(3) == 0, s"singleton $id misflagged: ${r(id)}")
-    }
-    // batch-splitting invariance is STRUCTURAL here: the quantizer trains
-    // on the corpus alone, so how the incoming stream is batched cannot
-    // change any verdict (the banded form had the same property by its
-    // per-vector candidate independence)
+    // batch-splitting invariance is STRUCTURAL: the quantizer trains on
+    // the corpus alone, so how the incoming stream is batched cannot
+    // change any verdict
     val half1 = Similarity.semanticDedupIncrementalCells(
       incoming.where(col("vec_id") % 2 === 0), corpus, threshold = 0.99).collect()
     val half2 = Similarity.semanticDedupIncrementalCells(
@@ -212,37 +209,42 @@ class SemanticDedupSpec extends SparkSpec {
     }
   }
 
-  test("cells incremental replay safety: no self-match at cos 1.0") {
-    val all = fixture
-    val r = Similarity.semanticDedupIncrementalCells(all, all,
-        threshold = 0.99)
-      .collect().map(x => x.getLong(0) -> x).toMap
-    (12L to 15L).foreach { id =>
-      assert(r(id).getInt(3) == 0, s"replayed singleton $id self-matched: ${r(id)}")
-    }
-    (0L to 11L).foreach { id =>
-      assert(r(id).getInt(3) == 1 && r(id).getDouble(2) > 0.999,
-        s"cluster member $id lost its mates: ${r(id)}")
-    }
-  }
-
   test("replay safety: a batch already folded into the corpus never self-matches") {
     val all = fixture
     // at-least-once replay shape: the corpus snapshot already contains
     // the batch's own rows (same vec_ids)
-    val r = Similarity.semanticDedupIncremental(all, all, threshold = 0.99)
+    val r = Similarity.semanticDedupIncrementalCells(all, all,
+        threshold = 0.99)
       .collect().map(x => x.getLong(0) -> x).toMap
-    // singletons are alone in their buckets once self is excluded: they
-    // must abstain, not flag themselves at cos 1.0
+    // singletons have no cell-mate once self is excluded: they must
+    // abstain, not flag themselves at cos 1.0
     (12L to 15L).foreach { id =>
       assert(r(id).getInt(3) == 0, s"replayed singleton $id self-matched: ${r(id)}")
     }
     // cluster members still flag -- via their OTHER cluster-mates (>= 3
-    // candidates; bucket cohabitants from another cluster may add more)
+    // candidates; cell-mates from another cluster may add more)
     (0L to 11L).foreach { id =>
       assert(r(id).getInt(3) == 1 && r(id).getDouble(2) > 0.999,
         s"cluster member $id lost its mates: ${r(id)}")
       assert(r(id).getLong(1) >= 3L, s"$id should see its 3 mates: ${r(id)}")
+    }
+  }
+
+  test("cells incremental replay safety: no self-match at cos 1.0") {
+    // partial replay: only some of the batch's rows were already folded
+    // into the corpus snapshot — the replayed singletons still abstain,
+    // the replayed cluster members still flag through their mates
+    val all = fixture
+    val replayed = all.where(col("vec_id").isin(0L, 5L, 12L, 13L))
+    val r = Similarity.semanticDedupIncrementalCells(replayed, all,
+        threshold = 0.99)
+      .collect().map(x => x.getLong(0) -> x).toMap
+    Seq(12L, 13L).foreach { id =>
+      assert(r(id).getInt(3) == 0, s"replayed singleton $id self-matched: ${r(id)}")
+    }
+    Seq(0L, 5L).foreach { id =>
+      assert(r(id).getInt(3) == 1 && r(id).getDouble(2) > 0.999,
+        s"cluster member $id lost its mates: ${r(id)}")
     }
   }
 }

@@ -9,9 +9,8 @@ import graft.operators.DedupIndex
 import graft.streaming.StreamingDedup
 
 /** Dedup-at-ingest: batches classify against everything BEFORE them,
-  * verdicts land in per-batch partitions, and an at-least-once replay
-  * converges (verdict partitions overwrite; index state masks the
-  * superseded generation).
+  * and an at-least-once replay converges (a replayed batch gets the
+  * same verdicts; index state masks the superseded generation).
   */
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -35,50 +34,53 @@ class StreamingDedupSpec extends SparkSpec {
     (input, docs)
   }
 
+  /** One classify-then-ingest micro-batch: the verdicts `rows` get
+    * against the index BEFORE they join it (pinned eagerly), then one
+    * [[StreamingDedup.start]] pass under a fresh checkpoint folds them
+    * in — a fresh checkpoint per call is the lost-checkpoint replay
+    * shape when the same rows come again. */
+  private def classifyThenIngest(root: String,
+      rows: (Long, String)*): DataFrame = {
+    val verdicts = DedupIndex.classifyBatch(spark, root, docsDF(rows: _*))
+      .localCheckpoint()
+    val (input, docs) = mkStream()
+    input.addData(rows)
+    StreamingDedup.start(docs, root,
+      Files.createTempDirectory("graft_sd_ck").toString).awaitTermination()
+    verdicts
+  }
+
   test("a later batch classifies against the earlier batch's docs") {
     val root = Files.createTempDirectory("graft_sd_root").toString
-    val ckpt = Files.createTempDirectory("graft_sd_ck").toString
-    val out = Files.createTempDirectory("graft_sd_out").toString
     // index starts over an EMPTY corpus: the stream builds it up
     DedupIndex.build(docsDF().limit(0), root)
-    val (input, docs) = mkStream()
-    input.addData(Seq((1L, T1), (2L, T2)))
-    StreamingDedup.startClassified(docs, root, ckpt, out).awaitTermination()
-    input.addData(Seq((3L, T1), (4L, "nothing like the others here at all")))
-    StreamingDedup.startClassified(docs, root, ckpt, out).awaitTermination()
-    val verdicts = StreamingDedup.classified(spark, out)
-      .select("doc_id", "verdict", "best_dup_id", "batch_id")
+    val first = classifyThenIngest(root, (1L, T1), (2L, T2))
+    val second = classifyThenIngest(root,
+      (3L, T1), (4L, "nothing like the others here at all"))
+    val verdicts = first.unionByName(second)
+      .select("doc_id", "verdict")
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(verdicts(1L) == "new" && verdicts(2L) == "new",
       s"first batch docs must be new: $verdicts")
     assert(verdicts(3L) == "likely_exact",
       s"doc 3 repeats doc 1's text verbatim: $verdicts")
     assert(verdicts(4L) == "new", s"doc 4 matches nothing: $verdicts")
-    val best3 = StreamingDedup.classified(spark, out)
-      .where(col("doc_id") === 3).select("best_dup_id").as[Long].head()
+    val best3 = second.where(col("doc_id") === 3)
+      .select("best_dup_id").as[Long].head()
     assert(best3 == 1L, s"doc 3's best candidate should be doc 1, got $best3")
   }
 
   test("replay of the whole stream converges: verdicts overwrite, index state masks") {
     val root = Files.createTempDirectory("graft_sd2_root").toString
-    val out = Files.createTempDirectory("graft_sd2_out").toString
-    val ckpt1 = Files.createTempDirectory("graft_sd2_ck1").toString
     DedupIndex.build(docsDF().limit(0), root)
     val rows = Seq((1L, T1), (2L, T2))
-    val (in1, docs1) = mkStream()
-    in1.addData(rows)
-    StreamingDedup.startClassified(docs1, root, ckpt1, out).awaitTermination()
-    val verdictsBefore = StreamingDedup.classified(spark, out)
+    val verdictsBefore = classifyThenIngest(root, rows: _*)
       .collect().map(_.toString).sorted.toSeq
     val probeBefore = DedupIndex.queryNearDups(spark, root, docsDF((9L, T1)))
       .collect().map(_.toString).sorted.toSeq
     // crash-and-lose-the-checkpoint replay: the same batch re-delivers
-    // with the same batch id under a FRESH checkpoint
-    val ckpt2 = Files.createTempDirectory("graft_sd2_ck2").toString
-    val (in2, docs2) = mkStream()
-    in2.addData(rows)
-    StreamingDedup.startClassified(docs2, root, ckpt2, out).awaitTermination()
-    val verdictsAfter = StreamingDedup.classified(spark, out)
+    // under a FRESH checkpoint, after its first delivery was ingested
+    val verdictsAfter = classifyThenIngest(root, rows: _*)
       .collect().map(_.toString).sorted.toSeq
     assert(verdictsAfter == verdictsBefore,
       "replay duplicated or changed verdict rows")
@@ -94,25 +96,16 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("intra-batch twins stay `new` on replay (own-batch ids excluded from candidates)") {
     val root = Files.createTempDirectory("graft_sd4_root").toString
-    val out = Files.createTempDirectory("graft_sd4_out").toString
     DedupIndex.build(docsDF().limit(0), root)
     val twins = Seq((5L, T1), (6L, T1)) // identical text, same batch
-    val ckpt1 = Files.createTempDirectory("graft_sd4_ck1").toString
-    val (in1, docs1) = mkStream()
-    in1.addData(twins)
-    StreamingDedup.startClassified(docs1, root, ckpt1, out).awaitTermination()
-    val before = StreamingDedup.classified(spark, out)
+    def verdicts = classifyThenIngest(root, twins: _*)
       .select("doc_id", "verdict").as[(Long, String)].collect().sorted.toSeq
+    val before = verdicts
     assert(before == Seq((5L, "new"), (6L, "new")),
       s"intra-batch twins are the band join's job, not the index's: $before")
-    // replay the batch (fresh checkpoint, same batch id) — the index
-    // now CONTAINS the twins, but their verdicts must not flip
-    val ckpt2 = Files.createTempDirectory("graft_sd4_ck2").toString
-    val (in2, docs2) = mkStream()
-    in2.addData(twins)
-    StreamingDedup.startClassified(docs2, root, ckpt2, out).awaitTermination()
-    val after = StreamingDedup.classified(spark, out)
-      .select("doc_id", "verdict").as[(Long, String)].collect().sorted.toSeq
+    // replay the batch — the index now CONTAINS the twins, but their
+    // verdicts must not flip
+    val after = verdicts
     assert(after == before, s"replay flipped twin verdicts: $after")
   }
 

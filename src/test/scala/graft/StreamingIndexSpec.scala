@@ -40,33 +40,6 @@ class StreamingIndexSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
 
-  test("streaming PQ ingest logs quantization drift: stationary quiet, scaled feed fires") {
-    import graft.operators.AnnIndexPq
-    val dir = Files.createTempDirectory("graft_si_pq").toString
-    AnnIndexPq.build(emb.where(col("vec_id") < 200), dir)
-    def feedPq(rows: Seq[(Long, Seq[Float])]): Unit = {
-      implicit val ctx = spark.sqlContext
-      import spark.implicits._
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Seq[Float])]
-      val vectors = input.toDF()
-        .select(col("_1").as("vec_id"), col("_2").cast("array<float>").as("embedding"))
-      input.addData(rows.toIndexedSeq)
-      val ckpt = Files.createTempDirectory("graft_si_pqck").toString
-      graft.streaming.StreamingIndex.startPq(vectors, dir, ckpt).awaitTermination()
-    }
-    feedPq(corpusRows(200, 260))
-    val quiet = AnnIndexPq.driftReport(spark, dir)
-    assert(quiet.nonEmpty && !quiet.get.drifted,
-      s"stationary streamed batch flagged: $quiet")
-    // scale+offset: residuals land far from every persisted code
-    feedPq(corpusRows(260, 320).map { case (id, e) =>
-      (2000000L + id, e.map(x => x * 4.0f + 7.0f)) })
-    val loud = AnnIndexPq.driftReport(spark, dir)
-    assert(loud.nonEmpty && loud.get.drifted,
-      s"shifted streamed batch did not fire: $loud")
-  }
-
   test("no advisory before any post-build upsert") {
     val dir = Files.createTempDirectory("graft_si_fresh").toString
     AnnIndex.build(emb.where(col("vec_id") < 60), dir, nCells = 8)

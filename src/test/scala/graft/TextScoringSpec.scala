@@ -42,56 +42,6 @@ class TextScoringSpec extends SparkSpec {
     assert(bpt(1L) > bpt(4L), bpt.toString)
   }
 
-  test("approx quantiles (the 100 TB path) track the exact percentiles") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val exact = TextAnalysis.tokenQuantiles(docs).collect()
-      .map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3))).toMap
-    val approx = TextAnalysis.tokenQuantilesApprox(docs).collect()
-      .map(r => r.getString(0) -> (r.getInt(1).toDouble, r.getInt(2).toDouble)).toMap
-    exact.foreach { case (lang, (p50, p90)) =>
-      // t-digest returns an actual data value; allow the adjacent-value
-      // gap plus interpolation slack
-      assert(math.abs(approx(lang)._1 - p50) <= math.max(5.0, p50 * 0.1),
-        s"$lang p50: approx ${approx(lang)._1} vs exact $p50")
-      assert(math.abs(approx(lang)._2 - p90) <= math.max(5.0, p90 * 0.1),
-        s"$lang p90: approx ${approx(lang)._2} vs exact $p90")
-    }
-  }
-
-  test("approx cardinality (HLL, the 100 TB path) tracks exact distinct counts") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val exact = TextAnalysis.tokenCardinality(docs).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    val approx = TextAnalysis.tokenCardinalityApprox(docs, rsd = 0.02).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    exact.foreach { case (lang, n) =>
-      val rel = math.abs(approx(lang) - n).toDouble / n
-      assert(rel < 0.05, s"$lang: approx ${approx(lang)} vs exact $n (rel $rel)")
-    }
-  }
-
-  test("Misra-Gries heavy hitters honor the classic bounds vs exact counts") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val exact = TextAnalysis.heavyHitters(docs, minCount = 1).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = exact.values.sum
-    val k = 64
-    val approx = TextAnalysis.heavyHittersApprox(docs, k).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(approx.size <= k, s"summary overflow: ${approx.size} > $k")
-    val bound = n.toDouble / k
-    // guarantee 1: every token with true count > N/k is in the summary
-    exact.filter(_._2 > bound).foreach { case (t, c) =>
-      assert(approx.contains(t), s"frequent '$t' (count $c > $bound) missing")
-    }
-    // guarantee 2: reported counts underestimate by at most N/k
-    approx.foreach { case (t, est) =>
-      val truth = exact.getOrElse(t, 0L)
-      assert(est <= truth, s"'$t' overestimated: $est > $truth")
-      assert(truth - est <= bound, s"'$t' undercount ${truth - est} > $bound")
-    }
-  }
-
   test("stratified sampling hits per-language fractions deterministically") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val rates = Map("en" -> 0.25, "es" -> 0.5, "de" -> 0.75)
