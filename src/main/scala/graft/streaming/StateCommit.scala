@@ -423,6 +423,12 @@ object StateCommit {
       .collect().map(_.getString(0)).toSet
   }
 
+  /** The folded meta's columns at snapshot `v`, less `t`: the family's
+    * [[MetaSchema.columns]], every one written even for an empty table. */
+  def metaColumns(spark: SparkSession, statePath: String,
+      v: Long): Set[String] =
+    foldedMeta(spark, statePath, v, Nil).columns.toSet - "t"
+
   /** Read one logical meta table of snapshot `v` in `schema`'s column
     * order. */
   def metaTable(spark: SparkSession, statePath: String, v: Long,

@@ -73,8 +73,33 @@ class SourceLayoutSpec extends AnyFunSuite {
       _.startsWith("graft/validate/")).isEmpty)
   }
 
+  private def cliFiles: Set[String] = sources.keySet.filter(_.startsWith("graft/cli/"))
+
+  /** The number of occurrences of `s` across the files under graft/cli. */
+  private def cliCount(s: String): Int =
+    cliFiles.toSeq.map(f => java.util.regex.Pattern.quote(s).r
+      .findAllMatchIn(sources(f)).size).sum
+
   test("the cli checks state paths through Hadoop, not java.nio.file") {
-    assert(!filesContaining("java.nio.file")("graft/cli/Main.scala"))
+    assert(cliFiles.contains("graft/cli/Main.scala"))
+    assert(filesContaining("java.nio.file").intersect(cliFiles).isEmpty)
+  }
+
+  test("the cli's session and exit live only in Main's one wrapper") {
+    val main = sources("graft/cli/Main.scala")
+    val wrapper = main.substring(main.indexOf("def main("))
+    for (s <- Seq("sys.exit(", "spark.stop()", "LocalSession(")) {
+      assert(cliCount(s) == 1, s)
+      assert(wrapper.contains(s), s)
+    }
+  }
+
+  test("the cli declares its shared flags once and reads argv only in Cli.parse") {
+    assert(cliCount("""Flag.required("root")""") == 1)
+    assert(cliCount("testdata/sf0.001") == 1)
+    assert(cliCount("args.indexOf(") == 0 && cliCount("args.contains(") == 0)
+    // one sync-engine wiring, which localEngine and vsAdapter share
+    assert(cliCount("new SyncEngine(") == 1)
   }
 
   test("ATOMIC_MOVE appears nowhere: cursor files go through StateCommit") {
