@@ -1100,8 +1100,9 @@ object SparkEntry {
 
     // the index probe aggregated to per-doc curation verdicts: one row
     // per incoming doc (new / near_dup / likely_exact), best candidate
-    // by (sig matches, smallest id) — the drop/keep list dedup-at-
-    // ingest applies ([[StreamingDedup]] writes exactly this per batch)
+    // by (sig matches, smallest id) — the drop/keep list a dedup-at-
+    // ingest stream takes from [[DedupIndex.classifyBatch]] per batch,
+    // before [[DedupIndex.upsert]] folds the batch in
     "dd_index_classify" -> ((s, dir) => {
       val (root, _) = freshScratch(s, "ddcls_q")
       val docs = Catalog.documents(s, dir)
@@ -1136,15 +1137,15 @@ object SparkEntry {
     }),
 
     // INCREMENTAL index maintenance, gated against the full-corpus
-    // oracle: 80% of the corpus builds, the remaining 20% ingests as
+    // oracle: 80% of the corpus builds, the remaining 20% upserts as
     // an immutable generation with algebraically-merged df/stats — the
-    // hash match proves incremental-ingest ≡ from-scratch-rebuild
+    // hash match proves incremental-upsert ≡ from-scratch-rebuild
     // exactly (df and corpus totals are additive over disjoint docs)
     "lx_search_inc" -> ((s, dir) => {
       val (root, _) = freshScratch(s, "lxi_q")
       val docs = Catalog.documents(s, dir)
       graft.operators.LexIndex.build(s, docs.where(col("doc_id") % 5 =!= 0), root)
-      graft.operators.LexIndex.ingest(s, docs.where(col("doc_id") % 5 === 0), root)
+      graft.operators.LexIndex.upsert(s, docs.where(col("doc_id") % 5 === 0), root)
       graft.operators.LexIndex.search(s, root,
         Seq("vector", "merge", "spark"), k = 10)
     }),

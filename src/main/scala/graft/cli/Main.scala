@@ -37,6 +37,13 @@ object Main {
   private def notFound(message: String): Nothing = throw new Refusal(message, 1)
   private def badInput(message: String): Nothing = throw new Refusal(message, 2)
 
+  /** The `clock` of a CLI-built engine: the UTC time it is built at, to
+    * the millisecond (`2026-01-31T12:00:00.123+00:00`). Its events and
+    * sync_state rows carry it, so `status` orders real passes and each
+    * event lands in its real day partition. */
+  private val ClockFmt = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSxxx").withZone(java.time.ZoneOffset.UTC)
+
   /** A sync engine over `store` for the work dir `work`: its sync_state
     * rows under `target`, logging to the shared event log (every adapter
     * logs its actions, as the reference's jobs do). */
@@ -44,6 +51,7 @@ object Main {
       store: VectorStoreWriter, target: String): SyncEngine =
     new SyncEngine(spark, new LocalHashEmbedder(), store, s"$work/sync_state",
       Selection(chunkSize = 100, chunkOverlap = 20).sanitized,
+      clock = ClockFmt.format(java.time.Instant.now()),
       events = Some(new EventLog(spark, s"$work/events")), target = target)
 
   /** The local store under `$work/store` and its target="local" engine. */
@@ -405,6 +413,8 @@ object Main {
     },
 
     // store/sync-state versions + row counts, and the last three events
+    // (newest first; events of one engine share its clock, so the
+    // printed fields break ties)
     Verb("status", workDir) { (a, session) =>
       val (spark, work) = (session(), a[String]("work"))
       val (store, engine) = localEngine(spark, work)
@@ -419,7 +429,9 @@ object Main {
       if (exists(spark, s"$work/events")) {
         val ev = new EventLog(spark, s"$work/events").read()
         println(s"events: ${ev.count()} rows")
-        ev.orderBy(col("ts").desc).limit(3).collect().foreach(r =>
+        ev.orderBy(col("ts").desc +: Seq("action", "outcome", "upserted",
+            "deleted", "skipped").map(col): _*)
+          .limit(3).collect().foreach(r =>
           println(s"  ${r.getAs[Any]("action")} ${r.getAs[Any]("outcome")} " +
             s"upserted=${r.getAs[Any]("upserted")} deleted=${r.getAs[Any]("deleted")} skipped=${r.getAs[Any]("skipped")}"))
       }

@@ -34,19 +34,10 @@ import graft.streaming.CellTable.Manifest
   * probed cells' directories only), the per-query LUT broadcasts, and
   * candidates contribute only code rows to one combinable sum — at
   * 100 TB the scan is ~m·4 bytes per posted vector in nProbes/nCoarse
-  * of the corpus. `upsert` assigns a batch against the PERSISTED
-  * quantizer and codebooks (no retrain — the FAISS add path) and
-  * rewrites only its touched cells, published atomically; retrain =
-  * [[build]], the drift-triggered path.
+  * of the corpus. The index is build-and-search only: a corpus change
+  * is a rebuild ([[build]]), published atomically over the prior
+  * snapshot, which stays readable through [[searchAt]] while retained.
   */
-/** Quantization-drift advisory (see [[AnnIndexPq.driftReport]]):
-  * build-time vs recent-upsert mean per-vector quantization error
-  * (nano-L2 of residual vs chosen codes, the `err_nano`
-  * [[Similarity.ivfPqEncode]] already computes); `drifted` recommends
-  * a [[AnnIndexPq.build]] retrain. */
-case class PqDriftReport(buildMeanErrNano: Double,
-    recentMeanErrNano: Double, nRecent: Long, drifted: Boolean)
-
 object AnnIndexPq {
 
   private val Coarse = "coarse"
@@ -87,70 +78,24 @@ object AnnIndexPq {
     Stats -> Seq("build_mean_err_nano" -> "double", "n" -> "long"),
     Drift -> Seq("seq" -> "long", "n" -> "long", "mean_err_nano" -> "double"))
 
-  /** Snapshot v's metadata-sized tables, read in ONE collect: the
-    * build-time (nCoarse, m, subDim, nCentroids), the live-cell
-    * manifest, the build stats and the drift log — one row per upsert
-    * since the last build (seq, n, mean_err_nano), reset by [[build]]
-    * and carried forward by every other mutation. */
+  /** Snapshot v's build-time (nCoarse, m, subDim, nCentroids) and
+    * live-cell manifest, read in ONE collect. */
   private final case class Meta(params: (Int, Int, Int, Int),
-      cells: Map[String, Long], stats: (Double, Long),
-      drift: Seq[(Long, Long, Double)])
+      cells: Map[String, Long])
 
   private def metaAt(spark: SparkSession, root: String, v: Long): Meta = {
     val t = StateCommit.metaRows(spark, root, v, metaSchema,
-      Seq(Params, Manifest, Stats, Drift))
+      Seq(Params, Manifest))
     val p = t(Params).head
-    val st = StateCommit.oneRow(t, Stats, root)
     Meta((p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3)),
-      CellTable.entries(t(Manifest)), (st.getDouble(0), st.getLong(1)),
-      t(Drift).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .sortBy(_._1))
-  }
-
-  /** Write the folded metadata snapshot and commit
-    * ([[StateCommit.commitMeta]]). `droppedGens` = this commit removed
-    * generations from the manifest. */
-  private def writeMeta(spark: SparkSession, root: String, v: Long,
-      coarse: DataFrame, codebook: DataFrame, params: (Int, Int, Int, Int),
-      cells: Map[String, Long], stats: (Double, Long),
-      drift: Seq[(Long, Long, Double)], droppedGens: Boolean): Unit = {
-    val s = spark; import s.implicits._
-    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
-      Coarse -> coarse,
-      Codebook -> codebook,
-      Params -> metaSchema.rows(spark, Params, Seq(params)),
-      Manifest -> metaSchema.rows(spark, Manifest, cells.toSeq.sortBy(_._1)),
-      Stats -> metaSchema.rows(spark, Stats, Seq(stats)),
-      Drift -> metaSchema.rows(spark, Drift, drift)), droppedGens)
-  }
-
-  /** Publish snapshot v0 + 1: the `touched` cells of snapshot v0 (`m`)
-    * rewritten as `rows` of their current rows, in one fresh generation;
-    * v0's quantizer, codebooks, params and stats carry over and `drift`
-    * extends the log. */
-  private def rewrite(spark: SparkSession, root: String, v0: Long, m: Meta,
-      touched: Set[String], drift: Seq[(Long, Long, Double)] = Seq.empty)(
-      rows: DataFrame => DataFrame): Unit = {
-    val v = v0 + 1
-    val (cells, droppedGens) = Cells.write(root, v,
-      rows(Cells.read(spark, root, m.cells.filter(e => touched(e._1)))),
-      m.cells, touched)
-    writeMeta(spark, root, v,
-      StateCommit.metaTable(spark, root, v0, metaSchema, Coarse),
-      StateCommit.metaTable(spark, root, v0, metaSchema, Codebook),
-      m.params, cells, m.stats, m.drift ++ drift, droppedGens)
+      CellTable.entries(t(Manifest)))
   }
 
   def version(spark: SparkSession, root: String): Long =
     StateCommit.committedVersion(spark, root, "IVF-PQ index")
 
-  /** (nCoarse, m, subDim, nCentroids) locked at build time. */
-  def params(spark: SparkSession, root: String): (Int, Int, Int, Int) =
-    metaAt(spark, root, version(spark, root)).params
-
   /** Mean per-vector quantization error (Σ over blocks of the chosen
-    * code's nano-L2) and vector count of an encoded assignment —
-    * the [[AnnIndex]] drift-monitor shape with err_nano as the stat. */
+    * code's nano-L2) and vector count of an encoded assignment. */
   private def meanErrOf(assign: DataFrame): (Double, Long) = {
     val r = assign.groupBy("vec_id").agg(sum("nano").as("err"))
       .agg(avg(col("err").cast("double")), count(lit(1))).head()
@@ -166,9 +111,9 @@ object AnnIndexPq {
     val v = prior.getOrElse(0L) + 1
     val parts = Similarity.ivfPqParts(embeddings, nCoarse, m, subDim,
       nCentroids, materialize = true)
-    // the code assignment has two consumers now (cell write + the
-    // drift monitor's build-time error stat) — snapshot it so the
-    // assignment join/agg doesn't run twice
+    // the code assignment has two consumers (cell write + the
+    // build-time error stat) — snapshot it so the assignment join/agg
+    // doesn't run twice
     val assign = parts.assign.localCheckpoint()
     // the code rows: PQ code per (vector, block), partitioned by the
     // vector's COARSE cell — `cell` is the partition (pruning) column,
@@ -178,15 +123,19 @@ object AnnIndexPq {
         .join(parts.residuals.select(col("vec_id"), col("ccell").as("cell")),
           Seq("vec_id")),
       Map.empty, Set.empty)
-    // build-time quantization quality: the drift monitor's reference
-    // point (and the drift log resets — a fresh build is un-drifted)
+    // build-time quantization quality, kept in the snapshot's stats;
+    // the drift log stays declared in the meta layout and is written
+    // empty
     val (meanErr, n) = meanErrOf(assign)
-    writeMeta(spark, root, v,
-      coarse = parts.coarse, codebook = parts.cents,
-      params = (nCoarse, m, subDim, nCentroids),
-      cells = cells,
-      stats = (meanErr, n),
-      drift = Seq.empty,
+    val s = spark; import s.implicits._
+    StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
+      Coarse -> parts.coarse,
+      Codebook -> parts.cents,
+      Params -> metaSchema.rows(spark, Params,
+        Seq((nCoarse, m, subDim, nCentroids))),
+      Manifest -> metaSchema.rows(spark, Manifest, cells.toSeq.sortBy(_._1)),
+      Stats -> metaSchema.rows(spark, Stats, Seq((meanErr, n))),
+      Drift -> metaSchema.rows(spark, Drift, Seq.empty[(Long, Long, Double)])),
       // a rebuild over a live index replaces the whole manifest —
       // every prior generation loses its reference
       droppedGens = prior.isDefined)
@@ -204,8 +153,8 @@ object AnnIndexPq {
     * .searchAt]] reproducibility contract for the compressed index:
     * every snapshot pins its own quantizer, codebooks, params and
     * manifest, so a retained prior version answers exactly what it
-    * answered when current (an upsert's re-encoded rows are invisible
-    * to it). Fails loudly outside the retention horizon. */
+    * answered when current (a rebuild's rows are invisible to it).
+    * Fails loudly outside the retention horizon. */
   def searchAt(spark: SparkSession, root: String, queries: DataFrame,
       v: Long, nProbes: Int = 2, k: Int = 5): DataFrame = {
     StateCommit.requireRetained(spark, root, v)
@@ -299,110 +248,5 @@ object AnnIndexPq {
       .withColumn("rn", row_number().over(w).cast("int"))
       .where(col("rn") <= k)
       .orderBy("qid", "rn")
-  }
-
-  /** Incremental add between retrains: encode `batch` against the
-    * PERSISTED quantizer and codebooks and rewrite only its touched
-    * cells (kept rows + incoming, id-keyed replace), published
-    * atomically. No retraining — drift is [[build]]'s trigger. */
-  def upsert(spark: SparkSession, root: String, rawBatch: DataFrame,
-      seqCol: String = ""): Unit = {
-    val v0 = version(spark, root)
-    val meta = metaAt(spark, root, v0)
-    // last-wins collapse: duplicate vec_ids within one CDC batch would
-    // each encode and land in the new generation (the incoming-id
-    // drop removes only prior-generation rows)
-    val batch = CdcBatch.collapse(rawBatch, "vec_id", seqCol)
-    val (_, m, subDim, _) = meta.params
-    val coarse = StateCommit.metaTable(spark, root, v0, metaSchema, Coarse)
-    val cents = StateCommit.metaTable(spark, root, v0, metaSchema, Codebook)
-    val residuals = Similarity.assignCoarse(batch, coarse)
-      .select(col("vec_id"), col("ccell"),
-        zip_with(col("embedding"), col("cce"),
-          (x, c) => x.cast("double") - c.cast("double")).as("embedding"))
-      .localCheckpoint() // touched-cell collect + code write share it
-    val encoded = Similarity
-      .pqNearest(Similarity.pqBlocks(
-        residuals.select("vec_id", "embedding"), m, subDim), cents)
-      .localCheckpoint() // drift stat + code write share it
-    // drift signal: this batch's quantization error vs build time (the
-    // err_nano ivfPqEncode emits, per incoming batch)
-    val (batchMeanErr, batchN) = meanErrOf(encoded)
-    val incoming = encoded
-      .select(col("vec_id"), col("blk"), col("cell").as("code"))
-      .join(residuals.select(col("vec_id"), col("ccell").as("cell")),
-        Seq("vec_id"))
-    val touched = residuals.select(col("ccell").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    rewrite(spark, root, v0, meta, touched,
-        Seq((v0 + 1, batchN, batchMeanErr))) {
-      CellTable.dropKeys(_, residuals, "vec_id").unionByName(incoming)
-    }
-  }
-
-  /** Delete by id — locate the victims' cells with one id join
-    * over the live code rows (ids are not the partition key, so this
-    * scans the id column — m small rows per vector), then write ONLY
-    * those cells' survivors as a fresh generation. A cell emptied by
-    * the delete drops out of the manifest; absent ids are no-ops;
-    * replays converge (the [[AnnIndex.delete]] shape over codes). */
-  def delete(spark: SparkSession, root: String, ids: DataFrame): Unit = {
-    val v0 = version(spark, root)
-    val meta = metaAt(spark, root, v0)
-    val victims = ids.select(col("vec_id"))
-    val touched = Cells.holding(spark, root, meta.cells, victims, "vec_id")
-      .collect().map(_.get(0).toString).toSet
-    if (touched.nonEmpty)
-      rewrite(spark, root, v0, meta, touched)(
-        CellTable.dropKeys(_, victims, "vec_id"))
-  }
-
-  /** Small-file compaction: rewrite every live cell as one file in a
-    * single fresh generation (content-neutral — spec checks probes are
-    * unchanged). Run when upsert/delete churn has fragmented cells. */
-  def compact(spark: SparkSession, root: String): Unit = {
-    val v0 = version(spark, root)
-    val meta = metaAt(spark, root, v0)
-    if (meta.cells.nonEmpty)
-      rewrite(spark, root, v0, meta, meta.cells.keySet)(
-        _.repartition(col("cell")).sortWithinPartitions("cell", "vec_id", "blk"))
-  }
-
-  /** Drift advisory for the incremental add path — the [[AnnIndex
-    * .driftReport]] trigger with QUANTIZATION ERROR as the monitored
-    * stat: [[upsert]] encodes against the PERSISTED quantizer and
-    * codebooks, so when the feed's distribution shifts, incoming
-    * residuals stop landing near any code and the batch's mean
-    * err_nano rises above the build-time reference — the cheap,
-    * already-computed signal that the FAISS retrain side ([[build]])
-    * is due. Returns None before the first post-build upsert.
-    *
-    * Calibrating `ratio`: the build-time mean is IN-SAMPLE (codebooks
-    * trained on those exact residuals), so a stationary feed sits a
-    * generalization gap ABOVE it — measure the gap once with a
-    * stationary holdout right after a build (~1.1–1.3x on this repo's
-    * synthetic embeddings) and set `ratio` above it; a true shift
-    * lands far outside (the spec's scaled feed exceeds 5x). `lastK`
-    * bounds the window to the most recent batches (row-weighted), so
-    * one early clean batch cannot mask a later shift. `floorNano`
-    * de-degenerates the ratio test when the build fit is essentially
-    * perfect (build mean ~0 — the codes coincide with the vectors):
-    * without a floor, `recent > 0 * ratio` would fire on ANY nonzero
-    * batch; below the floor, error differences are quantization noise
-    * (1e-3 of a unit-vector's nano-L2 scale by default). */
-  def driftReport(spark: SparkSession, root: String,
-      ratio: Double = 1.5, lastK: Int = 5,
-      floorNano: Double = 1e6): Option[PqDriftReport] = {
-    val meta = metaAt(spark, root, version(spark, root))
-    val drift = meta.drift.takeRight(lastK)
-    val buildMean = meta.stats._1
-    Option.when(drift.nonEmpty) {
-      val n = drift.map(_._2).sum
-      val recent =
-        if (n == 0L) buildMean
-        else drift.map(d => d._3 * d._2).sum / n
-      PqDriftReport(buildMean, recent, n,
-        recent > math.max(buildMean, floorNano) * ratio)
-    }
   }
 }

@@ -83,14 +83,14 @@ object IncrementalAgg {
     StateCommit.currentVersion(spark, root).getOrElse(0L)
 
   /** The non-key state columns and their merge rules, in schema order:
-    * cnt, (sum/min/max/cnt per value), (hll sketch per distinct col),
-    * (bin-count array per histogram). `cnt_<v>` is the NON-NULL count of
+    * cnt, (sum/min/max/cnt per value), (bin-count array per histogram).
+    * `cnt_<v>` is the NON-NULL count of
     * the value column — sum/min/max ignore NULLs, so re-aggregating them
     * is null-consistent for free, but avg(v) divides by the non-null
     * count and serving it as Σsum_v / Σcnt silently deflates the mean on
     * a fact with NULLs in v (round-10 advice); Σcnt_v is the exact
     * divisor. */
-  private def metricMerges(values: Seq[String], distincts: Seq[String],
+  private def metricMerges(values: Seq[String],
       hists: Seq[HistSpec]): Seq[(String, (Column, Column) => Column)] =
     ("cnt", (a: Column, b: Column) => mrg(a, b, _ + _)) +:
       (values.flatMap { v =>
@@ -101,18 +101,13 @@ object IncrementalAgg {
           (mx, (a, b) => greatest(a, b)),
           (s"cnt_$v", (a, b) => mrg(a, b, _ + _)))
       } ++
-      distincts.map { d =>
-        (s"hll_$d",
-          (a: Column, b: Column) => mrg(a, b, hll_union(_, _)))
-      } ++
       hists.map { h =>
         (h.name, (a: Column, b: Column) =>
           mrg(a, b, (x, y) => zip_with(x, y, _ + _)))
       })
 
   private def partialOf(batch: DataFrame, keys: Seq[String],
-      values: Seq[String], distincts: Seq[String],
-      hists: Seq[HistSpec]): DataFrame = {
+      values: Seq[String], hists: Seq[HistSpec]): DataFrame = {
     val aggs: Seq[Column] = (count(lit(1)).as("cnt") +:
       values.flatMap { v =>
         val (s, mn, mx) = cols(v)
@@ -121,7 +116,6 @@ object IncrementalAgg {
           max(col(v).cast("long")).as(mx),
           count(col(v)).as(s"cnt_$v"))
       }) ++
-      distincts.map(d => hll_sketch_agg(col(d)).as(s"hll_$d")) ++
       hists.map { h =>
         val bucket = expr(h.bucketSql)
         array((0 to h.nBins + 1).map(b =>
@@ -145,9 +139,9 @@ object IncrementalAgg {
   }
 
   private def merged(state: DataFrame, partial: DataFrame,
-      keys: Seq[String], values: Seq[String], distincts: Seq[String],
+      keys: Seq[String], values: Seq[String],
       hists: Seq[HistSpec]): DataFrame = {
-    val metrics = metricMerges(values, distincts, hists)
+    val metrics = metricMerges(values, hists)
     val s = state.select(keys.map(col) ++
       metrics.map { case (m, _) => col(m).as(s"a_$m") }: _*)
     val p = partial.select(keys.map(col) ++
@@ -165,15 +159,14 @@ object IncrementalAgg {
     * the batch was applied. */
   def ingest(spark: SparkSession, root: String, batch: DataFrame,
       keys: Seq[String], values: Seq[String], batchId: Long,
-      distincts: Seq[String] = Nil, hists: Seq[HistSpec] = Nil,
-      retain: Int = 2): Boolean = {
+      hists: Seq[HistSpec] = Nil, retain: Int = 2): Boolean = {
     val cur = lastBatch(spark, root)
     if (batchId <= cur) return false // replay — already folded in
-    val partial = partialOf(batch, keys, values, distincts, hists)
+    val partial = partialOf(batch, keys, values, hists)
     val next = read(spark, root) match {
       case Some(state) =>
         merged(checked(state, root, values), partial,
-          keys, values, distincts, hists)
+          keys, values, hists)
       case None => partial
     }
     next.write.mode("overwrite")
@@ -192,7 +185,7 @@ object IncrementalAgg {
     val keyCols = state.columns.toSeq.filterNot(c =>
       c == "cnt" || c.startsWith("sum_") || c.startsWith("min_") ||
         c.startsWith("max_") || c.startsWith("cnt_") ||
-        c.startsWith("hll_") || c.startsWith("hist_"))
+        c.startsWith("hist_"))
     state.select(keyCols.map(col) :+ posexplode(col(hist.name)): _*)
       .select(keyCols.map(col) :+ col("pos").cast("long").as("bin") :+
         col("col").as("n_in_bin"): _*)

@@ -61,7 +61,7 @@ object LexIndex {
   private def genDir(root: String, v: Long): String =
     s"${StateCommit.genDir(root, v)}/postings"
 
-  /** The generation's (doc_id, dl) doc table — ONE row per ingested doc
+  /** The generation's (doc_id, dl) doc table — ONE row per indexed doc
     * INCLUDING dl=0: a zero-token document is invisible to postings, and
     * round 10's delete could not locate its `n_docs` contribution (the
     * documented blind spot this table closes — delete/upsert subtract
@@ -71,8 +71,8 @@ object LexIndex {
     s"${StateCommit.genDir(root, v)}/docs"
 
   /** The batch's (postings, docs, dfs, stats, nPostings) derivation —
-    * shared by build, ingest and upsert, so the incremental paths
-    * cannot drift from the full-build one. nPostings (exact: postings
+    * shared by build and upsert, so the incremental path cannot
+    * drift from the full-build one. nPostings (exact: postings
     * are 1:1 with tf rows, and tf is already checkpointed so the count
     * is a cached-block scan) feeds [[writeSnapshot]]'s bucket sizing.
     *
@@ -110,19 +110,6 @@ object LexIndex {
   private def version(spark: SparkSession, root: String): Long =
     StateCommit.committedVersion(spark, root, "lexical index")
 
-  /** The at-least-once replay guard of [[ingestAs]], [[delete]] and
-    * [[upsert]]: the version a mutation commits as, or None when
-    * `expectedVersion` is already committed (a replay — the mutation is a
-    * no-op). `expectedVersion = -1` means "next". */
-  private def nextVersion(prev: Long, expectedVersion: Long,
-      op: String): Option[Long] =
-    if (expectedVersion >= 0 && expectedVersion <= prev) None
-    else {
-      val v = if (expectedVersion >= 0) expectedVersion else prev + 1
-      require(v == prev + 1, s"$op version $v must follow committed $prev")
-      Some(v)
-    }
-
   /** The scalar-sized snapshot metadata of version `v` in ONE driver
     * action (round 17): manifest generation list, corpus stats, stream
     * watermark and era previously each paid their own collect/head job
@@ -151,7 +138,7 @@ object LexIndex {
   }
 
   /** The index's BUILD ERA: the snapshot version of the last [[build]].
-    * Every ingest/delete/compact carries it forward unchanged; a rebuild
+    * Every upsert/delete/compact carries it forward unchanged; a rebuild
     * bumps it. A maintenance stream records the era it started against
     * and refuses to apply batches once the index has been rebuilt under
     * it — resuming an OLD checkpoint after a rebuild could otherwise
@@ -292,99 +279,6 @@ object LexIndex {
       rowHint = nPost, droppedGens = prior.nonEmpty)
   }
 
-  /** Fold a batch of NEW documents into the index WITHOUT rescanning
-    * the corpus: the batch's postings land as an immutable generation,
-    * and the df / corpus-stat tables merge algebraically (df and
-    * doc-count/token-total sums are EXACTLY additive over disjoint doc
-    * sets), so a search over the ingested index is row-for-row equal
-    * to one over a from-scratch rebuild — spec-pinned, and the
-    * lx_search_inc driver gate proves it against the full-corpus
-    * oracle. Contract: batches are append-only NEW doc_ids (the
-    * [[IncrementalAgg]] discipline), with one exception: a previously
-    * [[delete]]d id may re-ingest — its tombstone advances to this
-    * generation, so the dead old rows stay dead and the new rows are
-    * live (the delete already subtracted the old df/stats
-    * contributions, so the algebra stays exact). Re-ingesting a LIVE
-    * doc through THIS path still double-counts — updating live
-    * documents is [[upsert]]'s job (one atomic snapshot, exact
-    * algebra for every membership state). */
-  def ingest(spark: SparkSession, documents: DataFrame, root: String,
-      nBuckets: Int = 32, seqCol: String = ""): Long =
-    ingestAs(spark, documents, root, expectedVersion = -1L, nBuckets,
-      seqCol)
-
-  /** [[ingest]] with an at-least-once replay guard: the write commits
-    * as exactly `expectedVersion` and is a NO-OP (returning the
-    * current version) when that version is already committed — the
-    * [[graft.streaming.StreamingAgg]] discipline, for streams that
-    * re-deliver a failed batch under the same id. `expectedVersion
-    * = -1` means "next" (the batch-job form, no replay protection). */
-  def ingestAs(spark: SparkSession, documents: DataFrame, root: String,
-      expectedVersion: Long, nBuckets: Int = 32,
-      seqCol: String = ""): Long = {
-    val prev = version(spark, root)
-    nextVersion(prev, expectedVersion, "ingest").fold(prev) { v =>
-      val ms = metaScalarsOf(spark, root, prev)
-      ingestCore(spark, documents, root, prev, v, nBuckets, ms,
-        ms.streamBatch, seqCol)
-    }
-  }
-
-  /** Stream-maintenance ingest keyed by the STREAM'S OWN batch id, the
-    * replay guard recorded inside the snapshot itself: batch B applies
-    * iff B is greater than the last applied batch id (committed
-    * atomically with the generation it guards), and the snapshot
-    * version is simply `committed + 1`. Unlike version arithmetic over
-    * a remembered base, this stays correct when OTHER writers mutate
-    * the index between stream runs (a takedown [[delete]] or a
-    * [[compactGenerations]] bumps the version; the watermark does not
-    * move, so the next batch still applies instead of being mistaken
-    * for a replay — round-10 review finding). [[build]] resets the
-    * watermark: resuming a stream across a rebuild needs a fresh
-    * checkpoint. */
-  def ingestBatch(spark: SparkSession, documents: DataFrame, root: String,
-      batchId: Long, nBuckets: Int = 32, seqCol: String = ""): Long = {
-    val prev = version(spark, root)
-    val ms = metaScalarsOf(spark, root, prev)
-    if (ms.streamBatch.exists(batchId <= _))
-      return prev // replay of an applied batch — converged no-op
-    ingestCore(spark, documents, root, prev, prev + 1, nBuckets, ms,
-      Some(batchId), seqCol)
-  }
-
-  private def ingestCore(spark: SparkSession, rawDocuments: DataFrame,
-      root: String, prev: Long, v: Long, nBuckets: Int, ms: MetaScalars,
-      streamBatch: Option[Long], seqCol: String = ""): Long = {
-    // last-wins collapse, the upsert path's discipline (round-11
-    // review): an at-least-once source can re-deliver a NEW doc twice
-    // inside one trigger window, and batchParts over both copies would
-    // double every token count, n_docs and sum_dl — silent, permanent
-    // index corruption no later compaction corrects. Snapped: the
-    // token pass and the tombstone id scan both read it
-    val documents = Stage.snap(
-      CdcBatch.collapse(rawDocuments, "doc_id", seqCol),
-      materialize = true)
-    val (postings, bDocs, bDfs, bStats, nPost) = batchParts(documents)
-    val mergedDfs = addDfs(
-      StateCommit.metaTable(spark, root, prev, metaSchema, Dfs), bDfs)
-    // batch stats in one driver action; the committed side came with the
-    // folded MetaScalars read (round-17: was a second crossJoined scan)
-    val b = bStats.head()
-    val mergedStats = statsRow(spark, ms.nDocs + b.getLong(0),
-      ms.sumDl + b.getLong(1), ms.nDl + b.getLong(2))
-    val gens = ms.gens :+ v
-    // tombstone rows for ids this batch RE-ingests advance to this
-    // generation (resurrecting the doc with its new content); other
-    // rows carry forward — the table stays churn-bounded because only
-    // deleted-and-not-yet-reingested ids live in it
-    val prior = StateCommit.metaTable(spark, root, prev, metaSchema, Tombstones)
-    val batchIds = documents.select(col(Key).cast("long")).distinct()
-    val tombs = GenerationalTable.mergeTombstones(prior,
-      prior.join(batchIds, Seq(Key), "left_semi").select(Key), Key, v)
-    writeSnapshot(spark, root, v, postings, bDocs, mergedDfs, mergedStats,
-      gens, nBuckets, tombs, streamBatch, ms.era, nPost)
-  }
-
   /** One stats row of the folded meta. */
   private def statsRow(spark: SparkSession, nDocs: Long, sumDl: Long,
       nDl: Long): DataFrame = {
@@ -457,22 +351,13 @@ object LexIndex {
     * (round-10 advice). Zero-token docs subtract exactly too: the
     * per-generation DOC table (not the postings) is the membership
     * authority, closing round 10's documented `n_docs` blind spot.
-    * `expectedVersion` is the [[ingestAs]] replay guard (-1 = next, no
-    * protection).
     *
     * Scale posture: one tombstone-filtered scan of the posting
     * generations (the victim semi-join prunes it to the dead rows) plus
     * one of the narrow doc tables, one broadcast-sized df merge,
     * metadata writes — the corpus is never rewritten. */
-  def delete(spark: SparkSession, root: String, ids: DataFrame,
-      expectedVersion: Long = -1L): Long = {
+  def delete(spark: SparkSession, root: String, ids: DataFrame): Long = {
     val prev = version(spark, root)
-    nextVersion(prev, expectedVersion, "delete")
-      .fold(prev)(deleteCore(spark, root, ids, prev, _))
-  }
-
-  private def deleteCore(spark: SparkSession, root: String, ids: DataFrame,
-      prev: Long, v: Long): Long = {
     val victims = ids.select(col("doc_id").cast("long")).distinct()
     val ms = metaScalarsOf(spark, root, prev)
     val dead = deadPart(spark, root, prev, ms.gens, victims)
@@ -487,45 +372,44 @@ object LexIndex {
     val tombs = GenerationalTable.mergeTombstones(
       StateCommit.metaTable(spark, root, prev, metaSchema, Tombstones),
       dead.docs.select(Key).distinct(), Key, GenerationalTable.DeleteAll)
-    writeMetaTables(spark, root, v,
+    writeMetaTables(spark, root, prev + 1,
       dead.from(StateCommit.metaTable(spark, root, prev, metaSchema, Dfs)),
       mergedStats, ms.gens, tombs, ms.streamBatch, ms.era)
   }
 
-  /** Atomic live-document UPDATE — tombstone-advance + ingest in ONE
-    * snapshot: each batch doc's pre-existing rows (if any) die and its
-    * new content lands as generation v, with df/corpus stats corrected
-    * by exact subtract-old/add-new algebra. This is the routine
-    * curation event [[ingest]] documents as its own hazard
-    * ("re-ingesting a LIVE doc still double-counts"): callers no longer
-    * sequence delete→ingest across two snapshots — and cannot
-    * double-count by forgetting the delete. Handles every membership
-    * state uniformly: live ids update, deleted ids resurrect, new ids
-    * simply ingest. A post-upsert [[search]] is row-for-row equal to a
-    * from-scratch rebuild with the updated corpus (spec-pinned; the
-    * lx_search_upd driver gate proves it against the updated-corpus
-    * oracle).
+  /** The index's one write of new or changed documents, published
+    * as ONE snapshot: each batch doc's pre-existing rows (if any) die
+    * and its new content lands as generation v, with df/corpus stats
+    * corrected by exact subtract-old/add-new algebra (df and the corpus
+    * totals are additive over disjoint doc sets). Handles every
+    * membership state uniformly: live ids update, deleted ids
+    * resurrect, new ids simply append. A post-upsert [[search]] is
+    * row-for-row equal to a from-scratch rebuild with the updated
+    * corpus (spec-pinned; the lx_search_inc and lx_search_upd driver
+    * gates prove it against the full- and updated-corpus oracles).
+    * Re-running an upsert of the same batch converges: its own rows die
+    * and identical ones land, so the search answer does not move.
     *
-    * Scale posture: [[delete]]'s pruned dead-row scan + [[ingest]]'s
-    * batch-only token pass; the corpus is never rescanned or
-    * rewritten. */
+    * Scale posture: [[delete]]'s pruned dead-row scan plus a batch-only
+    * token pass; the corpus is never rescanned or rewritten. */
   def upsert(spark: SparkSession, documents: DataFrame, root: String,
-      nBuckets: Int = 32, expectedVersion: Long = -1L,
-      seqCol: String = ""): Long = {
+      nBuckets: Int = 32, seqCol: String = ""): Long = {
     val prev = version(spark, root)
-    nextVersion(prev, expectedVersion, "upsert").fold(prev) { v =>
-      val ms = metaScalarsOf(spark, root, prev)
-      upsertCore(spark, documents, root, prev, v, nBuckets, ms,
-        ms.streamBatch, seqCol)
-    }
+    val ms = metaScalarsOf(spark, root, prev)
+    upsertCore(spark, documents, root, prev, prev + 1, nBuckets, ms,
+      ms.streamBatch, seqCol)
   }
 
-  /** Stream-maintenance UPSERT keyed by the stream's own batch id — the
-    * [[ingestBatch]] watermark discipline applied to the live-document
-    * UPDATE path: a CDC feed of changed documents maintains the index
-    * through at-least-once delivery, with re-delivered batches refused
-    * by the in-snapshot watermark (committed atomically with the
-    * generation it guards). */
+  /** Stream-maintenance [[upsert]] keyed by the stream's own batch id:
+    * batch B applies iff B is greater than the last applied batch id,
+    * which is recorded inside the snapshot and committed atomically with
+    * the generation it guards. A re-delivered batch is a no-op, so a
+    * stale re-delivery cannot overwrite a later edit of the same doc.
+    * Because the guard is a watermark rather than version arithmetic,
+    * it stays correct when other writers ([[delete]],
+    * [[compactGenerations]]) bump the version between stream runs.
+    * [[build]] resets the watermark: resuming a stream across a rebuild
+    * needs a fresh checkpoint. */
   def upsertBatch(spark: SparkSession, documents: DataFrame, root: String,
       batchId: Long, nBuckets: Int = 32, seqCol: String = ""): Long = {
     val prev = version(spark, root)
@@ -540,7 +424,7 @@ object LexIndex {
       root: String, prev: Long, v: Long, nBuckets: Int, ms: MetaScalars,
       streamBatch: Option[Long], seqCol: String = ""): Long = {
     // last-wins collapse: a CDC batch may carry several versions of one
-    // doc — the delete+ingest algebra below assumes one row per id.
+    // doc — the delete+append algebra below assumes one row per id.
     // Snapped: batchIds, the token pass and the docs table all read it
     val documents = Stage.snap(
       CdcBatch.collapse(rawDocuments, "doc_id", seqCol),
@@ -580,7 +464,7 @@ object LexIndex {
   }
 
   /** Fold every live generation's postings into ONE new generation —
-    * the maintenance pass a long-running ingest stream needs (each
+    * the maintenance pass a long-running upsert stream needs (each
     * micro-batch adds a generation; a query unions them all, and
     * per-generation file overhead grows without bound). Pure layout:
     * the postings multiset, df table and corpus stats are unchanged,
@@ -633,7 +517,7 @@ object LexIndex {
     val dfs = StateCommit.metaTable(spark, root, v, metaSchema, Dfs)
       .where(col("token").isin(terms: _*))
     // live rows only (tombstone-filtered; the manifest's generation
-    // list is metadata-sized — one entry per ingest since the last
+    // list is metadata-sized — one entry per upsert since the last
     // rebuild). Directory-level pruning first (only the terms' tpfx
     // partitions are opened), then the token IN pushes through the
     // tombstone join to each opened file (both plan-gated).

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
@@ -27,7 +25,13 @@ import graft.operators.Dedup
   * mid-batch leaves the prior state intact and the replay re-applies
   * cleanly; verdicts write to a per-batch-id directory with overwrite,
   * so a replayed partial write converges instead of duplicating (the
-  * [[StreamingMonitor]] / [[StreamingSync]] design).
+  * [[StreamingMonitor]] design).
+  *
+  * Why this object stays beside [[Dedup]]: [[applyBatch]] is a state
+  * fold, not a forward to one operator call. It owns the key-set state
+  * and the batch-id guard that makes an at-least-once redelivery a
+  * no-op. A stream passes `applyBatch(statePath, _, _)` to
+  * [[AvailableNow.foreachBatch]].
   *
   * Scale posture: state is the distinct key sets — bounded by corpus
   * CONTENT diversity, not ingest volume (a re-crawl adds nothing); each
@@ -82,12 +86,4 @@ object StreamingCuration {
   /** All recorded verdicts (doc_id, status, batch_id). */
   def verdicts(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(verdictsPath(statePath))
-
-  /** Start an AvailableNow ingestion pass of `documents` (doc_id + text
-    * rows) through the filter at `statePath`. */
-  def start(documents: DataFrame, statePath: String,
-      checkpoint: String): StreamingQuery =
-    AvailableNow.foreachBatch(documents, checkpoint) { (batch, batchId) =>
-      applyBatch(statePath, batch, batchId)
-    }
 }

@@ -30,7 +30,14 @@ import graft.operators.{CdcBatch, DsirModel}
   *
   * Scale posture: per batch, one hashed-gram pass over the batch plus a
   * broadcast join against the ≤buckets-row model — nothing corpus-sized
-  * moves, no state grows beyond the applied-batch pointer. */
+  * moves, no state grows beyond the applied-batch pointer.
+  *
+  * Why this is a sink and not a bare `foreachBatch` over
+  * [[DsirModel.scoreAt]]: [[start]] pins the model version in the
+  * checkpoint and pairs the checkpoint with `statePath` through a sweep
+  * id, and it refuses a mismatched pair or an expired pin before any
+  * batch applies. Both refusals need the checkpoint, which no operator
+  * sees. */
 object StreamingDsir {
 
   private def scoresPath(p: String) = s"$p/scores"

@@ -1,37 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.LexIndex
 
 /** Streaming maintenance of the [[LexIndex]] inverted index: each
-  * micro-batch of NEW documents lands as one immutable generation with
-  * algebraically-merged df/corpus stats, so the searchable index stays
-  * current without ever rescanning the corpus.
+  * micro-batch of new or changed documents goes through
+  * [[LexIndex.upsertBatch]], which lands it as one immutable generation
+  * with algebraically-merged df/corpus stats and records the stream's
+  * batch id inside the snapshot as its replay watermark.
   *
-  * Exactly-once state from at-least-once delivery: the stream's batch
-  * id is the replay guard, and it is recorded INSIDE the index
-  * snapshot ([[LexIndex.ingestBatch]]) — committed atomically with the
-  * generation it guards, so a re-delivered batch is a converged no-op.
-  * Because the guard is the batch WATERMARK rather than version
-  * arithmetic over a remembered base, it stays correct when other
-  * writers mutate the index between stream runs: a takedown
-  * [[LexIndex.delete]] or a [[LexIndex.compactGenerations]] bumps the
-  * committed version, and the next resumed batch still applies instead
-  * of being mistaken for a replay (the round-10 review finding that
-  * retired the checkpoint-anchored base of the first design — and with
-  * it this file's hand-rolled copy of the StateCommit pointer I/O).
-  *
-  * [[LexIndex.build]] resets the watermark: resuming a stream across a
-  * rebuild requires a fresh checkpoint (a new stream era). That rule is
-  * ENFORCED, not just documented (round-10 advice): on first start the
-  * checkpoint records the index's [[LexIndex.buildEra]] in a marker
-  * file, and a resume whose recorded era no longer matches the index
-  * fails loudly BEFORE any batch applies — an old checkpoint resumed
-  * after a rebuild could otherwise re-deliver a crashed in-flight batch
-  * whose documents the rebuild corpus already contains (the watermark
-  * alone cannot catch it, because build resets the watermark to None).
+  * Why this is a sink and not a bare `foreachBatch` over the operator:
+  * [[LexIndex.build]] resets the watermark, so an old checkpoint
+  * resumed after a rebuild could re-deliver a crashed in-flight batch
+  * whose documents the rebuild corpus already contains, and the
+  * watermark alone cannot catch it. [[start]] enforces the rule: on
+  * first start the checkpoint records the index's [[LexIndex.buildEra]]
+  * in a marker file, and a resume whose recorded era no longer matches
+  * the index fails loudly BEFORE any batch applies. That handshake
+  * needs the checkpoint, which no operator sees.
   */
 object StreamingLex {
 
@@ -72,21 +60,17 @@ object StreamingLex {
     }
   }
 
-  /** Start an AvailableNow maintenance pass of `docs` (batches of new
-    * documents with `doc_id`/`text`) into the index at `root`, which
-    * must already be built. `seqCol` names the feed's CDC ordering
+  /** Start an AvailableNow maintenance pass of `docs` (batches of new or
+    * changed documents with `doc_id`/`text`) into the index at `root`,
+    * which must already be built. `seqCol` names the feed's CDC ordering
     * column so a doc re-delivered within one trigger window collapses
     * to its recent version. */
   def start(docs: DataFrame, root: String,
       checkpoint: String, seqCol: String = ""): StreamingQuery = {
     guardEra(docs, root, checkpoint)
     AvailableNow.foreachBatch(docs, checkpoint) { (batch, batchId) =>
-      LexIndex.ingestBatch(batch.sparkSession, batch, root, batchId,
+      LexIndex.upsertBatch(batch.sparkSession, batch, root, batchId,
         seqCol = seqCol)
     }
   }
-
-  /** Read-side convenience: BM25 top-k over the maintained index. */
-  def search(spark: SparkSession, root: String, terms: Seq[String],
-      k: Int = 10): DataFrame = LexIndex.search(spark, root, terms, k)
 }

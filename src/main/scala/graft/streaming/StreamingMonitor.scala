@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Temporal
 
@@ -20,10 +19,13 @@ import graft.operators.Temporal
   * state commit must be atomic WITH its batch-id record — batch B's
   * hourly table is written to a fresh [[StateCommit]] snapshot dir and
   * published by one pointer swap, so a crash anywhere mid-batch leaves
-  * the previous state intact and the replay re-applies cleanly (the
-  * same idempotence-over-transport design as [[StreamingSync]]: effects
+  * the previous state intact and the replay re-applies cleanly: effects
   * converge because the SINK dedupes, not because the transport
-  * promises exactly-once).
+  * promises exactly-once.
+  *
+  * Why this object stays beside [[Temporal]]: [[applyBatch]] is a state
+  * fold with a batch-id guard, which no operator call provides. A stream
+  * passes `applyBatch(statePath, _, _)` to [[AvailableNow.foreachBatch]].
   *
   * Scale posture: the ONLY state is the hourly table — bounded by
   * types × hours, independent of event volume; each batch's fold is one
@@ -62,11 +64,4 @@ object StreamingMonitor {
   def scores(spark: SparkSession, statePath: String,
       trailing: Int = 24): DataFrame =
     Temporal.rateAnomalyFromHourly(hourlyState(spark, statePath), trailing)
-
-  /** Start an AvailableNow monitoring pass of `events` (raw event rows
-    * with ts + event_type) into the state at `statePath`. */
-  def start(events: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
-    AvailableNow.foreachBatch(events, checkpoint) { (batch, batchId) =>
-      applyBatch(statePath, batch, batchId)
-    }
 }

@@ -10,10 +10,9 @@ import graft.streaming.StateCommit
 
 /** Persisted IVF-PQ index: row-for-row parity with the in-query
   * operator, file-level pruning (unprobed cells are never read — not
-  * merely filtered), id-keyed upsert, atomic publication.
+  * merely filtered), atomic publication, time travel across a rebuild.
   */
 class AnnIndexPqSpec extends SparkSpec {
-  import spark.implicits._
 
   private lazy val emb = Catalog.embeddings(spark, sfDir)
 
@@ -22,73 +21,6 @@ class AnnIndexPqSpec extends SparkSpec {
 
   private def freshRoot() =
     Files.createTempDirectory("graft_pqidx_spec_").toString
-
-  test("drift: quiet under a stationary feed, fires under a shifted distribution, resets on rebuild") {
-    val root = freshRoot()
-    AnnIndexPq.build(emb.where(col("vec_id") < 400), root)
-    assert(AnnIndexPq.driftReport(spark, root).isEmpty,
-      "a fresh build has no upserts to judge — report must be None")
-
-    // stationary: held-out vectors from the SAME distribution — the
-    // generalization gap stays under the ratio
-    AnnIndexPq.upsert(spark, root,
-      emb.where(col("vec_id") >= 400 && col("vec_id") < 450))
-    val quiet = AnnIndexPq.driftReport(spark, root)
-    assert(quiet.isDefined && !quiet.get.drifted,
-      s"stationary upsert flagged as drift: $quiet")
-    assert(quiet.get.nRecent == 50, quiet.toString)
-
-    // shifted: scaled + offset embeddings land far from every persisted
-    // code — quantization error explodes past any reasonable ratio
-    val shifted = emb.where(col("vec_id") >= 450 && col("vec_id") < 500)
-      .select((col("vec_id") + 10000).as("vec_id"),
-        transform(col("embedding"),
-          x => (x.cast("double") * lit(4.0) + lit(7.0)).cast("float"))
-          .as("embedding"))
-    AnnIndexPq.upsert(spark, root, shifted)
-    val loud = AnnIndexPq.driftReport(spark, root)
-    assert(loud.isDefined && loud.get.drifted,
-      s"shifted upsert not flagged: $loud")
-    assert(loud.get.recentMeanErrNano > loud.get.buildMeanErrNano,
-      loud.toString)
-
-    // retrain resets the monitor
-    AnnIndexPq.build(emb.where(col("vec_id") < 500), root)
-    assert(AnnIndexPq.driftReport(spark, root).isEmpty,
-      "rebuild must reset the drift log")
-  }
-
-  test("a CDC batch with TWO versions of one vec_id encodes ONCE — the seq winner") {
-    // round-11 review: duplicate ids within one upsert batch each
-    // encoded into the new generation (the anti-join removes only
-    // prior-generation rows), so the id answered twice per query
-    val root = freshRoot()
-    AnnIndexPq.build(emb.where(col("vec_id") < 400), root)
-    val v1 = emb.where(col("vec_id") === 400)
-      .select(lit(9000L).as("vec_id"), lit(1L).as("seq"), col("embedding"))
-    val v2 = emb.where(col("vec_id") === 401)
-      .select(lit(9000L).as("vec_id"), lit(2L).as("seq"), col("embedding"))
-    AnnIndexPq.upsert(spark, root, v1.unionByName(v2), seqCol = "seq")
-    // reference: the same upsert with only the winning version
-    val ref = freshRoot()
-    AnnIndexPq.build(emb.where(col("vec_id") < 400), ref)
-    AnnIndexPq.upsert(spark, ref,
-      emb.where(col("vec_id") === 401)
-        .select(lit(9000L).as("vec_id"), col("embedding")))
-    // probe with the WINNER's embedding under a foreign qid (search
-    // drops qid==cid self-matches): pre-fix, both versions' code rows
-    // joined the LUT and the groupBy SUMMED them — id 9000's ADC
-    // distance doubled and its rank sank
-    val q = emb.where(col("vec_id") === 401)
-      .select(lit(8999L).as("qid"), col("embedding").as("qe"))
-    def hits(r: String) = AnnIndexPq.search(spark, r, q, nProbes = 8, k = 10)
-      .collect().map(_.toString).toSeq
-    val got = hits(root)
-    assert(got == hits(ref),
-      "dup-id batch diverged from the last-version-only upsert")
-    assert(got.exists(_.contains("9000")),
-      "fixture too weak: the upserted id never surfaced in the top-k")
-  }
 
   test("search equals the in-query ivfPqTopK row-for-row") {
     val root = freshRoot()
@@ -134,77 +66,6 @@ class AnnIndexPqSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
     assert(after == before,
       s"search touched the deleted unprobed cell $victim (probed $probedCell, $probedCids rows)")
-  }
-
-  test("upsert: new vectors become searchable; re-upsert replaces, never duplicates") {
-    val root = freshRoot()
-    val part1 = emb.where(col("vec_id") % 5 =!= 0 || col("vec_id") < 16)
-    val part2 = emb.where(col("vec_id") % 5 === 0 && col("vec_id") >= 16)
-    AnnIndexPq.build(part1, root)
-    AnnIndexPq.upsert(spark, root, part2)
-    val (_, m, _, _) = AnnIndexPq.params(spark, root)
-    // every vector posts exactly m code rows, once
-    val counts = {
-      val v = AnnIndexPq.version(spark, root)
-      val entries = StateCommit.metaTable(spark, root, v,
-        AnnIndexPq.metaSchema, "manifest")
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      entries.groupBy(_._2).map { case (g, es) =>
-        spark.read.option("basePath", s"$root/gen-$g")
-          .parquet(es.map(e => s"$root/gen-$g/cell=${e._1}"): _*)
-      }.reduce(_.unionByName(_))
-    }
-    val bad = counts.groupBy("vec_id").count().where(col("count") =!= m).count()
-    assert(bad == 0, s"$bad vectors with != $m code rows after upsert")
-    // an upserted vector is findable: query its own embedding
-    val probe = part2.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val pid = probe.select("qid").as[Long].head()
-    val hits = AnnIndexPq.search(spark, root, probe, nProbes = 2, k = 5)
-      .select("cid").as[Long].collect().toSet
-    assert(!hits.contains(pid), "self-match leaked through the exclusion")
-    // re-upsert the same batch: still exactly m rows per vector
-    AnnIndexPq.upsert(spark, root, part2)
-    val bad2 = {
-      val v = AnnIndexPq.version(spark, root)
-      val entries = StateCommit.metaTable(spark, root, v,
-        AnnIndexPq.metaSchema, "manifest")
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      entries.groupBy(_._2).map { case (g, es) =>
-        spark.read.option("basePath", s"$root/gen-$g")
-          .parquet(es.map(e => s"$root/gen-$g/cell=${e._1}"): _*)
-      }.reduce(_.unionByName(_))
-        .groupBy("vec_id").count().where(col("count") =!= m).count()
-    }
-    assert(bad2 == 0, "re-upsert duplicated code rows")
-  }
-
-  test("delete removes victims from search; compact preserves probes on one generation") {
-    val root = freshRoot()
-    AnnIndexPq.build(emb, root)
-    val q = queries(4)
-    val hitsBefore = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
-      .select("cid").as[Long].collect().toSet
-    assert(hitsBefore.nonEmpty, "no hits before delete — test is vacuous")
-    val victim = hitsBefore.head
-    AnnIndexPq.delete(spark, root, Seq(victim).toDF("vec_id"))
-    val hitsAfter = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
-      .select("cid").as[Long].collect().toSet
-    assert(!hitsAfter.contains(victim), s"deleted vector $victim still surfaced")
-    // absent-id delete is a no-op
-    val vBefore = AnnIndexPq.version(spark, root)
-    AnnIndexPq.delete(spark, root, Seq(999999L).toDF("vec_id"))
-    assert(AnnIndexPq.version(spark, root) == vBefore, "absent-id delete bumped the version")
-    val resBefore = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
-      .collect().map(_.toString).toSeq
-    AnnIndexPq.compact(spark, root)
-    val resAfter = AnnIndexPq.search(spark, root, q, nProbes = 2, k = 5)
-      .collect().map(_.toString).toSeq
-    assert(resAfter == resBefore, "compaction changed probe results")
-    val v = AnnIndexPq.version(spark, root)
-    val gens = StateCommit.metaTable(spark, root, v, AnnIndexPq.metaSchema, "manifest")
-      .collect().map(_.getLong(1)).toSet
-    assert(gens == Set(v), s"compaction left multiple live generations: $gens")
   }
 
   test("publication is atomic: an unreferenced generation is invisible") {
@@ -266,20 +127,20 @@ class AnnIndexPqSpec extends SparkSpec {
     assert(rr >= ra, s"re-rank lowered recall: adc=$ra rerank=$rr")
   }
 
-  test("searchAt: a retained pre-upsert snapshot answers exactly what it answered when current") {
+  test("searchAt: a retained pre-rebuild snapshot answers exactly what it answered when current") {
     val root = freshRoot()
     AnnIndexPq.build(emb.where(col("vec_id") % 2 === 0), root)
     val v1 = AnnIndexPq.version(spark, root)
     val q = queries(4)
     val before = AnnIndexPq.search(spark, root, q, nProbes = 8, k = 10)
       .collect().map(_.toString).toSeq
-    AnnIndexPq.upsert(spark, root, emb.where(col("vec_id") % 2 =!= 0))
+    AnnIndexPq.build(emb, root)
     val now = AnnIndexPq.search(spark, root, q, nProbes = 8, k = 10)
       .collect().map(_.toString).toSeq
-    assert(now != before, "fixture too weak: upsert did not move the ranking")
+    assert(now != before, "fixture too weak: the rebuild did not move the ranking")
     val atV1 = AnnIndexPq.searchAt(spark, root, q, v1, nProbes = 8, k = 10)
       .collect().map(_.toString).toSeq
-    assert(atV1 == before, "pre-upsert snapshot drifted")
+    assert(atV1 == before, "pre-rebuild snapshot drifted")
     intercept[IllegalArgumentException] {
       AnnIndexPq.searchAt(spark, root, q, v1 + 100, nProbes = 8, k = 10)
     }

@@ -168,11 +168,12 @@ class AnnIndexSpec extends SparkSpec {
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
     val vectors = input.toDF()
       .select(col("_1").as("vec_id"), col("_2").cast("array<float>").as("embedding"))
-    // two uneven micro-batches
+    // two uneven micro-batches, each drained through the operator's
+    // own upsert
     input.addData(rows.take(5).toIndexedSeq)
-    graft.streaming.StreamingIndex.start(vectors, dir, ckpt).awaitTermination()
+    drain(vectors, ckpt)(AnnIndex.upsert(spark, dir, _))
     input.addData(rows.drop(5).toIndexedSeq)
-    graft.streaming.StreamingIndex.start(vectors, dir, ckpt).awaitTermination()
+    drain(vectors, ckpt)(AnnIndex.upsert(spark, dir, _))
     // converged contents = one-shot batch upsert over a fresh copy
     val dir2 = Files.createTempDirectory("graft_ann_batch").toString
     AnnIndex.build(emb.where(col("vec_id") < 40), dir2, nCells = 8)

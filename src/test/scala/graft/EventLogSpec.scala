@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import graft.cli.{Cli, Main}
 import graft.events.EventLog
 
 /** K8 event-log semantics: append is date-partitioned, retention drops
@@ -44,5 +45,32 @@ class EventLogSpec extends SparkSpec {
     log.exportCsv(out, cap = 3)
     val rows = spark.read.option("header", "true").csv(out)
     assert(rows.count() == 3)
+  }
+
+  test("cli status lists the later of two sync passes first, in its real day partition") {
+    val work = Files.createTempDirectory("graft-cli-status").toString
+    // one verb run in this JVM on the shared session; its stdout
+    def run(argv: String*): String = {
+      val (verb, a) = Cli.parse(Main.verbs, argv).toOption.get
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(verb.body(a, () => spark))
+      out.toString
+    }
+    val day = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd")
+      .withZone(java.time.ZoneOffset.UTC)
+    val from = day.format(java.time.Instant.now())
+    run("sync", "--data", sfDir, "--work", work, "--limit", "3")
+    run("sync", "--data", sfDir, "--work", work, "--limit", "6")
+    val to = day.format(java.time.Instant.now())
+    // the second pass skips the first pass's three unchanged products
+    val events = run("status", "--work", work).linesIterator
+      .filter(_.startsWith("  sync success")).toSeq
+    assert(events.length == 2, events.toString)
+    assert(!events.head.endsWith("skipped=0") && events(1).endsWith("skipped=0"),
+      s"the earlier pass is listed first: $events")
+    val partitions = new java.io.File(s"$work/events").listFiles()
+      .map(_.getName).filter(_.startsWith("log_date=")).toSet
+    assert(partitions.nonEmpty &&
+      partitions.subsetOf(Set(s"log_date=$from", s"log_date=$to")), partitions)
   }
 }

@@ -133,34 +133,6 @@ class IncrementalAggSpec extends SparkSpec {
     assert(got.size == 5 * 12, s"expected 5 priorities x 12 bins, got ${got.size}")
   }
 
-  test("maintained HLL distinct estimate: exact in sparse mode, merge-lossless") {
-    val root = freshRoot(); val oneShot = freshRoot()
-    val keyed = Catalog.orders(spark, sfDir)
-      .select(col("o_orderpriority"), col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("total_cents"),
-        col("o_orderkey"))
-    val bs = (0 until 3).map(b => keyed.where(col("o_orderkey") % 3 === b))
-    bs.zipWithIndex.foreach { case (b, i) =>
-      IncrementalAgg.ingest(spark, root, b.drop("o_orderkey"), keys,
-        Seq.empty, i + 1L, distincts = Seq("o_custkey"))
-    }
-    IncrementalAgg.ingest(spark, oneShot, keyed.drop("o_orderkey"), keys,
-      Seq.empty, 1L, distincts = Seq("o_custkey"))
-    def est(r: String) = IncrementalAgg.read(spark, r).get
-      .select(col("o_orderpriority"), hll_sketch_estimate(col("hll_o_custkey")))
-      .as[(String, Long)].collect().toMap
-    val inc = est(root); val one = est(oneShot)
-    assert(inc == one, s"union of batch sketches != one-shot sketch: $inc vs $one")
-    val exact = keyed.groupBy("o_orderpriority")
-      .agg(countDistinct("o_custkey").as("d"))
-      .as[(String, Long)].collect().toMap
-    exact.foreach { case (k, d) =>
-      val e = inc(k)
-      assert(math.abs(e - d) <= math.max(1L, (d * 0.05).toLong),
-        s"estimate $e too far from exact $d for $k")
-    }
-  }
-
   test("retention: default horizon keeps two snapshots; GC'd versions fail loudly") {
     val root = freshRoot()
     batches.zipWithIndex.foreach { case (b, i) =>

@@ -19,7 +19,8 @@ import graft.streaming.StateCommit
   * before its swap is simulated by writing `CURRENT` back to the
   * previous version: the public read must answer as before the
   * mutation, and re-running the mutation must answer as an
-  * uninterrupted run did.
+  * uninterrupted run did. The build-and-search-only AnnIndexPq is
+  * mutated by a rebuild over a larger corpus.
   */
 class IndexKillPointSpec extends SparkSpec {
 
@@ -30,10 +31,14 @@ class IndexKillPointSpec extends SparkSpec {
   private lazy val docs = Catalog.documents(spark, sfDir)
   private lazy val emb = Catalog.embeddings(spark, sfDir)
 
-  /** One index family: `build` a fresh root, mutate it by `upsert` or
-    * `delete`, and `read` it through its public query as sorted rows. */
+  /** One index family: `build` a fresh root, mutate it by each of its
+    * named `mutations`, and `read` it through its public query as sorted
+    * rows. */
   private case class Family(name: String, build: String => Unit,
-      upsert: String => Unit, delete: String => Unit, read: String => Seq[String])
+      mutations: Seq[(String, String => Unit)], read: String => Seq[String])
+
+  private def upsertDelete(upsert: String => Unit, delete: String => Unit) =
+    Seq("upsert" -> upsert, "delete" -> delete)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -43,29 +48,32 @@ class IndexKillPointSpec extends SparkSpec {
   private def dedupProbe = docs.where(col("doc_id") % 10 >= 8)
   private val dedup = Family("DedupIndex",
     root => DedupIndex.build(docs.where(col("doc_id") % 10 < 8), root),
-    root => DedupIndex.upsert(spark, root,
-      dedupProbe.withColumn("doc_id", col("doc_id") + 1000000L)),
-    root => DedupIndex.delete(spark, root,
-      docs.where(col("doc_id") % 10 < 4).select("doc_id")),
+    upsertDelete(
+      root => DedupIndex.upsert(spark, root,
+        dedupProbe.withColumn("doc_id", col("doc_id") + 1000000L)),
+      root => DedupIndex.delete(spark, root,
+        docs.where(col("doc_id") % 10 < 4).select("doc_id"))),
     root => rows(DedupIndex.classifyBatch(spark, root, dedupProbe)))
 
   private def incoming = emb.where(col("vec_id") % 10 >= 8)
   private val semDedup = Family("SemDedupIndex",
     root => SemDedupIndex.build(emb.where(col("vec_id") % 10 < 8), root),
-    root => SemDedupIndex.upsert(spark, root,
-      incoming.withColumn("vec_id", col("vec_id") + 1000000L)),
-    root => SemDedupIndex.delete(spark, root,
-      emb.where(col("vec_id") % 10 < 4).select("vec_id")),
+    upsertDelete(
+      root => SemDedupIndex.upsert(spark, root,
+        incoming.withColumn("vec_id", col("vec_id") + 1000000L)),
+      root => SemDedupIndex.delete(spark, root,
+        emb.where(col("vec_id") % 10 < 4).select("vec_id"))),
     root => rows(SemDedupIndex.probe(spark, root, incoming, threshold = 0.35)))
 
   private val lex = Family("LexIndex",
     root => LexIndex.build(spark, docs, root),
-    root => LexIndex.upsertBatch(spark,
-      docs.where(col("doc_id") % 5 === 0)
-        .withColumn("text", lit("vector merge spark vector")),
-      root, batchId = 1L),
-    root => LexIndex.delete(spark, root,
-      docs.where(col("doc_id") % 4 === 0).select("doc_id")),
+    upsertDelete(
+      root => LexIndex.upsertBatch(spark,
+        docs.where(col("doc_id") % 5 === 0)
+          .withColumn("text", lit("vector merge spark vector")),
+        root, batchId = 1L),
+      root => LexIndex.delete(spark, root,
+        docs.where(col("doc_id") % 4 === 0).select("doc_id"))),
     root => rows(LexIndex.searchMany(spark, root,
       Seq(1L -> Seq("vector", "merge"), 2L -> Seq("spark", "draft")), k = 10)))
 
@@ -77,18 +85,17 @@ class IndexKillPointSpec extends SparkSpec {
   private def annDelete = emb.where(col("vec_id") % 10 < 4).select("vec_id")
   private val ann = Family("AnnIndex",
     root => AnnIndex.build(annBuild, root, nCells = 8),
-    root => AnnIndex.upsert(spark, root, incoming),
-    root => AnnIndex.delete(spark, root, annDelete),
+    upsertDelete(
+      root => AnnIndex.upsert(spark, root, incoming),
+      root => AnnIndex.delete(spark, root, annDelete)),
     root => rows(AnnIndex.search(spark, root, annQueries, nProbes = 2, k = 5)))
 
   private val annPq = Family("AnnIndexPq",
     root => AnnIndexPq.build(annBuild, root),
-    root => AnnIndexPq.upsert(spark, root, incoming),
-    root => AnnIndexPq.delete(spark, root, annDelete),
+    Seq("build" -> ((root: String) => AnnIndexPq.build(emb, root))),
     root => rows(AnnIndexPq.search(spark, root, annQueries, nProbes = 2, k = 5)))
 
-  for (f <- Seq(dedup, semDedup, lex, ann, annPq);
-       (op, mutate) <- Seq("upsert" -> f.upsert, "delete" -> f.delete)) {
+  for (f <- Seq(dedup, semDedup, lex, ann, annPq); (op, mutate) <- f.mutations) {
     test(s"${f.name}: a kill before the $op pointer swap reads as the old version; the re-run converges") {
       val root = Files.createTempDirectory(s"killidx_${f.name}_$op").toString
       f.build(root)

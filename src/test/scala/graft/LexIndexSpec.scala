@@ -143,7 +143,7 @@ class LexIndexSpec extends SparkSpec {
     val rootInc = Files.createTempDirectory("lex_inc_").toString
     val rootFull = Files.createTempDirectory("lex_full_").toString
     LexIndex.build(spark, docs.where(col("doc_id") % 3 =!= 0), rootInc)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 0), rootInc)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 0), rootInc)
     LexIndex.build(spark, docs, rootFull)
     for (terms <- Seq(Seq("vector"), Seq("vector", "merge", "spark"))) {
       val inc = LexIndex.search(spark, rootInc, terms, k = 20)
@@ -155,8 +155,8 @@ class LexIndexSpec extends SparkSpec {
     // and a second ingest stacks another generation, still exact
     val rootInc2 = Files.createTempDirectory("lex_inc2_").toString
     LexIndex.build(spark, docs.where(col("doc_id") % 3 === 1), rootInc2)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 2), rootInc2)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 0), rootInc2)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 2), rootInc2)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 0), rootInc2)
     val inc2 = LexIndex.search(spark, rootInc2, Seq("vector", "merge"), k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     val full2 = LexIndex.search(spark, rootFull, Seq("vector", "merge"), k = 20)
@@ -166,16 +166,15 @@ class LexIndexSpec extends SparkSpec {
 
   test("ingest collapses an at-least-once double-delivery: stats and search equal a single-copy ingest") {
     import org.apache.spark.sql.functions._
-    // round-11 review: the ingest path lacked the upsert path's CDC
-    // collapse, so a NEW doc re-delivered twice inside one trigger
-    // window doubled its token counts, n_docs and sum_dl — permanently
+    // round-11 review: a NEW doc re-delivered twice inside one trigger
+    // window must not double its token counts, n_docs and sum_dl
     val root = Files.createTempDirectory("lex_ingdup_").toString
     LexIndex.build(spark, docs, root)
     val fresh = (900001L, "zanzibar vectors merge in this brand new doc")
-    LexIndex.ingest(spark, Seq(fresh, fresh).toDF("doc_id", "text"), root)
+    LexIndex.upsert(spark, Seq(fresh, fresh).toDF("doc_id", "text"), root)
     val ref = Files.createTempDirectory("lex_ingref_").toString
     LexIndex.build(spark, docs, ref)
-    LexIndex.ingest(spark, Seq(fresh).toDF("doc_id", "text"), ref)
+    LexIndex.upsert(spark, Seq(fresh).toDF("doc_id", "text"), ref)
     def stats(r: String): Seq[Long] = {
       val v = graft.streaming.StateCommit.currentVersion(spark, r).get
       val row = StateCommit.metaTable(spark, r, v, LexIndex.metaSchema, "stats").head()
@@ -191,9 +190,9 @@ class LexIndexSpec extends SparkSpec {
     // and two VERSIONS of one new doc in one ingest batch: seq wins
     val v1 = (900002L, 1L, "first draft wording here")
     val v2 = (900002L, 2L, "zanzibar second final wording")
-    LexIndex.ingest(spark, Seq(v1, v2).toDF("doc_id", "seq", "text"), root,
+    LexIndex.upsert(spark, Seq(v1, v2).toDF("doc_id", "seq", "text"), root,
       seqCol = "seq")
-    LexIndex.ingest(spark,
+    LexIndex.upsert(spark,
       Seq((900002L, 2L, "zanzibar second final wording"))
         .toDF("doc_id", "seq", "text"), ref, seqCol = "seq")
     assert(stats(root) == stats(ref), "versioned ingest batch skewed stats")
@@ -209,7 +208,7 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_del_").toString
     LexIndex.build(spark, docs, root)
-    val vDel = LexIndex.delete(spark, root,
+    LexIndex.delete(spark, root,
       docs.where(col("doc_id") % 5 === 0).select("doc_id"))
     val rootWithout = Files.createTempDirectory("lex_delf_").toString
     LexIndex.build(spark, docs.where(col("doc_id") % 5 =!= 0), rootWithout)
@@ -220,14 +219,8 @@ class LexIndexSpec extends SparkSpec {
       "tombstoned delete diverged from rebuild-without-victims")
     assert(rows(root).forall(_._1 % 5 != 0), "a deleted doc still surfaced")
 
-    // replay under the same expected version: guarded no-op
-    assert(LexIndex.delete(spark, root,
-      docs.where(col("doc_id") % 5 === 0).select("doc_id"),
-      expectedVersion = vDel) == vDel)
-    assert(rows(root) == rows(rootWithout), "replayed delete drifted the stats")
-
-    // deleting ids with no live postings (already dead + never-indexed):
-    // stats must not double-subtract
+    // a replayed delete, plus ids with no live postings (already dead +
+    // never-indexed): stats must not double-subtract
     import spark.implicits._
     LexIndex.delete(spark, root,
       docs.where(col("doc_id") % 5 === 0).select("doc_id")
@@ -264,8 +257,8 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_gc_").toString
     LexIndex.build(spark, docs.where(col("doc_id") % 3 === 0), root)   // gen-1
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 1), root)  // gen-2
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 2), root)  // gen-3
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 1), root)  // gen-2
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 2), root)  // gen-3
     def gens() = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
       .map(_.getName).sorted.toSeq
@@ -284,7 +277,7 @@ class LexIndexSpec extends SparkSpec {
     val sweepAt = graft.streaming.StateCommit.GcSweepEvery
     var v = 4L
     while (v < sweepAt) {
-      v = LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 0)
+      v = LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 0)
         .withColumn("doc_id", col("doc_id") + v * 1000000), root)
       if (v < sweepAt)
         assert(gens().contains("gen-1"), s"v$v swept before the sweep version")
@@ -299,7 +292,7 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_gcsweep_").toString
     LexIndex.build(spark, docs.where(col("doc_id") % 3 === 0), root)   // v1
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 1), root)  // v2
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 1), root)  // v2
     def gens() = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
       .map(_.getName).sorted.toSeq
@@ -308,7 +301,7 @@ class LexIndexSpec extends SparkSpec {
     assert(gens() == Seq("gen-1", "gen-2", "gen-3"), gens().toString)
     // v4 append: snap-2 leaves retention, gen-1/2 orphan — but the
     // append defers the pass (bounded transient leak, by design)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 2)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 2)
       .withColumn("doc_id", col("doc_id") + 500000), root)
     assert(gens().contains("gen-1"),
       "append commit should have deferred the GC pass")
@@ -326,7 +319,7 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.build(spark, docs, root)
     LexIndex.delete(spark, root,
       docs.where(col("doc_id") % 6 === 0).select("doc_id"))
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 6 === 0), root)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 6 === 0), root)
     val rootFull = Files.createTempDirectory("lex_del3f_").toString
     LexIndex.build(spark, docs, rootFull)
     val terms = Seq("vector", "merge", "spark")
@@ -340,7 +333,7 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_mix_").toString
     val v1 = LexIndex.build(spark, docs.where(col("doc_id") % 2 === 0), root)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 2 =!= 0), root)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 2 =!= 0), root)
     // downgrade gen-1 to the pre-tpfx layout (flat files, no partition
     // column) — the on-disk shape an index built by older code has
     val g1 = new org.apache.hadoop.fs.Path(s"$root/gen-$v1/postings")
@@ -363,7 +356,7 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_nodocs_").toString
     val v1 = LexIndex.build(spark, docs.where(col("doc_id") % 2 === 0), root)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 2 =!= 0), root)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 2 =!= 0), root)
     // the pre-docs-table layout: postings only, no gen-1/docs
     val d1 = new org.apache.hadoop.fs.Path(s"$root/gen-$v1/docs")
     assert(d1.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -383,7 +376,7 @@ class LexIndexSpec extends SparkSpec {
     val terms = Seq("vector", "merge", "spark")
     val asCurrent = LexIndex.search(spark, root, terms, k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 2 =!= 0), root)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 2 =!= 0), root)
     // the current answer has moved; the retained v1 answer has not
     val atV1 = LexIndex.searchAt(spark, root, terms, v1, k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
@@ -401,8 +394,7 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_ups_").toString
     LexIndex.build(spark, docs, root)
-    // update every doc_id % 11 == 3 in place — the routine curation
-    // event ingest's contract forbids (it would double-count)
+    // update every doc_id % 11 == 3 in place, the routine curation event
     val updated = docs.where(col("doc_id") % 11 === 3)
       .select(col("doc_id"),
         concat(col("text"), lit(" freshly revised vector text")).as("text"))
@@ -420,13 +412,8 @@ class LexIndexSpec extends SparkSpec {
     assert(rows(root) == rows(rootRef),
       "upsert diverged from rebuild-with-updated-corpus")
 
-    // replay under the committed version: guarded no-op
-    val cur = graft.streaming.StateCommit.currentVersion(spark, root).get
-    assert(LexIndex.upsert(spark, updated, root, expectedVersion = cur) == cur)
-    assert(rows(root) == rows(rootRef), "replayed upsert drifted the stats")
-
-    // a REPEATED (non-replay) upsert of the same content is idempotent
-    // on the search: old rows die, identical new ones land
+    // a replayed upsert of the same content is idempotent on the
+    // search: old rows die, identical new ones land
     LexIndex.upsert(spark, updated, root)
     assert(rows(root) == rows(rootRef), "repeated upsert double-counted")
   }
@@ -554,8 +541,8 @@ class LexIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("lex_cpt_").toString
     LexIndex.build(spark, docs.where(col("doc_id") % 3 === 0), root)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 1), root)
-    LexIndex.ingest(spark, docs.where(col("doc_id") % 3 === 2), root)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 1), root)
+    LexIndex.upsert(spark, docs.where(col("doc_id") % 3 === 2), root)
     val terms = Seq("vector", "merge", "spark")
     val before = LexIndex.search(spark, root, terms, k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq

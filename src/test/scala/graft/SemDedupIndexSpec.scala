@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SemDedupIndex, Similarity}
-import graft.streaming.{StateCommit, StreamingSemDedup}
+import graft.streaming.StateCommit
 
 /** Persisted semantic-dedup index (round-15 ask #1): probe over a
   * fresh index is row-identical to the in-query cells operator, the
@@ -265,17 +265,17 @@ class SemDedupIndexSpec extends SparkSpec {
       SemDedupIndex.probe(spark, root, rows.toDF("vec_id", "embedding"),
         threshold = 0.99))
     // probe-then-ingest one micro-batch: the verdicts `rows` get BEFORE
-    // they join the index, then one StreamingSemDedup.start pass under a
-    // fresh checkpoint folds them in
+    // they join the index, then one AvailableNow pass of the operator's
+    // upsert under a fresh checkpoint folds them in
     def probeThenIngest(rows: Seq[(Long, Array[Float])]) = {
       val got = verdicts(rows)
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Array[Float])]
       input.addData(rows)
-      StreamingSemDedup.start(
+      drain(
         input.toDF().select(col("_1").as("vec_id"), col("_2").as("embedding")),
-        root, Files.createTempDirectory("semdd_st_ck").toString)
-        .awaitTermination()
+        Files.createTempDirectory("semdd_st_ck").toString)(
+        SemDedupIndex.upsert(spark, root, _))
       got
     }
     val batch1 = Seq((100L, center(9)), (101L, center(10)))
@@ -315,8 +315,7 @@ class SemDedupIndexSpec extends SparkSpec {
     input.addData(Seq(
       (300L, center(0).map(v => v + 0.005f), 1), // superseded near-dup
       (300L, center(12), 2)))                    // the landing version
-    StreamingSemDedup.start(vecs, root, ckpt, seqCol = "seq")
-      .awaitTermination()
+    drain(vecs, ckpt)(SemDedupIndex.upsert(spark, root, _, seqCol = "seq"))
     // the landed row IS version 2: a twin of center(12) flags
     val twin12 = verdictRows(SemDedupIndex.probe(spark, root,
       Seq((901L, center(12).map(v => v + 0.004f)))

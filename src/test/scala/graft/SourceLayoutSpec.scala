@@ -172,6 +172,21 @@ class SourceLayoutSpec extends AnyFunSuite {
       Set("graft/streaming/AvailableNow.scala"))
   }
 
+  test("AvailableNow.foreachBatch is called only where a sink adds checkpoint work") {
+    // an operator's per-batch call is its streaming API: only the
+    // composed demo and the two sinks whose refusals need the
+    // checkpoint (StreamingLex's build era, StreamingDsir's sweep pairing
+    // and model pin) run a stream themselves
+    assert(filesContaining("AvailableNow.foreachBatch(") == Set(
+      "graft/PipelineDemo.scala", "graft/streaming/StreamingLex.scala",
+      "graft/streaming/StreamingDsir.scala"))
+  }
+
+  test("LexIndex has one write core and IncrementalAgg no HLL sketches") {
+    for (name <- Seq("ingestAs", "ingestBatch", "expectedVersion", "hll_sketch_agg"))
+      assert(filesContaining(name).isEmpty, name)
+  }
+
   test("neither ANN index finds a delete's cells with a left_semi join") {
     assert(filesContaining("left_semi").intersect(Set(
       "graft/operators/AnnIndex.scala", "graft/operators/AnnIndexPq.scala"))

@@ -2,9 +2,11 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.AvailableNow
 
 /** Shared local SparkSession for all specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -27,6 +29,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally walk.close()
     }
   }
+
+  /** Drain the stream `rows` in one AvailableNow pass under
+    * `checkpoint`, handing each non-empty micro-batch to `perBatch`: an
+    * operator's per-batch call is its streaming API. */
+  def drain(rows: DataFrame, checkpoint: String)(
+      perBatch: DataFrame => Unit): Unit =
+    AvailableNow.foreachBatch(rows, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty) perBatch(batch)
+    }.awaitTermination()
 
   /** `read` must refuse the root `root` of an old or unreadable layout:
     * an `IllegalStateException` naming `root` and saying to rebuild into

@@ -5,11 +5,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.operators.IncrementalAgg
-import graft.streaming.StreamingAgg
+import graft.streaming.AvailableNow
 
 /** Streaming aggregate maintenance: multi-batch state equals the
   * all-at-once aggregate, and a replayed batch (same stream batch id)
-  * cannot double-count.
+  * cannot double-count. The stream is [[IncrementalAgg.ingest]] per
+  * micro-batch, run by [[AvailableNow.foreachBatch]]; stream batch ids
+  * start at 0 but ingest versions are positive, so batch B commits as
+  * version B+1.
   */
 class StreamingAggSpec extends SparkSpec {
   import spark.implicits._
@@ -22,6 +25,14 @@ class StreamingAggSpec extends SparkSpec {
     (input, rows)
   }
 
+  private def maintain(rows: org.apache.spark.sql.DataFrame, root: String,
+      ckpt: String): Unit =
+    AvailableNow.foreachBatch(rows, ckpt) { (batch, batchId) =>
+      IncrementalAgg.ingest(batch.sparkSession, root, batch,
+        Seq("k"), Seq("v"), batchId + 1)
+      ()
+    }.awaitTermination()
+
   private def state(root: String): Seq[(String, Long, Long, Long, Long)] =
     IncrementalAgg.read(spark, root).get
       .select("k", "cnt", "sum_v", "min_v", "max_v")
@@ -32,9 +43,9 @@ class StreamingAggSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_sa_ck").toString
     val (input, rows) = mkStream()
     input.addData(Seq(("A", 10L), ("B", 5L)))
-    StreamingAgg.start(rows, root, ckpt, Seq("k"), Seq("v")).awaitTermination()
+    maintain(rows, root, ckpt)
     input.addData(Seq(("A", 1L), ("C", 7L)))
-    StreamingAgg.start(rows, root, ckpt, Seq("k"), Seq("v")).awaitTermination()
+    maintain(rows, root, ckpt)
     assert(state(root) == Seq(
       ("A", 2L, 11L, 1L, 10L), ("B", 1L, 5L, 5L, 5L), ("C", 1L, 7L, 7L, 7L)))
     assert(IncrementalAgg.lastBatch(spark, root) == 2L,
@@ -46,13 +57,13 @@ class StreamingAggSpec extends SparkSpec {
     val ckpt1 = Files.createTempDirectory("graft_sa2_ck1").toString
     val (in1, rows1) = mkStream()
     in1.addData(Seq(("A", 10L)))
-    StreamingAgg.start(rows1, root, ckpt1, Seq("k"), Seq("v")).awaitTermination()
+    maintain(rows1, root, ckpt1)
     val before = state(root)
     // lost checkpoint => the same data re-delivers as batch 0 again
     val ckpt2 = Files.createTempDirectory("graft_sa2_ck2").toString
     val (in2, rows2) = mkStream()
     in2.addData(Seq(("A", 10L)))
-    StreamingAgg.start(rows2, root, ckpt2, Seq("k"), Seq("v")).awaitTermination()
+    maintain(rows2, root, ckpt2)
     assert(state(root) == before, "replayed batch double-counted")
   }
 }

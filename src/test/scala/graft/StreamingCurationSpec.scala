@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.streaming.StreamingCuration
+import graft.streaming.{AvailableNow, StreamingCuration}
 
 /** Streaming ingestion filter: per-batch verdicts match the batch
   * operator run against the documents accumulated before that batch, a
@@ -85,12 +85,12 @@ class StreamingCurationSpec extends SparkSpec {
     val state = dir.resolve("state").toString
     val input = MemoryStream[(Long, String)]
     val docs = input.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))
+    def pass(): Unit = AvailableNow.foreachBatch(docs, dir.resolve("c1").toString)(
+      StreamingCuration.applyBatch(state, _, _)).awaitTermination()
     input.addData(Seq((1L, t1), (2L, t2)))
-    StreamingCuration.start(docs, state, dir.resolve("c1").toString)
-      .awaitTermination()
+    pass()
     input.addData(Seq((3L, t1)))
-    StreamingCuration.start(docs, state, dir.resolve("c1").toString)
-      .awaitTermination()
+    pass()
     val v = StreamingCuration.verdicts(spark, state).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(v == Map(1L -> "new", 2L -> "new", 3L -> "exact_dup"), v.toString)

@@ -6,11 +6,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.DedupIndex
-import graft.streaming.StreamingDedup
 
 /** Dedup-at-ingest: batches classify against everything BEFORE them,
   * and an at-least-once replay converges (a replayed batch gets the
-  * same verdicts; index state masks the superseded generation).
+  * same verdicts; index state masks the superseded generation). The
+  * stream is [[DedupIndex.upsert]] per micro-batch, driven by
+  * [[drain]].
   */
 class StreamingDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -36,7 +37,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   /** One classify-then-ingest micro-batch: the verdicts `rows` get
     * against the index BEFORE they join it (pinned eagerly), then one
-    * [[StreamingDedup.start]] pass under a fresh checkpoint folds them
+    * [[drain]] pass under a fresh checkpoint folds them
     * in — a fresh checkpoint per call is the lost-checkpoint replay
     * shape when the same rows come again. */
   private def classifyThenIngest(root: String,
@@ -45,8 +46,8 @@ class StreamingDedupSpec extends SparkSpec {
       .localCheckpoint()
     val (input, docs) = mkStream()
     input.addData(rows)
-    StreamingDedup.start(docs, root,
-      Files.createTempDirectory("graft_sd_ck").toString).awaitTermination()
+    drain(docs, Files.createTempDirectory("graft_sd_ck").toString)(
+      DedupIndex.upsert(spark, root, _))
     verdicts
   }
 
@@ -120,7 +121,7 @@ class StreamingDedupSpec extends SparkSpec {
       .select(col("_1").as("doc_id"), col("_2").as("text"),
         lit("s").as("source"))
     input.addData(Seq((2L, T1)))
-    StreamingDedup.start(docs, root, ckpt).awaitTermination()
+    drain(docs, ckpt)(DedupIndex.upsert(spark, root, _))
     val got = DedupIndex.queryNearDups(spark, root, docsDF((9L, T1)))
       .select("dup_id").as[Long].collect().toSet
     assert(got == Set(1L, 2L), s"streamed doc not probeable: $got")
@@ -142,8 +143,7 @@ class StreamingDedupSpec extends SparkSpec {
     // both versions of doc 2 in ONE batch: v1 near-dups T1 and sorts
     // LAST lexicographically ("zz..."), v2 (the seq winner) is T2
     input.addData(Seq((2L, 1L, "zz " + T1), (2L, 2L, T2)))
-    StreamingDedup.start(docs, root, ckpt, seqCol = "seq")
-      .awaitTermination()
+    drain(docs, ckpt)(DedupIndex.upsert(spark, root, _, seqCol = "seq"))
     val viaOld = DedupIndex.queryNearDups(spark, root, docsDF((9L, T1)))
       .select("dup_id").as[Long].collect().toSet
     assert(!viaOld.contains(2L),

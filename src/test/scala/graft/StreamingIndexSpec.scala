@@ -14,7 +14,8 @@ import graft.operators.AnnIndex
   * [[AnnIndex.driftReport]] recommends a retrain when recent batches
   * sit materially below build-time quality. Contract: the trigger
   * FIRES under a shifted-distribution feed and STAYS QUIET under a
-  * stationary one (same margin, same corpus).
+  * stationary one (same margin, same corpus). The stream is
+  * [[AnnIndex.upsert]] per micro-batch, driven by [[drain]].
   */
 class StreamingIndexSpec extends SparkSpec {
 
@@ -30,9 +31,9 @@ class StreamingIndexSpec extends SparkSpec {
     // two uneven micro-batches, like the AnnIndexSpec ingest test
     input.addData(rows.take(rows.length / 3).toIndexedSeq)
     val ckpt1 = Files.createTempDirectory("graft_si_ck").toString
-    graft.streaming.StreamingIndex.start(vectors, dir, ckpt1).awaitTermination()
+    drain(vectors, ckpt1)(AnnIndex.upsert(spark, dir, _))
     input.addData(rows.drop(rows.length / 3).toIndexedSeq)
-    graft.streaming.StreamingIndex.start(vectors, dir, ckpt1).awaitTermination()
+    drain(vectors, ckpt1)(AnnIndex.upsert(spark, dir, _))
   }
 
   private def corpusRows(lo: Long, hi: Long): Seq[(Long, Seq[Float])] =
@@ -127,8 +128,7 @@ class StreamingIndexSpec extends SparkSpec {
     // both versions of id 1000 in ONE batch; seq orders e41 the winner
     input.addData(Seq((1000L, 1L, e40), (1000L, 2L, e41)))
     val ckpt = Files.createTempDirectory("graft_si_seq_ck").toString
-    graft.streaming.StreamingIndex.start(vectors, dir, ckpt, seqCol = "seq")
-      .awaitTermination()
+    drain(vectors, ckpt)(AnnIndex.upsert(spark, dir, _, seqCol = "seq"))
     val mine = AnnIndex.vectors(spark, dir).where(col("vec_id") === 1000L)
       .select("embedding").collect()
     assert(mine.length == 1, s"dup-id stream batch landed ${mine.length} rows")

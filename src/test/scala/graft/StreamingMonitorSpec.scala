@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Temporal
-import graft.streaming.{StateCommit, StreamingMonitor}
+import graft.streaming.{AvailableNow, StateCommit, StreamingMonitor}
 
 /** Streaming anomaly monitor: the maintained hourly state converges to
   * the batch operator's pre-aggregation regardless of how the feed is
@@ -39,8 +39,8 @@ class StreamingMonitorSpec extends SparkSpec {
     val (b, c) = rest.splitAt(19)
     for (part <- Seq(a, b, c)) {
       input.addData(part)
-      val q = StreamingMonitor.start(events, state, dir.resolve("ckpt").toString)
-      q.awaitTermination()
+      AvailableNow.foreachBatch(events, dir.resolve("ckpt").toString)(
+        StreamingMonitor.applyBatch(state, _, _)).awaitTermination()
     }
 
     val got = StreamingMonitor.scores(spark, state).collect()

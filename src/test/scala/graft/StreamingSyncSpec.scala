@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.embed.LocalHashEmbedder
 import graft.model.Selection
 import graft.store.ParquetVectorStore
-import graft.streaming.StreamingSync
+import graft.streaming.AvailableNow
 import graft.sync.SyncEngine
 
 /** End-to-end STREAMING indexing: a live CDC feed of product rows drives
@@ -16,7 +16,8 @@ import graft.sync.SyncEngine
   * is exercised directly: replayed unchanged rows produce zero store
   * writes (version does not advance), a changed row re-indexes only
   * itself, and the store converges to the same state a batch sync would
-  * produce.
+  * produce. The stream is one [[SyncEngine.sync]] pass per micro-batch,
+  * run by [[AvailableNow.foreachBatch]].
   */
 class StreamingSyncSpec extends SparkSpec {
 
@@ -40,10 +41,12 @@ class StreamingSyncSpec extends SparkSpec {
     val ckpt = dir.resolve("ckpt").toString
     val summaries = scala.collection.mutable.ListBuffer.empty[Map[String, Long]]
     def runPass(): Unit = {
-      val q = StreamingSync.start(engine, normalized, ckpt,
-        rows => summaries.synchronized {
+      val q = AvailableNow.foreachBatch(normalized, ckpt) { (batch, _) =>
+        val rows = engine.sync(batch).collect()
+        summaries.synchronized {
           summaries += rows.map(r => r.getString(0) -> r.getLong(1)).toMap
-        })
+        }
+      }
       q.awaitTermination()
     }
 

@@ -313,11 +313,16 @@ class ViewRewriteSpec extends SparkSpec {
         .toDF("id", "k1", "v").write.mode("append").parquet(factDir)
       val schema = spark.read.parquet(factDir).schema
 
+      // stream batch B commits as ingest version B + 1 (versions are
+      // positive, stream batch ids start at 0)
       def maintain(): Unit =
-        graft.streaming.StreamingAgg.start(
-          spark.readStream.schema(schema).parquet(factDir),
-          root, ckpt, keys = Seq("k1"), values = Seq("v"))
-          .awaitTermination()
+        graft.streaming.AvailableNow.foreachBatch(
+            spark.readStream.schema(schema).parquet(factDir), ckpt) {
+          (batch, batchId) =>
+            IncrementalAgg.ingest(batch.sparkSession, root, batch,
+              keys = Seq("k1"), values = Seq("v"), batchId = batchId + 1)
+            ()
+        }.awaitTermination()
 
       maintain()
       IncrementalAgg.registerView(spark, root, "vr_test", factDir,
