@@ -858,7 +858,8 @@ object SparkEntry {
       Normalizer.metaSections(Catalog.productMeta(s, dir))),
 
     "n4_acf" -> ((s, dir) =>
-      Normalizer.acfRender(Catalog.acfValues(s, dir))),
+      Normalizer.acfRender(Catalog.acfValues(s, dir))
+        .orderBy("product_id", "field_name")),
 
     // F11 full matrix: the 10 id-lookup/nested ACF types as dimension
     // joins + row-local unpacking (with n4_acf's scalar six → all 16).
@@ -867,10 +868,12 @@ object SparkEntry {
         Catalog.acfLookupValues(s, dir),
         Catalog.postTitles(s, dir),
         Catalog.termDim(s, dir),
-        Catalog.attachments(s, dir))),
+        Catalog.attachments(s, dir))
+        .orderBy("product_id", "field_name")),
 
     "n5_terms" -> ((s, dir) =>
-      Normalizer.termSections(Catalog.productTerms(s, dir))),
+      Normalizer.termSections(Catalog.productTerms(s, dir))
+        .orderBy("product_id", "taxonomy")),
 
     // The reference's FULL normalized document: core + per-key meta +
     // per-taxonomy terms + all 16 ACF types, one deterministic text per

@@ -11,6 +11,12 @@ import graft.functions.Functions.stripHtml
   *
   * The projection IS the logical-plan input (SURVEY §1.1 "field selection
   * map") — Catalyst column pruning pushes it into the parquet scan.
+  *
+  * Row order: `normalize`, `metaSections`, `composeFull` and `fingerprint`
+  * return rows sorted by `product_id`. `acfRender`, `acfRenderLookup` and
+  * `termSections` are inputs to `composeFull`, which orders each
+  * product's lines itself, so they return their rows in no particular
+  * order; a caller that lists them sorts at the call site.
   */
 object Normalizer {
 
@@ -37,7 +43,8 @@ object Normalizer {
     * (derived, so the two can't drift). */
   val DefaultCore: Seq[String] = coreCatalog.map(_._1)
 
-  /** Normalized text per product over the canonical catalog columns. */
+  /** Normalized text per product over the canonical catalog columns,
+    * sorted by `product_id`. */
   def normalize(products: DataFrame): DataFrame =
     normalize(products, DefaultCore)
 
@@ -47,7 +54,8 @@ object Normalizer {
     * `class-field-normalizer.php:44-66`). The selection IS the logical
     * plan input — deselected columns are never referenced, so Catalyst
     * prunes them out of the parquet scan. Unknown keys are ignored (the
-    * reference skips unknown option entries). */
+    * reference skips unknown option entries). Rows sorted by
+    * `product_id`. */
   def normalize(products: DataFrame, core: Seq[String]): DataFrame = {
     val chosen = core.toSet
     val sections = coreCatalog.collect { case (k, c) if chosen(k) => c }
@@ -63,12 +71,6 @@ object Normalizer {
     * `includes/class-field-discovery.php:149-155`). */
   val MetaBlacklist: Seq[String] = Seq("_edit_lock", "_thumbnail_id")
 
-  /** Custom-meta sections from long-format (product_id, key, value) rows:
-    * P4 blacklist, P3 private-key predicate (`key[0]=='_'` excluded unless
-    * `showPrivate` — `class-field-normalizer.php:220-224`), then F10 KV
-    * flatten (`"k: v; k2: v2"`, `class-field-normalizer.php:489-516`) and
-    * F6 compact-JSON render (`class-field-normalizer.php:305-316`), both
-    * over key-sorted entries so output is deterministic (SURVEY §1.3). */
   /** P3/P4 meta-visibility rule, shared by every path that reads meta
     * (metaSections and composeFull must never disagree on which keys are
     * indexed). */
@@ -77,6 +79,13 @@ object Normalizer {
       .where(!col("key").isin(MetaBlacklist: _*))
       .where(if (showPrivate) lit(true) else !col("key").startsWith("_"))
 
+  /** Custom-meta sections from long-format (product_id, key, value) rows:
+    * P4 blacklist, P3 private-key predicate (`key[0]=='_'` excluded unless
+    * `showPrivate` — `class-field-normalizer.php:220-224`), then F10 KV
+    * flatten (`"k: v; k2: v2"`, `class-field-normalizer.php:489-516`) and
+    * F6 compact-JSON render (`class-field-normalizer.php:305-316`), both
+    * over key-sorted entries so output is deterministic (SURVEY §1.3).
+    * Rows sorted by `product_id`. */
   def metaSections(meta: DataFrame, showPrivate: Boolean = false): DataFrame = {
     val visible = visibleMeta(meta, showPrivate)
     visible.groupBy("product_id")
@@ -95,7 +104,9 @@ object Normalizer {
     * — taxonomy/post_object/relationship/image — are dimension-table
     * joins in our model, see SURVEY §2.7 F11): scalar types pass
     * through, `true_false` → "true"/"false", `checkbox` multi-values
-    * join `", "` (F5), `group` kv-rows render `"k: v; k2: v2"` (F10). */
+    * join `", "` (F5), `group` kv-rows render `"k: v; k2: v2"` (F10).
+    * One (product_id, field_name, rendered) row per input row, in no
+    * particular order. */
   def acfRender(acf: DataFrame): DataFrame =
     acf.select(
       col("product_id"), col("field_name"),
@@ -108,7 +119,6 @@ object Normalizer {
             kv => concat_ws(": ", split(kv, "=").getItem(0),
               split(kv, "=").getItem(1))), "; "))
         .otherwise(col("value")).as("rendered"))
-      .orderBy("product_id", "field_name")
 
   /** F11 (full matrix) — the id-lookup + nested ACF types the scalar
     * [[acfRender]] can't express (reference
@@ -131,6 +141,9 @@ object Normalizer {
     * catalog-dimension-sized — Catalyst auto-broadcasts them at these
     * stats and falls back to shuffle equi-joins if a dim outgrows the
     * threshold; the single groupBy carries narrow (id, pos, item) rows.
+    *
+    * One (product_id, field_name, rendered) row per field, in no
+    * particular order.
     */
   def acfRenderLookup(acf: DataFrame, postTitles: DataFrame, terms: DataFrame,
       attachments: DataFrame): DataFrame = {
@@ -181,7 +194,7 @@ object Normalizer {
           array_sort(collect_list(struct(col("pos").as("p"), col("item").as("v")))),
           s => s.getField("v")), ", ").as("rendered"))
 
-    local.unionByName(joined).orderBy("product_id", "field_name")
+    local.unionByName(joined)
   }
 
   /** S4/F5/F15 taxonomy sections from long-format (product_id, taxonomy,
@@ -189,7 +202,8 @@ object Normalizer {
     * (reference `ucwords(replace(_,-, ' '))`,
     * `includes/class-variation-rollup.php:156-183`), plain taxonomies pass
     * through; per-(product, taxonomy) terms sort and join `", "`
-    * (`includes/class-field-normalizer.php:157-178`). */
+    * (`includes/class-field-normalizer.php:157-178`). One (product_id,
+    * taxonomy, label, terms) row per pair, in no particular order. */
   def termSections(terms: DataFrame): DataFrame = {
     val isAttr = col("taxonomy").startsWith("pa_")
     // label: ucwords-style (first letter up, tail preserved) on the
@@ -204,7 +218,6 @@ object Normalizer {
           .otherwise(col("term")).as("v"))
       .groupBy("product_id", "taxonomy", "label")
       .agg(array_join(array_sort(collect_list(col("v"))), ", ").as("terms"))
-      .orderBy("product_id", "taxonomy")
   }
 
   /** The reference's FULL normalized text (`build_preview`,
@@ -217,7 +230,9 @@ object Normalizer {
     *
     * Scale posture: four narrow per-product aggregations joined on
     * product_id; each side is pre-reduced to one row per product before
-    * its join, so the fan-in never multiplies rows. */
+    * its join, so the fan-in never multiplies rows. Each block orders its
+    * lines with an `array_sort`, so its input needs no sort; the only
+    * range sort is the final one by `product_id`. */
   def composeFull(products: DataFrame, meta: DataFrame, terms: DataFrame,
       acfRendered: DataFrame, showPrivate: Boolean = false): DataFrame =
     composeFull(products, meta, terms, acfRendered,
@@ -270,7 +285,8 @@ object Normalizer {
   }
 
   /** F7 product fingerprint: sha256 binding {text, chunking config, model,
-    * dimension} (reference `includes/class-fingerprint.php:23-44`). */
+    * dimension} (reference `includes/class-fingerprint.php:23-44`). Rows
+    * sorted by `product_id`. */
   def fingerprint(normalized: DataFrame,
       config: String = "size=800,overlap=100,model=text-embedding-3-small,dim=3072"
   ): DataFrame =

@@ -1,6 +1,8 @@
 package graft.sync
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,30 +19,37 @@ import graft.streaming.StateCommit
   * dataflow over a SET of products, not a per-product loop:
   *
   *   candidates → normalize → product_sha
-  *     → short-circuit: anti-join sync_state on (product_id, product_sha)
-  *       BEFORE chunk/embed — unchanged products never reach the embedder.
-  *       (The reference embeds first and compares after,
-  *       `class-indexer.php:229` vs `:329` — hoisting the sha comparison is
-  *       the §4 improvement with identical semantics.)
-  *     → chunk (UDF + explode) → chunk_sha → embed (mapPartitions, batched)
-  *     → payloads
-  *     → full-outer join with sync_state on (product_id, chunk_index)  [J4]
-  *     → route delete / upsert / skip
-  *     → summary [A4] → vector-store merge → sync_state snapshot merge
+  *     → short-circuit: left-join sync_state's per-product (sha, rebuild,
+  *       error) on product_id BEFORE chunk/embed — unchanged products
+  *       never reach the embedder. (The reference embeds first and
+  *       compares after, `class-indexer.php:229` vs `:329` — hoisting the
+  *       sha comparison is the §4 improvement with identical semantics.)
+  *     → split tally [one job]: unchanged and changed counts, the site
+  *     → changed products only: chunk (UDF + explode) → chunk_sha
+  *       → embed (mapPartitions, batched) → payloads
+  *       → full-outer join with sync_state on (product_id, chunk_index) [J4]
+  *       → route delete / upsert / skip → per-action counts [A4, one job]
+  *       → vector-store merge
+  *     → sync_state merge → event row
   *
   * The short-circuit split is planned and computed once (cached) and read
-  * by every later stage. The summary (per-action chunk counts, the
-  * skipped products and the event's site) is read in one job BEFORE any
-  * write, and its counts pick the store call: deletes and upserts go
-  * through [[VectorStoreWriter.replace]], so a pass commits the store at
-  * most ONCE, and a pass with nothing to write commits it not at all.
+  * by every later stage. A pass plans only what its split says it
+  * touches: when nothing changed it builds no payloads and no routing,
+  * makes no store call, and its summary is the split's tally. Otherwise
+  * the per-action counts are read before any write and pick the store
+  * call: deletes and upserts go through [[VectorStoreWriter.replace]], so
+  * a pass commits the store at most ONCE. The sync_state merge is one
+  * scan of the committed table joined once to a broadcast of the split's
+  * per-product flags, unioned with the changed products' fresh rows.
   *
-  * Scale posture: the only wide exchanges are (a) the short-circuit
-  * anti-join and (b) the J4 full-outer join, both equi-joins on
-  * `product_id(,chunk_index)` — the natural co-partition key; both sides
-  * are projected to narrow (key, sha) columns before shuffling so chunk
-  * text and vectors never cross the wire. Embedding runs map-side after
-  * the pruning join, so cost is proportional to CHANGED data only.
+  * Scale posture: the wide exchanges are the short-circuit's per-product
+  * aggregate and, for changed products only, the J4 full-outer join,
+  * both equi-joins on `product_id(,chunk_index)` — the natural
+  * co-partition key; both sides are projected to narrow (key, sha)
+  * columns before shuffling so chunk text and vectors never cross the
+  * wire. Embedding runs map-side after the split, so cost is
+  * proportional to CHANGED data only. The merge broadcasts one narrow
+  * row per candidate, so the committed table is never shuffled.
   */
 final class SyncEngine(
     spark: SparkSession,
@@ -175,30 +184,23 @@ final class SyncEngine(
     removed
   }
 
-  /** The delta plan shared by [[sync]] (which executes it) and
-    * [[sampleDryRun]] (which only reports it): short-circuit split,
-    * payload build, per-chunk full-outer routing, and the would-be
-    * delete-id / upsert sets. existing/split/payloads/routed are cached
-    * (the multiply-consumed frames; `unchanged` and `changed` are
-    * filters of `split`, which carries the per-candidate `unchanged`
-    * flag) — call [[DeltaParts.unpersistAll]] when done. */
-  private final case class DeltaParts(
-      existing: DataFrame, split: DataFrame, unchanged: DataFrame,
-      changed: DataFrame, payloads: DataFrame, routed: DataFrame,
-      deleteIds: DataFrame, upserts: DataFrame) {
-    def unpersistAll(): Unit = {
-      existing.unpersist(); split.unpersist()
-      payloads.unpersist(); routed.unpersist()
-    }
-  }
-
-  private def deltaParts(normalized: DataFrame, force: Boolean): DeltaParts = {
-    val withSha = fingerprinted(normalized)
-    val existing = readSyncState().where(col("target") === target).cache()
+  /** One pass's plan over `normalized`, shared by [[sync]] (which
+    * executes it) and [[sampleDryRun]] (which only reports it).
+    *
+    * `prior` is the committed sync_state the pass reads, `existing` its
+    * rows for this target. `split` carries one row per candidate with
+    * its short-circuit `unchanged` flag; it is planned and computed once
+    * (cached) and read by every later stage. The payloads and per-chunk
+    * [[Routing]] are planned only when [[routing]] is first asked for:
+    * a pass whose split changed nothing never builds them. Call
+    * [[unpersistAll]] when done. */
+  private final class Pass(normalized: DataFrame, force: Boolean) {
+    val prior: DataFrame = readSyncState()
+    val existing: DataFrame = prior.where(col("target") === target)
 
     // Rebuild triggers: model/dimension mismatch → treat as changed
     // (`class-indexer.php:320-327`).
-    val existingByProduct = existing.groupBy("product_id").agg(
+    private val existingByProduct = existing.groupBy("product_id").agg(
       first("product_sha").as("old_sha"),
       max(when(col("model") =!= embedder.model ||
         col("dimension") =!= embedder.dimension, 1).otherwise(0)).as("rebuild"),
@@ -209,54 +211,69 @@ final class SyncEngine(
 
     // Short-circuit (`class-indexer.php:329-360`) hoisted BEFORE embedding:
     // unchanged = same product_sha and no rebuild trigger and not forced.
-    // Planned and computed once: the payload build, the routing's
-    // semi-join, the summary read and the sync_state merge all read it.
-    val split = withSha.join(existingByProduct, Seq("product_id"), "left_outer")
+    val split: DataFrame = fingerprinted(normalized)
+      .join(existingByProduct, Seq("product_id"), "left_outer")
       .withColumn("unchanged",
         if (force) lit(false)
         else coalesce(col("old_sha") === col("product_sha") &&
           col("rebuild") === 0 && col("has_error") === 0, lit(false)))
       .cache()
-    val unchanged = split.where(col("unchanged"))
-    val changed = split.where(!col("unchanged"))
 
-    val payloads = buildPayloads(
-      changed.select("product_id", "site_id", "sku", "text", "product_sha")).cache()
+    private var built: Option[Routing] = None
 
-    // J4: full-outer on (product_id, chunk_index), narrow projections only.
-    // f_site rides along so the dry run can resolve ids for NEW chunks
-    // from the candidate's OWN site (not a hardcoded default).
-    val fresh = payloads.select(col("product_id"), col("chunk_index"),
-      col("chunk_sha").as("f_sha"), col("site_id").as("f_site"))
-    val exist = existing.select(col("product_id"), col("chunk_index"),
-      col("chunk_sha").as("e_sha"), col("vector_id"),
-      col("status").as("e_status"), col("site_id").as("e_site"))
-      .join(changed.select("product_id"), Seq("product_id"), "left_semi")
-    val routed = fresh.join(exist, Seq("product_id", "chunk_index"), "full_outer")
-      .withColumn("action",
-        when(col("f_sha").isNull, "delete")
-          // error rows re-upsert even on sha match: the recorded sha
-          // describes a write that never landed (`class-indexer.php:438-443`)
-          .when(col("e_sha").isNull || col("e_sha") =!= col("f_sha") ||
-            col("e_status") === "error" || lit(force), "upsert")
-          .otherwise("skip"))
-      .cache()
+    /** The changed products' payloads and per-chunk routing, planned and
+      * cached on first use. */
+    def routing: Routing = built.getOrElse {
+      val changed = split.where(!col("unchanged"))
+      val payloads = buildPayloads(
+        changed.select("product_id", "site_id", "sku", "text", "product_sha")).cache()
 
+      // J4: full-outer on (product_id, chunk_index), narrow projections
+      // only. f_site rides along so the dry run can resolve ids for NEW
+      // chunks from the candidate's OWN site (not a hardcoded default).
+      val fresh = payloads.select(col("product_id"), col("chunk_index"),
+        col("chunk_sha").as("f_sha"), col("site_id").as("f_site"))
+      val exist = existing.select(col("product_id"), col("chunk_index"),
+        col("chunk_sha").as("e_sha"), col("vector_id"),
+        col("status").as("e_status"), col("site_id").as("e_site"))
+        .join(changed.select("product_id"), Seq("product_id"), "left_semi")
+      val routed = fresh.join(exist, Seq("product_id", "chunk_index"), "full_outer")
+        .withColumn("action",
+          when(col("f_sha").isNull, "delete")
+            // error rows re-upsert even on sha match: the recorded sha
+            // describes a write that never landed (`class-indexer.php:438-443`)
+            .when(col("e_sha").isNull || col("e_sha") =!= col("f_sha") ||
+              col("e_status") === "error" || lit(force), "upsert")
+            .otherwise("skip"))
+        .cache()
+      built = Some(Routing(payloads, routed))
+      built.get
+    }
+
+    def unpersistAll(): Unit = {
+      split.unpersist()
+      built.foreach { r => r.payloads.unpersist(); r.routed.unpersist() }
+    }
+  }
+
+  /** The changed products' payloads and their per-chunk routing against
+    * this target's rows (both cached), with the would-be delete ids and
+    * upsert payloads derived from them. */
+  private final case class Routing(payloads: DataFrame, routed: DataFrame) {
     // Deletes resolve by stored vector_id, fallback recomputed id —
     // `class-indexer.php:390-409`. The fallback id recomputes from the
     // row's OWN site_id (carried through `exist` as e_site) — a hardcoded
     // site-1 would silently delete a nonexistent id for any other site.
-    val deleteIds = routed.where(col("action") === "delete")
+    def deleteIds: DataFrame = routed.where(col("action") === "delete")
       .select(coalesce(col("vector_id"),
         format_string("site-%d:product-%d:chunk-%d",
           col("e_site"), col("product_id"), col("chunk_index")))
         .as("id"))
-    val upserts = payloads.join(
+
+    def upserts: DataFrame = payloads.join(
       routed.where(col("action") === "upsert")
         .select("product_id", "chunk_index"),
       Seq("product_id", "chunk_index"), "left_semi")
-    DeltaParts(existing, split, unchanged, changed, payloads, routed,
-      deleteIds, upserts)
   }
 
   /** SAMPLE dry run — the reference's admin `sample_upsert`/`sample_delete`
@@ -269,20 +286,20 @@ final class SyncEngine(
     * short-circuit). Returns (product_id, chunk_index, vector_id, action,
     * chunk_sha nullable for deletes). */
   def sampleDryRun(normalized: DataFrame, force: Boolean = false): DataFrame = {
-    val parts = deltaParts(normalized, force)
+    val pass = new Pass(normalized, force)
     try {
     // id resolution mirrors execution exactly: existing rows keep their
     // stored vector_id (deletes recompute from e_site, as sync does);
     // NEW chunks take the id buildPayloads would mint from the
     // candidate's own site_id — never a hardcoded default.
-    val perChunk = parts.routed
+    val perChunk = pass.routing.routed
       .select(col("product_id"), col("chunk_index"),
         coalesce(col("vector_id"),
           format_string("site-%d:product-%d:chunk-%d",
             coalesce(col("e_site"), col("f_site")), col("product_id"), col("chunk_index")))
           .as("vector_id"),
         col("action"), col("f_sha").as("chunk_sha"))
-    val skippedUnchanged = parts.unchanged
+    val skippedUnchanged = pass.split.where(col("unchanged"))
       .select(col("product_id"), lit(-1).as("chunk_index"),
         lit(null).cast("string").as("vector_id"),
         lit("skip_unchanged").as("action"),
@@ -295,47 +312,48 @@ final class SyncEngine(
       perChunk.unionByName(skippedUnchanged)
         .orderBy("product_id", "chunk_index"),
       materialize = true)
-    // finally (not inline): a failure mid-plan must still unpin the four
+    // finally (not inline): a failure mid-plan must still unpin the
     // cached frames, or a scheduler loop that swallows per-tick errors
     // accumulates dead cached plans for the session's lifetime
-    } finally parts.unpersistAll()
+    } finally pass.unpersistAll()
   }
 
-  /** One full sync pass over `normalized` (product_id, site_id, sku, text).
-    * Returns the per-action summary DataFrame (upserted/deleted/skipped). */
+  /** One full sync pass over `normalized` (product_id, site_id, sku, text),
+    * one row per product. Returns the per-action summary (action, n):
+    * chunk counts for `upsert`, `delete` and `skip`, and the product count
+    * for `skip_unchanged`, sorted by action. */
   def sync(normalized: DataFrame, force: Boolean = false): DataFrame = {
-    val parts = deltaParts(normalized, force)
-    try syncImpl(parts) finally parts.unpersistAll()
+    val pass = new Pass(normalized, force)
+    try syncImpl(pass) finally pass.unpersistAll()
   }
 
-  private def syncImpl(parts: DeltaParts): DataFrame = {
-    val unchanged = parts.unchanged
-    val changed = parts.changed
-    val payloads = parts.payloads
-    val routed = parts.routed
+  private def syncImpl(pass: Pass): DataFrame = {
+    // The split's tally, read in ONE job before anything else: how many
+    // candidates are unchanged and changed, and the event's site. Site
+    // attribution from the batch itself (a hardcoded 1 mislabeled every
+    // non-default-site pass): single-site batch → that site; multi-site
+    // or empty batch → NULL (an equality filter on site_id then
+    // correctly excludes the row rather than mis-attributing it).
+    val t = pass.split.agg(
+        coalesce(sum(when(col("unchanged"), 1L)), lit(0L)),
+        coalesce(sum(when(!col("unchanged"), 1L)), lit(0L)),
+        min("site_id"), max("site_id"), max(col("site_id").isNull))
+      .head()
+    val (nUnchanged, nChanged) = (t.getLong(0), t.getLong(1))
+    val siteForEvent: Option[Int] =
+      if (!t.isNullAt(2) && t.getInt(2) == t.getInt(3) && !t.getBoolean(4))
+        Some(t.getInt(2))
+      else None
 
-    // A4 summary (`class-indexer.php:468-477`) and the event's site, read
-    // in ONE job before any write: the per-action chunk counts route the
-    // store call, and the pass needs no other action to learn them.
-    // Site attribution from the batch itself (a hardcoded 1 mislabeled
-    // every non-default-site pass): single-site batch → that site;
-    // multi-site or empty batch → NULL (an equality filter on site_id
-    // then correctly excludes the row rather than mis-attributing it).
-    val acted = routed.groupBy("action").agg(count(lit(1)).as("n"))
-    val skippedUnchanged = parts.split.agg(
-        coalesce(sum(when(col("unchanged"), 1L)), lit(0L)).as("n"),
-        min("site_id").as("site_lo"), max("site_id").as("site_hi"),
-        max(col("site_id").isNull).as("site_null"))
-      .withColumn("action", lit("skip_unchanged"))
-    val tally = acted.unionByName(skippedUnchanged, allowMissingColumns = true)
-    val tallied = tally.collect()
-    val materialized = tallied.map(r => Row(r.getString(0), r.getLong(1)))
-      .sortBy(_.getString(0)).toSeq
-    val counts = materialized.map(r => r.getString(0) -> r.getLong(1)).toMap
-    val siteForEvent: Option[Int] = tallied.collectFirst {
-      case r if r.getString(0) == "skip_unchanged" && !r.isNullAt(2) &&
-          r.getInt(2) == r.getInt(3) && !r.getBoolean(4) => r.getInt(2)
-    }
+    // A4 summary (`class-indexer.php:468-477`): the changed products'
+    // per-action chunk counts, read in one more job before any write;
+    // they route the store call. A pass whose split changed nothing
+    // plans no payloads and no routing at all.
+    val acted: Map[String, Long] =
+      if (nChanged == 0) Map.empty
+      else pass.routing.routed.groupBy("action").agg(count(lit(1)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val counts = acted + ("skip_unchanged" -> nUnchanged)
 
     // Zero-remote-call short-circuit (golden case B): unchanged products
     // must produce NO store writes at all (`class-indexer.php:329-360`).
@@ -345,14 +363,18 @@ final class SyncEngine(
     // re-picked next pass), not the job (`class-indexer.php:438-443`).
     val (hasDeletes, hasUpserts) =
       (counts.getOrElse("delete", 0L) > 0, counts.getOrElse("upsert", 0L) > 0)
-    val upserts = parts.upserts.select(
-      col("id"), col("values"), col("site_id"), col("product_id"),
-      col("sku"), col("url"), col("updated_at"), col("fingerprint"), col("fields"))
     val writeError: Option[Throwable] =
       try {
-        if (hasDeletes && hasUpserts) store.replace(parts.deleteIds, upserts)
-        else if (hasDeletes) store.deleteByIds(parts.deleteIds)
-        else if (hasUpserts) store.upsert(upserts)
+        if (hasDeletes || hasUpserts) {
+          val r = pass.routing
+          val upserts = r.upserts.select(
+            col("id"), col("values"), col("site_id"), col("product_id"),
+            col("sku"), col("url"), col("updated_at"), col("fingerprint"),
+            col("fields"))
+          if (hasDeletes && hasUpserts) store.replace(r.deleteIds, upserts)
+          else if (hasDeletes) store.deleteByIds(r.deleteIds)
+          else store.upsert(upserts)
+        }
         None
       } catch { case e: Throwable => Some(e) }
 
@@ -364,46 +386,54 @@ final class SyncEngine(
     val errMsg = writeError.map(e =>
         lit(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)))
       .getOrElse(lit(null)).cast("string")
-    val freshRows = payloads.select(
-      col("site_id"), col("product_id"), lit(target).as("target"),
-      col("chunk_index"), col("id").as("vector_id"),
-      col("product_sha"), col("chunk_sha"),
-      lit(embedder.model).as("model"), lit(embedder.dimension).as("dimension"),
-      statusCol.as("status"), errCode.as("error_code"), errMsg.as("error_msg"),
-      lit(clock).as("last_synced_at"))
-    // The merge rewrites only THIS target's rows — a second adapter's
-    // bookkeeping (other `target` values, reference's per-target row model
-    // `includes/class-plugin.php:126-127`) passes through untouched.
-    val others = readSyncState().where(col("target") =!= target)
-    val mine = parts.existing
-    val untouched = mine
-      .join(changed.select("product_id"), Seq("product_id"), "left_anti")
-    val touched = untouched
-      .join(unchanged.select("product_id"), Seq("product_id"), "left_semi")
-      .withColumn("last_synced_at", lit(clock))
-    val rest = untouched
-      .join(unchanged.select("product_id"), Seq("product_id"), "left_anti")
-    // T8 delete-set preservation on write failure: rows routed 'delete'
-    // belong to changed products, so the merge above drops them — correct
-    // when the delete landed, but after a store failure they are the ONLY
-    // record that those chunks' vectors exist. Dropping them would leave
-    // the vectors orphaned forever (the self-heal pass re-derives its
-    // delete set from sync_state). Keep them as status='error' rows so
-    // the next healthy pass routes them 'delete' again (idempotent even
-    // if the failed pass's deleteByIds had already landed).
-    val failedDeletes =
-      if (writeError.isEmpty) mine.limit(0)
-      else mine.join(
-          routed.where(col("action") === "delete")
-            .select("product_id", "chunk_index"),
-          Seq("product_id", "chunk_index"), "left_semi")
-        .withColumn("status", lit("error"))
-        .withColumn("error_code", lit("graft_store_error"))
-        .withColumn("error_msg", errMsg)
-        .withColumn("last_synced_at", lit(clock))
-    commitSyncState(others.unionByName(rest).unionByName(touched)
-      .unionByName(freshRows.select(rest.columns.toIndexedSeq.map(col): _*))
-      .unionByName(failedDeletes.select(rest.columns.toIndexedSeq.map(col): _*)))
+    val columns = syncSchema.fieldNames.toIndexedSeq.map(col)
+    // ONE scan of the committed table, joined once to the split's flags.
+    // The join is on (product_id, target), so only THIS target's rows of
+    // a candidate find a flag: a second adapter's bookkeeping (other
+    // `target` values, reference's per-target row model
+    // `includes/class-plugin.php:126-127`) and non-candidates pass
+    // through untouched, changed products' rows drop (their fresh rows
+    // come back below), unchanged products' rows get the touch.
+    val flags = broadcast(pass.split.select(col("product_id"),
+      lit(target).as("target"), col("unchanged").as("touch")))
+    val kept = pass.prior.join(flags, Seq("product_id", "target"), "left_outer")
+      .where(col("touch").isNull || col("touch"))
+      .withColumn("last_synced_at",
+        when(col("touch"), lit(clock)).otherwise(col("last_synced_at")))
+    val written =
+      if (nChanged == 0) Seq.empty
+      else {
+        val r = pass.routing
+        val freshRows = r.payloads.select(
+          col("site_id"), col("product_id"), lit(target).as("target"),
+          col("chunk_index"), col("id").as("vector_id"),
+          col("product_sha"), col("chunk_sha"),
+          lit(embedder.model).as("model"), lit(embedder.dimension).as("dimension"),
+          statusCol.as("status"), errCode.as("error_code"), errMsg.as("error_msg"),
+          lit(clock).as("last_synced_at"))
+        // T8 delete-set preservation on write failure: rows routed
+        // 'delete' belong to changed products, so the merge above drops
+        // them — correct when the delete landed, but after a store
+        // failure they are the ONLY record that those chunks' vectors
+        // exist. Dropping them would leave the vectors orphaned forever
+        // (the self-heal pass re-derives its delete set from sync_state).
+        // Keep them as status='error' rows so the next healthy pass
+        // routes them 'delete' again (idempotent even if the failed
+        // pass's deleteByIds had already landed).
+        val failedDeletes = writeError.map { _ =>
+          pass.existing.join(
+              r.routed.where(col("action") === "delete")
+                .select("product_id", "chunk_index"),
+              Seq("product_id", "chunk_index"), "left_semi")
+            .withColumn("status", lit("error"))
+            .withColumn("error_code", lit("graft_store_error"))
+            .withColumn("error_msg", errMsg)
+            .withColumn("last_synced_at", lit(clock))
+        }
+        freshRows +: failedDeletes.toSeq
+      }
+    commitSyncState((kept +: written).map(_.select(columns: _*))
+      .reduce(_.unionByName(_)))
 
     // K8: append one event row per sync pass (reference logs per action,
     // `includes/class-events.php:18-47`; SURVEY §2.2 K8).
@@ -412,13 +442,16 @@ final class SyncEngine(
       import spark.implicits._
       log.append(Seq((clock, siteForEvent, target, "sync", outcome,
           counts.getOrElse("upsert", 0L), counts.getOrElse("delete", 0L),
-          counts.getOrElse("skip", 0L) + counts.getOrElse("skip_unchanged", 0L),
+          counts.getOrElse("skip", 0L) + counts("skip_unchanged"),
           writeError.map(e => Option(e.getMessage).getOrElse("").take(200)).orNull))
         .toDF("ts_s", "site_id", "target", "action", "outcome",
           "upserted", "deleted", "skipped", "error_msg")
         .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s"))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(materialized),
-      tally.select("action", "n").schema)
+    // a local relation: reading the summary back runs no Spark job
+    spark.createDataFrame(
+      counts.toSeq.sortBy(_._1).map { case (a, n) => Row(a, n) }.asJava,
+      StructType(Seq(StructField("action", StringType, nullable = false),
+        StructField("n", LongType, nullable = false))))
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** SCALE.md's plan invariants as executable checks: pushdown reaches the
   * scan, column pruning holds, dimension joins broadcast, single-pass
@@ -184,6 +187,19 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(df.count() == products, "composeFull must emit exactly one row per product")
     assert(df.groupBy("product_id").count()
       .where(org.apache.spark.sql.functions.col("count") > 1).count() == 0)
+  }
+
+  test("n7: composeFull range-sorts once — its ACF and term inputs carry no sort") {
+    val df = SparkEntry.queries("n7_full_text")(spark, sfDir)
+    df.collect()
+    val ranges = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+    assert(ranges.size == 1,
+      s"expected only the final product_id sort, got ${ranges.size}\n" +
+        df.queryExecution.executedPlan)
   }
 
   test("dd_decontaminate: benchmark set broadcasts — corpus side never shuffles to it") {

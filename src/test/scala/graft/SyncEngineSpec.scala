@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
-import graft.embed.LocalHashEmbedder
+import graft.embed.{Embedder, LocalHashEmbedder}
 import graft.model.Selection
-import graft.store.ParquetVectorStore
+import graft.store.{ParquetVectorStore, VectorStoreWriter}
 import graft.sync.SyncEngine
 
 /** The five delta golden cases from the reference's core test spec
@@ -249,13 +249,106 @@ class SyncEngineSpec extends SparkSpec {
       assert(summary.schema.map(f => (f.name, f.dataType, f.nullable)) ==
         Seq(("action", StringType, false), ("n", LongType, false)))
       assert(store.currentVersion == v0 + 1, "the edit pass commits the store once")
-      // the same passes' counts when each consumer re-planned the split,
-      // two guard counts ran, the store committed delete and upsert
-      // apart, and the summary was read after the writes
-      val (oldNoChange, oldEdit) = (15, 27)
-      assert(noChange < oldNoChange && edited < oldEdit,
+      // the same passes' counts when every pass built payloads and the
+      // routing join, merged sync_state from a second read through three
+      // joins, and the summary's read-back ran a job of its own; a
+      // no-change pass now runs the split (its tally and the broadcast
+      // it joins), the merge's broadcast and the merge write
+      val (oldNoChange, oldEdit) = (7, 13)
+      assert(noChange <= 4 && edited <= oldEdit,
         s"jobs: no-change $noChange (was $oldNoChange), edit $edited (was $oldEdit)")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  /** Every sync_state row of the engine's root, in a fixed order. */
+  private def stateRows(engine: SyncEngine): Seq[Row] =
+    engine.readSyncState()
+      .orderBy("target", "product_id", "chunk_index").collect().toSeq
+
+  test("a no-change pass calls neither store nor embedder and touches only its candidates") {
+    val dir = Files.createTempDirectory("graftNoChange")
+    val root = dir.resolve("sync").toString
+    def engine(t: String, clock: String, store: VectorStoreWriter,
+        embedder: Embedder = new LocalHashEmbedder()) =
+      new SyncEngine(spark, embedder, store, root, sel, clock = clock, target = t)
+    val local = new ParquetVectorStore(spark, dir.resolve("local").toString)
+    val vs = new ParquetVectorStore(spark, dir.resolve("vs").toString)
+    val t1 = "2024-01-01T00:00:00+00:00"
+    engine("local", t1, local).sync(docs(Seq(1L -> longText, 2L -> "tiny doc.")))
+    engine("vs", t1, vs).sync(docs(Seq(1L -> longText, 2L -> "tiny doc.")))
+    // product 3 errors on "local" and is not a candidate below
+    engine("local", t1, SyncEngineSpec.Refusing).sync(docs(Seq(3L -> "third doc.")))
+    val before = stateRows(engine("local", t1, local))
+    assert(before.exists(r => r.getAs[Long]("product_id") == 3L &&
+      r.getAs[String]("status") == "error"))
+
+    val t2 = "2024-02-02T00:00:00+00:00"
+    val quiet = engine("local", t2, SyncEngineSpec.Refusing, SyncEngineSpec.Mute)
+    val s = actions(quiet.sync(docs(Seq(1L -> longText, 2L -> "tiny doc."))))
+    assert(s == Map("skip_unchanged" -> 2L), s)
+
+    val touched = (r: Row) => r.getAs[String]("target") == "local" &&
+      Set(1L, 2L)(r.getAs[Long]("product_id"))
+    val expected = before.map { r =>
+      if (touched(r)) Row.fromSeq(r.toSeq.init :+ t2) else r
+    }
+    assert(before.count(touched) > 2 && before.size > before.count(touched))
+    assert(stateRows(quiet) == expected)
+  }
+
+  test("the sync_state merge: a forced pass rewrites, a failed write keeps its deletes as errors") {
+    val dir = Files.createTempDirectory("graftMerge")
+    val root = dir.resolve("sync").toString
+    val t1 = "2024-01-01T00:00:00+00:00"
+    val t2 = "2024-02-02T00:00:00+00:00"
+    val t3 = "2024-03-03T00:00:00+00:00"
+    val store = new ParquetVectorStore(spark, dir.resolve("store").toString)
+    def engine(clock: String, s: VectorStoreWriter = store, t: String = "local") =
+      new SyncEngine(spark, new LocalHashEmbedder(), s, root, sel,
+        clock = clock, target = t)
+    val base = docs(Seq(1L -> longText, 2L -> "tiny doc."))
+    engine(t1).sync(base)
+    engine(t1, new ParquetVectorStore(spark, dir.resolve("vs").toString), "vs")
+      .sync(docs(Seq(2L -> "tiny doc.")))
+    val before = stateRows(engine(t1))
+    val key = (r: Row) => (r.getAs[String]("target"), r.getAs[String]("vector_id"))
+    val shaOf = before.map(r => key(r) -> r.getAs[String]("chunk_sha")).toMap
+    val keepsSha = (r: Row) => shaOf(key(r)) == r.getAs[String]("chunk_sha")
+    // (target, product, chunk, vector id, status, error code, message, synced at)
+    def literal(rows: Seq[Row]) = rows.map(r => (r.getAs[String]("target"),
+      r.getAs[Long]("product_id"), r.getAs[Int]("chunk_index"),
+      r.getAs[String]("vector_id"), r.getAs[String]("status"),
+      r.getAs[String]("error_code"), r.getAs[String]("error_msg"),
+      r.getAs[String]("last_synced_at")))
+    def id(p: Long, c: Int) = s"site-1:product-$p:chunk-$c"
+    val synced = (t: String, p: Long, c: Int, at: String) =>
+      (t, p, c, id(p, c), "synced", null, null, at)
+
+    // force: every local row comes back fresh from the same text
+    val forced = actions(engine(t2).sync(base, force = true))
+    assert(forced == Map("skip_unchanged" -> 0L, "upsert" -> 5L), forced)
+    val afterForce = stateRows(engine(t2))
+    assert(literal(afterForce) == Seq(
+      synced("local", 1L, 0, t2), synced("local", 1L, 1, t2),
+      synced("local", 1L, 2, t2), synced("local", 1L, 3, t2),
+      synced("local", 2L, 0, t2), synced("vs", 2L, 0, t1)))
+    assert(afterForce.forall(keepsSha))
+
+    // edit with a failing store: product 1 shrinks to one chunk (3 would-be
+    // deletes), product 2 is unchanged
+    val failed = actions(engine(t3, SyncEngineSpec.Refusing).sync(
+      docs(Seq(1L -> "Just one tiny sentence.", 2L -> "tiny doc."))))
+    assert(failed == Map("delete" -> 3L, "skip_unchanged" -> 1L, "upsert" -> 1L),
+      failed)
+    val after = stateRows(engine(t3))
+    val err = (p: Long, c: Int) => ("local", p, c, id(p, c), "error",
+      "graft_store_error", SyncEngineSpec.Refused, t3)
+    assert(literal(after) == Seq(
+      err(1L, 0), err(1L, 1), err(1L, 2), err(1L, 3),
+      synced("local", 2L, 0, t3), synced("vs", 2L, 0, t1)))
+    // the fresh chunk 0 carries its new sha; the kept deletes and the
+    // touched rows keep theirs
+    assert(!keepsSha(after.head) && after.tail.forall(keepsSha))
   }
 
   test("embeddings are deterministic and dimension-locked") {
@@ -285,5 +378,30 @@ class SyncEngineSpec extends SparkSpec {
     assert(store.read().select("id").as[String].collect().toSeq == Seq("b"))
     store.purgeSite(1)
     assert(store.count() == 0)
+  }
+}
+
+object SyncEngineSpec {
+  val Refused = "refused: no store call expected"
+
+  /** A store whose every call throws. */
+  object Refusing extends VectorStoreWriter with Serializable {
+    private def no = throw new IllegalStateException(Refused)
+    def upsert(payloads: DataFrame): Int = no
+    def deleteByIds(ids: DataFrame): Int = no
+    def deleteByProduct(productId: Long, siteId: Int): Int = no
+    def purgeSite(siteId: Int): Int = no
+    def read(): DataFrame = no
+    def count(): Long = no
+    def currentVersion: Int = no
+  }
+
+  /** The default embedder's model and dimension; embedding throws. */
+  object Mute extends Embedder with Serializable {
+    private val like = new LocalHashEmbedder()
+    def model: String = like.model
+    def dimension: Int = like.dimension
+    def embedBatch(texts: Seq[String]): Seq[Array[Float]] =
+      throw new IllegalStateException("no embedding expected")
   }
 }
