@@ -58,9 +58,10 @@ trait VectorStoreWriter {
   * }}}
   * A commit writes ONLY the touched buckets under `gen-v/` and re-points
   * just those manifest entries, so untouched buckets' files are never
-  * rewritten (asserted byte-identical by BucketedStoreSpec); a
-  * generation no manifest references any more is reclaimed by the
-  * shared commit tail. All of a product's chunk vectors share a bucket,
+  * rewritten (asserted byte-identical by BucketedStoreSpec); a bucket
+  * dir no retained snapshot's manifest maps any more is reclaimed by the
+  * shared commit tail, so superseded bucket copies do not pile up from
+  * one commit to the next. All of a product's chunk vectors share a bucket,
   * so the per-product delete and the sync delta's upserts each touch
   * exactly the buckets they name. A sync pass that both deletes stale
   * chunks and upserts new ones applies them with [[replace]], one read
@@ -181,13 +182,16 @@ final class ParquetVectorStore(spark: SparkSession, root: String,
     val s = spark; import s.implicits._
     val keys = touched.map(_.toString).toSet
     val v = c.version + 1
-    val (manifest, droppedGens) = Cells.write(root, v,
+    val (manifest, _) = Cells.write(root, v,
       rows(Cells.read(spark, root, c.manifest.filter(e => keys(e._1)))),
       c.manifest, keys)
+    // reclaim by bucket: a rewrite re-points the buckets it touched, and
+    // their old dirs go once no retained snapshot maps them
     StateCommit.commitMeta(spark, root, v, metaSchema, Seq(
       Manifest -> metaSchema.rows(spark, Manifest, manifest.toSeq.sortBy(_._1)),
       Params -> metaSchema.rows(spark, Params, Seq((nBuckets, siteBuckets)))),
-      droppedGens)
+      droppedGens = c.manifest.exists { case (b, g) => !manifest.get(b).contains(g) },
+      cellKey = Some(Cells.key))
     v.toInt
   }
 

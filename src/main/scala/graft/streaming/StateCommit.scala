@@ -327,24 +327,35 @@ object StateCommit {
     * retain=2 the snapshot before a compaction keeps the superseded
     * generations referenced until it falls out of retention one commit
     * later, where no manifest shrinks — the periodic sweep bounds that
-    * leak at [[GcSweepEvery]] commits' worth of superseded dirs. */
+    * leak at [[GcSweepEvery]] commits' worth of superseded dirs.
+    *
+    * A [[CellTable]] family that passes its `cellKey` reclaims by cell:
+    * its `droppedGens` says the commit re-pointed or dropped any
+    * manifest entry, and the pass also deletes the superseded partition
+    * dirs of generations that other entries still reference. */
   def commitMeta(spark: SparkSession, statePath: String, v: Long,
       schema: MetaSchema, tables: Seq[(String, DataFrame)],
-      droppedGens: Boolean): Unit = {
+      droppedGens: Boolean, cellKey: Option[String] = None): Unit = {
     // a mistyped or retired spark.graft.* key fails before the commit
     graft.GraftConf.validate(spark)
     writeMetaParquet(schema.fold(tables), statePath, v)
     commit(spark, statePath, v)
-    if (droppedGens || v % GcSweepEvery == 0) gcGenerations(spark, statePath)
+    if (droppedGens || v % GcSweepEvery == 0)
+      gcGenerations(spark, statePath, cellKey)
   }
-
-  /** The one column [[gcGenerations]] reads of any family's manifest. */
-  private val GcManifest = MetaSchema("manifest" -> Seq("gen" -> "long"))
 
   /** Garbage-collect generation directories (`gen-<v>` under
     * `statePath`) that no COMMITTED snapshot's manifest references —
     * the reclaim pass of [[commitMeta]]. The manifest table must
     * expose a BIGINT `gen` column.
+    *
+    * With a `cellKey` (the manifest's partition column, see
+    * [[CellTable]]) the reclaim is per cell: a generation some snapshot
+    * still references loses every `<cellKey>=<value>` dir that no
+    * snapshot maps to it. Without it, a generation whose partitions were
+    * all but one rewritten keeps every superseded copy on disk, so each
+    * mutation that rewrites most partitions adds a full copy of the
+    * table that no reader can reach.
     *
     * Fail-safe by construction: if ANY committed snapshot's manifest
     * cannot be read (transient storage error), the pass ABORTS without
@@ -354,9 +365,9 @@ object StateCommit {
     * builds and are skipped (their generations are `>= cur` and never
     * GC candidates anyway). Generations at or above the committed
     * version are never touched. */
-  private[graft] def gcGenerations(spark: SparkSession,
-      statePath: String): Unit = {
-    import org.apache.spark.sql.functions.col
+  private[graft] def gcGenerations(spark: SparkSession, statePath: String,
+      cellKey: Option[String] = None): Unit = {
+    import org.apache.spark.sql.functions.{col, lit}
     val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val onDisk = generationsOnDisk(spark, statePath)
@@ -368,13 +379,26 @@ object StateCommit {
     // [[metaTable]]: a stray per-table manifest dir is never consulted,
     // and a snapshot the readers refuse (no folded meta) aborts the pass
     // below. One union, one job for all of them.
-    val referenced = Try(snaps
-      .map(v => metaTable(spark, statePath, v, GcManifest, "manifest")
-        .select(col("gen").cast("long")))
-      .reduce(_.unionByName(_)).collect().map(_.getLong(0))
-      .toSet).getOrElse(return) // abort: never guess
-    onDisk.filter(g => g < cur && !referenced(g))
-      .foreach(g => fs.delete(new Path(genDir(statePath, g)), true))
+    val manifest = MetaSchema("manifest" ->
+      (cellKey.map(_ -> "string").toSeq :+ ("gen" -> "long")))
+    val cell = cellKey.fold(lit(""))(col(_).cast("string"))
+    val referenced: Map[Long, Set[String]] = Try(snaps
+      .map(v => metaTable(spark, statePath, v, manifest, "manifest")
+        .select(col("gen").cast("long"), cell))
+      .reduce(_.unionByName(_)).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSeq
+      .groupMap(_._1)(_._2).map { case (g, vs) => g -> vs.toSet })
+      .getOrElse(return) // abort: never guess
+    onDisk.filter(_ < cur).foreach { g =>
+      referenced.get(g) match {
+        case None => fs.delete(new Path(genDir(statePath, g)), true)
+        case Some(live) => cellKey.foreach { k =>
+          listPartitionDirs(spark, genDir(statePath, g), k)
+            .filterNot(live)
+            .foreach(c => fs.delete(new Path(s"${genDir(statePath, g)}/$k=$c"), true))
+        }
+      }
+    }
   }
 
   /** The generations under `statePath` ([[genDir]] dirs), ascending;

@@ -135,6 +135,30 @@ class BucketedStoreSpec extends SparkSpec {
     assert(contents(store) == contents(ref))
   }
 
+  test("a superseded bucket dir goes once no retained snapshot maps it; its generation's live buckets stay") {
+    val root = Files.createTempDirectory("breclaim")
+    val store = new ParquetVectorStore(spark, root.toString, nBuckets = 4)
+    store.upsert((0L to 3L).map(p => payload(p, 0)).toDF(cols: _*))
+    val bucket0 = fileHashes(root.resolve("gen-1/bucket=0"))
+    // v2 re-points buckets 1..3; v1 still maps gen-1's copies of them
+    store.upsert((1L to 3L).map(p => payload(p, 1)).toDF(cols: _*))
+    assert(bucketsOf(root, 1) == Set("bucket=0", "bucket=1", "bucket=2", "bucket=3"))
+    // v3 re-points bucket 1 again: v1 falls out of retention, so gen-1
+    // keeps only bucket 0, which v3 still maps, byte-identical
+    store.upsert(Seq(payload(1, 2)).toDF(cols: _*))
+    assert(bucketsOf(root, 1) == Set("bucket=0"))
+    assert(fileHashes(root.resolve("gen-1/bucket=0")) == bucket0)
+    assert(bucketsOf(root, 2) == Set("bucket=1", "bucket=2", "bucket=3"))
+    // v4 empties bucket 2; gen-2's bucket 1 (superseded at v3) goes, its
+    // bucket 2 stays while v3 maps it
+    store.deleteByProduct(2L, 1)
+    assert(bucketsOf(root, 2) == Set("bucket=2", "bucket=3"))
+    assert(store.read().select("id").as[String].collect().sorted.toSeq ==
+      Seq("site-1:product-0:chunk-0", "site-1:product-1:chunk-0",
+        "site-1:product-1:chunk-1", "site-1:product-1:chunk-2",
+        "site-1:product-3:chunk-0", "site-1:product-3:chunk-1"))
+  }
+
   test("replace with only foreign-format ids equals a plain upsert") {
     val seed = Seq(payload(0, 0), payload(1, 0)).toDF(cols: _*)
     val ups = Seq(payloadSku(1, 0, "NEW"), payload(3, 0)).toDF(cols: _*)
